@@ -7,13 +7,12 @@ recomputing the reference's fingerprints, across four modalities:
 3. Span store       (`build_span_store` + `incremental_decontaminate_spans`)
 4. Image pHash store (`build_phash_store` + `incremental_phash_dedup`)
 
-plus the shared lifecycle: append a new reference increment, compact,
-and the streaming twins (`streaming_exact_dedup_store`,
-`streaming_near_dup_store`) that keep the SAME tables current from a
-stream. Every store is a set of BUCKETED tables, so each ingest batch
-joins the index with ZERO shuffle on the store side — the property
-that makes the flow viable when the reference is 100 TB and a batch
-is 100 GB.
+plus the shared lifecycle: append a new reference increment, compact
+(`store.compact`), and the streaming face (`stream_into`) that keeps
+the SAME tables current from a stream. Every store is a set of
+BUCKETED tables, so each ingest batch joins the index with ZERO
+shuffle on the store side — the property that makes the flow viable
+when the reference is 100 TB and a batch is 100 GB.
 
     python examples/incremental_dedup_stores.py [sf_dir]
 """
@@ -24,6 +23,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 sys.path.insert(0, ".")
+from pipelinedp_spark import store  # noqa: E402
 from pipelinedp_spark.operators import dedup  # noqa: E402
 from pipelinedp_spark.operators.retrieval import (  # noqa: E402
     bm25_topk_from_index, build_bm25_index)
@@ -49,7 +49,7 @@ def main() -> None:
     dedup.build_exact_store(s1, "demo_exact", mode="append")
     again = dedup.incremental_exact_dedup(crawl, "demo_exact").count()
     print("exact: same crawl after append ->", again, "(expect 0)")
-    dedup.compact_store(spark, "demo_exact", "exact")
+    store.compact(spark, "demo_exact", "exact")
 
     # 2. Near-dup store: MinHash bands + shingles persisted; batches
     #    match at Jaccard >= 0.7 without recomputing reference bands.

@@ -10,13 +10,13 @@ corpus index must support without a rebuild.
 2. The same takedown on the exact-dedup fingerprint store: removed
    reference docs stop deduping future ingest batches.
 3. Exactly-once micro-batch ingest (round 11): the foreachBatch body of
-   every store-kind stream is a batch-callable guarded function — a
-   replayed batch is a complete no-op, so at-least-once delivery never
-   double-writes output or index rows.
+   every store-kind stream is the batch-callable guarded
+   `store.ingest_batch_once` — a replayed batch is a complete no-op, so
+   at-least-once delivery never double-writes output or index rows.
 4. PER-IMAGE pHash takedown (round 11): removing one image of a
    visually-identical family keeps the family deduping future crawls;
    the fingerprint dies only when the LAST member is removed.
-5. compact_store applies every tombstone physically (and merges
+5. store.compact applies every tombstone physically (and merges
    per-append small files / df segments); results invariant.
 
     python examples/index_takedown_lifecycle.py [sf_dir]
@@ -28,6 +28,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 sys.path.insert(0, ".")
+from pipelinedp_spark import store  # noqa: E402
 from pipelinedp_spark.operators import dedup, retrieval  # noqa: E402
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
@@ -67,13 +68,11 @@ def main() -> None:
           dedup.incremental_exact_dedup(batch, "demo_fp").count())
 
     # -- 3. exactly-once ingest: a replayed micro-batch is a no-op ----
-    from pipelinedp_spark.streaming.dp_streaming import (
-        ingest_exact_batch_idempotent)
     b = docs.select((F.col("doc_id") + 50_000).alias("doc_id"), "text")
     print("batch 7 applied:",
-          ingest_exact_batch_idempotent(b, "demo_fp", 7))
+          store.ingest_batch_once("exact", b, "demo_fp", 7))
     print("batch 7 REPLAYED (suppressed by the ingest log):",
-          ingest_exact_batch_idempotent(b, "demo_fp", 7))
+          store.ingest_batch_once("exact", b, "demo_fp", 7))
 
     # -- 4. per-image pHash takedown ----------------------------------
     import numpy as np
@@ -110,9 +109,9 @@ def main() -> None:
           .filter("is_dup").count())
 
     # -- 5. compaction applies tombstones physically ------------------
-    dedup.compact_store(spark, "demo_bm25", "bm25")
-    dedup.compact_store(spark, "demo_fp", "exact")
-    dedup.compact_store(spark, "demo_ph", "phash")
+    store.compact(spark, "demo_bm25", "bm25")
+    store.compact(spark, "demo_fp", "exact")
+    store.compact(spark, "demo_ph", "phash")
     print("post-compaction tombstone tables exist:",
           spark.catalog.tableExists("demo_bm25_tombstones"),
           spark.catalog.tableExists("demo_fp_tombstones"),

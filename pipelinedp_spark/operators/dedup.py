@@ -117,7 +117,7 @@ def incremental_exact_dedup(new_docs: DataFrame,
     fps = spark.table(f"{store_name}_fps")
     # Logical takedowns (`remove_from_exact_store`): a tombstoned
     # fingerprint no longer dedups future batches (its reference copy
-    # was removed); compact_store('exact') applies them physically.
+    # was removed); `store.compact` applies them physically.
     # store.tombstones broadcast-hints only while the table is small.
     ts = store.tombstones(spark, store_name)
     if ts is not None:
@@ -134,23 +134,15 @@ def remove_from_exact_store(docs: DataFrame,
     streaming twin) then stop treating them as reference members, so
     the removed text is admissible again — the contract when a
     reference copy is deleted for licensing/takedown reasons.
-    O(removed) bookkeeping, idempotent; `compact_store(kind='exact')`
+    O(removed) bookkeeping, idempotent; `store.compact(kind='exact')`
     deletes the fingerprints physically and clears the tombstones.
     Re-adding the same text to the store requires that compaction
     first."""
-    from pipelinedp_spark import store as _store
-    spark = docs.sparkSession
-    nbuck = int(store.read_meta(spark, store_name)["num_buckets"])
-    fps = docs.select(
-        T.rolling_fingerprint(F.col(text_col)).alias("fingerprint")
-    ).distinct()
-    ts_table = f"{store_name}_tombstones"
-    if spark.catalog.tableExists(ts_table):
-        fps = fps.join(spark.table(ts_table), "fingerprint",
-                       "left_anti")
-    _store.write_bucketed(fps.localCheckpoint(), ts_table,
-                          "fingerprint", nbuck, "append")
-    spark.catalog.refreshTable(ts_table)
+    store.add_tombstones(
+        docs.select(T.rolling_fingerprint(F.col(text_col))
+                    .alias("fingerprint")), store_name, "fingerprint",
+        int(store.read_meta(docs.sparkSession, store_name)
+            ["num_buckets"]))
 
 
 def shingle_docs(df: DataFrame, text_col: str = "text",
@@ -1421,7 +1413,7 @@ def build_minhash_store(reference: DataFrame,
     ``mode='append'`` grows the store with a new reference increment
     (Spark appends to bucketed tables bucket-aligned); the bucket-size
     cap is enforced per increment, and the BUILD-time cap persists in
-    meta so `compact_store(kind='minhash')` re-applies it globally,
+    meta so `store.compact(kind='minhash')` re-applies it globally,
     dropping buckets that grew past it across appends. Reference repo
     has no counterpart (net-new LLM-pipeline op)."""
     spark = reference.sparkSession
@@ -1850,21 +1842,6 @@ def plan_lsh_params(jaccard_threshold: float,
     return best[1]
 
 
-def _remove_ids_from_store(ids: DataFrame, store_name: str,
-                           num_buckets: int) -> None:
-    """Shared id-tombstone writer for the id-keyed store kinds:
-    dedups against existing tombstones (idempotent) and appends
-    bucket-aligned."""
-    from pipelinedp_spark import store as _store
-    spark = ids.sparkSession
-    ts_table = f"{store_name}_tombstones"
-    if spark.catalog.tableExists(ts_table):
-        ids = ids.join(spark.table(ts_table), "id", "left_anti")
-    _store.write_bucketed(ids.localCheckpoint(), ts_table, "id",
-                          num_buckets, "append")
-    spark.catalog.refreshTable(ts_table)
-
-
 def remove_from_minhash_store(docs: DataFrame,
                               store_name: str,
                               id_col: str = "doc_id") -> None:
@@ -1873,14 +1850,13 @@ def remove_from_minhash_store(docs: DataFrame,
     `incremental_near_dup` then stops generating candidates from their
     bands, so batches are no longer deduped against the removed
     reference documents. O(removed) bookkeeping, idempotent;
-    `compact_store(kind='minhash')` deletes their bands and shingles
+    `store.compact(kind='minhash')` deletes their bands and shingles
     physically and clears the tombstones. Re-adding a removed id
     requires that compaction first."""
-    spark = docs.sparkSession
-    nbuck = int(store.read_meta(spark, store_name)["num_buckets"])
-    _remove_ids_from_store(
-        docs.select(F.col(id_col).alias("id")).distinct(),
-        store_name, nbuck)
+    store.add_tombstones(
+        docs.select(F.col(id_col).alias("id")), store_name, "id",
+        int(store.read_meta(docs.sparkSession, store_name)
+            ["num_buckets"]))
 
 
 def remove_from_span_store(docs: DataFrame,
@@ -1891,221 +1867,8 @@ def remove_from_span_store(docs: DataFrame,
     `incremental_decontaminate_spans` then stops cutting spans that
     matched only the removed reference documents (their anchors and
     texts are dropped with broadcast anti-joins). O(removed),
-    idempotent; `compact_store(kind='span')` applies physically."""
-    spark = docs.sparkSession
-    nbuck = int(store.read_meta(spark, store_name)["num_buckets"])
-    _remove_ids_from_store(
-        docs.select(F.col(id_col).alias("id")).distinct(),
-        store_name, nbuck)
-
-
-def compact_store(spark, store_name: str, kind: str) -> None:
-    """Periodic compaction for the incremental-store family: appends
-    accumulate duplicate rows (exact/phash fingerprints, span anchors,
-    replayed ANN code rows), small files (one per append — the classic
-    vector-index fragmentation problem for the cell-partitioned codes
-    table), df segments (bm25 terms), and apply the minhash bucket-size
-    cap only per increment. Compaction rewrites each table deduplicated
-    / merged with its bucketing or partitioning preserved, and for
-    minhash RE-APPLIES the build-time ``max_bucket_size`` cap globally
-    (persisted in ``{store}_meta``), dropping degenerate buckets that
-    grew past the cap across appends. Results are unchanged by
-    construction — anti-joins and semi-joins are multiplicity-
-    insensitive, bm25 readers sum df segments, ANN duplicate ids carry
-    identical codes — except that minhash bands past the cap stop
-    generating candidates, which is the cap's contract. Safe to run any
-    time no ingest is active.
-
-    Round 12 adds two failure-hardening legs to every kind:
-
-    * the ingest log folds to one RANGE row per (run_id, contiguous
-      batch interval) and rewrites as a single file
-      (`store.compact_ingest_log`) — unbounded, a months-long stream
-      pays an O(N)-file driver listing per exactly-once guard check;
-    * HALF-APPLIED batches (provenance-stamped rows with no ingest-log
-      entry — a crash between apply and log whose stream never
-      resumed) are rolled back for the stamped kinds (exact, bm25), so
-      the compacted store holds exactly the confirmed batches plus
-      unguarded builds; the crashed stream's checkpoint never
-      committed the batch, so a resume replays it fresh. For bm25 the
-      rewrite additionally re-derives the terms table and the meta
-      scalars from the surviving postings — compaction is a full
-      repair of any partial state.
-
-    ``kind`` is one of 'exact', 'minhash', 'span', 'phash', 'bm25',
-    'ann'."""
-    meta = store.read_meta(spark, store_name)
-
-    def rewrite(table: str, df, bucket_col: str) -> None:
-        df = df.localCheckpoint()   # the write replaces what it reads
-        store.write_bucketed(df, table, bucket_col,
-                             int(meta["num_buckets"]), "overwrite")
-
-    if kind == "exact":
-        t = f"{store_name}_fps"
-        fps = store.anti_orphans(
-            spark.table(t), store.orphan_provs(spark, store_name,
-                                               (t,)))
-        fps = fps.distinct()
-        ts_table = f"{store_name}_tombstones"
-        had_ts = spark.catalog.tableExists(ts_table)
-        if had_ts:
-            fps = fps.join(F.broadcast(spark.table(ts_table)),
-                           "fingerprint", "left_anti")
-        rewrite(t, fps, "fingerprint")
-        if had_ts:
-            from pipelinedp_spark.store import drop_store_table
-            drop_store_table(spark, ts_table)
-    elif kind == "minhash":
-        ts_table = f"{store_name}_tombstones"
-        had_ts = spark.catalog.tableExists(ts_table)
-        ts = F.broadcast(spark.table(ts_table)) if had_ts else None
-        t = f"{store_name}_bands"
-        orphans = store.orphan_provs(
-            spark, store_name, (t, f"{store_name}_shingles"))
-        bands = store.anti_orphans(spark.table(t), orphans).distinct()
-        cols = [c for c in spark.table(t).columns]
-        if had_ts:
-            bands = bands.join(ts, "id", "left_anti")
-        if "max_bucket_size" in meta.__fields__:
-            # Re-apply the build-time cap GLOBALLY: a bucket that grew
-            # past it across per-increment-capped appends would blow up
-            # the candidate join — exactly what the cap exists to stop.
-            cap = int(meta["max_bucket_size"])
-            keep = (bands.groupBy("bh")
-                    .agg(F.count(F.lit(1)).alias("__n__"))
-                    .filter(F.col("__n__") <= cap)
-                    .select("bh").hint("shuffle_hash"))
-            bands = bands.join(keep, "bh").select(*cols)
-        rewrite(t, bands, "bh")
-        t = f"{store_name}_shingles"
-        sh = store.anti_orphans(spark.table(t), orphans) \
-            .dropDuplicates(["id"])
-        if had_ts:
-            sh = sh.join(ts, "id", "left_anti")
-        rewrite(t, sh, "id")
-        if had_ts:
-            from pipelinedp_spark.store import drop_store_table
-            drop_store_table(spark, ts_table)
-    elif kind == "span":
-        ts_table = f"{store_name}_tombstones"
-        had_ts = spark.catalog.tableExists(ts_table)
-        ts = F.broadcast(spark.table(ts_table)) if had_ts else None
-        t = f"{store_name}_anchors"
-        orphans = store.orphan_provs(
-            spark, store_name, (t, f"{store_name}_texts"))
-        an = store.anti_orphans(spark.table(t), orphans).distinct()
-        if had_ts:
-            an = an.join(ts, "id", "left_anti")
-        rewrite(t, an, "ah")
-        t = f"{store_name}_texts"
-        tx = store.anti_orphans(spark.table(t), orphans) \
-            .dropDuplicates(["id"])
-        if had_ts:
-            tx = tx.join(ts, "id", "left_anti")
-        rewrite(t, tx, "id")
-        if had_ts:
-            from pipelinedp_spark.store import drop_store_table
-            drop_store_table(spark, ts_table)
-    elif kind == "phash":
-        t = f"{store_name}_blocks"
-        orphans = store.orphan_provs(
-            spark, store_name, (t, f"{store_name}_members"))
-        bl = store.anti_orphans(spark.table(t), orphans).distinct()
-        ts_table = f"{store_name}_tombstones"
-        had_ts = spark.catalog.tableExists(ts_table)
-        if had_ts:
-            bl = bl.join(F.broadcast(spark.table(ts_table)), "ph",
-                         "left_anti")
-        rewrite(t, bl, "bk")
-        # per-image takedown bookkeeping: members lose the removed ids
-        # (and any dead family's rows); the removed-ids log clears —
-        # after compaction the members table IS the survivor set again
-        mt = f"{store_name}_members"
-        rm_table = f"{store_name}_removed_ids"
-        had_rm = spark.catalog.tableExists(rm_table)
-        if spark.catalog.tableExists(mt):
-            mem = store.anti_orphans(spark.table(mt), orphans) \
-                .dropDuplicates(["id"])
-            if had_rm:
-                mem = mem.join(
-                    F.broadcast(spark.table(rm_table).select("id")),
-                    "id", "left_anti")
-            if had_ts:
-                mem = mem.join(F.broadcast(spark.table(ts_table)),
-                               "ph", "left_anti")
-            rewrite(mt, mem, "ph")
-        if had_ts or had_rm:
-            from pipelinedp_spark.store import drop_store_table
-            if had_ts:
-                drop_store_table(spark, ts_table)
-            if had_rm:
-                drop_store_table(spark, rm_table)
-    elif kind == "bm25":
-        # Postings are the PRIMARY table — everything else re-derives
-        # from them, making compaction a full repair of any partial
-        # state (half-applied batches, the takedown's non-atomic
-        # correction window): roll back orphaned half-applied batches,
-        # dedup (term,id) — a no-op under the no-re-append contract, a
-        # repair after a pre-r12 double-apply — apply tombstoned
-        # takedowns physically, then RECOMPUTE the terms table (one df
-        # row per term; the negative removal segments existed only to
-        # correct for tombstoned docs, now physically gone) and the
-        # meta scalars (`restore_bm25_meta` — exactly derivable from
-        # live postings) instead of merging possibly-inconsistent
-        # segments.
-        from pipelinedp_spark.operators.retrieval import (
-            restore_bm25_meta)
-        t = f"{store_name}_postings"
-        post = store.anti_orphans(
-            spark.table(t),
-            store.orphan_provs(spark, store_name,
-                               (t, f"{store_name}_terms")))
-        post = post.dropDuplicates(["term", "id"])
-        ts_table = f"{store_name}_tombstones"
-        had_ts = spark.catalog.tableExists(ts_table)
-        if had_ts:
-            post = post.join(F.broadcast(spark.table(ts_table)), "id",
-                             "left_anti")
-        post = post.localCheckpoint()
-        store.write_bucketed(post, t, "term",
-                             int(meta["num_buckets"]), "overwrite")
-        spark.catalog.refreshTable(t)
-        dft = post.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        if store.PROV_RUN in post.columns:
-            dft = store.with_prov(dft)   # merged segments: no lineage
-        rewrite(f"{store_name}_terms", dft, "term")
-        if had_ts:
-            from pipelinedp_spark.store import drop_store_table
-            drop_store_table(spark, ts_table)
-        restore_bm25_meta(spark, store_name)
-    elif kind == "ann":
-        # The codes table is PARTITIONED by cell (not bucketed):
-        # replayed ingest rows duplicate ids (each consumes a top-k
-        # slot in ann_search_from_index) and every append adds one
-        # small file per touched cell. Rewrite dedups on id, applies
-        # tombstoned takedowns physically, and merges files,
-        # partitioning preserved.
-        t = f"{store_name}_codes"
-        df = store.anti_orphans(
-            spark.table(t), store.orphan_provs(spark, store_name,
-                                               (t,)))
-        df = df.dropDuplicates(["id"])
-        ts_table = f"{store_name}_tombstones"
-        had_ts = spark.catalog.tableExists(ts_table)
-        if had_ts:
-            df = df.join(F.broadcast(spark.table(ts_table)), "id",
-                         "left_anti")
-        df = df.localCheckpoint()
-        (df.write.mode("overwrite").format("parquet")
-         .partitionBy("cell").saveAsTable(t))
-        if had_ts:
-            from pipelinedp_spark.store import drop_store_table
-            drop_store_table(spark, ts_table)
-    else:
-        raise ValueError(f"unknown store kind: {kind}")
-    # Bound the exactly-once bookkeeping: fold the per-batch ingest
-    # log to one range row per lineage in a single file (replay
-    # suppression stays exact — the guard reads rows as inclusive
-    # batch-id intervals).
-    store.compact_ingest_log(spark, store_name)
+    idempotent; `store.compact(kind='span')` applies physically."""
+    store.add_tombstones(
+        docs.select(F.col(id_col).alias("id")), store_name, "id",
+        int(store.read_meta(docs.sparkSession, store_name)
+            ["num_buckets"]))

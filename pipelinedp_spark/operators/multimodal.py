@@ -1616,7 +1616,7 @@ def remove_from_phash_store(images: DataFrame,
     `incremental_phash_dedup` anti-joins). Deadness is recomputed from
     the full tables on every call — not carried incrementally — so
     re-running after a crash between the two appends heals the
-    tombstone side. `compact_store(kind='phash')` applies everything
+    tombstone side. `store.compact(kind='phash')` applies everything
     physically (drops dead block rows and removed member rows) and
     clears both bookkeeping tables.
 
@@ -1624,7 +1624,7 @@ def remove_from_phash_store(images: DataFrame,
     contract as the id-keyed store kinds: while a family's tombstone
     stands, a `build_phash_store(mode='append')` of an image with the
     same hash grows members/blocks but the serving anti-join still
-    hides the hash, and `compact_store(kind='phash')` applies
+    hides the hash, and `store.compact(kind='phash')` applies
     tombstones physically (dropping the dead family's rows INCLUDING
     any appended-while-tombstoned ones). Compact first — clearing the
     tombstones — then append the re-added content.

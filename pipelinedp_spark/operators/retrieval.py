@@ -508,7 +508,7 @@ def remove_from_bm25_index(doc_ids: DataFrame,
 
     Idempotent: already-tombstoned ids are excluded before corrections
     are computed, so re-removing is a no-op (never double-subtracts).
-    `compact_store(kind='bm25')` later applies tombstones physically
+    `store.compact(kind='bm25')` later applies tombstones physically
     (drops their postings rows, cancels the negative segments) and
     clears the tombstone table. Re-ADDING a removed id requires that
     compaction first — while its tombstone stands, the reader's
@@ -533,10 +533,10 @@ def remove_from_bm25_index(doc_ids: DataFrame,
     # immediately); a crash before the df-segment / meta corrections
     # leaves served idf slightly understated (df still counts hidden
     # docs) — never a resurrected document. Recovery from that window
-    # is a rebuild or `compact_store` (NOT a re-run: the idempotency
-    # anti-join above sees the tombstones and skips the corrections),
-    # the same one-batch crash contract `append_bm25_batch_idempotent`
-    # documents for ingest.
+    # is a rebuild or `store.compact` (NOT a re-run: the idempotency
+    # anti-join above sees the tombstones and skips the corrections).
+    # Takedowns are not batch-guarded, so the convergent recovery of
+    # `store.ingest_batch_once` does not cover this window.
     store.write_bucketed(ids, ts_table, "id", nbuck, "append")
     neg = (removed.groupBy("term")
            .agg((-F.count(F.lit(1))).alias("df")))
@@ -566,7 +566,7 @@ def restore_bm25_meta(spark, store_name: str) -> None:
     ``restore_fn`` of the exactly-once ingest guard: after a crashed
     half-applied batch's stamped rows are rolled back, the meta row
     (which the crashed attempt may or may not have rewritten) is put
-    back in sync with the cleaned tables; and by `compact_store`,
+    back in sync with the cleaned tables; and by `store.compact`,
     whose physical rewrite re-derives terms and meta from the
     surviving postings."""
     from pipelinedp_spark import store

@@ -895,7 +895,7 @@ def ann_search_from_index(queries: DataFrame,
     # Logical takedowns (`remove_from_ann_index`): tombstoned vectors
     # drop via an anti-join on the already-pruned scan (broadcast only
     # while the tombstone table is small — store.tombstones guards the
-    # hint); compact_store('ann') applies them physically.
+    # hint); `store.compact` applies them physically.
     from pipelinedp_spark import store as _store
     ts = _store.tombstones(spark, store_name)
     if ts is not None:
@@ -920,22 +920,15 @@ def remove_from_ann_index(vec_ids: DataFrame,
     them with a broadcast anti-join on the partition-pruned scan —
     O(removed) bookkeeping, no rebuild, no model retraining (the
     quantizers are data-independent once trained). Idempotent
-    (already-tombstoned ids are skipped). `compact_store(kind='ann')`
+    (already-tombstoned ids are skipped). `store.compact(kind='ann')`
     applies tombstones physically (rewrites the codes table without
     them, cell partitioning preserved) and clears the table. Re-adding
     a removed id requires that compaction first."""
-    from pipelinedp_spark import store as _store
-    spark = vec_ids.sparkSession
-    m = store.read_meta(spark, store_name)
+    m = store.read_meta(vec_ids.sparkSession, store_name)
     # Pre-ts_num_buckets metas fall back to the old constant 4 (the
     # tombstone join is a guarded broadcast anti-join, so the bucket
     # count is about append alignment, not join co-location).
     nbuck = (int(m["ts_num_buckets"])
              if "ts_num_buckets" in m.__fields__ else 4)
-    ids = vec_ids.select(F.col(corpus_id).alias("id")).distinct()
-    ts_table = f"{store_name}_tombstones"
-    if spark.catalog.tableExists(ts_table):
-        ids = ids.join(spark.table(ts_table), "id", "left_anti")
-    _store.write_bucketed(ids.localCheckpoint(), ts_table, "id", nbuck,
-                          "append")
-    spark.catalog.refreshTable(ts_table)
+    store.add_tombstones(vec_ids.select(F.col(corpus_id).alias("id")),
+                         store_name, "id", nbuck)

@@ -745,7 +745,7 @@ def _sim_ann_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _stream_ann_store_mirror(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
-    """Batch mirror of `streaming.streaming_ann_ingest` with exact
+    """Batch mirror of `stream_into('ann', ...)` with exact
     two-trigger semantics: the index bootstraps EMPTY with persisted
     quantizer models (trained on the standard deterministic sample);
     trigger 0 ingests embeddings with vec_id % 3 == 0, trigger 1 the
@@ -767,18 +767,17 @@ def _stream_ann_store_mirror(spark: SparkSession,
     similarity.build_ann_index(emb.limit(0), "ann_idx_r10s",
                                num_cells=8, m=4, ksub=16,
                                centroids=cents, codebooks=cb)
-    from pipelinedp_spark.streaming.dp_streaming import (
-        ingest_ann_batch_idempotent)
+    from pipelinedp_spark import store
     batches = (emb.filter(F.col("vec_id") % 3 == 0),
                emb.filter(F.col("vec_id") % 3 != 0))
-    # the REAL foreachBatch body of streaming_ann_ingest, plus an
+    # the REAL foreachBatch body of stream_into, plus an
     # at-least-once REPLAY of trigger 1: without the ingest-log guard
     # the replay appends duplicate code rows that occupy extra top-k
     # slots (row_number ranks the copies adjacently) and the oracle
     # equality below breaks — the serve IS the idempotence proof.
-    applied0 = ingest_ann_batch_idempotent(batches[0], "ann_idx_r10s", 0)
-    applied1 = ingest_ann_batch_idempotent(batches[1], "ann_idx_r10s", 1)
-    replayed = ingest_ann_batch_idempotent(batches[1], "ann_idx_r10s", 1)
+    applied0 = store.ingest_batch_once("ann", batches[0], "ann_idx_r10s", 0)
+    applied1 = store.ingest_batch_once("ann", batches[1], "ann_idx_r10s", 1)
+    replayed = store.ingest_batch_once("ann", batches[1], "ann_idx_r10s", 1)
     if not (applied0 and applied1 and not replayed):
         raise AssertionError("ann ingest-log guard broke")
     out = (similarity.ann_search_from_index(q, "ann_idx_r10s", k=6,

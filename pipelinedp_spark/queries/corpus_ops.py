@@ -815,13 +815,14 @@ def _dedup_minhash_capped_bucket(spark: SparkSession,
     increment's per-build cap drops its own degenerate buckets, but
     buckets that grow past the cap
     ACROSS the appends are only re-capped by
-    `compact_store(kind='minhash')` (the degenerate-bucket guard that
+    `store.compact(kind='minhash')` (the degenerate-bucket guard that
     keeps a 100-TB candidate join from going quadratic on a hot
     band). Until this query that re-cap was pytest-only. The oracle
     mirrors BOTH stages literally — per-increment cap, then global
     cap over the union — so equality proves the compaction cap drops
     exactly the buckets it should and the batch dedups against
     exactly the surviving bands."""
+    from pipelinedp_spark import store
     from pipelinedp_spark.operators import dedup
     docs = _t(spark, sf_dir, "documents")
     # one signature pass for the whole query: the two build slices plus
@@ -835,7 +836,7 @@ def _dedup_minhash_capped_bucket(spark: SparkSession,
     dedup.build_minhash_store(docs.filter(F.col("doc_id") % 4 == 2),
                               "mh_cap_r12", k=4, max_bucket_size=1,
                               mode="append", profile=prof)
-    dedup.compact_store(spark, "mh_cap_r12", "minhash")
+    store.compact(spark, "mh_cap_r12", "minhash")
     out = (dedup.incremental_near_dup(
         docs.filter(F.col("doc_id") % 2 == 1), "mh_cap_r12",
         jaccard_threshold=0.6, profile=prof)
@@ -884,7 +885,7 @@ kept_inc AS (
   FROM (SELECT doc_id, band_idx, band_hash, doc_id % 4 AS inc
         FROM bands WHERE doc_id % 2 = 0)
   QUALIFY COUNT(*) OVER (PARTITION BY inc, band_idx, band_hash) <= 1),
--- ...then compact_store re-applies the cap GLOBALLY over the union
+-- ...then compaction re-applies the cap GLOBALLY over the union
 kept AS (
   SELECT doc_id, band_idx, band_hash FROM kept_inc
   QUALIFY COUNT(*) OVER (PARTITION BY band_idx, band_hash) <= 1),
@@ -937,7 +938,7 @@ def _sim_ann_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _stream_bm25_store_mirror(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
-    """Batch mirror of `streaming.streaming_bm25_ingest` with exact
+    """Batch mirror of `stream_into('bm25', ...)` with exact
     two-trigger-plus-replay semantics: the index bootstraps EMPTY;
     trigger 0 appends docs with doc_id % 3 == 0, trigger 1 the rest,
     then trigger 1 REPLAYS (at-least-once delivery) and must be
@@ -946,9 +947,8 @@ def _stream_bm25_store_mirror(spark: SparkSession,
     oracle equality below is itself the idempotence proof. Serving at
     k=9 (distinguishing the rows from the k=10/12/15 siblings) must
     equal the whole-corpus BM25 SQL."""
+    from pipelinedp_spark import store
     from pipelinedp_spark.operators import retrieval
-    from pipelinedp_spark.streaming.dp_streaming import (
-        append_bm25_batch_idempotent)
     docs = _t(spark, sf_dir, "documents")
     vals = ", ".join(f"({i}, '{t}')" for i, t in _BM25_QUERIES)
     q = spark.sql(f"SELECT * FROM VALUES {vals} AS t(query_id, query_text)")
@@ -958,9 +958,9 @@ def _stream_bm25_store_mirror(spark: SparkSession,
     b1 = docs.filter(F.col("doc_id") % 3 != 0)
     # The appends are load-bearing — never inside `assert` (python -O
     # would strip them and serve an empty index); bind, then check.
-    applied0 = append_bm25_batch_idempotent(b0, "bm25_idx_r10st", 0)
-    applied1 = append_bm25_batch_idempotent(b1, "bm25_idx_r10st", 1)
-    replayed = append_bm25_batch_idempotent(b1, "bm25_idx_r10st", 1)
+    applied0 = store.ingest_batch_once("bm25", b0, "bm25_idx_r10st", 0)
+    applied1 = store.ingest_batch_once("bm25", b1, "bm25_idx_r10st", 1)
+    replayed = store.ingest_batch_once("bm25", b1, "bm25_idx_r10st", 1)
     if not (applied0 and applied1 and not replayed):
         raise AssertionError("bm25 ingest-log idempotency guard broke")
     out = retrieval.bm25_topk_from_index(q, "bm25_idx_r10st", k=9) \

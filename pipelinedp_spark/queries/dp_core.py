@@ -1196,9 +1196,9 @@ ORDER BY doc_id
 
 def _stream_exact_store_mirror(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
-    """Batch mirror of `streaming.streaming_exact_dedup_store` with
+    """Batch mirror of `stream_into('exact', ...)` with
     exact two-trigger-PLUS-REPLAY semantics, driving the REAL
-    foreachBatch body (`ingest_exact_batch_idempotent`): the store
+    foreachBatch body (`store.ingest_batch_once`): the store
     starts EMPTY; trigger 0 ingests docs with doc_id % 3 == 0
     (within-batch first occurrence per fingerprint, anti-join the
     empty store, fingerprints appended); trigger 1 ingests the rest,
@@ -1208,9 +1208,8 @@ def _stream_exact_store_mirror(spark: SparkSession,
     and break the oracle equality. Output = survivors per trigger
     tagged by batch — proving the cross-batch store contract AND
     exactly-once, not just final state."""
+    from pipelinedp_spark import store
     from pipelinedp_spark.operators import dedup
-    from pipelinedp_spark.streaming.dp_streaming import (
-        ingest_exact_batch_idempotent)
     docs = _t(spark, sf_dir, "documents")
     dedup.build_exact_store(docs.limit(0), "stream_exact_r9",
                             num_buckets=4)
@@ -1218,15 +1217,15 @@ def _stream_exact_store_mirror(spark: SparkSession,
     batches = [docs.filter(F.col("doc_id") % 3 == 0),
                docs.filter(F.col("doc_id") % 3 != 0)]
     for b, batch in enumerate(batches):
-        applied = ingest_exact_batch_idempotent(
-            batch, "stream_exact_r9", b,
+        applied = store.ingest_batch_once(
+            "exact", batch, "stream_exact_r9", b,
             sink=lambda surv, b=b: outs.append(surv.select(
                 F.lit(b).cast("long").alias("batch"), "doc_id",
                 "fingerprint")))
         if not applied:
             raise AssertionError("fresh batch wrongly skipped")
-    replayed = ingest_exact_batch_idempotent(
-        batches[1], "stream_exact_r9", 1,
+    replayed = store.ingest_batch_once(
+        "exact", batches[1], "stream_exact_r9", 1,
         sink=lambda surv: outs.append(surv))
     if replayed or len(outs) != 2:
         raise AssertionError("exact-store ingest-log guard broke")
@@ -1256,7 +1255,7 @@ FROM b1 WHERE fingerprint NOT IN (SELECT fingerprint FROM b0)
 
 def _stream_near_dup_store_mirror(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
-    """Batch mirror of `streaming.streaming_near_dup_store` with exact
+    """Batch mirror of `stream_into('minhash', ...)` with exact
     two-trigger semantics (store starts EMPTY; trigger 0 = docs with
     doc_id % 3 == 0, trigger 1 = the rest): within each trigger,
     MinHash+LSH near-dups (k=3, Jaccard >= 0.7) lose to the smaller
@@ -1264,12 +1263,11 @@ def _stream_near_dup_store_mirror(spark: SparkSession,
     fingerprints. Output = surviving (batch, doc_id). The oracle
     replays bands, both within-trigger pair sets, and the cross-trigger
     store match in SQL. Drives the REAL foreachBatch body
-    (`ingest_near_dup_batch_idempotent`), then REPLAYS trigger 1 — the
+    (`store.ingest_batch_once`), then REPLAYS trigger 1 — the
     ingest-log guard must suppress it or the sink doubles and the
     oracle equality breaks."""
+    from pipelinedp_spark import store
     from pipelinedp_spark.operators import dedup
-    from pipelinedp_spark.streaming.dp_streaming import (
-        ingest_near_dup_batch_idempotent)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     dedup.build_minhash_store(docs.limit(0), "stream_nd_r9",
                               num_buckets=4)
@@ -1277,14 +1275,14 @@ def _stream_near_dup_store_mirror(spark: SparkSession,
     batches = [docs.filter(F.col("doc_id") % 3 == 0),
                docs.filter(F.col("doc_id") % 3 != 0)]
     for b, batch in enumerate(batches):
-        applied = ingest_near_dup_batch_idempotent(
-            batch, "stream_nd_r9", b, jaccard_threshold=0.7,
+        applied = store.ingest_batch_once(
+            "minhash", batch, "stream_nd_r9", b, jaccard_threshold=0.7,
             sink=lambda surv, b=b: outs.append(surv.select(
                 F.lit(b).cast("long").alias("batch"), "doc_id")))
         if not applied:
             raise AssertionError("fresh batch wrongly skipped")
-    replayed = ingest_near_dup_batch_idempotent(
-        batches[1], "stream_nd_r9", 1, jaccard_threshold=0.7,
+    replayed = store.ingest_batch_once(
+        "minhash", batches[1], "stream_nd_r9", 1, jaccard_threshold=0.7,
         sink=lambda surv: outs.append(surv))
     if replayed or len(outs) != 2:
         raise AssertionError("near-dup-store ingest-log guard broke")

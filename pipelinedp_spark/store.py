@@ -12,14 +12,21 @@ pre-append scan otherwise serves stale files — found once on the exact
 store, pinned in tests, and a copy-adjacent hazard in every builder).
 
 This module centralizes that plumbing; the per-store algorithms stay
-in their operator modules. Reference repo (OpenMined/PipelineDP) has
-no counterpart — the store family is net-new LLM-pipeline
-infrastructure.
+in their operator modules. Each kind is declared exactly once, as a
+`StoreKind` record in `KINDS`: its tables with their layouts and
+compaction keys, its tombstone key, its ingest body. Three generic
+functions run every kind from that record — `ingest_batch_once` (one
+exactly-once micro-batch), `compact` (periodic rewrite) and, in
+`streaming.dp_streaming`, `stream_into` (the foreachBatch face).
+Reference repo (OpenMined/PipelineDP) has no counterpart — the store
+family is net-new LLM-pipeline infrastructure.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -364,8 +371,6 @@ def _clean_half_applied(spark, store_name: str, rid: str,
     cell-partitioned ANN codes table. Tables without provenance
     columns (pre-r12 builds) are skipped — they keep the documented
     one-batch window."""
-    from pyspark.sql import functions as F
-    meta = None
     found = False
     for suffix, layout in stamped.items():
         t = store_name + suffix
@@ -401,17 +406,23 @@ def _clean_half_applied(spark, store_name: str, rid: str,
         if not df.filter(cond).limit(1).count():
             continue
         found = True
-        keep = df.filter(~cond).localCheckpoint()
-        if isinstance(layout, tuple) and layout[0] == "partition":
-            (keep.write.mode("overwrite").format("parquet")
-             .partitionBy(layout[1]).saveAsTable(t))
-        else:
-            if meta is None:
-                meta = spark.table(f"{store_name}_meta").collect()[0]
-            write_bucketed(keep, t, layout,
-                           int(meta["num_buckets"]), "overwrite")
-        refresh_table(spark, t)
+        _overwrite(spark, store_name, t, df.filter(~cond).localCheckpoint(),
+                   layout)
     return found
+
+
+def _overwrite(spark, store_name: str, table: str, df: DataFrame,
+               layout) -> None:
+    """Rewrite a store table in its declared layout: a bucket column
+    (bucket count from ``{store}_meta``) or ``("partition", col)``."""
+    if isinstance(layout, tuple):
+        (df.write.mode("overwrite").format("parquet")
+         .partitionBy(layout[1]).saveAsTable(table))
+    else:
+        write_bucketed(df, table, layout,
+                       int(read_meta(spark, store_name)["num_buckets"]),
+                       "overwrite")
+    refresh_table(spark, table)
 
 
 def orphan_provs(spark, store_name: str,
@@ -420,7 +431,7 @@ def orphan_provs(spark, store_name: str,
     given store tables but confirmed by NO ingest-log row — i.e.
     half-applied batches whose re-run never happened. Returns None
     when nothing is stamped (pre-r12 tables or batch-built stores).
-    `compact_store` removes these rows so the compacted store holds
+    `compact` removes these rows so the compacted store holds
     exactly the confirmed batches (plus unguarded builds): the
     crashed stream's checkpoint never committed the batch, so on
     resume Structured Streaming replays it and the guard applies it
@@ -610,47 +621,25 @@ def apply_batch_once(spark, store_name: str, batch_id: int,
                      apply_fn, run_id: str = "",
                      stamped: dict[str, str] | None = None,
                      restore_fn=None) -> bool:
-    """Run ``apply_fn()`` (a micro-batch's store mutation) EXACTLY
-    ONCE per ``(run_id, batch_id)`` — the transactional-sink emulation
-    every foreachBatch ingest needs under Structured Streaming's
-    at-least-once replay. A ``{store}_ingest_log`` table records
-    applied ids; a replayed pair is a no-op (returns False).
+    """Run ``apply_fn()`` (a micro-batch's store mutation) at most once
+    per ``(run_id, batch_id)`` and record it in ``{store}_ingest_log``;
+    returns False, without running it, for a pair the log already
+    holds. `ingest_batch_once` states the contract this implements;
+    this is the mechanism.
 
-    ``run_id`` matters because Structured Streaming batch ids are only
-    unique WITHIN one checkpoint lineage: a NEW stream (fresh
-    checkpoint dir) into the same store restarts at batch 0, and an
-    unnamespaced guard would silently skip its first batches as
-    "replays" of the old stream's. The streaming_*_ingest wrappers
-    pass their checkpoint location as the run id; batch callers (the
-    oracle mirrors, backfills) can leave the default single namespace.
+    The log row lands AFTER the apply. ``stamped`` ({table suffix:
+    layout}) names the provenance-stamped tables: before applying, rows
+    stamped with this pair but confirmed by no log row (a crash between
+    apply and log) are rolled back and ``restore_fn`` re-derives state
+    computed from them. Tables without stamp columns (built before
+    round 12) are skipped and keep the one-batch window.
+
     A pre-r11 log table (batch_id column only) keeps working for
-    default-namespace callers (and keeps its legacy schema on append);
-    a NAMESPACED caller against it raises — the legacy log cannot say
-    which lineage its ids belong to, and both silent readings lose
-    data (skip a new stream's batches, or double-apply a resumed one's
+    default-namespace callers and keeps its legacy schema on append; a
+    namespaced caller against it raises — the legacy log cannot say
+    which lineage its ids belong to, and both silent readings lose data
+    (skip a new stream's batches, or double-apply a resumed one's
     replays). Rebuild the store to reset the log.
-
-    Even for the anti-join store kinds (exact/minhash/span/phash),
-    whose STATE is multiplicity-insensitive, the guard matters: their
-    output-path appends and per-increment caps are not — a replayed
-    batch double-writes survivors to the sink. For BM25 it is
-    correctness-critical (tf/df/scalars double-count), for ANN it
-    prevents duplicate code rows occupying top-k slots until
-    compaction.
-
-    The log row lands AFTER the apply. For kinds that declare their
-    appended tables via ``stamped`` ({table_suffix: bucket_col}) and
-    stamp their rows with `with_prov`, a crash between apply and log
-    is CONVERGENT: the re-run (Structured Streaming replays the batch
-    — its checkpoint never committed) finds the stamped rows with no
-    log entry, rewrites the tables without them, calls ``restore_fn``
-    (which puts derived state like the BM25 meta scalars back in
-    sync), and applies fresh — ending bit-identical to a crash-free
-    run. Tables built before round 12 carry no stamp columns and keep
-    the documented one-batch window (rebuild or `compact_store`
-    recovers). The residual: an external ``sink`` callback that ran
-    inside the crashed attempt re-runs — exactly-once for the STORE,
-    at-least-once for the sink.
 
     Log rows are ranges: the guard reads a row as the inclusive
     interval [batch_id, coalesce(hi, batch_id)] so `compact_ingest_log`
@@ -803,7 +792,7 @@ def tombstones(spark, store_name: str,
     compaction) falls back to a plain shuffled anti-join instead of
     force-broadcasting a corpus-scale table into every executor. 2M
     ids ≈ tens of MB broadcast — comfortably under executor headroom;
-    past that, `compact_store` is overdue anyway.
+    past that, `compact` is overdue anyway.
 
     The gate decision is memoized per (session, store): serving calls
     and streaming micro-batches don't pay a count job each —
@@ -838,6 +827,23 @@ def tombstones(spark, store_name: str,
             _TS_SIZE_CACHE.clear()
         _TS_SIZE_CACHE[store_name] = (spark, n)
     return F.broadcast(ts) if n <= int(broadcast_rows) else ts
+
+
+def add_tombstones(keys_df: DataFrame, store_name: str, key_col: str,
+                   num_buckets: int) -> None:
+    """Append the distinct ``key_col`` values of ``keys_df`` to
+    ``{store}_tombstones``, skipping keys already tombstoned
+    (idempotent), bucket-aligned on ``key_col``. Readers apply them
+    through `tombstones`; `compact` deletes the keyed rows physically
+    and drops the table."""
+    spark = keys_df.sparkSession
+    keys = keys_df.select(key_col).distinct()
+    ts_table = f"{store_name}_tombstones"
+    if spark.catalog.tableExists(ts_table):
+        keys = keys.join(spark.table(ts_table), key_col, "left_anti")
+    write_bucketed(keys.localCheckpoint(), ts_table, key_col,
+                   num_buckets, "append")
+    refresh_table(spark, ts_table)
 
 
 def _file_row_count(spark, table: str) -> int | None:
@@ -913,3 +919,333 @@ def refresh_store(spark, store_name: str,
     would silently miss the new increment."""
     for suffix in suffixes:
         refresh_table(spark, store_name + suffix)
+
+
+# ---------------------------------------------------------------------------
+# Store kinds: one declaration per kind drives ingest and compaction
+# ---------------------------------------------------------------------------
+
+
+@dataclasses.dataclass(frozen=True)
+class StoreKind:
+    """One persisted-store kind, declared once.
+
+    ``tables`` maps each provenance-stamped ``{store}{suffix}`` table to
+    ``(layout, dedup_key)``: the layout is its bucket column or
+    ``("partition", col)``; `compact` dedups it on ``dedup_key`` (a
+    column tuple; None means ``distinct()``). The first table is the
+    one probed for stamp columns. Ingest rolls back and `compact`
+    rewrites exactly these tables, each in its layout.
+
+    ``apply(batch_df, store_name, prov, meta, **kw)`` is the ingest body:
+    ``prov`` is the (run_id, batch_id) stamp (None for a store built
+    before stamping), ``meta`` the ``inherit`` knobs read from
+    ``{store}_meta``, ``kw`` the caller's column names and options.
+    ``refresh`` lists the tables refreshed before the guard
+    (``_tombstones`` only when it exists). ``restore_fn(spark, store)``
+    re-derives state computed from the tables after a rollback or a
+    compaction. ``compact_fn(spark, store, meta, frames)`` adjusts the
+    deduped, tombstone-filtered table frames before `compact` writes
+    them; tables without the tombstone key (derived aggregates) are
+    left to it."""
+    name: str
+    tables: dict
+    tombstone_key: str
+    apply: Callable
+    refresh: tuple[str, ...] = ()
+    inherit: tuple[str, ...] = ()
+    restore_fn: Callable | None = None
+    compact_fn: Callable | None = None
+
+
+def ingest_batch_once(kind: str, batch_df: DataFrame, store_name: str,
+                      batch_id: int, *, run_id: str = "", sink=None,
+                      **kw) -> bool:
+    """Ingest one micro-batch into the persisted store ``store_name``
+    of kind ``kind`` (a `KINDS` key) EXACTLY ONCE per ``(run_id,
+    batch_id)``. Returns True if applied, False if skipped as a replay.
+    ``kw`` are the kind's column names and options (``text_col``,
+    ``id_col``, ``vec_col``, ``binary_col``, ``jaccard_threshold``);
+    ``sink(survivors)`` (exact and minhash only) receives the batch's
+    surviving rows inside the guarded apply.
+
+    This is the foreachBatch body of `stream_into`, callable from batch
+    jobs too (backfills, the oracle mirrors). The contract, for every
+    kind:
+
+    * Exactly once. Structured Streaming delivers a micro-batch at
+      least once; a ``{store}_ingest_log`` row per applied batch turns
+      a replay into a no-op — no sink call, no table append. Replays
+      matter for every kind: anti-join state (exact, minhash, span,
+      phash) tolerates duplicates, but their sink appends and
+      per-increment caps do not; BM25 double-counts tf, df and the
+      n_docs/total_dl scalars; ANN grows duplicate code rows that take
+      top-k slots.
+    * Namespaced. Batch ids are unique only within one checkpoint
+      lineage, so the guard keys on ``run_id`` (`stream_into` passes
+      its checkpoint directory) and a new stream into the same store
+      is not mistaken for a replay. Batch callers may keep the default
+      namespace.
+    * Convergent recovery. The log row lands after the apply. Every
+      appended row carries its ``(run_id, batch_id)`` provenance
+      stamp, so a crash between apply and log leaves stamped rows with
+      no log entry; the re-run (the uncommitted checkpoint replays the
+      batch) rolls them back, re-derives dependent state
+      (``restore_fn``: the BM25 meta scalars) and applies fresh,
+      ending identical to a crash-free run. Without the rollback the
+      anti-join kinds would match the batch against its own crashed
+      attempt and deliver nothing to the sink. If the stream never
+      resumes, `compact` drops the orphaned rows. Stores built before
+      stamping (no stamp columns) keep a one-batch window, which
+      `compact` also repairs. The residual: a ``sink`` that ran inside
+      the crashed attempt runs again — exactly once for the store, at
+      least once for the sink.
+    * Current reads. Each micro-batch runs in a cloned session with its
+      own relation cache, so the kind's ``refresh`` tables are
+      refreshed first; otherwise the file listing cached at the first
+      trigger hides every later append, and a takedown issued between
+      triggers would not reach the next one."""
+    k = KINDS[kind]
+    s = batch_df.sparkSession
+    for suffix in k.refresh:
+        t = store_name + suffix
+        if suffix != "_tombstones" or s.catalog.tableExists(t):
+            refresh_table(s, t)
+    m = read_meta(s, store_name) if k.inherit else None
+    meta = {n: int(m[n]) for n in k.inherit}
+    stamp = table_has_prov(s, store_name + next(iter(k.tables)))
+    prov = (run_id or "", int(batch_id)) if stamp else None
+    if sink is not None:
+        kw["sink"] = sink
+    return apply_batch_once(
+        s, store_name, batch_id,
+        lambda: k.apply(batch_df, store_name, prov, meta, **kw),
+        run_id=run_id,
+        stamped=({sfx: lay for sfx, (lay, _) in k.tables.items()}
+                 if stamp else None),
+        restore_fn=(None if k.restore_fn is None
+                    else lambda: k.restore_fn(s, store_name)))
+
+
+def compact(spark, store_name: str, kind: str) -> None:
+    """Periodic compaction of a persisted store of kind ``kind``. Safe
+    any time no ingest is active. Appends accumulate duplicate rows,
+    one small file per append (per touched cell for the partitioned
+    ANN codes), tombstones awaiting physical removal and per-increment
+    df segments (bm25). Each table of the kind is rewritten in its
+    declared layout after four steps:
+
+    * orphaned half-applied batches (stamped rows no ingest-log row
+      confirms, from a crash whose stream never resumed) are dropped,
+      for all six kinds, so the store holds exactly the confirmed
+      batches plus unguarded builds; a later resume replays the batch
+      fresh;
+    * rows dedup on the table's key;
+    * tombstoned keys are removed, and ``{store}_tombstones`` (and the
+      pHash ``{store}_removed_ids`` log) are dropped afterwards;
+    * the kind's hook runs: minhash re-applies the build-time
+      ``max_bucket_size`` cap globally (a bucket that grew past it
+      across appends would blow up the candidate join); bm25
+      re-derives the terms table from the surviving postings and
+      then, via ``restore_fn``, the meta scalars; phash drops the
+      removed image ids from the members table.
+
+    Results are unchanged by construction — anti- and semi-joins are
+    multiplicity-insensitive, bm25 readers sum df segments, ANN
+    duplicate ids carry identical codes — except that minhash buckets
+    past the cap stop generating candidates, which is the cap's
+    contract. Finally the ingest log folds to one range row per
+    lineage (`compact_ingest_log`), bounding the exactly-once
+    bookkeeping of a long stream."""
+    from pyspark.sql import functions as F
+    k = KINDS[kind]
+    meta = read_meta(spark, store_name)
+    ts_table = f"{store_name}_tombstones"
+    ts = (F.broadcast(spark.table(ts_table))
+          if spark.catalog.tableExists(ts_table) else None)
+    tables = [sfx for sfx in k.tables
+              if spark.catalog.tableExists(store_name + sfx)]
+    orphans = orphan_provs(spark, store_name,
+                           tuple(store_name + sfx for sfx in tables))
+    frames = {}
+    for sfx in tables:
+        df = anti_orphans(spark.table(store_name + sfx), orphans)
+        key = k.tables[sfx][1]
+        df = df.distinct() if key is None else df.dropDuplicates(list(key))
+        if ts is not None and k.tombstone_key in df.columns:
+            df = df.join(ts, k.tombstone_key, "left_anti")
+        frames[sfx] = df
+    if k.compact_fn is not None:
+        frames = k.compact_fn(spark, store_name, meta, frames)
+    # every frame is materialized before any write replaces its source
+    frames = {sfx: df.localCheckpoint() for sfx, df in frames.items()}
+    for sfx, df in frames.items():
+        _overwrite(spark, store_name, store_name + sfx, df,
+                   k.tables[sfx][0])
+    for sfx in ("_tombstones", "_removed_ids"):
+        if spark.catalog.tableExists(store_name + sfx):
+            drop_store_table(spark, store_name + sfx)
+    if k.restore_fn is not None:
+        k.restore_fn(spark, store_name)
+    compact_ingest_log(spark, store_name)
+
+
+# -- per-kind ingest bodies and compaction hooks -----------------------------
+
+
+def _exact_apply(batch_df, store_name, prov, meta, text_col="text",
+                 id_col="doc_id", sink=None) -> None:
+    """First doc id per fingerprint within the batch, anti-joined with
+    the live (non-tombstoned) store; survivors' fingerprints append."""
+    from pyspark.sql import functions as F
+
+    from pipelinedp_spark.functions import text as TX
+    s = batch_df.sparkSession
+    nbuck = meta["num_buckets"]
+    firsts = (batch_df
+              .withColumn("fingerprint",
+                          TX.rolling_fingerprint(F.col(text_col)))
+              .groupBy("fingerprint")
+              .agg(F.min(id_col).alias(id_col)))
+    fps = s.table(f"{store_name}_fps")
+    ts = tombstones(s, store_name)
+    if ts is not None:
+        fps = fps.join(ts, "fingerprint", "left_anti")
+    survivors = (firsts.repartition(nbuck, "fingerprint")
+                 .join(fps, "fingerprint", "left_anti")
+                 .localCheckpoint())
+    if sink is not None:
+        sink(survivors.select(id_col, "fingerprint"))
+    out = survivors.select("fingerprint")
+    if prov is not None:
+        out = with_prov(out, *prov)
+    (out.write.mode("append").format("parquet")
+     .bucketBy(nbuck, "fingerprint").sortBy("fingerprint")
+     .saveAsTable(f"{store_name}_fps"))
+
+
+def _minhash_apply(batch_df, store_name, prov, meta, text_col="text",
+                   id_col="doc_id", jaccard_threshold=0.8,
+                   sink=None) -> None:
+    """Within-batch MinHash+LSH losers drop, survivors anti-match the
+    store with its fingerprint knobs, their bands + shingles append."""
+    from pyspark.sql import functions as F
+
+    from pipelinedp_spark.operators import dedup as D
+    # ONE signature pass for the whole micro-batch: pair generation,
+    # the store anti-match and the store append all consume the same
+    # checkpointed (id, shingles, band-hash) profile instead of
+    # re-signing the batch text at every step.
+    prof = D.minhash_profile(batch_df, text_col, id_col, meta["k"],
+                             meta["num_hashes"], meta["rows_per_band"]
+                             ).localCheckpoint()
+    pairs = D.minhash_lsh_pairs_from_profile(prof, id_col,
+                                             jaccard_threshold)
+    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
+    within = batch_df.join(losers, id_col, "left_anti")
+    survivors = D.incremental_near_dup(
+        within, store_name, text_col, id_col, jaccard_threshold,
+        profile=prof).localCheckpoint()
+    if sink is not None:
+        sink(survivors)
+    D.build_minhash_store(survivors, store_name, text_col, id_col,
+                          mode="append", prov=prov, profile=prof, **meta)
+    prof.unpersist()
+
+
+def _span_apply(batch_df, store_name, prov, meta, text_col="text",
+                id_col="doc_id") -> None:
+    from pipelinedp_spark.operators import dedup as D
+    D.build_span_store(batch_df, store_name, text_col, id_col,
+                       mode="append", prov=prov, **meta)
+
+
+def _phash_apply(batch_df, store_name, prov, meta, binary_col="image",
+                 id_col="doc_id") -> None:
+    from pipelinedp_spark.operators import multimodal as MM
+    MM.build_phash_store(batch_df, store_name, binary_col, id_col,
+                         mode="append", prov=prov, **meta)
+
+
+def _bm25_apply(batch_df, store_name, prov, meta, text_col="text",
+                id_col="doc_id") -> None:
+    from pipelinedp_spark.operators.retrieval import build_bm25_index
+    refresh_store(batch_df.sparkSession, store_name,
+                  ("_postings", "_terms", "_meta"))
+    build_bm25_index(batch_df, store_name, text_col=text_col,
+                     id_col=id_col, mode="append", prov=prov)
+
+
+def _ann_apply(batch_df, store_name, prov, meta, vec_col="embedding",
+               id_col="vec_id") -> None:
+    from pipelinedp_spark.operators.similarity import build_ann_index
+    build_ann_index(batch_df, store_name, corpus_id=id_col,
+                    corpus_vec=vec_col, mode="append", prov=prov)
+
+
+def _bm25_restore(spark, store_name: str) -> None:
+    from pipelinedp_spark.operators.retrieval import restore_bm25_meta
+    restore_bm25_meta(spark, store_name)
+
+
+def _minhash_compact(spark, store_name, meta, frames):
+    from pyspark.sql import functions as F
+    if "max_bucket_size" in meta.__fields__:
+        bands = frames["_bands"]
+        keep = (bands.groupBy("bh")
+                .agg(F.count(F.lit(1)).alias("__n__"))
+                .filter(F.col("__n__") <= int(meta["max_bucket_size"]))
+                .select("bh").hint("shuffle_hash"))
+        frames["_bands"] = bands.join(keep, "bh").select(*bands.columns)
+    return frames
+
+
+def _phash_compact(spark, store_name, meta, frames):
+    # after compaction the members table IS the survivor set again
+    from pyspark.sql import functions as F
+    rm_table = f"{store_name}_removed_ids"
+    if "_members" in frames and spark.catalog.tableExists(rm_table):
+        frames["_members"] = frames["_members"].join(
+            F.broadcast(spark.table(rm_table).select("id")), "id",
+            "left_anti")
+    return frames
+
+
+def _bm25_compact(spark, store_name, meta, frames):
+    # Postings are the primary table: one df row per term re-derives
+    # from the survivors (the negative takedown segments corrected for
+    # tombstoned docs, now physically gone).
+    from pyspark.sql import functions as F
+    post = frames["_postings"].localCheckpoint()
+    dft = post.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    if PROV_RUN in post.columns:
+        dft = with_prov(dft)   # merged segments: no lineage
+    return {"_postings": post, "_terms": dft}
+
+
+KINDS = {k.name: k for k in (
+    StoreKind("exact", {"_fps": ("fingerprint", None)}, "fingerprint",
+              _exact_apply, refresh=("_fps", "_tombstones"),
+              inherit=("num_buckets",)),
+    StoreKind("minhash", {"_bands": ("bh", None),
+                          "_shingles": ("id", ("id",))}, "id",
+              _minhash_apply,
+              refresh=("_bands", "_shingles", "_tombstones"),
+              inherit=("k", "num_hashes", "rows_per_band", "num_buckets"),
+              compact_fn=_minhash_compact),
+    StoreKind("span", {"_anchors": ("ah", None),
+                       "_texts": ("id", ("id",))}, "id", _span_apply,
+              refresh=("_anchors", "_texts", "_meta"),
+              inherit=("min_len", "seed_len")),
+    StoreKind("phash", {"_blocks": ("bk", None),
+                        "_members": ("ph", ("id",))}, "ph", _phash_apply,
+              refresh=("_blocks", "_members", "_meta"),
+              inherit=("max_hamming", "num_blocks"),
+              compact_fn=_phash_compact),
+    # bm25 refreshes its tables inside the guarded apply (`_bm25_apply`)
+    StoreKind("bm25", {"_postings": ("term", ("term", "id")),
+                       "_terms": ("term", None)}, "id", _bm25_apply,
+              restore_fn=_bm25_restore, compact_fn=_bm25_compact),
+    StoreKind("ann", {"_codes": (("partition", "cell"), ("id",))}, "id",
+              _ann_apply, refresh=("_meta", "_centroids", "_codebooks")),
+)}

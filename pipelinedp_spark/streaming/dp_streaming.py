@@ -1463,242 +1463,26 @@ def streaming_sentence_dedup(stream: DataFrame,
             .start())
 
 
-def streaming_exact_dedup_store(stream: DataFrame,
-                                store_name: str,
-                                output_path: str,
-                                checkpoint_dir: str,
-                                text_col: str = "text",
-                                id_col: str = "doc_id"):
-    """Streaming ingest-time EXACT dedup against the persisted bucketed
-    fingerprint store (`operators.dedup.build_exact_store`) — unlike
-    `streaming_exact_dedup` (applyInPandasWithState, state dies with
-    the query), the store outlives the stream, is shared with batch
-    jobs (`incremental_exact_dedup`), and anti-joins each micro-batch
-    with zero Exchange on the store side.
+def stream_into(kind: str, stream: DataFrame, store_name: str,
+                checkpoint_dir: str, output_path: str | None = None,
+                **kw):
+    """Streaming ingest into the persisted store ``store_name`` of kind
+    ``kind`` (a `store.KINDS` key): each micro-batch runs
+    `store.ingest_batch_once` — exactly once, namespaced by
+    ``checkpoint_dir`` — so batch jobs and serving calls between
+    triggers see every ingested batch. ``output_path`` (exact and
+    minhash) receives each batch's surviving rows as appended parquet;
+    ``kw`` passes the kind's column names and options through. The
+    caller builds the store first (possibly empty). Unlike
+    `streaming_exact_dedup` / `streaming_near_dup_dedup`, whose state
+    dies with the query, the store outlives the stream and is shared
+    with batch jobs. Returns the started StreamingQuery."""
+    sink = None if output_path is None else (
+        lambda surv: surv.write.mode("append").parquet(output_path))
 
-    Per batch: first occurrence per fingerprint WITHIN the batch
-    (min id — map-side-combinable argmin, no window), anti-join the
-    store, append survivors to ``output_path`` and their fingerprints
-    to the store (bucket-aligned append). EXACTLY-ONCE: an
-    at-least-once replay of a micro-batch is suppressed by the
-    ``{store}_ingest_log`` batch-id guard (`store.apply_batch_once`),
-    so neither the output nor the fps table double-writes (the
-    anti-join state was already replay-insensitive; the OUTPUT append
-    was not, until the guard). Takedowns issued mid-stream
-    (`remove_from_exact_store` between triggers) take effect at the
-    next trigger — the tombstone table is refreshed per batch. The
-    caller builds the store first (possibly from an empty
-    reference). Returns the started StreamingQuery."""
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_exact_batch_idempotent(
-            batch_df, store_name, batch_id, text_col, id_col,
-            sink=lambda surv: surv.select(id_col, "fingerprint")
-            .write.mode("append").parquet(output_path),
-            run_id=checkpoint_dir)
-
-    return (stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
-
-
-def ingest_exact_batch_idempotent(batch_df: DataFrame,
-                                  store_name: str,
-                                  batch_id: int,
-                                  text_col: str = "text",
-                                  id_col: str = "doc_id",
-                                  sink=None,
-                                  run_id: str = "") -> bool:
-    """One exact-store ingest micro-batch, applied EXACTLY ONCE — the
-    foreachBatch body of `streaming_exact_dedup_store`, shared so
-    batch replays (and the oracle mirrors) drive the identical path.
-    Dedups within the batch (first doc_id per fingerprint), anti-joins
-    the accumulated store (honoring tombstoned takedowns — the
-    tombstone table is refreshed per batch, so a mid-stream
-    `remove_from_exact_store` takes effect at the next trigger),
-    calls ``sink(survivors)`` INSIDE the guarded apply (so a replay
-    skips the output write too), then appends the survivors'
-    fingerprints bucket-aligned. Returns True if applied, False if
-    skipped as an ingest-log replay (`store.apply_batch_once`)."""
-    from pipelinedp_spark import store as _store
-    from pipelinedp_spark.functions import text as TX
-    s = batch_df.sparkSession
-    # Each micro-batch runs in a CLONED session with its own
-    # table-relation cache; resolve the store through the batch's
-    # session and refresh first, or the file listing cached at
-    # trigger 1 hides every later append (reproduced: cross-batch
-    # duplicates silently survived).
-    _store.refresh_table(s, f"{store_name}_fps")
-    if s.catalog.tableExists(f"{store_name}_tombstones"):
-        _store.refresh_table(s, f"{store_name}_tombstones")
-    nbuck = int(store.read_meta(s, store_name)
-                ["num_buckets"])
-    has_prov = _store.table_has_prov(s, f"{store_name}_fps")
-
-    def _apply() -> None:
-        fp = TX.rolling_fingerprint(F.col(text_col))
-        firsts = (batch_df.withColumn("fingerprint", fp)
-                  .groupBy("fingerprint")
-                  .agg(F.min(id_col).alias(id_col)))
-        fps = s.table(f"{store_name}_fps")
-        ts = _store.tombstones(s, store_name)
-        if ts is not None:
-            fps = fps.join(ts, "fingerprint", "left_anti")
-        survivors = (firsts.repartition(nbuck, "fingerprint")
-                     .join(fps, "fingerprint", "left_anti")
-                     .localCheckpoint())
-        if sink is not None:
-            sink(survivors)
-        out = survivors.select("fingerprint")
-        if has_prov:
-            # provenance stamp: lets the guard roll back this append
-            # if we crash before the ingest-log row lands
-            out = _store.with_prov(out, run_id or "", batch_id)
-        (out.write.mode("append").format("parquet")
-         .bucketBy(nbuck, "fingerprint").sortBy("fingerprint")
-         .saveAsTable(f"{store_name}_fps"))
-
-    return _store.apply_batch_once(
-        s, store_name, batch_id, _apply, run_id=run_id,
-        stamped={"_fps": "fingerprint"} if has_prov else None)
-
-
-def streaming_near_dup_store(stream: DataFrame,
-                             store_name: str,
-                             output_path: str,
-                             checkpoint_dir: str,
-                             text_col: str = "text",
-                             id_col: str = "doc_id",
-                             jaccard_threshold: float = 0.8):
-    """Streaming NEAR-dup ingest dedup against the persisted bucketed
-    MinHash store (`operators.dedup.build_minhash_store`) — the
-    near-dup sibling of `streaming_exact_dedup_store` and the
-    store-backed alternative to `streaming_near_dup_dedup` (whose
-    simhash-block state is private to the stream; this store is shared
-    with batch `incremental_near_dup` jobs and outlives the query).
-
-    Per batch: (1) within-batch near-dups drop (MinHash+LSH pairs with
-    the STORE's fingerprint knobs, exact-Jaccard verified, larger id
-    loses), (2) survivors anti-match the store (zero store-side
-    Exchange), (3) survivors append to the output AND their bands +
-    shingles append to the store bucket-aligned via
-    `build_minhash_store(mode='append')`. EXACTLY-ONCE: replayed
-    micro-batches are suppressed by the ``{store}_ingest_log``
-    batch-id guard (`store.apply_batch_once`) — candidate joins were
-    already duplicate-insensitive, but the output append and the
-    per-increment bucket cap were not. Mid-stream takedowns
-    (`remove_from_minhash_store` between triggers) take effect at the
-    next trigger (per-batch tombstone refresh). Returns the started
-    StreamingQuery."""
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_near_dup_batch_idempotent(
-            batch_df, store_name, batch_id, text_col, id_col,
-            jaccard_threshold,
-            sink=lambda surv: surv.write.mode("append")
-            .parquet(output_path), run_id=checkpoint_dir)
-
-    return (stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
-
-
-def ingest_near_dup_batch_idempotent(batch_df: DataFrame,
-                                     store_name: str,
-                                     batch_id: int,
-                                     text_col: str = "text",
-                                     id_col: str = "doc_id",
-                                     jaccard_threshold: float = 0.8,
-                                     sink=None,
-                                     run_id: str = "") -> bool:
-    """One near-dup-store ingest micro-batch, applied EXACTLY ONCE —
-    the foreachBatch body of `streaming_near_dup_store`, shared so
-    batch replays (and the oracle mirrors) drive the identical path.
-    Within-batch MinHash+LSH losers drop, survivors anti-match the
-    accumulated store with the STORE's fingerprint knobs (honoring
-    tombstoned takedowns — refreshed per batch, so a mid-stream
-    `remove_from_minhash_store` takes effect at the next trigger),
-    ``sink(survivors)`` runs INSIDE the guarded apply, and survivors'
-    bands + shingles append bucket-aligned. Returns True if applied,
-    False if skipped as an ingest-log replay — the output append and
-    the per-increment max_bucket_size cap are NOT
-    multiplicity-insensitive, even though the candidate joins are.
-
-    A crash between apply and log is CONVERGENT (round 12, same
-    protocol as BM25/exact): the batch's bands/shingles rows carry
-    (run_id, batch_id) provenance stamps, so the re-run rolls them
-    back before re-applying. Without the rollback the re-run would
-    anti-match the batch against its OWN crashed attempt's bands —
-    every doc reads as a near-dup of itself and the sink silently
-    receives nothing (the batch's output would be lost, worse than a
-    duplicate)."""
-    from pipelinedp_spark import store as _store
-    from pipelinedp_spark.operators import dedup as D
-    s = batch_df.sparkSession
-    for t in (f"{store_name}_bands", f"{store_name}_shingles"):
-        _store.refresh_table(s, t)
-    if s.catalog.tableExists(f"{store_name}_tombstones"):
-        _store.refresh_table(s, f"{store_name}_tombstones")
-    m = store.read_meta(s, store_name)
-    k, num_hashes, rpb = (int(m["k"]), int(m["num_hashes"]),
-                          int(m["rows_per_band"]))
-    nbuck = int(m["num_buckets"])
-
-    has_prov = _store.table_has_prov(s, f"{store_name}_bands")
-
-    def _apply() -> None:
-        # ONE signature pass for the whole micro-batch: pair
-        # generation, the store anti-match and the store append all
-        # consume the same checkpointed (id, shingles, band-hash)
-        # profile instead of re-tokenizing/re-signing the batch text
-        # at every step (was 3 signature passes + up to 6 shingle
-        # passes per trigger — the bulk of the trigger floor).
-        prof = D.minhash_profile(batch_df, text_col, id_col, k,
-                                 num_hashes, rpb).localCheckpoint()
-        pairs = D.minhash_lsh_pairs_from_profile(
-            prof, id_col, jaccard_threshold)
-        losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-        within = batch_df.join(losers, id_col, "left_anti")
-        survivors = D.incremental_near_dup(
-            within, store_name, text_col, id_col,
-            jaccard_threshold, profile=prof).localCheckpoint()
-        if sink is not None:
-            sink(survivors)
-        D.build_minhash_store(survivors, store_name, text_col, id_col,
-                              k, num_hashes, rpb, nbuck, mode="append",
-                              prov=(run_id or "", int(batch_id)),
-                              profile=prof)
-        prof.unpersist()
-
-    return _store.apply_batch_once(
-        s, store_name, batch_id, _apply, run_id=run_id,
-        stamped=({"_bands": "bh", "_shingles": "id"}
-                 if has_prov else None))
-
-
-def streaming_ann_ingest(stream: DataFrame,
-                         store_name: str,
-                         checkpoint_dir: str,
-                         vec_col: str = "embedding",
-                         id_col: str = "vec_id"):
-    """Streaming ingest into the persisted IVF-PQ vector index
-    (`operators.similarity.build_ann_index`): each micro-batch encodes
-    its vectors with the store's PERSISTED models (mode='append' —
-    never retrains, so existing codes keep their cells) and lands them
-    in their cell partitions; `ann_search_from_index` sees them on its
-    next run. The caller builds the index first (training on a
-    representative sample). EXACTLY-ONCE: an at-least-once replay is
-    suppressed by the ``{store}_ingest_log`` batch-id guard
-    (`store.apply_batch_once`) — without it a replayed batch appends
-    duplicate code rows that occupy extra top-k slots in
-    `ann_search_from_index` until `compact_store(kind='ann')` drops
-    them (compaction remains the recovery for the one-batch
-    crash-between-apply-and-log window). Returns the started
-    StreamingQuery."""
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_ann_batch_idempotent(batch_df, store_name, batch_id,
-                                    vec_col, id_col,
-                                    run_id=checkpoint_dir)
+        store.ingest_batch_once(kind, batch_df, store_name, batch_id,
+                                run_id=checkpoint_dir, sink=sink, **kw)
 
     return (stream.writeStream.foreachBatch(_process)
             .option("checkpointLocation", checkpoint_dir)
@@ -1712,230 +1496,11 @@ def ingest_ann_batch_idempotent(batch_df: DataFrame,
                                 vec_col: str = "embedding",
                                 id_col: str = "vec_id",
                                 run_id: str = "") -> bool:
-    """One IVF-PQ index ingest micro-batch, applied EXACTLY ONCE — the
-    foreachBatch body of `streaming_ann_ingest`, shared so batch
-    replays (and the oracle mirrors) drive the identical path: refresh
-    the model tables, encode with the PERSISTED quantizers
-    (mode='append', never retrains), land codes in their cell
-    partitions. Returns True if applied, False if skipped as an
-    ingest-log replay (`store.apply_batch_once`) — without the guard a
-    replayed batch appends duplicate code rows that occupy extra top-k
-    slots until compaction. A crash between apply and log is
-    CONVERGENT (round 12): the code rows carry (run_id, batch_id)
-    provenance, so the re-run rolls the half-applied partition rows
-    back before re-encoding."""
-    from pipelinedp_spark import store as _store
-    from pipelinedp_spark.operators.similarity import build_ann_index
-    s = batch_df.sparkSession
-    for t in (f"{store_name}_meta", f"{store_name}_centroids",
-              f"{store_name}_codebooks"):
-        _store.refresh_table(s, t)
-    has_prov = _store.table_has_prov(s, f"{store_name}_codes")
-    return _store.apply_batch_once(
-        s, store_name, batch_id,
-        lambda: build_ann_index(batch_df, store_name, corpus_id=id_col,
-                                corpus_vec=vec_col, mode="append",
-                                prov=(run_id or "", int(batch_id))),
-        run_id=run_id,
-        stamped=({"_codes": ("partition", "cell")}
-                 if has_prov else None))
-
-
-def ingest_span_batch_idempotent(batch_df: DataFrame,
-                                 store_name: str,
-                                 batch_id: int,
-                                 text_col: str = "text",
-                                 id_col: str = "doc_id",
-                                 run_id: str = "") -> bool:
-    """Append one micro-batch of REFERENCE documents to the persisted
-    span-decontamination index (`dedup.build_span_store`) EXACTLY ONCE —
-    e.g. an eval/benchmark suite that keeps growing while training
-    batches are span-cut against it. Fingerprint knobs (min_len,
-    seed_len) are inherited from the store meta so a streamed increment
-    can never anchor differently from the build; replays are suppressed
-    by the ingest log (`store.apply_batch_once`) — anchor rows are
-    anti-join-insensitive, but per-append small files and the texts
-    table are not free to duplicate. (Tombstones are a SERVING-side
-    concern for this kind: the ingest path appends reference anchors
-    and never reads them — `incremental_decontaminate_spans` applies
-    takedowns at read time.)"""
-    from pipelinedp_spark import store as _store
-    from pipelinedp_spark.operators import dedup as D
-    s = batch_df.sparkSession
-    for t in (f"{store_name}_anchors", f"{store_name}_texts",
-              f"{store_name}_meta"):
-        _store.refresh_table(s, t)
-    m = store.read_meta(s, store_name)
-    has_prov = _store.table_has_prov(s, f"{store_name}_anchors")
-    return _store.apply_batch_once(
-        s, store_name, batch_id,
-        lambda: D.build_span_store(batch_df, store_name, text_col,
-                                   id_col, min_len=int(m["min_len"]),
-                                   seed_len=int(m["seed_len"]),
-                                   mode="append",
-                                   prov=(run_id or "", int(batch_id))),
-        run_id=run_id,
-        stamped=({"_anchors": "ah", "_texts": "id"}
-                 if has_prov else None))
-
-
-def streaming_span_ingest(stream: DataFrame,
-                          store_name: str,
-                          checkpoint_dir: str,
-                          text_col: str = "text",
-                          id_col: str = "doc_id"):
-    """Streaming ingest into the persisted span-decontamination index —
-    the span member of the store family's streaming faces (exact /
-    minhash / ann / bm25 / span / phash all share the exactly-once
-    ingest-log contract since round 11). The caller builds the store
-    first (possibly from an empty reference). Returns the started
-    StreamingQuery."""
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_span_batch_idempotent(batch_df, store_name, batch_id,
-                                     text_col, id_col,
-                                     run_id=checkpoint_dir)
-
-    return (stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
-
-
-def ingest_phash_batch_idempotent(batch_df: DataFrame,
-                                  store_name: str,
-                                  batch_id: int,
-                                  binary_col: str = "image",
-                                  id_col: str = "doc_id",
-                                  run_id: str = "") -> bool:
-    """Append one micro-batch of REFERENCE images to the persisted
-    pHash dedup index (`multimodal.build_phash_store`) EXACTLY ONCE:
-    hashes land as bit-block rows + (ph, id) member rows bucket-aligned
-    with the store's knobs (max_hamming / num_blocks inherited from
-    meta). Duplicate member rows from a replay would be tolerated by
-    the takedown's existence-based survivorship, but the guard keeps
-    the members table an exact image of the ingested corpus (and the
-    blocks table free of per-replay small files). (Tombstones are a
-    SERVING-side concern for this kind: ingest appends reference
-    hashes and never reads them — `incremental_phash_dedup` applies
-    takedowns at read time.)"""
-    from pipelinedp_spark import store as _store
-    from pipelinedp_spark.operators import multimodal as MM
-    s = batch_df.sparkSession
-    for t in (f"{store_name}_blocks", f"{store_name}_members",
-              f"{store_name}_meta"):
-        _store.refresh_table(s, t)
-    m = store.read_meta(s, store_name)
-    has_prov = _store.table_has_prov(s, f"{store_name}_blocks")
-    return _store.apply_batch_once(
-        s, store_name, batch_id,
-        lambda: MM.build_phash_store(batch_df, store_name, binary_col,
-                                     id_col,
-                                     max_hamming=int(m["max_hamming"]),
-                                     num_blocks=int(m["num_blocks"]),
-                                     mode="append",
-                                     prov=(run_id or "", int(batch_id))),
-        run_id=run_id,
-        stamped=({"_blocks": "bk", "_members": "ph"}
-                 if has_prov else None))
-
-
-def streaming_phash_ingest(stream: DataFrame,
-                           store_name: str,
-                           checkpoint_dir: str,
-                           binary_col: str = "image",
-                           id_col: str = "doc_id"):
-    """Streaming ingest into the persisted pHash image-dedup index —
-    the multimodal member of the store family's streaming faces. The
-    caller builds the store first (possibly empty). Returns the
-    started StreamingQuery."""
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_phash_batch_idempotent(batch_df, store_name, batch_id,
-                                      binary_col, id_col,
-                                      run_id=checkpoint_dir)
-
-    return (stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
-
-
-def append_bm25_batch_idempotent(batch_df: DataFrame,
-                                 store_name: str,
-                                 batch_id: int,
-                                 text_col: str = "text",
-                                 id_col: str = "doc_id",
-                                 run_id: str = "") -> bool:
-    """Append one micro-batch to a persisted BM25 index EXACTLY ONCE.
-
-    Unlike the anti-join stores (exact/minhash/span/phash — replay-safe
-    because duplicate index rows can't change a semi/anti-join) and the
-    ANN store (duplicates compactable by id), BM25 appends are NOT
-    multiplicity-insensitive: a replayed batch double-counts tf, df and
-    the n_docs/total_dl scalars, silently corrupting every score. The
-    guard is the standard transactional-sink emulation, shared by the
-    whole store family since round 11 (`store.apply_batch_once`): a
-    ``{store}_ingest_log`` table records processed batch ids; a replay
-    of a logged id is a no-op. Returns True if the batch was applied,
-    False if skipped as a replay.
-
-    A crash BETWEEN append and log is CONVERGENT (round 12): the
-    batch's postings/terms rows are provenance-stamped with
-    (run_id, batch_id), so the re-run — Structured Streaming replays
-    the batch because its checkpoint never committed — finds the
-    stamps with no log row, rewrites both tables without them,
-    restores the meta scalars from the cleaned postings
-    (`retrieval.restore_bm25_meta` — exact, the scalars are derivable
-    from the live postings), and applies fresh: bit-identical to a
-    crash-free run. Stores built before round 12 (no stamp columns)
-    keep the documented one-batch window; `compact_store` also
-    repairs it."""
-    from pipelinedp_spark import store as _store
-    from pipelinedp_spark.operators.retrieval import (
-        build_bm25_index, restore_bm25_meta)
-    s = batch_df.sparkSession
-    has_prov = _store.table_has_prov(s, f"{store_name}_postings")
-
-    def _apply() -> None:
-        for t in (f"{store_name}_postings", f"{store_name}_terms",
-                  f"{store_name}_meta"):
-            _store.refresh_table(s, t)
-        build_bm25_index(batch_df, store_name, text_col=text_col,
-                         id_col=id_col, mode="append",
-                         prov=(run_id or "", int(batch_id)))
-
-    return _store.apply_batch_once(
-        s, store_name, batch_id, _apply, run_id=run_id,
-        stamped=({"_postings": "term", "_terms": "term"}
-                 if has_prov else None),
-        restore_fn=lambda: restore_bm25_meta(s, store_name))
-
-
-def streaming_bm25_ingest(stream: DataFrame,
-                          store_name: str,
-                          checkpoint_dir: str,
-                          text_col: str = "text",
-                          id_col: str = "doc_id"):
-    """Streaming ingest into the persisted BM25 inverted index
-    (`operators.retrieval.build_bm25_index`) — the last store-family
-    member to get a streaming face: each micro-batch appends its
-    postings and df segment bucket-aligned and refreshes the
-    n_docs/total_dl/avgdl scalars exactly, so `bm25_topk_from_index`
-    between triggers always serves scores identical to a from-scratch
-    index over everything ingested so far. At-least-once replays are
-    suppressed by the ``{store}_ingest_log`` batch-id guard
-    (`append_bm25_batch_idempotent`) because BM25 appends, unlike the
-    anti-join stores, are corrupted by duplicates. The caller builds
-    the index first (possibly from an empty corpus). Returns the
-    started StreamingQuery."""
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        append_bm25_batch_idempotent(batch_df, store_name, batch_id,
-                                     text_col, id_col,
-                                     run_id=checkpoint_dir)
-
-    return (stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    """`store.ingest_batch_once` for the ANN kind, under the name the
+    benchmark workload imports and traces."""
+    return store.ingest_batch_once("ann", batch_df, store_name, batch_id,
+                                   run_id=run_id, vec_col=vec_col,
+                                   id_col=id_col)
 
 
 def streaming_cluster_assign(stream: DataFrame, centroids,

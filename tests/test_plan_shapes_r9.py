@@ -9,6 +9,7 @@ import re
 from pyspark.sql import functions as F
 
 from pipelinedp_spark import plans as P
+from pipelinedp_spark import store
 from pipelinedp_spark.plans import scoped_conf
 
 SF = "/root/testdata/sf0.001"
@@ -144,7 +145,7 @@ def test_span_store_joins_never_exchange_store_side(spark):
 
 
 def test_store_compaction_dedupes_and_preserves_results(spark):
-    """compact_store: after a duplicate-introducing append, the exact
+    """compaction: after a duplicate-introducing append, the exact
     store's fps table shrinks to distinct rows, stays bucketed (joins
     still exchange-free), and dedup results are unchanged."""
     from pipelinedp_spark.operators import dedup
@@ -161,7 +162,7 @@ def test_store_compaction_dedupes_and_preserves_results(spark):
     dedup.build_exact_store(ref, "pin9c_store", num_buckets=4,
                             mode="append")
     n_raw = spark.table("pin9c_store_fps").count()
-    dedup.compact_store(spark, "pin9c_store", "exact")
+    store.compact(spark, "pin9c_store", "exact")
     n_compact = spark.table("pin9c_store_fps").count()
     assert n_compact * 2 == n_raw
     with scoped_conf(spark,
@@ -179,7 +180,7 @@ def test_store_compaction_dedupes_and_preserves_results(spark):
 
 
 def test_store_compaction_minhash_and_span_kinds(spark):
-    """compact_store on the minhash and span stores: a duplicate-
+    """Compaction on the minhash and span stores: a duplicate-
     introducing append doubles the table rows, compaction restores the
     distinct counts, and incremental results are unchanged."""
     from pipelinedp_spark.operators import dedup
@@ -198,7 +199,7 @@ def test_store_compaction_minhash_and_span_kinds(spark):
     n0 = spark.table("pin9m_store_bands").count()
     dedup.build_minhash_store(ref, "pin9m_store", mode="append")
     assert spark.table("pin9m_store_bands").count() == 2 * n0
-    dedup.compact_store(spark, "pin9m_store", "minhash")
+    store.compact(spark, "pin9m_store", "minhash")
     assert spark.table("pin9m_store_bands").count() == n0
     got = sorted(r["doc_id"] for r in dedup.incremental_near_dup(
         new, "pin9m_store", jaccard_threshold=0.7)
@@ -229,7 +230,7 @@ def test_store_compaction_minhash_and_span_kinds(spark):
     dedup.build_span_store(refs, "pin9sp_store", min_len=48,
                            mode="append")
     assert spark.table("pin9sp_store_anchors").count() == 2 * a0
-    dedup.compact_store(spark, "pin9sp_store", "span")
+    store.compact(spark, "pin9sp_store", "span")
     assert spark.table("pin9sp_store_anchors").count() == a0
     got_sp = sorted(
         (r["doc_id"], r["span_start"], r["span_end"]) for r in

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (DoubleType, IntegerType, StringType,
                                StructField, StructType, TimestampType)
 
-from pipelinedp_spark import sources
+from pipelinedp_spark import sources, store
 from pipelinedp_spark.aggregate_params import NoiseKind
 from pipelinedp_spark.operators import multimodal as MM
 from pipelinedp_spark.streaming import (dp_streaming_count,
@@ -1096,8 +1096,7 @@ def test_streaming_exact_dedup_store_end_to_end(spark, tmp_path):
     batch jobs) accumulates across queries."""
     from pipelinedp_spark.operators.dedup import (build_exact_store,
                                                   incremental_exact_dedup)
-    from pipelinedp_spark.streaming.dp_streaming import (
-        streaming_exact_dedup_store)
+    from pipelinedp_spark.streaming.dp_streaming import stream_into
     src = str(tmp_path / "in")
     outp = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
@@ -1110,16 +1109,16 @@ def test_streaming_exact_dedup_store_end_to_end(spark, tmp_path):
     docs0.write.parquet(src + "/f1.parquet")
     stream = (spark.readStream.schema("doc_id long, text string")
               .parquet(src + "/*"))
-    q = streaming_exact_dedup_store(stream, "e2e_exact_store", outp,
-                                    ckpt)
+    q = stream_into("exact", stream, "e2e_exact_store", ckpt,
+                    output_path=outp)
     q.awaitTermination(120)
     # trigger 2: 3 duplicates batch-1's alpha via the STORE; 4 is new
     _mk_docs(spark, [(3, "alpha text"), (4, "gamma text")]).write \
         .parquet(src + "/f2.parquet")
     stream2 = (spark.readStream.schema("doc_id long, text string")
                .parquet(src + "/*"))
-    q2 = streaming_exact_dedup_store(stream2, "e2e_exact_store", outp,
-                                     ckpt)
+    q2 = stream_into("exact", stream2, "e2e_exact_store", ckpt,
+                     output_path=outp)
     q2.awaitTermination(120)
     got = sorted(r["doc_id"]
                  for r in spark.read.parquet(outp).collect())
@@ -1139,8 +1138,7 @@ def test_streaming_near_dup_store_end_to_end(spark, tmp_path):
     within-batch near-dups lose to the smaller id, cross-batch
     near-dups drop via the store, survivors' fingerprints accumulate."""
     from pipelinedp_spark.operators.dedup import build_minhash_store
-    from pipelinedp_spark.streaming.dp_streaming import (
-        streaming_near_dup_store)
+    from pipelinedp_spark.streaming.dp_streaming import stream_into
     src = str(tmp_path / "in")
     outp = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
@@ -1155,14 +1153,16 @@ def test_streaming_near_dup_store_end_to_end(spark, tmp_path):
     docs0.write.parquet(src + "/f1.parquet")
     stream = (spark.readStream.schema("doc_id long, text string")
               .parquet(src + "/*"))
-    q = streaming_near_dup_store(stream, "e2e_nd_store", outp, ckpt)
+    q = stream_into("minhash", stream, "e2e_nd_store", ckpt,
+                    output_path=outp)
     q.awaitTermination(120)
     # trigger 2: 3 duplicates trigger-1's alpha via the STORE; 4 novel
     _mk_docs(spark, [(3, alpha), (4, gamma)]).write.parquet(
         src + "/f2.parquet")
     stream2 = (spark.readStream.schema("doc_id long, text string")
                .parquet(src + "/*"))
-    q2 = streaming_near_dup_store(stream2, "e2e_nd_store", outp, ckpt)
+    q2 = stream_into("minhash", stream2, "e2e_nd_store", ckpt,
+                     output_path=outp)
     q2.awaitTermination(120)
     got = sorted(r["doc_id"]
                  for r in spark.read.parquet(outp).collect())
@@ -1179,8 +1179,7 @@ def test_streaming_ann_ingest_end_to_end(spark, tmp_path):
 
     from pipelinedp_spark.operators.similarity import (
         ann_search_from_index, build_ann_index)
-    from pipelinedp_spark.streaming.dp_streaming import (
-        streaming_ann_ingest)
+    from pipelinedp_spark.streaming.dp_streaming import stream_into
     src = str(tmp_path / "in")
     ckpt = str(tmp_path / "ckpt")
     for t in ("e2e_ann_codes", "e2e_ann_centroids", "e2e_ann_codebooks",
@@ -1198,7 +1197,7 @@ def test_streaming_ann_ingest_end_to_end(spark, tmp_path):
     stream = (spark.readStream
               .schema("vec_id long, embedding array<float>")
               .parquet(src + "/*"))
-    q = streaming_ann_ingest(stream, "e2e_ann", ckpt)
+    q = stream_into("ann", stream, "e2e_ann", ckpt)
     q.awaitTermination(120)
     # a streamed vector's own copy must now be findable
     probe = (emb.filter(F.col("vec_id") == 205)
@@ -1222,8 +1221,7 @@ def test_streaming_bm25_ingest_end_to_end(spark, tmp_path):
     from pipelinedp_spark.operators.retrieval import (bm25_topk,
                                                       build_bm25_index,
                                                       bm25_topk_from_index)
-    from pipelinedp_spark.streaming.dp_streaming import (
-        append_bm25_batch_idempotent, streaming_bm25_ingest)
+    from pipelinedp_spark.streaming.dp_streaming import stream_into
     src = str(tmp_path / "in")
     ckpt = str(tmp_path / "ckpt")
     tables = ("e2e_bm25_postings", "e2e_bm25_terms", "e2e_bm25_meta",
@@ -1238,7 +1236,7 @@ def test_streaming_bm25_ingest_end_to_end(spark, tmp_path):
     stream = (spark.readStream.schema("doc_id long, text string, "
                                       "n_chars long")
               .parquet(src + "/*").select("doc_id", "text"))
-    q = streaming_bm25_ingest(stream, "e2e_bm25", ckpt)
+    q = stream_into("bm25", stream, "e2e_bm25", ckpt)
     q.awaitTermination(120)
     qdf = spark.sql("SELECT * FROM VALUES (0, 'hash join merge'), "
                     "(1, 'scan filter') AS t(query_id, query_text)")
@@ -1252,8 +1250,8 @@ def test_streaming_bm25_ingest_end_to_end(spark, tmp_path):
     # LINEAGE (run_id = its checkpoint location) changes nothing; the
     # same batch id under a fresh lineage would apply (r11 namespacing)
     n_log = spark.table("e2e_bm25_ingest_log").count()
-    assert not append_bm25_batch_idempotent(
-        docs.filter(F.col("doc_id") % 2 == 0), "e2e_bm25", 0,
+    assert not store.ingest_batch_once(
+        "bm25", docs.filter(F.col("doc_id") % 2 == 0), "e2e_bm25", 0,
         run_id=ckpt)
     assert spark.table("e2e_bm25_ingest_log").count() == n_log
     assert sorted((r["query_id"], r["doc_id"], r["rank"], r["score"])

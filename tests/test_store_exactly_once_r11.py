@@ -1,8 +1,8 @@
 """Round-11 exactly-once + mid-stream-takedown contracts for the
 store-family streaming ingests (VERDICT r10 tasks 2 and 3).
 
-Every store kind's foreachBatch body is a shared, batch-callable
-``ingest_*_batch_idempotent`` function guarded by the
+Every store kind's foreachBatch body is the shared, batch-callable
+`store.ingest_batch_once`, guarded by the
 ``{store}_ingest_log`` batch-id table (`store.apply_batch_once`):
 
 * an at-least-once REPLAY of a micro-batch must be a complete no-op —
@@ -12,15 +12,16 @@ Every store kind's foreachBatch body is a shared, batch-callable
   serving) without a stream restart.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
+from pipelinedp_spark import store
 from pipelinedp_spark.operators.dedup import (build_exact_store,
                                               build_minhash_store,
                                               remove_from_exact_store,
                                               remove_from_minhash_store)
-from pipelinedp_spark.streaming.dp_streaming import (
-    ingest_ann_batch_idempotent, ingest_exact_batch_idempotent,
-    ingest_near_dup_batch_idempotent)
+
+pytestmark = pytest.mark.store
 
 
 def _docs(spark, rows):
@@ -42,15 +43,15 @@ def test_exact_ingest_exactly_once_and_mid_stream_takedown(spark):
                       num_buckets=2)
     outs = []
     b0 = _docs(spark, [(0, "alpha text"), (1, "beta text")])
-    assert ingest_exact_batch_idempotent(
-        b0, "xo_exact", 0, sink=lambda s: outs.append(s))
+    assert store.ingest_batch_once(
+        "exact", b0, "xo_exact", 0, sink=lambda s: outs.append(s))
     assert len(outs) == 1
     n_fps = spark.table("xo_exact_fps").count()
     assert n_fps == 2
     # replay of batch 0: suppressed END TO END — the sink is never
     # called and the fps table does not grow
-    assert not ingest_exact_batch_idempotent(
-        b0, "xo_exact", 0, sink=lambda s: outs.append(s))
+    assert not store.ingest_batch_once(
+        "exact", b0, "xo_exact", 0, sink=lambda s: outs.append(s))
     assert len(outs) == 1
     spark.catalog.refreshTable("xo_exact_fps")
     assert spark.table("xo_exact_fps").count() == n_fps
@@ -59,8 +60,8 @@ def test_exact_ingest_exactly_once_and_mid_stream_takedown(spark):
     remove_from_exact_store(_docs(spark, [(0, "alpha text")]),
                             "xo_exact")
     got = []
-    assert ingest_exact_batch_idempotent(
-        b0.sparkSession.createDataFrame(
+    assert store.ingest_batch_once(
+        "exact", b0.sparkSession.createDataFrame(
             [(5, "alpha text"), (6, "beta text")],
             "doc_id long, text string"),
         "xo_exact", 1,
@@ -82,13 +83,13 @@ def test_near_dup_ingest_exactly_once_and_mid_stream_takedown(spark):
                         num_buckets=2)
     outs = []
     b0 = _docs(spark, [(0, alpha), (2, beta)])
-    assert ingest_near_dup_batch_idempotent(
-        b0, "xo_nd", 0, sink=lambda s: outs.append(s))
+    assert store.ingest_batch_once(
+        "minhash", b0, "xo_nd", 0, sink=lambda s: outs.append(s))
     assert len(outs) == 1
     n_bands = spark.table("xo_nd_bands").count()
     # replay: no sink call, no bands append
-    assert not ingest_near_dup_batch_idempotent(
-        b0, "xo_nd", 0, sink=lambda s: outs.append(s))
+    assert not store.ingest_batch_once(
+        "minhash", b0, "xo_nd", 0, sink=lambda s: outs.append(s))
     assert len(outs) == 1
     spark.catalog.refreshTable("xo_nd_bands")
     assert spark.table("xo_nd_bands").count() == n_bands
@@ -96,8 +97,8 @@ def test_near_dup_ingest_exactly_once_and_mid_stream_takedown(spark):
     # alpha must now SURVIVE, while beta (doc 2 still referenced) drops
     remove_from_minhash_store(_docs(spark, [(0, alpha)]), "xo_nd")
     got = []
-    assert ingest_near_dup_batch_idempotent(
-        _docs(spark, [(7, alpha), (8, beta)]), "xo_nd", 1,
+    assert store.ingest_batch_once(
+        "minhash", _docs(spark, [(7, alpha), (8, beta)]), "xo_nd", 1,
         sink=lambda s: got.append(sorted(
             r["doc_id"] for r in s.select("doc_id").collect())))
     assert got == [[7]]
@@ -118,11 +119,11 @@ def test_ann_ingest_exactly_once_and_mid_stream_takedown(spark):
     inc = (emb.filter((F.col("vec_id") >= 200) & (F.col("vec_id") < 230))
            .select((F.col("vec_id") + 500000).alias("vec_id"),
                    "embedding"))
-    assert ingest_ann_batch_idempotent(inc, "xo_ann", 0)
+    assert store.ingest_batch_once("ann", inc, "xo_ann", 0)
     spark.catalog.refreshTable("xo_ann_codes")
     n_codes = spark.table("xo_ann_codes").count()
     # replay: no duplicate code rows (they would occupy top-k slots)
-    assert not ingest_ann_batch_idempotent(inc, "xo_ann", 0)
+    assert not store.ingest_batch_once("ann", inc, "xo_ann", 0)
     spark.catalog.refreshTable("xo_ann_codes")
     assert spark.table("xo_ann_codes").count() == n_codes
     probe = (emb.filter(F.col("vec_id") == 205)
@@ -141,7 +142,7 @@ def test_ann_ingest_exactly_once_and_mid_stream_takedown(spark):
     inc2 = (emb.filter((F.col("vec_id") >= 230) & (F.col("vec_id") < 240))
             .select((F.col("vec_id") + 500000).alias("vec_id"),
                     "embedding"))
-    assert ingest_ann_batch_idempotent(inc2, "xo_ann", 1)
+    assert store.ingest_batch_once("ann", inc2, "xo_ann", 1)
     _drop(spark, ANN_TABLES)
 
 
@@ -154,20 +155,18 @@ SPAN_TABLES = ("xo_span_anchors", "xo_span_texts", "xo_span_meta",
 def test_span_ingest_exactly_once_equals_build_once(spark):
     from pipelinedp_spark.operators.dedup import (
         build_span_store, incremental_decontaminate_spans)
-    from pipelinedp_spark.streaming.dp_streaming import (
-        ingest_span_batch_idempotent)
     _drop(spark, SPAN_TABLES)
     docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
             .filter(F.length("text") >= 80).limit(40).localCheckpoint())
     build_span_store(docs.limit(0), "xo_span", min_len=50, num_buckets=2)
     b0 = docs.filter(F.col("doc_id") % 2 == 0)
     b1 = docs.filter(F.col("doc_id") % 2 != 0)
-    assert ingest_span_batch_idempotent(b0, "xo_span", 0)
-    assert ingest_span_batch_idempotent(b1, "xo_span", 1)
+    assert store.ingest_batch_once("span", b0, "xo_span", 0)
+    assert store.ingest_batch_once("span", b1, "xo_span", 1)
     spark.catalog.refreshTable("xo_span_anchors")
     n_anchors = spark.table("xo_span_anchors").count()
     # replay: no duplicate anchors/texts appended
-    assert not ingest_span_batch_idempotent(b1, "xo_span", 1)
+    assert not store.ingest_batch_once("span", b1, "xo_span", 1)
     spark.catalog.refreshTable("xo_span_anchors")
     assert spark.table("xo_span_anchors").count() == n_anchors
     # streamed-increment store must decontaminate EXACTLY like a
@@ -212,20 +211,18 @@ def _images(spark, n):
 
 def test_phash_ingest_exactly_once_and_member_counting(spark):
     from pipelinedp_spark.operators import multimodal as MM
-    from pipelinedp_spark.streaming.dp_streaming import (
-        ingest_phash_batch_idempotent)
     _drop(spark, PHASH_TABLES)
     imgs = _images(spark, 32)    # 8 visual families x 4 members
     MM.build_phash_store(imgs.limit(0), "xo_ph", num_buckets=2)
     b0 = imgs.filter(F.col("doc_id") % 2 == 0)
     b1 = imgs.filter(F.col("doc_id") % 2 != 0)
-    assert ingest_phash_batch_idempotent(b0, "xo_ph", 0)
-    assert ingest_phash_batch_idempotent(b1, "xo_ph", 1)
+    assert store.ingest_batch_once("phash", b0, "xo_ph", 0)
+    assert store.ingest_batch_once("phash", b1, "xo_ph", 1)
     spark.catalog.refreshTable("xo_ph_members")
     assert spark.table("xo_ph_members").count() == 32
     # replay: member rows must NOT duplicate (inflated member counts
     # would keep a family alive past its real last takedown)
-    assert not ingest_phash_batch_idempotent(b1, "xo_ph", 1)
+    assert not store.ingest_batch_once("phash", b1, "xo_ph", 1)
     spark.catalog.refreshTable("xo_ph_members")
     assert spark.table("xo_ph_members").count() == 32
     batch = imgs.select((F.col("doc_id") + 900).alias("doc_id"),
@@ -264,8 +261,6 @@ def test_span_ingest_mid_stream_takedown(spark):
     from pipelinedp_spark.operators.dedup import (
         build_span_store, incremental_decontaminate_spans,
         remove_from_span_store)
-    from pipelinedp_spark.streaming.dp_streaming import (
-        ingest_span_batch_idempotent)
     _drop(spark, SPAN_TK_TABLES)
     text_a = ("alpha reference passage about contribution bounding "
               "and partition selection in differential privacy land")
@@ -275,8 +270,8 @@ def test_span_ingest_mid_stream_takedown(spark):
               "and late data handling in structured streaming jobs")
     build_span_store(_docs(spark, []).limit(0), "xo_spt", min_len=50,
                      num_buckets=2)
-    assert ingest_span_batch_idempotent(
-        _docs(spark, [(0, text_a), (2, text_b)]), "xo_spt", 0)
+    assert store.ingest_batch_once(
+        "span", _docs(spark, [(0, text_a), (2, text_b)]), "xo_spt", 0)
     batch = _docs(spark, [(100, text_a), (101, text_b), (102, text_c)])
 
     def flagged():
@@ -289,8 +284,8 @@ def test_span_ingest_mid_stream_takedown(spark):
     # takedown of reference doc 0 BETWEEN triggers…
     remove_from_span_store(_docs(spark, [(0, text_a)]), "xo_spt")
     # …a later trigger still ingests normally…
-    assert ingest_span_batch_idempotent(
-        _docs(spark, [(4, text_c)]), "xo_spt", 1)
+    assert store.ingest_batch_once(
+        "span", _docs(spark, [(4, text_c)]), "xo_spt", 1)
     # …and the in-session serve reflects BOTH: text_a is admissible
     # again (its only reference copy was removed), text_c now cuts
     assert flagged() == {101, 102}
@@ -309,14 +304,12 @@ def test_phash_ingest_mid_stream_takedown(spark):
     and re-appended content of a tombstoned hash stays hidden until
     compaction (the documented re-add contract)."""
     from pipelinedp_spark.operators import multimodal as MM
-    from pipelinedp_spark.streaming.dp_streaming import (
-        ingest_phash_batch_idempotent)
     _drop(spark, PHASH_TK_TABLES)
     imgs = _images(spark, 32)   # 8 visual families (doc_id % 8) x 4
     MM.build_phash_store(imgs.limit(0), "xo_pht", num_buckets=2)
     # trigger 0 ingests members 0..15 (two per family)
-    assert ingest_phash_batch_idempotent(
-        imgs.filter(F.col("doc_id") < 16), "xo_pht", 0)
+    assert store.ingest_batch_once(
+        "phash", imgs.filter(F.col("doc_id") < 16), "xo_pht", 0)
     batch = imgs.filter((F.col("doc_id") >= 16) & (F.col("doc_id") < 24)) \
         .select((F.col("doc_id") + 900).alias("doc_id"), "image")
 
@@ -333,18 +326,17 @@ def test_phash_ingest_mid_stream_takedown(spark):
         imgs.filter(F.col("doc_id").isin(3, 11)), "xo_pht")
     # a later trigger ingests normally — including doc 27, a NEW
     # member of tombstoned family 3
-    assert ingest_phash_batch_idempotent(
-        imgs.filter(F.col("doc_id") >= 24), "xo_pht", 1)
+    assert store.ingest_batch_once(
+        "phash", imgs.filter(F.col("doc_id") >= 24), "xo_pht", 1)
     # the in-session serve hides family 3 (takedown honored; the
     # re-added member does NOT resurrect it — re-add needs compaction
     # first, the documented contract) while the rest keep flagging
     assert dup_fams() == set(range(8)) - {3}
     # compaction clears the tombstone AND the dead family's rows;
     # a fresh append then re-indexes the content
-    from pipelinedp_spark.operators.dedup import compact_store
-    compact_store(spark, "xo_pht", "phash")
+    store.compact(spark, "xo_pht", "phash")
     assert dup_fams() == set(range(8)) - {3}
-    assert ingest_phash_batch_idempotent(
-        imgs.filter(F.col("doc_id") == 19), "xo_pht", 2)
+    assert store.ingest_batch_once(
+        "phash", imgs.filter(F.col("doc_id") == 19), "xo_pht", 2)
     assert dup_fams() == set(range(8))
     _drop(spark, PHASH_TK_TABLES)

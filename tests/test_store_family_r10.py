@@ -1,5 +1,5 @@
 """Round-10 store-family tests: BM25 index append mode (scalar refresh,
-df segment merge), compact_store 'bm25'/'ann' kinds, and a planted
+df segment merge), compaction of the 'bm25'/'ann' kinds, and a planted
 hot-bucket skew stress for the bucketed store joins.
 
 Reference repo (OpenMined/PipelineDP) has no store/index counterpart —
@@ -9,7 +9,12 @@ round-trip pattern of tests/test_plan_shapes_r9.py.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
+
+from pipelinedp_spark import store
+
+pytestmark = pytest.mark.store
 
 SF = "/root/testdata/sf0.001"
 
@@ -97,11 +102,10 @@ class TestBM25Append:
             _drop(spark, *(f"r10bm_bk{s}" for s in BM25_TABLES))
 
     def test_compact_bm25_merges_df_segments(self, spark):
-        """compact_store('bm25') collapses the per-append df segments
+        """store.compact('bm25') collapses the per-append df segments
         to one row per term and rewrites postings bucketed; served
         results are invariant."""
         from pipelinedp_spark.operators import retrieval
-        from pipelinedp_spark.operators.dedup import compact_store
 
         docs = _docs(spark).limit(200)
         retrieval.build_bm25_index(docs.filter(F.col("doc_id") % 2 == 0),
@@ -114,7 +118,7 @@ class TestBM25Append:
             assert (seg_terms.groupBy("term").count()
                     .filter("count > 1").count() > 0), \
                 "test needs terms spanning both halves"
-            compact_store(spark, "r10bm_cp", "bm25")
+            store.compact(spark, "r10bm_cp", "bm25")
             assert (spark.table("r10bm_cp_terms").groupBy("term").count()
                     .filter("count > 1").count() == 0)
             ddl = spark.sql(
@@ -125,12 +129,11 @@ class TestBM25Append:
             _drop(spark, *(f"r10bm_cp{s}" for s in BM25_TABLES))
 
     def test_compact_ann_drops_replayed_ids(self, spark):
-        """compact_store('ann'): a replayed append duplicates id rows
+        """store.compact('ann'): a replayed append duplicates id rows
         (each occupies a top-k slot); compaction dedups on id with the
         cell partitioning preserved, and search then matches a
         never-replayed index exactly."""
         from pipelinedp_spark.operators import similarity
-        from pipelinedp_spark.operators.dedup import compact_store
 
         emb = (spark.read.parquet(f"{SF}/embeddings.parquet")
                .filter(F.col("vec_id") < 200))
@@ -150,7 +153,7 @@ class TestBM25Append:
             n_total = emb.count()
             codes = spark.table("r10ann_cp_codes")
             assert codes.count() == n_total + 50
-            compact_store(spark, "r10ann_cp", "ann")
+            store.compact(spark, "r10ann_cp", "ann")
             codes = spark.table("r10ann_cp_codes")
             assert codes.count() == n_total
             assert codes.select("id").distinct().count() == n_total
@@ -169,7 +172,7 @@ class TestBM25Append:
     def test_ann_two_trigger_ingest_search_partition_prunes(self, spark):
         """The stream_ann_store_mirror flow: bootstrap an EMPTY index
         with persisted models, append two increments (the foreachBatch
-        body of streaming_ann_ingest), and the post-ingest search must
+        body of stream_into), and the post-ingest search must
         still carry a cell PartitionFilter (the IVF pruning survives
         per-append partition writes)."""
         import re as _re
@@ -208,11 +211,10 @@ class TestBM25Append:
 
     def test_compact_minhash_reapplies_global_cap(self, spark):
         """The build-time max_bucket_size persists in meta and
-        compact_store('minhash') re-applies it globally: a band bucket
+        store.compact('minhash') re-applies it globally: a band bucket
         that stayed under the cap in each increment but exceeds it in
         union is dropped at compaction."""
-        from pipelinedp_spark.operators.dedup import (build_minhash_store,
-                                                      compact_store)
+        from pipelinedp_spark.operators.dedup import build_minhash_store
 
         def clones(lo, hi):
             return (spark.range(lo, hi)
@@ -232,7 +234,7 @@ class TestBM25Append:
             per_bh = (spark.table("r10mh_cap_bands").groupBy("bh")
                       .count().agg(F.max("count")).collect()[0][0])
             assert per_bh == 4
-            compact_store(spark, "r10mh_cap", "minhash")
+            store.compact(spark, "r10mh_cap", "minhash")
             assert spark.table("r10mh_cap_bands").count() == 0
             # shingles (the verify side) keep all docs
             assert spark.table("r10mh_cap_shingles").count() == 4
@@ -393,7 +395,6 @@ class TestBM25Append:
         + negative df segments), compaction applies it physically with
         results invariant, and double-removal is a no-op."""
         from pipelinedp_spark.operators import retrieval
-        from pipelinedp_spark.operators.dedup import compact_store
 
         docs = _docs(spark).limit(200)
         gone = docs.filter(F.col("doc_id") % 5 == 0)
@@ -416,7 +417,7 @@ class TestBM25Append:
             assert m_g2["total_dl"] == m_g["total_dl"]
             # physical apply: postings rows gone, tombstones cleared,
             # results invariant
-            compact_store(spark, "r10bm_tk", "bm25")
+            store.compact(spark, "r10bm_tk", "bm25")
             assert not spark.catalog.tableExists("r10bm_tk_tombstones")
             removed_ids = {r["doc_id"] for r in gone.select("doc_id")
                            .collect()}
@@ -435,7 +436,6 @@ class TestBM25Append:
         their codes physically and clears tombstones; results equal a
         store never containing them."""
         from pipelinedp_spark.operators import similarity
-        from pipelinedp_spark.operators.dedup import compact_store
 
         emb = (spark.read.parquet(f"{SF}/embeddings.parquet")
                .filter(F.col("vec_id") < 200))
@@ -463,7 +463,7 @@ class TestBM25Append:
             want = res("r10ann_tkw")
             similarity.remove_from_ann_index(gone, "r10ann_tk")
             assert res("r10ann_tk") == want and want
-            compact_store(spark, "r10ann_tk", "ann")
+            store.compact(spark, "r10ann_tk", "ann")
             assert not spark.catalog.tableExists("r10ann_tk_tombstones")
             assert res("r10ann_tk") == want
             assert spark.table("r10ann_tk_codes").count() == keep.count()
@@ -477,10 +477,9 @@ class TestBM25Append:
         deduping future batches (its reference copy was taken down);
         compaction applies physically; results equal a store never
         containing the removed docs."""
-        from pipelinedp_spark.operators.dedup import (build_exact_store,
-                                                      compact_store,
-                                                      incremental_exact_dedup,
-                                                      remove_from_exact_store)
+        from pipelinedp_spark.operators.dedup import (
+            build_exact_store, incremental_exact_dedup,
+            remove_from_exact_store)
 
         docs = _docs(spark).limit(100).localCheckpoint()
         gone = docs.filter(F.col("doc_id") % 3 == 0)
@@ -497,7 +496,7 @@ class TestBM25Append:
                     .collect()}
             assert survivors == want and want
             n_before = spark.table("r10ex_tk_fps").count()
-            compact_store(spark, "r10ex_tk", "exact")
+            store.compact(spark, "r10ex_tk", "exact")
             assert not spark.catalog.tableExists("r10ex_tk_tombstones")
             assert spark.table("r10ex_tk_fps").count() < n_before
             assert {r["doc_id"] for r in incremental_exact_dedup(
@@ -512,7 +511,7 @@ class TestBM25Append:
         flagging (phash) future batches, both logically and after
         physical compaction."""
         from pipelinedp_spark.operators.dedup import (
-            build_minhash_store, build_span_store, compact_store,
+            build_minhash_store, build_span_store,
             incremental_decontaminate_spans, incremental_near_dup,
             remove_from_minhash_store, remove_from_span_store)
         from pipelinedp_spark.operators import multimodal as MM
@@ -532,7 +531,7 @@ class TestBM25Append:
             got = {r["doc_id"] for r in incremental_near_dup(
                 batch, "r10mh_tk").select("doc_id").collect()}
             assert got == gone_batch_ids
-            compact_store(spark, "r10mh_tk", "minhash")
+            store.compact(spark, "r10mh_tk", "minhash")
             assert not spark.catalog.tableExists("r10mh_tk_tombstones")
             assert {r["doc_id"] for r in incremental_near_dup(
                 batch, "r10mh_tk").select("doc_id").collect()} == got
@@ -559,7 +558,7 @@ class TestBM25Append:
             removed_ids = {r["doc_id"] + 50000
                            for r in gone_s.select("doc_id").collect()}
             assert after == before - removed_ids
-            compact_store(spark, "r10sp_tk", "span")
+            store.compact(spark, "r10sp_tk", "span")
             assert not spark.catalog.tableExists("r10sp_tk_tombstones")
             assert {r["doc_id"] for r in incremental_decontaminate_spans(
                 batch_s, "r10sp_tk").select("doc_id").distinct()
@@ -615,7 +614,7 @@ class TestBM25Append:
             flagged = (MM.incremental_phash_dedup(batch_i, "r10ph_tk")
                        .filter("is_dup").count())
             assert flagged == 20, flagged
-            compact_store(spark, "r10ph_tk", "phash")
+            store.compact(spark, "r10ph_tk", "phash")
             assert not spark.catalog.tableExists("r10ph_tk_tombstones")
             assert not spark.catalog.tableExists("r10ph_tk_removed_ids")
             assert (MM.incremental_phash_dedup(batch_i, "r10ph_tk")

@@ -19,6 +19,8 @@ import pytest
 
 from pipelinedp_spark import store
 
+pytestmark = pytest.mark.store
+
 
 def _loc(spark, table):
     return store._managed_location(spark, table)

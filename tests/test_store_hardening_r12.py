@@ -9,7 +9,8 @@
    back, restores derived state (BM25 meta scalars), and applies
    fresh — ending bit-identical to a crash-free run. Covered for BM25
    (the multiplicity-critical kind, full-apply AND mid-apply crash
-   points) and exact (an anti-join kind).
+   points) and exact (an anti-join kind), then for every remaining
+   kind (near-dup, ann, span, phash).
 
 2. BOUNDED ingest log (VERDICT r11 task 1): >= 50 guarded batches with
    a compaction mid-stream; replays are suppressed before AND after
@@ -33,12 +34,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameWriter
 
 from pipelinedp_spark import store
-from pipelinedp_spark.operators.dedup import (build_exact_store,
-                                              compact_store)
+from pipelinedp_spark.operators.dedup import build_exact_store
 from pipelinedp_spark.operators.retrieval import (bm25_topk_from_index,
                                                   build_bm25_index)
-from pipelinedp_spark.streaming.dp_streaming import (
-    append_bm25_batch_idempotent, ingest_exact_batch_idempotent)
+
+pytestmark = pytest.mark.store
 
 
 def _docs(spark, rows):
@@ -116,25 +116,25 @@ def test_bm25_crash_before_log_write_converges(spark, monkeypatch,
     _drop(spark, BM25_TABLES)
     want = _bm25_reference(spark, bm25_queries)
     build_bm25_index(_docs(spark, BM25_A), "hd_bm25", num_buckets=2)
-    assert append_bm25_batch_idempotent(
-        _docs(spark, []).limit(0), "hd_bm25", 0, run_id="ck")
+    assert store.ingest_batch_once(
+        "bm25", _docs(spark, []).limit(0), "hd_bm25", 0, run_id="ck")
     _crash_on(monkeypatch, "hd_bm25_ingest_log")
     with pytest.raises(RuntimeError, match="injected crash"):
-        append_bm25_batch_idempotent(_docs(spark, BM25_B), "hd_bm25",
-                                     1, run_id="ck")
+        store.ingest_batch_once("bm25", _docs(spark, BM25_B), "hd_bm25",
+                                1, run_id="ck")
     monkeypatch.undo()
     # the batch IS in the tables (apply completed) but unconfirmed
     spark.catalog.refreshTable("hd_bm25_postings")
     assert (spark.table("hd_bm25_postings")
             .filter(F.col(store.PROV_BATCH) == 1).count() > 0)
     # Structured Streaming replays the uncommitted batch on resume:
-    assert append_bm25_batch_idempotent(_docs(spark, BM25_B),
-                                        "hd_bm25", 1, run_id="ck")
+    assert store.ingest_batch_once("bm25", _docs(spark, BM25_B),
+                                   "hd_bm25", 1, run_id="ck")
     assert _bm25_rows(spark, "hd_bm25", bm25_queries) == want
     # and the re-applied batch is now confirmed — a further replay
     # is a pure no-op
-    assert not append_bm25_batch_idempotent(_docs(spark, BM25_B),
-                                            "hd_bm25", 1, run_id="ck")
+    assert not store.ingest_batch_once("bm25", _docs(spark, BM25_B),
+                                       "hd_bm25", 1, run_id="ck")
     assert _bm25_rows(spark, "hd_bm25", bm25_queries) == want
     _drop(spark, BM25_TABLES)
 
@@ -148,11 +148,11 @@ def test_bm25_crash_mid_apply_converges(spark, monkeypatch,
     build_bm25_index(_docs(spark, BM25_A), "hd_bm25", num_buckets=2)
     _crash_on(monkeypatch, "hd_bm25_terms")
     with pytest.raises(RuntimeError, match="injected crash"):
-        append_bm25_batch_idempotent(_docs(spark, BM25_B), "hd_bm25",
-                                     1, run_id="ck")
+        store.ingest_batch_once("bm25", _docs(spark, BM25_B), "hd_bm25",
+                                1, run_id="ck")
     monkeypatch.undo()
-    assert append_bm25_batch_idempotent(_docs(spark, BM25_B),
-                                        "hd_bm25", 1, run_id="ck")
+    assert store.ingest_batch_once("bm25", _docs(spark, BM25_B),
+                                   "hd_bm25", 1, run_id="ck")
     assert _bm25_rows(spark, "hd_bm25", bm25_queries) == want
     _drop(spark, BM25_TABLES)
 
@@ -170,13 +170,13 @@ def test_bm25_compaction_repairs_crashed_batch(spark, monkeypatch,
     want_a_only = _bm25_rows(spark, "hd_bm25", bm25_queries)
     _crash_on(monkeypatch, "hd_bm25_ingest_log")
     with pytest.raises(RuntimeError, match="injected crash"):
-        append_bm25_batch_idempotent(_docs(spark, BM25_B), "hd_bm25",
-                                     1, run_id="ck")
+        store.ingest_batch_once("bm25", _docs(spark, BM25_B), "hd_bm25",
+                                1, run_id="ck")
     monkeypatch.undo()
-    compact_store(spark, "hd_bm25", "bm25")
+    store.compact(spark, "hd_bm25", "bm25")
     assert _bm25_rows(spark, "hd_bm25", bm25_queries) == want_a_only
-    assert append_bm25_batch_idempotent(_docs(spark, BM25_B),
-                                        "hd_bm25", 1, run_id="ck")
+    assert store.ingest_batch_once("bm25", _docs(spark, BM25_B),
+                                   "hd_bm25", 1, run_id="ck")
     assert _bm25_rows(spark, "hd_bm25", bm25_queries) == want
     _drop(spark, BM25_TABLES)
 
@@ -198,14 +198,14 @@ def test_exact_crash_before_log_write_converges(spark, monkeypatch):
     outs = []
     _crash_on(monkeypatch, "hd_ex_ingest_log")
     with pytest.raises(RuntimeError, match="injected crash"):
-        ingest_exact_batch_idempotent(
-            _docs(spark, b1), "hd_ex", 0, run_id="ck",
+        store.ingest_batch_once(
+            "exact", _docs(spark, b1), "hd_ex", 0, run_id="ck",
             sink=lambda s: outs.append(
                 sorted(r["doc_id"] for r in s.collect())))
     monkeypatch.undo()
     assert outs == [[2]]   # the crashed attempt reached the sink
-    assert ingest_exact_batch_idempotent(
-        _docs(spark, b1), "hd_ex", 0, run_id="ck",
+    assert store.ingest_batch_once(
+        "exact", _docs(spark, b1), "hd_ex", 0, run_id="ck",
         sink=lambda s: outs.append(
             sorted(r["doc_id"] for r in s.collect())))
     # rollback let the re-run recompute (and re-deliver) the batch's
@@ -220,8 +220,8 @@ def test_exact_crash_before_log_write_converges(spark, monkeypatch):
             for r in spark.table("hd_exref_fps").collect()}
     assert got == want
     # replay is now a pure no-op
-    assert not ingest_exact_batch_idempotent(
-        _docs(spark, b1), "hd_ex", 0, run_id="ck",
+    assert not store.ingest_batch_once(
+        "exact", _docs(spark, b1), "hd_ex", 0, run_id="ck",
         sink=lambda s: outs.append("never"))
     assert outs == [[2], [2]]
     _drop(spark, EXACT_TABLES)
@@ -239,8 +239,6 @@ def test_near_dup_crash_before_log_write_converges(spark, monkeypatch):
     batch's output is lost). With provenance rollback the re-run ends
     at the build-once store and re-delivers the survivors."""
     from pipelinedp_spark.operators.dedup import build_minhash_store
-    from pipelinedp_spark.streaming.dp_streaming import (
-        ingest_near_dup_batch_idempotent)
     _drop(spark, ND_TABLES)
     alpha = "the quick brown fox jumps over the lazy dog again"
     beta = "a completely different document about spark physical plans"
@@ -250,15 +248,15 @@ def test_near_dup_crash_before_log_write_converges(spark, monkeypatch):
     b1 = [(5, beta), (6, alpha)]
     _crash_on(monkeypatch, "hd_nd_ingest_log")
     with pytest.raises(RuntimeError, match="injected crash"):
-        ingest_near_dup_batch_idempotent(
-            _docs(spark, b1), "hd_nd", 0, jaccard_threshold=0.7,
+        store.ingest_batch_once(
+            "minhash", _docs(spark, b1), "hd_nd", 0, jaccard_threshold=0.7,
             run_id="ck",
             sink=lambda s: outs.append(
                 sorted(r["doc_id"] for r in s.collect())))
     monkeypatch.undo()
     assert outs == [[5]]   # beta survived, alpha deduped vs doc 0
-    assert ingest_near_dup_batch_idempotent(
-        _docs(spark, b1), "hd_nd", 0, jaccard_threshold=0.7,
+    assert store.ingest_batch_once(
+        "minhash", _docs(spark, b1), "hd_nd", 0, jaccard_threshold=0.7,
         run_id="ck",
         sink=lambda s: outs.append(
             sorted(r["doc_id"] for r in s.collect())))
@@ -269,11 +267,124 @@ def test_near_dup_crash_before_log_write_converges(spark, monkeypatch):
     got = spark.table("hd_nd_bands").select("id", "bh").collect()
     want = spark.table("hd_ndref_bands").select("id", "bh").collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
-    assert not ingest_near_dup_batch_idempotent(
-        _docs(spark, b1), "hd_nd", 0, run_id="ck",
+    assert not store.ingest_batch_once(
+        "minhash", _docs(spark, b1), "hd_nd", 0, run_id="ck",
         sink=lambda s: outs.append("never"))
     assert outs == [[5], [5]]
     _drop(spark, ND_TABLES)
+
+
+def _vectors(spark, lo, hi):
+    """Rows lo..hi-1 of a fixed random 16-dim embedding set."""
+    import numpy as np
+    x = np.random.default_rng(7).normal(size=(hi, 16)).astype("float32")
+    return spark.createDataFrame(
+        [(i, x[i].tolist()) for i in range(lo, hi)],
+        "vec_id long, embedding array<float>")
+
+
+def _texts(spark, n):
+    """n documents of 12-20 words from a small vocabulary, so the
+    reference shares spans and shingles across documents."""
+    import random
+    rnd = random.Random(11)
+    words = ["spark", "shuffle", "bucket", "join", "plan", "scan",
+             "filter", "exchange", "partition", "window", "stream",
+             "batch"]
+    rows = [(i, " ".join(rnd.choice(words)
+                         for _ in range(rnd.randint(12, 20))))
+            for i in range(n)]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+# (build(store_name), batch) per kind: the store is built from base
+# rows, then ingests ``batch`` as one guarded micro-batch.
+def _ann_case(spark):
+    from pipelinedp_spark.operators import similarity as S
+    base = _vectors(spark, 0, 100).localCheckpoint()
+    x = S.sample_corpus_matrix(base, "vec_id", "embedding", 10_000)
+    models = dict(centroids=S.train_ivf_centroids(x, 4, 7),
+                  codebooks=S.train_pq_codebooks(x, 4, 16, 7))
+    return (lambda n: S.build_ann_index(base, n, num_cells=4, m=4,
+                                        ksub=16, **models),
+            _vectors(spark, 100, 140))
+
+
+def _span_case(spark):
+    from pipelinedp_spark.operators.dedup import build_span_store
+    docs = _texts(spark, 40).localCheckpoint()
+    return (lambda n: build_span_store(
+                docs.filter(F.col("doc_id") % 2 == 0), n, min_len=50,
+                num_buckets=2),
+            docs.filter(F.col("doc_id") % 2 != 0))
+
+
+def _phash_case(spark):
+    import numpy as np
+    import pandas as pd
+
+    from pipelinedp_spark.operators import multimodal as MM
+
+    def gen(it):
+        i, j = np.meshgrid(np.arange(32), np.arange(32), indexing="ij")
+        for pdf in it:
+            ids = pdf["doc_id"].astype("int64")
+            yield pd.DataFrame({"doc_id": ids, "image": [MM.encode_bmp(
+                ((i * ((int(d) % 4) + 2) + j) % 200).astype(np.uint8))
+                for d in ids]})
+
+    # 4 visual families; the batch re-hits the base's families
+    imgs = (spark.range(12).select(F.col("id").alias("doc_id"))
+            .mapInPandas(gen, "doc_id long, image binary")
+            .localCheckpoint())
+    return (lambda n: MM.build_phash_store(
+                imgs.filter(F.col("doc_id") < 6), n, num_buckets=2),
+            imgs.filter(F.col("doc_id") >= 6))
+
+
+_CRASH_CASES = {"ann": _ann_case, "span": _span_case,
+                "phash": _phash_case}
+
+
+def _table_rows(spark, table):
+    store.refresh_table(spark, table)
+    return sorted(map(repr, spark.table(table)
+                      .drop(store.PROV_RUN, store.PROV_BATCH).collect()))
+
+
+@pytest.mark.parametrize("kind", sorted(_CRASH_CASES))
+def test_crash_before_log_write_converges_for_every_kind(spark,
+                                                        monkeypatch,
+                                                        kind):
+    """The crash-before-log-write convergence above, for the kinds it
+    did not cover: after a crash at ``{store}_ingest_log`` the re-run
+    applies, every stamped table of the kind (minus the stamps) equals
+    a crash-free build + ingest of the same rows, and a further replay
+    is skipped."""
+    build, batch = _CRASH_CASES[kind](spark)
+    name, ref = f"hd_ck_{kind}", f"hd_ckref_{kind}"
+    suffixes = ("_meta", "_ingest_log", "_centroids", "_codebooks",
+                *store.KINDS[kind].tables)
+    names = [n + sfx for n in (name, ref) for sfx in suffixes]
+    _drop(spark, names)
+    build(name)
+    build(ref)
+    assert store.ingest_batch_once(kind, batch, ref, 0, run_id="ck")
+    _crash_on(monkeypatch, f"{name}_ingest_log")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        store.ingest_batch_once(kind, batch, name, 0, run_id="ck")
+    monkeypatch.undo()
+    first = name + next(iter(store.KINDS[kind].tables))
+    store.refresh_table(spark, first)
+    assert (spark.table(first)
+            .filter(F.col(store.PROV_BATCH) == 0).count() > 0)
+    assert store.ingest_batch_once(kind, batch, name, 0, run_id="ck")
+    for sfx in store.KINDS[kind].tables:
+        assert (_table_rows(spark, name + sfx)
+                == _table_rows(spark, ref + sfx)), sfx
+    assert not store.ingest_batch_once(kind, batch, name, 0,
+                                       run_id="ck")
+    _drop(spark, names)
 
 
 LOG_TABLES = ["hd_log_fps", "hd_log_meta", "hd_log_ingest_log"]
@@ -287,31 +398,31 @@ def test_ingest_log_folds_and_stays_exact_across_50_batches(spark):
     build_exact_store(_docs(spark, []).limit(0), "hd_log",
                       num_buckets=2)
     for b in range(25):
-        assert ingest_exact_batch_idempotent(
-            _docs(spark, [(b, f"doc number {b} body")]), "hd_log", b,
+        assert store.ingest_batch_once(
+            "exact", _docs(spark, [(b, f"doc number {b} body")]), "hd_log", b,
             run_id="ckA")
-    compact_store(spark, "hd_log", "exact")
+    store.compact(spark, "hd_log", "exact")
     log = spark.table("hd_log_ingest_log")
     assert log.count() == 1
     assert [tuple(r) for r in
             log.select("batch_id", "run_id", "hi").collect()] \
         == [(0, "ckA", 24)]
     # replay of a batch INSIDE the folded range: still suppressed
-    assert not ingest_exact_batch_idempotent(
-        _docs(spark, [(5, "doc number 5 body")]), "hd_log", 5,
+    assert not store.ingest_batch_once(
+        "exact", _docs(spark, [(5, "doc number 5 body")]), "hd_log", 5,
         run_id="ckA")
     for b in range(25, 50):
-        assert ingest_exact_batch_idempotent(
-            _docs(spark, [(b, f"doc number {b} body")]), "hd_log", b,
+        assert store.ingest_batch_once(
+            "exact", _docs(spark, [(b, f"doc number {b} body")]), "hd_log", b,
             run_id="ckA")
     # a second lineage interleaves without colliding
-    assert ingest_exact_batch_idempotent(
-        _docs(spark, [(1000, "second stream doc")]), "hd_log", 0,
+    assert store.ingest_batch_once(
+        "exact", _docs(spark, [(1000, "second stream doc")]), "hd_log", 0,
         run_id="ckB")
-    assert not ingest_exact_batch_idempotent(
-        _docs(spark, [(1000, "second stream doc")]), "hd_log", 0,
+    assert not store.ingest_batch_once(
+        "exact", _docs(spark, [(1000, "second stream doc")]), "hd_log", 0,
         run_id="ckB")
-    compact_store(spark, "hd_log", "exact")
+    store.compact(spark, "hd_log", "exact")
     spark.catalog.refreshTable("hd_log_ingest_log")
     log = spark.table("hd_log_ingest_log")
     got = {tuple(r) for r in
@@ -321,11 +432,11 @@ def test_ingest_log_folds_and_stays_exact_across_50_batches(spark):
     files = [f for f in os.listdir(loc) if f.endswith(".parquet")]
     assert len(files) == 1
     # suppression still exact after the second fold
-    assert not ingest_exact_batch_idempotent(
-        _docs(spark, [(30, "doc number 30 body")]), "hd_log", 30,
+    assert not store.ingest_batch_once(
+        "exact", _docs(spark, [(30, "doc number 30 body")]), "hd_log", 30,
         run_id="ckA")
-    assert ingest_exact_batch_idempotent(
-        _docs(spark, [(50, "doc number 50 body")]), "hd_log", 50,
+    assert store.ingest_batch_once(
+        "exact", _docs(spark, [(50, "doc number 50 body")]), "hd_log", 50,
         run_id="ckA")
     spark.catalog.refreshTable("hd_log_fps")
     assert spark.table("hd_log_fps").count() == 52
@@ -344,7 +455,7 @@ def test_legacy_log_folds_without_gaining_run_id(spark):
                           "batch_id long") \
         .write.mode("overwrite").format("parquet") \
         .saveAsTable("hd_log_ingest_log")
-    compact_store(spark, "hd_log", "exact")
+    store.compact(spark, "hd_log", "exact")
     log = spark.table("hd_log_ingest_log")
     assert log.columns == ["batch_id", "hi"]
     assert {tuple(r) for r in log.collect()} == {(0, 2), (5, 6)}
@@ -520,16 +631,17 @@ def test_crash_rollback_is_file_level_not_a_rewrite(spark, monkeypatch):
     _drop(spark, EXACT_TABLES)
     build_exact_store(_docs(spark, [(0, "alpha text")]), "hd_ex",
                       num_buckets=2)
-    assert ingest_exact_batch_idempotent(
-        _docs(spark, [(1, "beta text")]), "hd_ex", 0, run_id="ck")
+    assert store.ingest_batch_once(
+        "exact", _docs(spark, [(1, "beta text")]), "hd_ex", 0, run_id="ck")
     before = _table_files(spark, "hd_ex_fps")
     _crash_on(monkeypatch, "hd_ex_ingest_log")
     with pytest.raises(RuntimeError, match="injected crash"):
-        ingest_exact_batch_idempotent(
-            _docs(spark, [(2, "gamma text")]), "hd_ex", 1, run_id="ck")
+        store.ingest_batch_once(
+            "exact", _docs(spark, [(2, "gamma text")]), "hd_ex", 1,
+            run_id="ck")
     monkeypatch.undo()
-    assert ingest_exact_batch_idempotent(
-        _docs(spark, [(2, "gamma text")]), "hd_ex", 1, run_id="ck")
+    assert store.ingest_batch_once(
+        "exact", _docs(spark, [(2, "gamma text")]), "hd_ex", 1, run_id="ck")
     after = _table_files(spark, "hd_ex_fps")
     # every pre-crash file survived by NAME: the rollback deleted only
     # the crashed attempt's own files (a rewrite would replace all)
@@ -555,13 +667,13 @@ def test_crash_rollback_rewrite_fallback_converges(spark, monkeypatch,
     build_bm25_index(_docs(spark, BM25_A), "hd_bm25", num_buckets=2)
     _crash_on(monkeypatch, "hd_bm25_ingest_log")
     with pytest.raises(RuntimeError, match="injected crash"):
-        append_bm25_batch_idempotent(_docs(spark, BM25_B), "hd_bm25",
-                                     1, run_id="ck")
+        store.ingest_batch_once("bm25", _docs(spark, BM25_B), "hd_bm25",
+                                1, run_id="ck")
     monkeypatch.undo()
     monkeypatch.setattr(store, "_batch_files",
                         lambda *a, **k: None)
-    assert append_bm25_batch_idempotent(_docs(spark, BM25_B),
-                                        "hd_bm25", 1, run_id="ck")
+    assert store.ingest_batch_once("bm25", _docs(spark, BM25_B),
+                                   "hd_bm25", 1, run_id="ck")
     monkeypatch.undo()
     assert _bm25_rows(spark, "hd_bm25", bm25_queries) == want
     _drop(spark, BM25_TABLES)
@@ -585,25 +697,25 @@ def test_happy_path_skips_rollback_probe(spark, monkeypatch):
 
     monkeypatch.setattr(store, "_clean_half_applied", spy)
     for b in (0, 1, 2):
-        assert ingest_exact_batch_idempotent(
-            _docs(spark, [(10 + b, f"text {b}")]), "hd_ex", b,
+        assert store.ingest_batch_once(
+            "exact", _docs(spark, [(10 + b, f"text {b}")]), "hd_ex", b,
             run_id="ck")
     assert calls == [0]   # only the first in-process batch probed
-    assert not ingest_exact_batch_idempotent(
-        _docs(spark, [(11, "text 1")]), "hd_ex", 1, run_id="ck")
+    assert not store.ingest_batch_once(
+        "exact", _docs(spark, [(11, "text 1")]), "hd_ex", 1, run_id="ck")
     assert calls == [0]   # replay suppressed before any probe
     _crash_on(monkeypatch, "hd_ex_ingest_log")
     with pytest.raises(RuntimeError, match="injected crash"):
-        ingest_exact_batch_idempotent(
-            _docs(spark, [(13, "text 3")]), "hd_ex", 3, run_id="ck")
+        store.ingest_batch_once(
+            "exact", _docs(spark, [(13, "text 3")]), "hd_ex", 3, run_id="ck")
     # undo clears the crash AND the spy; re-attach the spy
     monkeypatch.undo()
     monkeypatch.setattr(store, "_clean_half_applied", spy)
-    assert ingest_exact_batch_idempotent(
-        _docs(spark, [(13, "text 3")]), "hd_ex", 3, run_id="ck")
+    assert store.ingest_batch_once(
+        "exact", _docs(spark, [(13, "text 3")]), "hd_ex", 3, run_id="ck")
     assert calls == [0, 3]   # in-process retry probed (memo cleared)
-    assert ingest_exact_batch_idempotent(
-        _docs(spark, [(14, "text 4")]), "hd_ex", 4, run_id="ck")
+    assert store.ingest_batch_once(
+        "exact", _docs(spark, [(14, "text 4")]), "hd_ex", 4, run_id="ck")
     assert calls == [0, 3]   # monotone path elides again
     _drop(spark, EXACT_TABLES)
 

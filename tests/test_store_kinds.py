@@ -1,0 +1,152 @@
+"""The `store.KINDS` records against the tables the build functions
+write.
+
+For every kind: build a store, append a duplicate-introducing
+increment, take one key down, then `store.compact`. Each table the
+record declares must carry the record's layout (bucket column or
+partition column, read back from the catalog) as the build functions
+wrote it and as compaction rewrote it; the record's dedup key must be
+unique after compaction, and the tombstones must be gone.
+"""
+
+import pytest
+from pyspark.sql import functions as F
+
+from pipelinedp_spark import store
+
+pytestmark = pytest.mark.store
+
+
+def _docs(spark):
+    """30 documents of 12-20 words from a small vocabulary."""
+    import random
+    rnd = random.Random(5)
+    words = ["spark", "shuffle", "bucket", "join", "plan", "scan",
+             "filter", "exchange", "partition", "window", "stream",
+             "batch"]
+    rows = [(i, " ".join(rnd.choice(words)
+                         for _ in range(rnd.randint(12, 20))))
+            for i in range(30)]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _images(spark):
+    import numpy as np
+    import pandas as pd
+
+    from pipelinedp_spark.operators import multimodal as MM
+
+    def gen(it):
+        i, j = np.meshgrid(np.arange(32), np.arange(32), indexing="ij")
+        for pdf in it:
+            ids = pdf["doc_id"].astype("int64")
+            yield pd.DataFrame({"doc_id": ids, "image": [MM.encode_bmp(
+                ((i * ((int(d) % 4) + 2) + j) % 200).astype(np.uint8))
+                for d in ids]})
+
+    return (spark.range(8).select(F.col("id").alias("doc_id"))
+            .mapInPandas(gen, "doc_id long, image binary")
+            .localCheckpoint())
+
+
+# kind -> (rows, build(rows, store, mode), takedown(rows, store))
+def _exact():
+    from pipelinedp_spark.operators import dedup as D
+    return (_docs,
+            lambda r, n, mode: D.build_exact_store(r, n, num_buckets=2,
+                                                   mode=mode),
+            D.remove_from_exact_store)
+
+
+def _minhash():
+    from pipelinedp_spark.operators import dedup as D
+    return (_docs,
+            lambda r, n, mode: D.build_minhash_store(r, n, num_buckets=2,
+                                                     mode=mode),
+            D.remove_from_minhash_store)
+
+
+def _span():
+    from pipelinedp_spark.operators import dedup as D
+    return (_docs,
+            lambda r, n, mode: D.build_span_store(r, n, min_len=50,
+                                                  num_buckets=2,
+                                                  mode=mode),
+            D.remove_from_span_store)
+
+
+def _phash():
+    from pipelinedp_spark.operators import multimodal as MM
+    return (_images,
+            lambda r, n, mode: MM.build_phash_store(r, n, num_buckets=2,
+                                                    mode=mode),
+            MM.remove_from_phash_store)
+
+
+def _bm25():
+    from pipelinedp_spark.operators import retrieval as R
+    return (_docs,
+            lambda r, n, mode: R.build_bm25_index(r, n, num_buckets=2,
+                                                  mode=mode),
+            R.remove_from_bm25_index)
+
+
+def _ann():
+    from pipelinedp_spark.operators import similarity as S
+
+    def rows(spark):
+        import numpy as np
+        x = np.random.default_rng(3).normal(size=(60, 16))
+        return spark.createDataFrame(
+            [(i, v.tolist()) for i, v in enumerate(x.astype("float32"))],
+            "vec_id long, embedding array<float>")
+    return (rows,
+            lambda r, n, mode: S.build_ann_index(r, n, num_cells=4, m=4,
+                                                 ksub=16, mode=mode),
+            S.remove_from_ann_index)
+
+
+CASES = {"exact": _exact, "minhash": _minhash, "span": _span,
+         "phash": _phash, "bm25": _bm25, "ann": _ann}
+
+
+def _layout(spark, table):
+    cols = spark.catalog.listColumns(table)
+    parts = [c.name for c in cols if c.isPartition]
+    if parts:
+        return ("partition", *parts)
+    return [c.name for c in cols if c.isBucket]
+
+
+def _expected(layout):
+    return layout if isinstance(layout, tuple) else [layout]
+
+
+@pytest.mark.parametrize("kind", sorted(store.KINDS))
+def test_compaction_keeps_each_declared_layout(spark, kind):
+    rows, build, takedown = CASES[kind]()
+    rec = store.KINDS[kind]
+    name = f"sk_{kind}"
+    names = [name + sfx for sfx in (*rec.tables, "_meta", "_tombstones",
+                                    "_removed_ids", "_ingest_log",
+                                    "_centroids", "_codebooks")]
+    for t in names:
+        store.drop_store_table(spark, t)
+    data = rows(spark)
+    build(data, name, "overwrite")
+    build(data.limit(5), name, "append")    # duplicate rows
+    # one takedown; id % 4 == 0 is a whole pHash visual family
+    takedown(data.filter(F.col(data.columns[0]) % 4 == 0), name)
+    assert spark.catalog.tableExists(f"{name}_tombstones")
+    before = {sfx: _layout(spark, name + sfx) for sfx in rec.tables}
+    store.compact(spark, name, kind)
+    for sfx, (layout, dedup_key) in rec.tables.items():
+        t = name + sfx
+        assert before[sfx] == _expected(layout), (t, before[sfx])
+        assert _layout(spark, t) == _expected(layout), t
+        df = spark.table(t)
+        cols = list(dedup_key) if dedup_key else df.columns
+        assert df.count() == df.select(*cols).distinct().count(), t
+    assert not spark.catalog.tableExists(f"{name}_tombstones")
+    for t in names:
+        store.drop_store_table(spark, t)

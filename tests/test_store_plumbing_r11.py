@@ -9,6 +9,8 @@ from pyspark.sql import functions as F
 
 from pipelinedp_spark import store
 
+pytestmark = pytest.mark.store
+
 
 def _drop(spark, *names):
     for t in names:

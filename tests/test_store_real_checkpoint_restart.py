@@ -31,8 +31,9 @@ from pipelinedp_spark import store
 from pipelinedp_spark.operators.dedup import build_exact_store
 from pipelinedp_spark.operators.retrieval import (bm25_topk_from_index,
                                                   build_bm25_index)
-from pipelinedp_spark.streaming.dp_streaming import (
-    streaming_bm25_ingest, streaming_exact_dedup_store)
+from pipelinedp_spark.streaming.dp_streaming import stream_into
+
+pytestmark = pytest.mark.store
 
 SCHEMA = "doc_id long, text string"
 
@@ -64,8 +65,8 @@ def test_exact_store_restart_processes_only_new_files(spark, tmp_path):
     build_exact_store(spark.createDataFrame([], SCHEMA), "rck_exact",
                       num_buckets=2)
     _write_source(spark, src, A)
-    q = streaming_exact_dedup_store(_stream(spark, src), "rck_exact",
-                                    str(out), str(ckpt))
+    q = stream_into("exact", _stream(spark, src), "rck_exact",
+                    str(ckpt), output_path=str(out))
     q.awaitTermination()
     spark.catalog.refreshTable("rck_exact_fps")
     assert spark.table("rck_exact_fps").count() == 2
@@ -73,8 +74,8 @@ def test_exact_store_restart_processes_only_new_files(spark, tmp_path):
     # restart against the same checkpoint: only B is new; its alpha
     # copy must dedup against run 1's store state
     _write_source(spark, src, B)
-    q2 = streaming_exact_dedup_store(_stream(spark, src), "rck_exact",
-                                     str(out), str(ckpt))
+    q2 = stream_into("exact", _stream(spark, src), "rck_exact",
+                     str(ckpt), output_path=str(out))
     q2.awaitTermination()
     got = sorted(r["doc_id"]
                  for r in spark.read.parquet(str(out)).collect())
@@ -97,8 +98,8 @@ def test_exact_store_restart_processes_only_new_files(spark, tmp_path):
 
     # idle restart: no new files -> no new batch, nothing moves
     n_out = len(got)
-    q3 = streaming_exact_dedup_store(_stream(spark, src), "rck_exact",
-                                     str(out), str(ckpt))
+    q3 = stream_into("exact", _stream(spark, src), "rck_exact",
+                     str(ckpt), output_path=str(out))
     q3.awaitTermination()
     spark.catalog.refreshTable("rck_exact_fps")
     assert spark.table("rck_exact_fps").count() == 3
@@ -139,8 +140,7 @@ def test_bm25_crash_and_real_restart_converges(spark, tmp_path,
     build_bm25_index(spark.createDataFrame([], SCHEMA), "rck_bm25",
                      num_buckets=2)
     _write_source(spark, src, BM25_A)
-    q = streaming_bm25_ingest(_stream(spark, src), "rck_bm25",
-                              str(ckpt))
+    q = stream_into("bm25", _stream(spark, src), "rck_bm25", str(ckpt))
     q.awaitTermination()
 
     # fault injection at the real boundary: batch 1's ingest-log write.
@@ -165,8 +165,7 @@ def test_bm25_crash_and_real_restart_converges(spark, tmp_path,
 
     monkeypatch.setattr(store, "_append_log_row", boom_append)
     _write_source(spark, src, BM25_B)
-    q2 = streaming_bm25_ingest(_stream(spark, src), "rck_bm25",
-                               str(ckpt))
+    q2 = stream_into("bm25", _stream(spark, src), "rck_bm25", str(ckpt))
     with pytest.raises(Exception, match="injected crash"):
         q2.awaitTermination()
     monkeypatch.undo()
@@ -177,8 +176,7 @@ def test_bm25_crash_and_real_restart_converges(spark, tmp_path,
 
     # real restart: Spark replays batch 1 from its offset log; the
     # guard rolls back the stamped half-apply and re-applies
-    q3 = streaming_bm25_ingest(_stream(spark, src), "rck_bm25",
-                               str(ckpt))
+    q3 = stream_into("bm25", _stream(spark, src), "rck_bm25", str(ckpt))
     q3.awaitTermination()
     got = sorted(map(tuple,
                      bm25_topk_from_index(queries, "rck_bm25",
@@ -186,8 +184,7 @@ def test_bm25_crash_and_real_restart_converges(spark, tmp_path,
     assert got == want, "post-crash restart must equal build-once"
 
     # a further idle restart stays byte-stable
-    q4 = streaming_bm25_ingest(_stream(spark, src), "rck_bm25",
-                               str(ckpt))
+    q4 = stream_into("bm25", _stream(spark, src), "rck_bm25", str(ckpt))
     q4.awaitTermination()
     got2 = sorted(map(tuple,
                       bm25_topk_from_index(queries, "rck_bm25",
