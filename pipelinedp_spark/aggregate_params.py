@@ -181,6 +181,8 @@ class AggregateParams:
     custom_combiners: Optional[List] = None
 
     def __post_init__(self):
+        if self.max_contributions is not None:
+            self._check_max_contributions_supported()
         if self.custom_combiners:
             if self.metrics:
                 raise ValueError(
@@ -290,6 +292,22 @@ class AggregateParams:
                     "output_noise_stddev supports only COUNT, "
                     "PRIVACY_ID_COUNT and SUM (got "
                     f"{sorted(m.value for m in unsupported)})")
+
+    def _check_max_contributions_supported(self) -> None:
+        # Only the scalar COUNT / PRIVACY_ID_COUNT / per-partition SUM
+        # partials enforce a total per-privacy-id cap; any other metric
+        # would release rows that were never bounded.
+        supported = {Metric.COUNT, Metric.PRIVACY_ID_COUNT}
+        if self.min_sum_per_partition is not None and self.min_value is None:
+            supported.add(Metric.SUM)
+        unsupported = (["custom_combiners"] if self.custom_combiners else
+                       [m.metric.value for m in self.metrics
+                        if m.metric not in supported])
+        if unsupported:
+            raise ValueError(
+                f"max_contributions is not supported with {unsupported[0]}: "
+                "it bounds only COUNT, PRIVACY_ID_COUNT and SUM with "
+                "per-partition bounds (min/max_sum_per_partition)")
 
     def _needs_per_partition_bound(self) -> bool:
         # Pure per-partition-sum clipping bounds Linf through the sum caps,

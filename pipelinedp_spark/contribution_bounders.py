@@ -2,37 +2,46 @@
 
 The reference bounds sensitivity by materializing per-key lists and random-
 sampling them (reference: pipeline_dp/contribution_bounders.py:63-247). Here
-every bounder is expressed as bounded window sampling —
-``row_number() OVER (PARTITION BY keys ORDER BY rand()) <= cap`` — which
+every cap is a bounded window sample,
+``row_number() OVER (PARTITION BY keys ORDER BY rand()) <= cap``, which
 never materializes per-key state, keeps uniform-without-replacement
-semantics, and lets AQE handle skew. Each bounder returns one row per
-(privacy_id, partition_key) carrying partial-aggregate columns; the caller
-finishes with a groupBy(partition_key) merge, so Catalyst plans
-map-side partial aggregation for both stages.
+semantics, and lets AQE handle skew. Three entry points serve every DP path:
 
-Plan shape (cross-and-per-partition case, aggregate-first):
-  shuffle 1: groupBy(pid, pk) partial aggregation + group count — the
-             ONLY pass over raw rows when no group exceeds Linf: a
-             sort-free, map-side-combined aggregation
-  (resample branch, oversize groups only: semi-join their raw rows
-   back — AQE broadcasts the key set, or eliminates the branch outright
-   when it is empty — then row_number-window-sample and re-aggregate)
-  shuffle 2: window over (pid)      [L0 sample]
-  (caller)  shuffle 3: groupBy(pk) final merge
-The aggregate-first split (_agg_with_oversize_resample) exists because
-the plain Linf window sorts the whole corpus even when no group exceeds
-the cap — the common generous-cap regime for MEAN/VARIANCE/PERCENTILE,
-where that sort dominated the pipeline and kept nothing out.
+- ``bound_cross_and_per_partition``: per-(pid, pk) partial aggregates under
+  an optional Linf row cap and an optional L0 key cap, merged by the
+  caller's groupBy(pk). With neither cap it is the reference's no-op
+  bounder, with ``l0=None`` its Linf-only sampler, and with
+  ``row_sampling_needed=False`` its cross-partition-only bounder.
+- ``bound_rows``: the surviving ROWS under the same two caps, for paths
+  that consume rows (percentile histograms, vector sums, custom combiners).
+- ``bound_per_privacy_id``: a cap on a privacy id's rows across ALL
+  partitions (``max_contributions``).
+
+Oversize split. A row cap at or above ``OVERSIZE_SPLIT_MIN_CAP`` runs
+aggregate-first: one sort-free, map-side-combined pass counts every group
+(computing its partials alongside), groups at or under the cap are final
+as-is, and only the raw rows of oversize groups are semi-joined back (AQE
+broadcasts the key set, or drops the branch when it is empty) and
+window-sampled. A plain window sorts the whole input even when no group
+exceeds the cap, the generous-cap regime of MEAN/VARIANCE/PERCENTILE
+(measured, 30M rows in 430-row groups: 7.1s plain vs 1.9s aggregate-first).
+Smaller caps keep the plain window: a small cap binds on nearly every
+group, where the split does the old work plus a full hash pass (10.9s vs
+3.4s). The split's output equals the plain window's row for row under
+deterministic ``order_cols``.
 """
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence
+from typing import List, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 _RN = "__rn__"
+_GC = "__gcount__"
+
+OVERSIZE_SPLIT_MIN_CAP = 1000
 
 
 def _sample_order(order_cols: Optional[Sequence[Column]]) -> List[Column]:
@@ -43,105 +52,62 @@ def _sample_order(order_cols: Optional[Sequence[Column]]) -> List[Column]:
 
 def _limit_per_key(df: DataFrame, keys: Sequence[str], cap: int,
                    order_cols: Optional[Sequence[Column]]) -> DataFrame:
+    """The plain-window reference: keep <= cap rows per key."""
     w = Window.partitionBy(*keys).orderBy(*_sample_order(order_cols))
     return (df.withColumn(_RN, F.row_number().over(w))
             .filter(F.col(_RN) <= cap).drop(_RN))
 
 
-_GC = "__gcount__"
-
-# Caps at or above this use the aggregate-first oversize-resample plan;
-# smaller caps keep the plain window. Rationale (measured, 30M rows /
-# 430-row groups, fresh sessions): with a generous cap the plain window
-# sorts the whole corpus for nothing (7.1s vs 1.9s aggregate-first —
-# map-side combine replaces the sort), but when a SMALL cap binds on
-# every group the aggregate-first plan does the old work PLUS a full
-# hash pass (10.9s vs 3.4s). Small caps (1-100, the typical binding DP
-# setting) mean sampling nearly always bites -> plain window optimal;
-# large caps mean groups rarely exceed it -> aggregate-first optimal,
-# and in the worst case (every group over a >=1000 cap) pass1's output
-# is >=1000x smaller than its input, bounding the extra cost at one
-# cheap hash pass.
-OVERSIZE_SPLIT_MIN_CAP = 1000
-
-
-def _oversize_key_cond(keys: Sequence[str], ok_cols: Sequence[str]
-                       ) -> Column:
-    """Null-safe equi-join condition so null-valued keys group exactly
-    as a window's PARTITION BY would."""
+def _null_safe_cond(keys: Sequence[str], other: Sequence[str]) -> Column:
+    """Equi-join condition under which null-valued keys group exactly as a
+    window's PARTITION BY would."""
     cond = None
-    for k, a in zip(keys, ok_cols):
-        c = F.col(k).eqNullSafe(F.col(a))
+    for k, o in zip(keys, other):
+        c = F.col(k).eqNullSafe(F.col(o))
         cond = c if cond is None else cond & c
     return cond
 
 
-def _oversize_keys(counted: DataFrame, keys: Sequence[str], cap: int
-                   ) -> DataFrame:
-    """Distinct key tuples whose group count exceeds the cap, renamed
-    ``__ok{i}__`` for unambiguous joins back against the raw input."""
-    ok_cols = [f"__ok{i}__" for i in range(len(keys))]
-    return (counted.filter(F.col(_GC) > cap)
-            .select(*[F.col(k).alias(a) for k, a in zip(keys, ok_cols)]))
+def _cap_rows(df: DataFrame, keys: Sequence[str], cap: int,
+              order_cols: Optional[Sequence[Column]],
+              partial_aggs: Optional[List[Column]] = None,
+              group_keys: Optional[Sequence[str]] = None
+              ) -> Tuple[DataFrame, Optional[DataFrame]]:
+    """Keep <= cap rows per ``keys``; with ``partial_aggs``, return the
+    kept rows' partials per ``group_keys`` (a refinement of ``keys``,
+    default ``keys``) instead of the rows. The one place the oversize split
+    (module docstring) is chosen.
 
-
-def _agg_with_oversize_resample(df: DataFrame, keys: Sequence[str],
-                                cap: int, partial_aggs: List[Column],
-                                order_cols: Optional[Sequence[Column]]
-                                ) -> DataFrame:
-    """Per-key partial aggregation with row sampling applied ONLY to
-    groups that exceed the cap — the aggregate-first formulation of
-    ``row_number() OVER (PARTITION BY keys ORDER BY rand()) <= cap``.
-
-    The plain window sorts the ENTIRE input even when no group exceeds
-    the cap — the regime every generous-cap MEAN/VARIANCE pipeline is
-    in, where that corpus-wide sort is the pipeline's most expensive
-    stage and keeps nothing out. Instead, aggregate ALL partials per
-    key in one sort-free map-side-combined pass (the shuffle the
-    pipeline needs anyway) alongside the group count; groups at or
-    under the cap are final as-is. Only oversize groups re-sample: a
-    semi-join pulls their raw rows back (AQE broadcasts the key set
-    when small, and when it is EMPTY — the common generous-cap case —
-    replaces the whole resample branch with an empty relation, so the
-    window sort never runs at all). Output is distribution-identical
-    to sampling every group (and exactly equal under deterministic
-    order_cols): an under-cap group's sample is the whole group.
+    Returns ``(bounded, counts)``: ``counts`` is the aggregate-first pass
+    (one row per ``group_keys`` with its ``__gcount__`` group count), or None
+    when the plain window ran.
     """
-    pass1 = df.groupBy(*keys).agg(*partial_aggs,
-                                  F.count(F.lit(1)).alias(_GC))
-    ok = pass1.filter(F.col(_GC) <= cap).drop(_GC)
-    over = _oversize_keys(pass1, keys, cap)
-    ok_cols = [f"__ok{i}__" for i in range(len(keys))]
-    big = df.join(over, on=_oversize_key_cond(keys, ok_cols),
-                  how="left_semi")
-    resampled = (_limit_per_key(big, keys, cap, order_cols)
-                 .groupBy(*keys).agg(*partial_aggs))
-    return ok.unionByName(resampled)
-
-
-def limit_rows_per_key(df: DataFrame, keys: Sequence[str], cap: int,
-                       order_cols: Optional[Sequence[Column]]
-                       ) -> DataFrame:
-    """Row-output cap: keep <= cap rows per key, window-sorting ONLY
-    oversize groups when the cap is generous (>= OVERSIZE_SPLIT_MIN_CAP).
-
-    For pipelines that need the surviving ROWS (vector sums clip+explode
-    after sampling; custom combiners applyInPandas over raw rows) the
-    aggregate-first formulation doesn't apply, but the sort can still be
-    confined to groups that exceed the cap: one map-side-combined count
-    pass, then under-cap groups pass through via a broadcast anti-join
-    while only oversize rows window-sample. Binding-regime caps keep the
-    plain window (same threshold rationale as the partial-agg bounders).
-    """
+    group_keys = list(group_keys or keys)
     if cap < OVERSIZE_SPLIT_MIN_CAP:
-        return _limit_per_key(df, keys, cap, order_cols)
-    counts = df.groupBy(*keys).agg(F.count(F.lit(1)).alias(_GC))
-    over = _oversize_keys(counts, keys, cap)
+        kept = _limit_per_key(df, keys, cap, order_cols)
+        if partial_aggs is not None:
+            kept = kept.groupBy(*group_keys).agg(*partial_aggs)
+        return kept, None
+    counts = df.groupBy(*group_keys).agg(*(partial_aggs or []),
+                                         F.count(F.lit(1)).alias(_GC))
+    totals = counts
+    if group_keys != list(keys):
+        totals = counts.groupBy(*keys).agg(F.sum(_GC).alias(_GC))
     ok_cols = [f"__ok{i}__" for i in range(len(keys))]
-    cond = _oversize_key_cond(keys, ok_cols)
-    ok = df.join(over, on=cond, how="left_anti")
-    big = df.join(over, on=cond, how="left_semi")
-    return ok.unionByName(_limit_per_key(big, keys, cap, order_cols))
+    over = (totals.filter(F.col(_GC) > cap)
+            .select(*[F.col(k).alias(a) for k, a in zip(keys, ok_cols)]))
+    cond = _null_safe_cond(keys, ok_cols)
+    resampled = _limit_per_key(df.join(over, on=cond, how="left_semi"),
+                               keys, cap, order_cols)
+    if partial_aggs is None:
+        ok = df.join(over, on=cond, how="left_anti")
+        return ok.unionByName(resampled), counts
+    if totals is counts:
+        ok = counts.filter(F.col(_GC) <= cap).drop(_GC)
+    else:
+        ok = counts.join(over, on=cond, how="left_anti").drop(_GC)
+    return (ok.unionByName(resampled.groupBy(*group_keys)
+                           .agg(*partial_aggs)), counts)
 
 
 def bound_cross_and_per_partition(
@@ -149,30 +115,49 @@ def bound_cross_and_per_partition(
         pid_col: str,
         pk_cols: Sequence[str],
         partial_aggs: List[Column],
-        l0: int,
-        linf: int,
+        l0: Optional[int] = None,
+        linf: Optional[int] = None,
         row_sampling_needed: bool = True,
         order_cols: Optional[Sequence[Column]] = None) -> DataFrame:
-    """L0 + Linf bounding (reference: contribution_bounders.py:63-112).
+    """Per-(pid, pk) partials under an optional Linf row cap and an
+    optional L0 cap on partitions per privacy id (reference:
+    contribution_bounders.py:63-247, every sampling bounder).
 
-    ``row_sampling_needed=False`` is the count-only fast path: when no
-    partial aggregate depends on WHICH rows survive (COUNT is
-    ``least(count, linf)`` regardless of the sample), the Linf window sort is
-    skipped and the caller caps counts inside ``partial_aggs``.
+    ``row_sampling_needed=False`` is the fast path for partials that do not
+    depend on WHICH rows survive (COUNT is ``least(count, linf)`` whatever
+    the sample; a per-partition sum clip bounds the sum itself): no Linf
+    window runs, and the caller caps inside ``partial_aggs``.
     """
     keys = [pid_col, *pk_cols]
     if row_sampling_needed and linf is not None:
-        if linf >= OVERSIZE_SPLIT_MIN_CAP:
-            per_pid_pk = _agg_with_oversize_resample(
-                df, keys, linf, partial_aggs, order_cols)
-        else:
-            per_pid_pk = (_limit_per_key(df, keys, linf, order_cols)
-                          .groupBy(*keys).agg(*partial_aggs))
+        per_pid_pk, _ = _cap_rows(df, keys, linf, order_cols, partial_aggs)
     else:
         per_pid_pk = df.groupBy(*keys).agg(*partial_aggs)
     if l0 is not None:
         per_pid_pk = _limit_per_key(per_pid_pk, [pid_col], l0, order_cols)
     return per_pid_pk
+
+
+def bound_rows(df: DataFrame, pid_col: str, pk_cols: Sequence[str],
+               l0: Optional[int], linf: Optional[int],
+               order_cols: Optional[Sequence[Column]] = None) -> DataFrame:
+    """The rows that survive an optional Linf cap of rows per (pid, pk) and
+    then an optional L0 sample of (pid, pk) keys per privacy id. The key
+    sample is drawn from the oversize split's count pass when it ran, else
+    from the distinct keys, and joined back null-safely."""
+    keys = [pid_col, *pk_cols]
+    counts = None
+    if linf is not None:
+        df, counts = _cap_rows(df, keys, linf, order_cols)
+    if l0 is None:
+        return df
+    pairs = (df.select(*keys).distinct() if counts is None
+             else counts.select(*keys))
+    sampled_cols = [f"__l0k{i}__" for i in range(len(keys))]
+    keyset = _limit_per_key(pairs, [pid_col], l0, order_cols).select(
+        *[F.col(k).alias(a) for k, a in zip(keys, sampled_cols)])
+    return df.join(keyset, on=_null_safe_cond(keys, sampled_cols),
+                   how="left_semi")
 
 
 def bound_per_privacy_id(
@@ -186,66 +171,6 @@ def bound_per_privacy_id(
     (reference: contribution_bounders.py:115-157): keep <= max_contributions
     rows per privacy id across ALL partitions, then aggregate per (pid, pk).
     """
-    gkeys = [pid_col, *pk_cols]
-    if max_contributions < OVERSIZE_SPLIT_MIN_CAP:
-        # Binding-cap regime: plain window (see OVERSIZE_SPLIT_MIN_CAP).
-        sampled = _limit_per_key(df, [pid_col], max_contributions,
-                                 order_cols)
-        return sampled.groupBy(*gkeys).agg(*partial_aggs)
-    # Aggregate-first, resample-oversize-only (see
-    # _agg_with_oversize_resample), two-level because the cap key (pid)
-    # is coarser than the partial-agg key (pid, pk): per-(pid, pk)
-    # partials + counts in one pass, per-pid totals from those partials
-    # (tiny), and only over-cap privacy ids re-sample from raw rows.
-    pass1 = df.groupBy(*gkeys).agg(*partial_aggs,
-                                   F.count(F.lit(1)).alias(_GC))
-    totals = pass1.groupBy(pid_col).agg(F.sum(_GC).alias(_GC))
-    over = _oversize_keys(totals, [pid_col], max_contributions)
-    ok = (pass1.join(over, on=_oversize_key_cond([pid_col], ["__ok0__"]),
-                     how="left_anti").drop(_GC))
-    big = df.join(over, on=_oversize_key_cond([pid_col], ["__ok0__"]),
-                  how="left_semi")
-    resampled = (_limit_per_key(big, [pid_col], max_contributions,
-                                order_cols)
-                 .groupBy(*gkeys).agg(*partial_aggs))
-    return ok.unionByName(resampled)
-
-
-def bound_cross_partition_only(
-        df: DataFrame,
-        pid_col: str,
-        pk_cols: Sequence[str],
-        partial_aggs: List[Column],
-        l0: int,
-        order_cols: Optional[Sequence[Column]] = None) -> DataFrame:
-    """L0-only bounding (reference: contribution_bounders.py:160-202): the
-    per-partition contribution is bounded by value semantics (e.g. the
-    per-partition sum clip), so only cross-partition sampling happens."""
-    per_pid_pk = df.groupBy(pid_col, *pk_cols).agg(*partial_aggs)
-    return _limit_per_key(per_pid_pk, [pid_col], l0, order_cols)
-
-
-def bound_linf_only(
-        df: DataFrame,
-        pid_col: str,
-        pk_cols: Sequence[str],
-        partial_aggs: List[Column],
-        linf: int,
-        row_sampling_needed: bool = True,
-        order_cols: Optional[Sequence[Column]] = None) -> DataFrame:
-    """Linf-only bounding (reference: contribution_bounders.py:205-231)."""
-    keys = [pid_col, *pk_cols]
-    if row_sampling_needed and linf is not None:
-        if linf >= OVERSIZE_SPLIT_MIN_CAP:
-            return _agg_with_oversize_resample(df, keys, linf,
-                                               partial_aggs, order_cols)
-        return (_limit_per_key(df, keys, linf, order_cols)
-                .groupBy(*keys).agg(*partial_aggs))
-    return df.groupBy(*keys).agg(*partial_aggs)
-
-
-def bound_noop(df: DataFrame, pid_col: str, pk_cols: Sequence[str],
-               partial_aggs: List[Column]) -> DataFrame:
-    """No sampling — bounds assumed enforced by the data
-    (reference: contribution_bounders.py:234-247)."""
-    return df.groupBy(pid_col, *pk_cols).agg(*partial_aggs)
+    bounded, _ = _cap_rows(df, [pid_col], max_contributions, order_cols,
+                           partial_aggs, group_keys=[pid_col, *pk_cols])
+    return bounded

@@ -11,7 +11,7 @@ types and whose metric columns are DoubleType
 from __future__ import annotations
 
 import dataclasses
-from typing import List, Optional, Sequence, Union
+from typing import List, Optional, Sequence, Tuple, Union
 
 from pyspark.sql import DataFrame
 
@@ -20,7 +20,9 @@ from pipelinedp_spark.aggregate_params import (AggregateParams, Metric,
                                                NormKind,
                                                PartitionSelectionStrategy)
 from pipelinedp_spark.budget_accounting import Budget, NaiveBudgetAccountant
-from pipelinedp_spark.dp_engine import DataFrameExtractors, DPEngine
+from pipelinedp_spark.dp_engine import (DataFrameExtractors, DPEngine,
+                                        MultiSumParams, MultiSumSpec,
+                                        MultiValueDataFrameExtractors)
 
 
 @dataclasses.dataclass
@@ -80,38 +82,59 @@ class Query:
         self._pre_threshold = pre_threshold
         self._multi_sum_aggs = multi_sum_aggs
 
-    def _run_multi_sum(self, budget: Budget, noise_kind: NoiseKind,
-                       noise_mode: str) -> DataFrame:
-        from pipelinedp_spark.dp_engine import (MultiSumParams, MultiSumSpec,
-                                                MultiValueDataFrameExtractors)
+    def _release(self, budget: Budget, noise_kind: NoiseKind,
+                 noise_mode: str) -> Tuple[DPEngine, DataFrame]:
+        """The one engine call behind ``run_query`` and ``explain``:
+        multi-column sums go through ``aggregate_multi_sum``, everything
+        else through ``aggregate``."""
         accountant = NaiveBudgetAccountant(budget.epsilon, budget.delta)
         engine = DPEngine(accountant, noise_mode=noise_mode)
         b = self._contribution_bounds
-        specs = [MultiSumSpec(a.min_value, a.max_value,
-                              a.min_sum_per_partition,
-                              a.max_sum_per_partition, a.output_column)
-                 for a in self._multi_sum_aggs]
-        params = MultiSumParams(
-            max_partitions_contributed=b.max_partitions_contributed,
-            max_contributions_per_partition=b.max_contributions_per_partition,
-            noise_kind=noise_kind,
-            include_count=Metrics.COUNT in self._metrics_output_columns,
-            include_privacy_id_count=(
-                Metrics.PRIVACY_ID_COUNT in self._metrics_output_columns),
-            partition_selection_strategy=self._strategy,
-            pre_threshold=self._pre_threshold)
-        extractors = MultiValueDataFrameExtractors(
-            privacy_id_column=self._columns.privacy_key,
-            partition_key_columns=self._columns.partition_key,
-            value_columns=[a.input_column for a in self._multi_sum_aggs])
-        result = engine.aggregate_multi_sum(self._df, params, extractors,
-                                            specs, self._public_partitions)
+        if self._multi_sum_aggs:
+            params = MultiSumParams(
+                max_partitions_contributed=b.max_partitions_contributed,
+                max_contributions_per_partition=(
+                    b.max_contributions_per_partition),
+                noise_kind=noise_kind,
+                include_count=Metrics.COUNT in self._metrics_output_columns,
+                include_privacy_id_count=(
+                    Metrics.PRIVACY_ID_COUNT in self._metrics_output_columns),
+                partition_selection_strategy=self._strategy,
+                pre_threshold=self._pre_threshold)
+            extractors = MultiValueDataFrameExtractors(
+                privacy_id_column=self._columns.privacy_key,
+                partition_key_columns=self._columns.partition_key,
+                value_columns=[a.input_column for a in self._multi_sum_aggs])
+            specs = [MultiSumSpec(a.min_value, a.max_value,
+                                  a.min_sum_per_partition,
+                                  a.max_sum_per_partition, a.output_column)
+                     for a in self._multi_sum_aggs]
+            result = engine.aggregate_multi_sum(self._df, params, extractors,
+                                                specs, self._public_partitions)
+        else:
+            params = AggregateParams(
+                metrics=list(self._metrics_output_columns.keys()),
+                max_partitions_contributed=b.max_partitions_contributed,
+                max_contributions_per_partition=(
+                    b.max_contributions_per_partition),
+                min_value=b.min_value,
+                max_value=b.max_value,
+                min_sum_per_partition=b.min_sum_per_partition,
+                max_sum_per_partition=b.max_sum_per_partition,
+                vector_max_norm=b.vector_max_norm,
+                vector_norm_kind=b.vector_norm_kind,
+                vector_size=b.vector_size,
+                noise_kind=noise_kind,
+                partition_selection_strategy=self._strategy,
+                pre_threshold=self._pre_threshold)
+            extractors = DataFrameExtractors(
+                privacy_id_column=self._columns.privacy_key,
+                partition_key_columns=self._columns.partition_key,
+                value_column=self._columns.value)
+            result = engine.aggregate(self._df, params, extractors,
+                                      self._public_partitions)
         accountant.compute_budgets()
-        out = result.dataframe()
-        for metric, out_name in self._metrics_output_columns.items():
-            if out_name != metric.output_name:
-                out = out.withColumnRenamed(metric.output_name, out_name)
-        return out
+        return engine, result.dataframe()
 
     def run_query(self,
                   budget: Budget,
@@ -119,65 +142,16 @@ class Query:
                   noise_mode: str = "secure") -> DataFrame:
         """Reference: pipeline_dp/dataframes.py:172-248. ``noise_mode='zero'``
         is the deterministic testing/oracle mode."""
-        if self._multi_sum_aggs:
-            return self._run_multi_sum(budget, noise_kind, noise_mode)
-        accountant = NaiveBudgetAccountant(budget.epsilon, budget.delta)
-        engine = DPEngine(accountant, noise_mode=noise_mode)
-        b = self._contribution_bounds
-        params = AggregateParams(
-            metrics=list(self._metrics_output_columns.keys()),
-            max_partitions_contributed=b.max_partitions_contributed,
-            max_contributions_per_partition=b.max_contributions_per_partition,
-            min_value=b.min_value,
-            max_value=b.max_value,
-            min_sum_per_partition=b.min_sum_per_partition,
-            max_sum_per_partition=b.max_sum_per_partition,
-            vector_max_norm=b.vector_max_norm,
-            vector_norm_kind=b.vector_norm_kind,
-            vector_size=b.vector_size,
-            noise_kind=noise_kind,
-            partition_selection_strategy=self._strategy,
-            pre_threshold=self._pre_threshold,
-        )
-        extractors = DataFrameExtractors(
-            privacy_id_column=self._columns.privacy_key,
-            partition_key_columns=self._columns.partition_key,
-            value_column=self._columns.value)
-        result = engine.aggregate(self._df, params, extractors,
-                                  self._public_partitions)
-        accountant.compute_budgets()
-        out = result.dataframe()
+        _, out = self._release(budget, noise_kind, noise_mode)
         for metric, out_name in self._metrics_output_columns.items():
-            default = metric.output_name
-            if out_name != default:
-                out = out.withColumnRenamed(default, out_name)
+            if out_name != metric.output_name:
+                out = out.withColumnRenamed(metric.output_name, out_name)
         return out
 
     def explain(self, budget: Budget,
                 noise_kind: NoiseKind = NoiseKind.LAPLACE) -> str:
-        accountant = NaiveBudgetAccountant(budget.epsilon, budget.delta)
-        engine = DPEngine(accountant, noise_mode="zero")
-        b = self._contribution_bounds
-        params = AggregateParams(
-            metrics=list(self._metrics_output_columns.keys()),
-            max_partitions_contributed=b.max_partitions_contributed,
-            max_contributions_per_partition=b.max_contributions_per_partition,
-            min_value=b.min_value, max_value=b.max_value,
-            min_sum_per_partition=b.min_sum_per_partition,
-            max_sum_per_partition=b.max_sum_per_partition,
-            vector_max_norm=b.vector_max_norm,
-            vector_norm_kind=b.vector_norm_kind,
-            vector_size=b.vector_size,
-            noise_kind=noise_kind,
-            partition_selection_strategy=self._strategy,
-            pre_threshold=self._pre_threshold)
-        extractors = DataFrameExtractors(self._columns.privacy_key,
-                                         self._columns.partition_key,
-                                         self._columns.value)
-        result = engine.aggregate(self._df, params, extractors,
-                                  self._public_partitions)
-        accountant.compute_budgets()
-        result.dataframe()
+        """The computation report of the release ``run_query`` builds."""
+        engine, _ = self._release(budget, noise_kind, "zero")
         return engine.explain_computation_reports()[-1]
 
 

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import dataclasses
 import math
-from typing import Callable, List, Optional, Sequence, Union
+from typing import Callable, List, Optional, Sequence, Tuple, Union
 
 import numpy as np
 import pandas as pd
@@ -218,16 +218,38 @@ class _CompositeCustomCombiner(CustomCombiner):
         return out
 
 
-def _resolve_prefiltered(params, public_partitions) -> bool:
-    """Validate + read `public_partitions_already_filtered` (reference:
-    aggregate_params.py:267-269 — only usable with public partitions).
-    Param types without the flag (e.g. MultiSumParams) read as False."""
-    if getattr(params, "public_partitions_already_filtered", False) \
-            and public_partitions is None:
-        raise ValueError(
-            "public_partitions_already_filtered requires public "
-            "partitions")
-    return getattr(params, "public_partitions_already_filtered", False)
+def _bounding_caps(params: AggregateParams
+                   ) -> Tuple[Optional[int], Optional[int]]:
+    """The (l0, linf) caps the bounders enforce: none when the caller
+    already enforced the bounds, and no L0 sample when cross-partition
+    bounding is off — max_partitions_contributed still sets the noise
+    sensitivity (reference: pipeline_dp/dp_engine.py:418-430, LinfSampler /
+    NoOpSampler dispatch)."""
+    if params.contribution_bounds_already_enforced:
+        return None, None
+    l0 = (params.max_partitions_contributed
+          if params.perform_cross_partition_contribution_bounding else None)
+    return l0, params.max_contributions_per_partition
+
+
+def _pp_count(linf: Optional[int], row_sampling: bool) -> Column:
+    """Per-(pid, pk) count partial. Without row sampling no window caps
+    the rows, so the count is capped at linf here instead."""
+    count = F.count(F.lit(1))
+    if not row_sampling and linf is not None:
+        count = F.least(count, F.lit(linf))
+    return count.alias(_PP_COUNT)
+
+
+def _bounding_note(params: AggregateParams) -> str:
+    if params.contribution_bounds_already_enforced:
+        return "Contribution bounding: none (already enforced)"
+    l0, linf = _bounding_caps(params)
+    cross = (f"L0 <= {l0} partitions per pid" if l0 is not None else
+             "cross-partition bounding disabled (L0 <= "
+             f"{params.max_partitions_contributed} kept in sensitivity)")
+    return (f"Contribution bounding: Linf <= {linf} rows per (pid, "
+            f"partition), {cross}")
 
 
 def _vector_clip_udf(norm_kind: str, max_norm: float):
@@ -295,40 +317,9 @@ class DPEngine:
             return self._aggregate_vector_sum(df, params, extractors,
                                               public_partitions, report)
 
-        # --- stage 1: projection (drives Catalyst column pruning). ---
-        cols = [F.col(extractors.privacy_id_column).alias(_PID)] + \
-            [F.col(c) for c in pk_cols]
-        if extractors.value_column is not None:
-            cols.append(
-                F.col(extractors.value_column).cast(DoubleType()).alias(_VALUE))
-        data = df.select(*cols)
-        report.append(
-            f"Extracted ({extractors.privacy_id_column}, "
-            f"{pk_cols}, {extractors.value_column})")
-
-        # --- stage 2: drop non-public partitions before bounding. ---
-        prefiltered = _resolve_prefiltered(params, public_partitions)
-        pub_df = None
-        if public_partitions is not None:
-            pub_df = self._as_partitions_df(df.sparkSession, pk_cols,
-                                            public_partitions, like=df)
-            if prefiltered:
-                report.append(
-                    "Public partitions pre-filtered by caller (drop "
-                    "skipped)")
-            elif (not isinstance(public_partitions, DataFrame)
-                    and len(pk_cols) == 1 and len(public_partitions) <= 1000):
-                # Small local key list: isin() compiles to a pushed-down
-                # scan filter — no broadcast exchange at all.
-                values = [p[0] if isinstance(p, tuple) else p
-                          for p in public_partitions]
-                data = data.filter(F.col(pk_cols[0]).isin(values))
-                report.append("Dropped non-public partitions (isin pushdown)")
-            else:
-                data = data.join(F.broadcast(pub_df), on=pk_cols,
-                                 how="left_semi")
-                report.append(
-                    "Dropped non-public partitions (broadcast semi-join)")
+        # --- stages 1-2: projection, non-public partitions dropped. ---
+        data, pub_df = self._extract(df, params, extractors,
+                                     public_partitions, report)
 
         # --- stage 3: budget requests. ---
         specs = self._request_budgets(params, public_partitions is not None,
@@ -341,15 +332,8 @@ class DPEngine:
         # Percentiles ride a parallel bounded-histogram pipeline and join
         # back on the partition key in finalize (independent Linf/L0 sample
         # from the scalar partials; both enforce the declared bounds).
-        pct_hist = None
-        if params.percentiles_to_compute:
-            if params.percentile_algorithm == "tree":
-                from pipelinedp_spark import quantile_tree as qt
-                pct_hist = self._percentile_histogram(
-                    data, params, pk_cols, report, nbins=qt.num_leaves())
-            else:
-                pct_hist = self._percentile_histogram(data, params, pk_cols,
-                                                      report)
+        pct_hist = (self._percentile_histogram(data, params, pk_cols, report)
+                    if params.percentiles_to_compute else None)
 
         # --- stage 5: final merge per partition key. ---
         final_aggs = [
@@ -378,19 +362,62 @@ class DPEngine:
                     out, specs["partition_selection"], params, report)
             pct_values = None
             if pct_hist is not None:
-                if params.percentile_algorithm == "tree":
-                    pct_values = engine._percentile_tree_values(
-                        pct_hist, params, specs["percentile"], pk_cols,
-                        report)
-                else:
-                    pct_values = engine._percentile_values(
-                        pct_hist, params, specs["percentile"], pk_cols,
-                        report)
-            out = engine._compute_metrics(out, params, specs, pk_cols, report,
-                                          pct_values)
-            return out
+                release = (engine._percentile_tree_values
+                           if params.percentile_algorithm == "tree"
+                           else engine._percentile_values)
+                pct_values = release(pct_hist, params, specs["percentile"],
+                                     pk_cols, report)
+            out, cols = engine._compute_metrics(out, params, specs, pk_cols,
+                                                report, pct_values)
+            return out.select(*cols)
 
         return DPResult(finalize, accountant)
+
+    # ------------------------------------------------------------------
+    def _extract(self, df: DataFrame, params, extractors: DataFrameExtractors,
+                 public_partitions, report: List[str],
+                 values: Optional[Sequence[Column]] = None
+                 ) -> Tuple[DataFrame, Optional[DataFrame]]:
+        """Project (pid, partition keys, ``values``; default: the value
+        column as double ``__value__``) and drop non-public partitions
+        before bounding, unless the caller pre-filtered them (reference:
+        aggregate_params.py:267-269). Returns (rows, public keys or None)."""
+        pk_cols = extractors.partition_key_columns
+        if values is None:
+            values = ([F.col(extractors.value_column).cast(DoubleType())
+                       .alias(_VALUE)]
+                      if extractors.value_column is not None else [])
+        data = df.select(F.col(extractors.privacy_id_column).alias(_PID),
+                         *[F.col(c) for c in pk_cols], *values)
+        report.append(
+            f"Extracted ({extractors.privacy_id_column}, "
+            f"{pk_cols}, {extractors.value_column})")
+        prefiltered = getattr(params, "public_partitions_already_filtered",
+                              False)
+        if public_partitions is None:
+            if prefiltered:
+                raise ValueError(
+                    "public_partitions_already_filtered requires public "
+                    "partitions")
+            return data, None
+        pub_df = self._as_partitions_df(df.sparkSession, pk_cols,
+                                        public_partitions, like=df)
+        if prefiltered:
+            report.append(
+                "Public partitions pre-filtered by caller (drop skipped)")
+        elif (not isinstance(public_partitions, DataFrame)
+                and len(pk_cols) == 1 and len(public_partitions) <= 1000):
+            # Small local key list: isin() compiles to a pushed-down
+            # scan filter — no broadcast exchange at all.
+            keys = [p[0] if isinstance(p, tuple) else p
+                    for p in public_partitions]
+            data = data.filter(F.col(pk_cols[0]).isin(keys))
+            report.append("Dropped non-public partitions (isin pushdown)")
+        else:
+            data = data.join(F.broadcast(pub_df), on=pk_cols, how="left_semi")
+            report.append(
+                "Dropped non-public partitions (broadcast semi-join)")
+        return data, pub_df
 
     # ------------------------------------------------------------------
     def _request_budgets(self, params: AggregateParams, public: bool,
@@ -442,23 +469,14 @@ class DPEngine:
                              pk_cols: Sequence[str], metric_kinds: set,
                              report: List[str]) -> DataFrame:
         per_partition_clip = params.min_sum_per_partition is not None
-        partials: List[Column] = []
-        value_dependent = bool(metric_kinds
-                               & {Metric.SUM, Metric.MEAN, Metric.VARIANCE,
-                                  Metric.PERCENTILE, Metric.VECTOR_SUM})
-        linf = params.max_contributions_per_partition
-        l0 = params.max_partitions_contributed
-
-        # Count partial: when no row sampling runs, cap with least().
-        sampling = value_dependent and not per_partition_clip
-        if params.contribution_bounds_already_enforced or \
-                params.max_contributions is not None or sampling or \
-                linf is None:
-            partials.append(F.count(F.lit(1)).alias(_PP_COUNT))
-        else:
-            partials.append(
-                F.least(F.count(F.lit(1)), F.lit(linf)).alias(_PP_COUNT))
-
+        l0, linf = _bounding_caps(params)
+        # Rows are sampled only when a partial depends on WHICH rows
+        # survive: per-contribution value clips, not counts or a
+        # per-partition sum clip.
+        sampling = not per_partition_clip and bool(
+            metric_kinds & {Metric.SUM, Metric.MEAN, Metric.VARIANCE,
+                            Metric.PERCENTILE})
+        partials = [_pp_count(linf, sampling)]
         if Metric.SUM in metric_kinds:
             if per_partition_clip:
                 partials.append(
@@ -476,49 +494,15 @@ class DPEngine:
             if Metric.VARIANCE in metric_kinds:
                 partials.append(F.sum(norm * norm).alias(_PP_NORM_SQ))
 
-        if params.contribution_bounds_already_enforced:
-            report.append("Contribution bounding: none (already enforced)")
-            return bounders.bound_noop(data, _PID, pk_cols, partials)
-        if params.max_contributions is not None:
+        if params.max_contributions is not None and \
+                not params.contribution_bounds_already_enforced:
             report.append(
                 f"Contribution bounding: <= {params.max_contributions} total "
                 "contributions per privacy id")
             return bounders.bound_per_privacy_id(data, _PID, pk_cols, partials,
                                                  params.max_contributions,
                                                  self._order_cols)
-        if not params.perform_cross_partition_contribution_bounding:
-            # L0 sampling disabled by the caller (data already satisfies the
-            # L0 bound); max_partitions_contributed STAYS in the noise
-            # sensitivity (reference: pipeline_dp/dp_engine.py:418-430 —
-            # LinfSampler / NoOpSampler dispatch).
-            if per_partition_clip or not (sampling and linf is not None):
-                report.append(
-                    "Contribution bounding: cross-partition bounding "
-                    f"disabled (L0 <= {l0} kept in sensitivity), no sampling")
-                return bounders.bound_noop(data, _PID, pk_cols, partials)
-            report.append(
-                "Contribution bounding: cross-partition bounding disabled "
-                f"(L0 <= {l0} kept in sensitivity), Linf <= {linf} rows per "
-                "(pid, partition)")
-            return bounders.bound_linf_only(data, _PID, pk_cols, partials,
-                                            linf, row_sampling_needed=True,
-                                            order_cols=self._order_cols)
-        if per_partition_clip:
-            report.append(
-                f"Contribution bounding: per-partition sum clip to "
-                f"[{params.min_sum_per_partition}, "
-                f"{params.max_sum_per_partition}], L0 <= {l0}")
-            return bounders.bound_cross_partition_only(data, _PID, pk_cols,
-                                                       partials, l0,
-                                                       self._order_cols)
-        plan_note = ""
-        if sampling and linf is not None:
-            plan_note = (" [aggregate-first: sort only oversize groups]"
-                         if linf >= bounders.OVERSIZE_SPLIT_MIN_CAP
-                         else " [window sample]")
-        report.append(
-            f"Contribution bounding: Linf <= {linf} rows per (pid, partition),"
-            f" L0 <= {l0} partitions per pid{plan_note}")
+        report.append(_bounding_note(params))
         return bounders.bound_cross_and_per_partition(
             data, _PID, pk_cols, partials, l0, linf,
             row_sampling_needed=sampling, order_cols=self._order_cols)
@@ -571,7 +555,10 @@ class DPEngine:
     def _compute_metrics(self, out: DataFrame, params: AggregateParams,
                          specs: dict, pk_cols: Sequence[str],
                          report: List[str],
-                         pct_values: Optional[DataFrame] = None) -> DataFrame:
+                         pct_values: Optional[DataFrame] = None
+                         ) -> Tuple[DataFrame, List[Column]]:
+        """Noisy metric columns: returns the frame to select from and the
+        partition-key + metric columns, in ``params.metrics`` order."""
         kind = params.noise_kind.value
         l0 = params.max_partitions_contributed
         linf = params.max_contributions_per_partition
@@ -710,7 +697,7 @@ class DPEngine:
                 ordered.append(
                     F.lit(float(stddev_vals[name])).cast(DoubleType())
                     .alias(f"{name}_noise_stddev"))
-        return out.select(*ordered)
+        return out, ordered
 
     # ------------------------------------------------------------------
     # PERCENTILE: bounded-domain histogram sketch
@@ -723,10 +710,12 @@ class DPEngine:
     # ------------------------------------------------------------------
     def _percentile_histogram(self, data: DataFrame, params: AggregateParams,
                               pk_cols: Sequence[str],
-                              report: List[str],
-                              nbins: Optional[int] = None) -> DataFrame:
-        """Contribution-bounded per-(pk, bin) counts of clipped values."""
-        nbins = nbins or params.percentile_bins
+                              report: List[str]) -> DataFrame:
+        """Contribution-bounded per-(pk, bin) counts of clipped values; the
+        quantile tree's leaves are its bins."""
+        from pipelinedp_spark import quantile_tree as qt
+        nbins = (qt.num_leaves() if params.percentile_algorithm == "tree"
+                 else params.percentile_bins)
         lo, hi = float(params.min_value), float(params.max_value)
         width = (hi - lo) / nbins if hi > lo else 1.0
         bin_col = F.least(
@@ -736,51 +725,8 @@ class DPEngine:
         report.append(
             f"PERCENTILE: {nbins}-bin histogram sketch over [{lo}, {hi}]")
         binned = data.withColumn(_BIN, bin_col)
-        enforce = not params.contribution_bounds_already_enforced
-        linf = params.max_contributions_per_partition
-        l0 = params.max_partitions_contributed
-        if not enforce or (linf is None and l0 is None):
-            return (binned.groupBy(*pk_cols, _BIN)
-                    .agg(F.count(F.lit(1)).cast("double").alias(_BCNT)))
-        # ONE map-side-combined per-(pid, pk) count pass drives BOTH
-        # bounding steps, so no full-data shuffle or sort remains in the
-        # common generous-cap case: the Linf sample touches only
-        # oversize groups (joined back, AQE-broadcast / eliminated when
-        # the set is empty), and the L0 key sample draws from the tiny
-        # totals frame instead of a distinct() over raw rows. The final
-        # (pk, bin) histogram aggregates map-side, so the only
-        # corpus-sized data movement left is the scan itself.
-        keys = [_PID, *pk_cols]
-        rows = binned
-        if (linf is not None
-                and linf >= bounders.OVERSIZE_SPLIT_MIN_CAP):
-            totals = binned.groupBy(*keys).agg(
-                F.count(F.lit(1)).alias(bounders._GC))
-            over = bounders._oversize_keys(totals, keys, linf)
-            ok_cols = [f"__ok{i}__" for i in range(len(keys))]
-            cond = bounders._oversize_key_cond(keys, ok_cols)
-            ok = binned.join(over, on=cond, how="left_anti")
-            big = binned.join(over, on=cond, how="left_semi")
-            rows = ok.unionByName(
-                bounders._limit_per_key(big, keys, linf,
-                                        self._order_cols))
-            if l0 is not None:
-                # key sample drawn from the tiny totals frame, not a
-                # distinct() over raw rows
-                keyset = bounders._limit_per_key(
-                    totals.select(*keys), [_PID], l0, self._order_cols)
-                rows = rows.join(keyset, on=keys, how="left_semi")
-        else:
-            # Binding-cap regime (see bounders.OVERSIZE_SPLIT_MIN_CAP):
-            # plain window sample.
-            if linf is not None:
-                rows = bounders._limit_per_key(rows, keys, linf,
-                                               self._order_cols)
-            if l0 is not None:
-                keyset = bounders._limit_per_key(
-                    rows.select(*keys).distinct(), [_PID], l0,
-                    self._order_cols)
-                rows = rows.join(keyset, on=keys, how="left_semi")
+        rows = bounders.bound_rows(binned, _PID, pk_cols,
+                                   *_bounding_caps(params), self._order_cols)
         return (rows.groupBy(*pk_cols, _BIN)
                 .agg(F.count(F.lit(1)).cast("double").alias(_BCNT)))
 
@@ -794,7 +740,7 @@ class DPEngine:
         nbins = params.percentile_bins
         lo, hi = float(params.min_value), float(params.max_value)
         width = (hi - lo) / nbins if hi > lo else 1.0
-        l0 = params.max_partitions_contributed or params.max_contributions or 1
+        l0 = params.max_partitions_contributed or 1
         linf = params.max_contributions_per_partition or 1
         scale = dp.noise_scale(params.noise_kind, spec.eps, spec.delta,
                                dp.count_sensitivities(l0, linf))
@@ -855,8 +801,7 @@ class DPEngine:
         lo, hi = float(params.min_value), float(params.max_value)
         height = qt.DEFAULT_TREE_HEIGHT
         branching = qt.DEFAULT_BRANCHING_FACTOR
-        l0 = params.max_partitions_contributed or params.max_contributions \
-            or 1
+        l0 = params.max_partitions_contributed or 1
         linf = params.max_contributions_per_partition or 1
         kind = params.noise_kind
         # Per-level composition: each entry touches one node per level, so
@@ -908,40 +853,18 @@ class DPEngine:
                               report: List[str]) -> DPResult:
         pk_cols = extractors.partition_key_columns
         size = int(params.vector_size)
-        data = df.select(
-            F.col(extractors.privacy_id_column).alias(_PID),
-            *[F.col(c) for c in pk_cols],
-            F.col(extractors.value_column).cast("array<double>")
-            .alias(_VALUE))
-        pub_df = None
-        if public_partitions is not None:
-            pub_df = self._as_partitions_df(df.sparkSession, pk_cols,
-                                            public_partitions, like=df)
-            if _resolve_prefiltered(params, public_partitions):
-                report.append("Public partitions pre-filtered by caller")
-            else:
-                data = data.join(F.broadcast(pub_df), on=list(pk_cols),
-                                 how="left_semi")
-                report.append("Dropped non-public partitions")
+        data, pub_df = self._extract(
+            df, params, extractors, public_partitions, report,
+            [F.col(extractors.value_column).cast("array<double>")
+             .alias(_VALUE)])
         specs = self._request_budgets(params, public_partitions is not None,
                                       report)
-        linf = params.max_contributions_per_partition
-        if not params.contribution_bounds_already_enforced and \
-                linf is not None:
-            data = bounders.limit_rows_per_key(data, [_PID, *pk_cols],
-                                               linf, self._order_cols)
-        # L0 sampling happens at the (pid, pk) KEY level BEFORE the d-fold
-        # explode: the key frame is 1/d the exploded size, and sampling
-        # first means the explode+sum subtree is built once (a post-explode
-        # keys.distinct() branch would recompute it for the semi-join).
+        # Bounding runs on whole vectors, before the d-fold explode.
+        data = bounders.bound_rows(data, _PID, pk_cols,
+                                   *_bounding_caps(params), self._order_cols)
+        report.append(_bounding_note(params))
         l0 = params.max_partitions_contributed
-        if not params.contribution_bounds_already_enforced and l0 is not None:
-            keys = bounders._limit_per_key(
-                data.select(_PID, *pk_cols).distinct(), [_PID], l0,
-                self._order_cols)
-            data = data.join(keys, on=[_PID, *pk_cols], how="left_semi")
-        else:
-            keys = data.select(_PID, *pk_cols).distinct()
+        linf = params.max_contributions_per_partition
         clip = _vector_clip_udf(params.vector_norm_kind.value,
                                 float(params.vector_max_norm))
         data = data.withColumn(_VALUE, clip(F.col(_VALUE)))
@@ -959,8 +882,9 @@ class DPEngine:
                           .agg(F.count(F.lit(1)).cast("double")
                                .alias("__vn__"))
                           if is_mean else None)
-        pid_counts = keys.groupBy(*pk_cols).agg(
-            F.count(F.lit(1)).alias(_PID_COUNT))
+        pid_counts = (data.select(_PID, *pk_cols).distinct()
+                      .groupBy(*pk_cols)
+                      .agg(F.count(F.lit(1)).alias(_PID_COUNT)))
         engine = self
         out_name = params.metrics[0].output_name
 
@@ -1039,32 +963,13 @@ class DPEngine:
         report = [f"DPEngine.aggregate_custom: {type(combiner).__name__}"]
         self._reports.append(report)
         pk_cols = extractors.partition_key_columns
-        cols = [F.col(extractors.privacy_id_column).alias(_PID)] + \
-            [F.col(c) for c in pk_cols]
-        if extractors.value_column is not None:
-            cols.append(F.col(extractors.value_column).cast(DoubleType())
-                        .alias(_VALUE))
-        data = df.select(*cols)
-        if public_partitions is not None \
-                and not _resolve_prefiltered(params, public_partitions):
-            pub_df = self._as_partitions_df(df.sparkSession, pk_cols,
-                                            public_partitions, like=df)
-            data = data.join(F.broadcast(pub_df), on=list(pk_cols),
-                             how="left_semi")
+        data, _ = self._extract(df, params, extractors, public_partitions,
+                                report)
         with self._accountant.scope(params.budget_weight):
             combiner.request_budget(self._accountant)
-        linf = params.max_contributions_per_partition
-        l0 = params.max_partitions_contributed
-        if not params.contribution_bounds_already_enforced:
-            if linf is not None:
-                data = bounders.limit_rows_per_key(
-                    data, [_PID, *pk_cols], linf, self._order_cols)
-            if l0 is not None:
-                keys = bounders._limit_per_key(
-                    data.select(_PID, *pk_cols).distinct(), [_PID], l0,
-                    self._order_cols)
-                data = data.join(keys, on=[_PID, *pk_cols], how="left_semi")
-        report.append(f"Contribution bounding: Linf <= {linf}, L0 <= {l0}")
+        data = bounders.bound_rows(data, _PID, pk_cols,
+                                   *_bounding_caps(params), self._order_cols)
+        report.append(_bounding_note(params))
         schema = ", ".join(
             [f"`{c}` {data.schema[c].dataType.simpleString()}"
              for c in pk_cols] + [combiner.output_schema])
@@ -1092,23 +997,10 @@ class DPEngine:
         pk_cols = extractors.partition_key_columns
         l0 = params.max_partitions_contributed
         linf = params.max_contributions_per_partition
-
-        cols = [F.col(extractors.privacy_id_column).alias(_PID)] + \
-            [F.col(c) for c in pk_cols] + \
+        data, pub_df = self._extract(
+            df, params, extractors, public_partitions, report,
             [F.col(c).cast(DoubleType()).alias(f"__value{i}__")
-             for i, c in enumerate(extractors.value_columns)]
-        data = df.select(*cols)
-
-        pub_df = None
-        if public_partitions is not None:
-            pub_df = self._as_partitions_df(df.sparkSession, pk_cols,
-                                            public_partitions, like=df)
-            if _resolve_prefiltered(params, public_partitions):
-                report.append("Public partitions pre-filtered by caller")
-            else:
-                data = data.join(F.broadcast(pub_df), on=list(pk_cols),
-                                 how="left_semi")
-                report.append("Dropped non-public partitions")
+             for i, c in enumerate(extractors.value_columns)])
 
         with self._accountant.scope(params.budget_weight):
             mt = params.noise_kind.convert_to_mechanism_type()
@@ -1125,9 +1017,7 @@ class DPEngine:
         # Row sampling is only needed when a per-contribution clip depends
         # on WHICH rows survive; per-partition clips and count caps do not.
         row_sampling = any(s.min_value is not None for s in sum_specs)
-        partials: List[Column] = [
-            (F.count(F.lit(1)) if row_sampling else
-             F.least(F.count(F.lit(1)), F.lit(linf))).alias(_PP_COUNT)]
+        partials = [_pp_count(linf, row_sampling)]
         for i, s in enumerate(sum_specs):
             v = F.col(f"__value{i}__")
             if s.min_value is not None:
@@ -1150,8 +1040,9 @@ class DPEngine:
              for i in range(len(sum_specs))]
         aggregated = per_pid_pk.groupBy(*pk_cols).agg(*final_aggs)
         engine = self
+        # Noises COUNT / PRIVACY_ID_COUNT when their spec was requested.
         agg_params = AggregateParams(
-            metrics=[Metrics.COUNT],
+            metrics=[Metrics.COUNT, Metrics.PRIVACY_ID_COUNT],
             max_partitions_contributed=l0,
             max_contributions_per_partition=linf,
             noise_kind=params.noise_kind,
@@ -1167,24 +1058,8 @@ class DPEngine:
                 out = engine._select_private_partitions(
                     out, specs["partition_selection"], agg_params, report)
             kind = params.noise_kind.value
-            ordered = [F.col(c) for c in pk_cols]
-            if params.include_count:
-                cs = specs["count"]
-                scale = dp.noise_scale(params.noise_kind, cs.eps, cs.delta,
-                                       dp.count_sensitivities(l0, linf))
-                ordered.append(
-                    engine._noise.add_noise(
-                        F.col(_COUNT).cast(DoubleType()), kind, scale)
-                    .alias("count"))
-            if params.include_privacy_id_count:
-                ps = specs["privacy_id_count"]
-                scale = dp.noise_scale(
-                    params.noise_kind, ps.eps, ps.delta,
-                    dp.privacy_id_count_sensitivities(l0))
-                ordered.append(
-                    engine._noise.add_noise(
-                        F.col(_PID_COUNT).cast(DoubleType()), kind, scale)
-                    .alias("privacy_id_count"))
+            out, ordered = engine._compute_metrics(out, agg_params, specs,
+                                                   pk_cols, report)
             for i, (s, spec) in enumerate(zip(sum_specs, specs["sums"])):
                 sens = dp.sum_sensitivities(
                     l0, linf, s.min_value, s.max_value,
@@ -1219,6 +1094,18 @@ class DPEngine:
         return joined.fillna(fills)
 
     # ------------------------------------------------------------------
+    def _sampled_pairs(self, df: DataFrame, params: SelectPartitionsParams,
+                       extractors: DataFrameExtractors,
+                       report: List[str]) -> DataFrame:
+        """Distinct (pid, pk) pairs, at most max_partitions_contributed per
+        privacy id: the input of partition selection."""
+        data, _ = self._extract(df, params, extractors, None, report, [])
+        return bounders.bound_cross_and_per_partition(
+            data, _PID, extractors.partition_key_columns,
+            [F.count(F.lit(1)).alias(_PP_COUNT)],
+            l0=params.max_partitions_contributed, order_cols=self._order_cols)
+
+    # ------------------------------------------------------------------
     def select_partitions(self, df: DataFrame, params: SelectPartitionsParams,
                           extractors: DataFrameExtractors) -> DPResult:
         """Reference: pipeline_dp/dp_engine.py:220-305 (semantics)."""
@@ -1229,12 +1116,7 @@ class DPEngine:
             return self._select_partitions_weighted_gaussian(
                 df, params, extractors, report)
         pk_cols = extractors.partition_key_columns
-        data = df.select(
-            F.col(extractors.privacy_id_column).alias(_PID),
-            *[F.col(c) for c in pk_cols]).distinct()
-        bounded = bounders._limit_per_key(data, [_PID],
-                                          params.max_partitions_contributed,
-                                          self._order_cols)
+        bounded = self._sampled_pairs(df, params, extractors, report)
         counts = bounded.groupBy(*pk_cols).agg(
             F.count(F.lit(1)).alias(_PID_COUNT))
         with self._accountant.scope(params.budget_weight):
@@ -1268,12 +1150,7 @@ class DPEngine:
         sample's hash partitioning) -> groupBy(pk) weight sum -> noisy
         threshold filter."""
         pk_cols = extractors.partition_key_columns
-        data = df.select(
-            F.col(extractors.privacy_id_column).alias(_PID),
-            *[F.col(c) for c in pk_cols]).distinct()
-        bounded = bounders._limit_per_key(data, [_PID],
-                                          params.max_partitions_contributed,
-                                          self._order_cols)
+        bounded = self._sampled_pairs(df, params, extractors, report)
         w = Window.partitionBy(_PID)
         weighted = bounded.withColumn(
             "__weight__",

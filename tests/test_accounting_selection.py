@@ -18,6 +18,8 @@ from pipelinedp_spark.private_contribution_bounds import (
     CalculatePrivateContributionBoundsParams, L0ScoringFunction,
     PrivateL0Calculator, generate_possible_contribution_bounds)
 
+pytestmark = pytest.mark.dp
+
 
 def test_rdp_accountant_amplifies_gaussian_composition():
     naive = pds.NaiveBudgetAccountant(1.0, 1e-6)

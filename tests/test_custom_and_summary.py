@@ -10,6 +10,8 @@ from pipelinedp_spark.aggregate_params import MechanismType
 from pipelinedp_spark.dp_engine import (CustomCombiner, DataFrameExtractors,
                                         DPEngine)
 
+pytestmark = pytest.mark.dp
+
 
 def make_median_combiner():
     """Defined in function scope so cloudpickle ships it by value to

@@ -6,6 +6,8 @@ import pytest
 
 import pipelinedp_spark as pds
 
+pytestmark = pytest.mark.dp
+
 
 def _make_df(spark, rows, cols=("pid", "pk", "v")):
     return spark.createDataFrame(rows, list(cols))
@@ -318,3 +320,31 @@ class TestCrossBoundingAndNoiseStddev:
         row = result.dataframe().collect()[0]
         assert row["v"] == 10.0
         assert row["v_noise_stddev"] == pytest.approx(3.0 * math.sqrt(2))
+
+
+_VALUES = dict(min_value=0.0, max_value=1.0)
+
+
+@pytest.mark.parametrize("metric,extra", [
+    (pds.Metrics.PERCENTILE(50), _VALUES),
+    (pds.Metrics.VECTOR_SUM, dict(vector_max_norm=1.0, vector_size=2)),
+    (pds.Metrics.VECTOR_MEAN, dict(vector_max_norm=1.0, vector_size=2)),
+    (None, {}),  # a custom combiner
+    (pds.Metrics.SUM, _VALUES),  # per-contribution bounds
+    (pds.Metrics.MEAN, _VALUES),
+    (pds.Metrics.VARIANCE, _VALUES),
+], ids=["percentile", "vector_sum", "vector_mean", "custom_combiner",
+        "per_contribution_sum", "mean", "variance"])
+def test_max_contributions_rejected_where_unenforced(metric, extra):
+    """max_contributions is enforced only for COUNT, PRIVACY_ID_COUNT and
+    per-partition SUM; any other shape is refused at construction instead
+    of releasing rows no bounder capped."""
+    if metric is None:
+        from pipelinedp_spark.dp_engine import CustomCombiner
+        shape = dict(metrics=[], custom_combiners=[CustomCombiner()])
+        name = "custom_combiners"
+    else:
+        shape = dict(metrics=[metric], **extra)
+        name = metric.metric.value
+    with pytest.raises(ValueError, match=f"max_contributions .*{name}"):
+        pds.AggregateParams(max_contributions=1, **shape)

@@ -8,6 +8,8 @@ from pipelinedp_spark import analysis as A
 from pipelinedp_spark.aggregate_params import AggregateParams, Metrics
 from pipelinedp_spark.dp_engine import DataFrameExtractors
 
+pytestmark = pytest.mark.dp
+
 
 def test_query_builder_multi_sum(spark):
     rows = [(u, "g", 2.0, 10.0) for u in range(20)]
@@ -27,6 +29,32 @@ def test_query_builder_multi_sum(spark):
     assert g["sum_b"] == 160.0  # per-user sum 10 clipped to 8, x20
     e = out["empty"]
     assert (e["count"], e["sum_a"], e["sum_b"]) == (0.0, 0.0, 0.0)
+
+
+@pytest.mark.parametrize("with_count", [True, False])
+def test_explain_describes_multi_sum_run(spark, with_count):
+    """explain reports the release run_query builds: one SUM line per
+    column and the COUNT line when counted, each at its share of the
+    budget (eps / #mechanisms) over its own sensitivity."""
+    rows = [(u, "g", 2.0, 10.0) for u in range(20)]
+    df = spark.createDataFrame(rows, "uid int, pk string, a double, b double")
+    qb = pds.QueryBuilder(df, "uid").groupby(
+        "pk", max_groups_contributed=1, max_contributions_per_group=2,
+        public_keys=["g"])
+    if with_count:
+        qb = qb.count()
+    q = (qb.sum("a", min_value=0.0, max_value=5.0)
+         .sum("b", min_sum_per_partition=0.0, max_sum_per_partition=8.0)
+         .build_query())
+    report = q.explain(pds.Budget(1.0))
+    n = 3 if with_count else 2
+    assert [line for line in report.splitlines()
+            if line.startswith("SUM[")] == [
+        f"SUM[sum_a]: laplace noise, scale={1 * 2 * 5.0 * n:.4g}",
+        f"SUM[sum_b]: laplace noise, scale={1 * 8.0 * n:.4g}"]
+    count = [line for line in report.splitlines() if "COUNT:" in line]
+    assert count == ([f"COUNT: laplace noise, scale={1 * 2 * n:.4g}"]
+                     if with_count else [])
 
 
 def test_multi_sum_duplicate_column_rejected(spark):

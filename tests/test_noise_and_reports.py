@@ -14,6 +14,8 @@ from pyspark.sql import functions as F
 
 import pipelinedp_spark as pds
 
+pytestmark = pytest.mark.dp
+
 
 def test_secure_laplace_noise_distribution(spark):
     """1000 public partitions, one user each, count=1, eps=1, l0=linf=1:

@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 
 import pipelinedp_spark as pds
 
+pytestmark = pytest.mark.dp
+
 
 def _pct_expected(values, p, lo, hi, nbins):
     """Reference implementation of the engine's histogram interpolation."""

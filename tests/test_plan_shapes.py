@@ -240,38 +240,6 @@ def test_linf_sampling_is_aggregate_first(spark):
     assert "isFinalPlan=true" in final
 
 
-def test_oversize_resample_parity_with_plain_window(spark):
-    """Aggregate-first bounding must produce ROW-FOR-ROW the per-key
-    partials of the plain sample-then-aggregate plan under deterministic
-    ordering — mixed under/over-cap groups and null-valued keys
-    included."""
-    from pipelinedp_spark import contribution_bounders as B
-    rows = ([(1, "a", i) for i in range(7)]       # over cap
-            + [(1, "b", i) for i in range(2)]     # under cap
-            + [(2, "a", i) for i in range(4)]     # at boundary+1
-            + [(None, "a", i) for i in range(6)]  # null pid, over cap
-            + [(3, None, i) for i in range(5)])   # null pk, over cap
-    df = spark.createDataFrame(rows, "pid int, pk string, v int")
-    order = [F.col("v")]
-    partials = [F.sum("v").alias("s"), F.count(F.lit(1)).alias("c")]
-    plain = (B._limit_per_key(df, ["pid", "pk"], 3, order)
-             .groupBy("pid", "pk").agg(*partials).collect())
-    split = B._agg_with_oversize_resample(df, ["pid", "pk"], 3,
-                                          partials, order).collect()
-    assert sorted(map(str, plain)) == sorted(map(str, split))
-    # no-oversize cap: everything aggregates directly
-    all_rows = B._agg_with_oversize_resample(df, ["pid", "pk"], 100,
-                                             partials, order).collect()
-    assert sorted(map(str, all_rows)) == sorted(map(str, (
-        df.groupBy("pid", "pk").agg(*partials).collect())))
-    # per-privacy-id (L1) bounder: cap key coarser than agg key
-    l1_plain = (B._limit_per_key(df, ["pid"], 5, order)
-                .groupBy("pid", "pk").agg(*partials).collect())
-    l1_split = B.bound_per_privacy_id(df, "pid", ["pk"], partials, 5,
-                                      order).collect()
-    assert sorted(map(str, l1_plain)) == sorted(map(str, l1_split))
-
-
 def test_scoped_conf_restores_on_exception_and_unset(spark):
     from pipelinedp_spark.plans import scoped_conf
     key = "spark.sql.shuffle.partitions"
@@ -287,24 +255,6 @@ def test_scoped_conf_restores_on_exception_and_unset(spark):
         assert spark.conf.get(custom) == "on"
     with pytest.raises(Exception):
         spark.conf.get(custom)
-
-
-def test_limit_rows_per_key_parity(spark):
-    """Row-output oversize cap (vector/custom paths): identical rows to
-    the plain window under deterministic ordering, both regimes."""
-    from pipelinedp_spark import contribution_bounders as B
-    rows = ([(1, "a", i) for i in range(2500)]
-            + [(2, "a", i) for i in range(10)]
-            + [(2, "b", i) for i in range(1200)])
-    df = spark.createDataFrame(rows, "pid int, pk string, v int")
-    order = [F.col("v")]
-    plain = B._limit_per_key(df, ["pid", "pk"], 1000, order).collect()
-    split = B.limit_rows_per_key(df, ["pid", "pk"], 1000, order).collect()
-    assert sorted(map(str, plain)) == sorted(map(str, split))
-    assert len(split) == 1000 + 10 + 1000
-    # binding-regime cap (< threshold) delegates to the plain window
-    small = B.limit_rows_per_key(df, ["pid", "pk"], 5, order).collect()
-    assert len(small) == 15
 
 
 def test_hll_no_distinct_and_bounded_shuffle(spark):

@@ -7,6 +7,8 @@ from pyspark.sql import functions as F
 
 import pipelinedp_spark as pds
 
+pytestmark = pytest.mark.dp
+
 
 def test_private_dataframe_sum_flow(spark):
     rows = [(u, "d1" if u % 2 else "d2", float(u % 5)) for u in range(40)]

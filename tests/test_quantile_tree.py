@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 import pipelinedp_spark as pds
 from pipelinedp_spark import quantile_tree as qt
 
+pytestmark = pytest.mark.dp
+
 
 def _leaf_hist(values, lo, hi):
     leaves = np.clip(((np.asarray(values) - lo) / (hi - lo)
