@@ -170,9 +170,10 @@ class AggregateParams:
     # combiners.py:276-288,323-335,439-454).
     output_noise_stddev: bool = False
     # When True, the caller asserts rows with non-public partition keys are
-    # already removed, so the engine skips its drop filter; only valid with
-    # public partitions (reference: pipeline_dp/aggregate_params.py:267-269,
-    # 304 — validated at aggregate() where public_partitions is known).
+    # already removed, so the engine skips its drop filter; aggregate()
+    # requires public partitions with it (reference:
+    # pipeline_dp/aggregate_params.py:267-269, 304), while
+    # aggregate_partials() without them keeps every key present as public.
     public_partitions_already_filtered: bool = False
     # User-defined combiners (reference: pipeline_dp/aggregate_params.py:
     # 254-257,296): mutually exclusive with `metrics`; routed through

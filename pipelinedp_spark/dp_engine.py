@@ -12,6 +12,10 @@ pipeline_dp/dp_engine.py:115-195, re-expressed Spark-first):
   [DP partition selection filter]
   noise projection + metric formulas            [budget-dependent, lazy]
 
+The stages from the final merge on are one release stage
+(``DPEngine.aggregate_partials``), shared by ``aggregate``,
+``aggregate_multi_sum`` and the streaming window aggregations.
+
 Budget protocol is two-phase like the reference: ``aggregate`` registers
 MechanismSpecs and returns a lazy result; the noise projection is built only
 when budgets are computed (reference: pipeline_dp/budget_accounting.py two-
@@ -44,15 +48,19 @@ from pipelinedp_spark.noise import NoiseSource, create_noise_source
 
 _PID = "__pid__"
 _VALUE = "__value__"
-_PP_COUNT = "__pp_count__"
-_PP_SUM = "__pp_sum__"
-_PP_NORM_SUM = "__pp_norm_sum__"
-_PP_NORM_SQ = "__pp_norm_sq__"
+# Partial columns of the release stage (DPEngine.aggregate_partials), one
+# row per (privacy id, partition key), and the per-key sum each merges into.
+PARTIAL_COUNT = "__pp_count__"
+PARTIAL_SUM = "__pp_sum__"
+PARTIAL_NORM_SUM = "__pp_norm_sum__"
+PARTIAL_NORM_SQ = "__pp_norm_sq__"
 _PID_COUNT = "__pid_count__"
 _COUNT = "__count__"
 _SUM = "__sum__"
 _NORM_SUM = "__norm_sum__"
 _NORM_SQ = "__norm_sq__"
+_MERGED = {PARTIAL_COUNT: _COUNT, PARTIAL_SUM: _SUM,
+           PARTIAL_NORM_SUM: _NORM_SUM, PARTIAL_NORM_SQ: _NORM_SQ}
 _BIN = "__bin__"
 _BCNT = "__bcnt__"
 _CUM = "__cum__"
@@ -238,7 +246,22 @@ def _pp_count(linf: Optional[int], row_sampling: bool) -> Column:
     count = F.count(F.lit(1))
     if not row_sampling and linf is not None:
         count = F.least(count, F.lit(linf))
-    return count.alias(_PP_COUNT)
+    return count.alias(PARTIAL_COUNT)
+
+
+_PARTIAL_METRICS = {Metric.COUNT, Metric.PRIVACY_ID_COUNT, Metric.SUM,
+                    Metric.MEAN, Metric.VARIANCE}
+
+
+def _merge_partials(partials: DataFrame, pk_cols: Sequence[str],
+                    report: List[str], merged=_MERGED) -> DataFrame:
+    """Per-key merge: the privacy-id count plus the sum of each partial
+    column present (``merged`` maps partial -> merged column)."""
+    report.append("Aggregated partials per partition key")
+    return partials.groupBy(*pk_cols).agg(
+        F.count(F.lit(1)).alias(_PID_COUNT),
+        *[F.sum(p).alias(m) for p, m in merged.items()
+          if p in partials.columns])
 
 
 def _bounding_note(params: AggregateParams) -> str:
@@ -322,56 +345,90 @@ class DPEngine:
                                      public_partitions, report)
 
         # --- stage 3: budget requests. ---
-        specs = self._request_budgets(params, public_partitions is not None,
-                                      report)
+        specs = self._request_budgets(params, pub_df is not None, report)
 
         # --- stage 4: contribution bounding + per-(pid,pk) partials. ---
         per_pid_pk = self._bound_contributions(data, params, pk_cols,
                                                metric_kinds, report)
 
         # Percentiles ride a parallel bounded-histogram pipeline and join
-        # back on the partition key in finalize (independent Linf/L0 sample
-        # from the scalar partials; both enforce the declared bounds).
+        # back on the partition key in the release (independent Linf/L0
+        # sample from the scalar partials; both enforce the declared bounds).
         pct_hist = (self._percentile_histogram(data, params, pk_cols, report)
                     if params.percentiles_to_compute else None)
 
-        # --- stage 5: final merge per partition key. ---
-        final_aggs = [
-            F.count(F.lit(1)).alias(_PID_COUNT),
-            F.sum(_PP_COUNT).alias(_COUNT),
-        ]
-        if _PP_SUM in per_pid_pk.columns:
-            final_aggs.append(F.sum(_PP_SUM).alias(_SUM))
-        if _PP_NORM_SUM in per_pid_pk.columns:
-            final_aggs.append(F.sum(_PP_NORM_SUM).alias(_NORM_SUM))
-        if _PP_NORM_SQ in per_pid_pk.columns:
-            final_aggs.append(F.sum(_PP_NORM_SQ).alias(_NORM_SQ))
-        aggregated = per_pid_pk.groupBy(*pk_cols).agg(*final_aggs)
-        report.append("Aggregated partials per partition key")
+        # --- stage 5: merge, partition handling, noise. ---
+        merged = _merge_partials(per_pid_pk, pk_cols, report)
+        return DPResult(
+            lambda: self._release(merged, params, specs, pk_cols, pub_df,
+                                  report, pct_hist),
+            self._accountant)
 
-        accountant = self._accountant
-        engine = self
+    # ------------------------------------------------------------------
+    def aggregate_partials(self, partials: DataFrame, params: AggregateParams,
+                           pk_cols: Sequence[str],
+                           public_partitions: Optional[Union[DataFrame,
+                                                             Sequence]] = None
+                           ) -> DPResult:
+        """The release stage ``aggregate`` and ``aggregate_multi_sum`` end
+        in, for partials the caller bounded itself (streaming windows).
 
-        def finalize() -> DataFrame:
-            out = aggregated
-            if pub_df is not None:
-                out = engine._add_empty_public_partitions(out, pub_df, pk_cols)
-                report.append("Added empty public partitions")
-            elif not params.post_aggregation_thresholding:
-                out = engine._select_private_partitions(
-                    out, specs["partition_selection"], params, report)
-            pct_values = None
-            if pct_hist is not None:
-                release = (engine._percentile_tree_values
-                           if params.percentile_algorithm == "tree"
-                           else engine._percentile_values)
-                pct_values = release(pct_hist, params, specs["percentile"],
-                                     pk_cols, report)
-            out, cols = engine._compute_metrics(out, params, specs, pk_cols,
-                                                report, pct_values)
-            return out.select(*cols)
+        ``partials``: one row per (privacy id, key), bounded as ``params``
+        declares, with ``pk_cols`` and the partials the metrics read:
+        ``PARTIAL_COUNT`` (contributions; COUNT, MEAN, VARIANCE),
+        ``PARTIAL_SUM`` (clipped sum; SUM), ``PARTIAL_NORM_SUM`` and
+        ``PARTIAL_NORM_SQ`` (sums of values clipped to [min_value,
+        max_value] minus their midpoint, and of their squares; MEAN,
+        VARIANCE). Each is summed per key; the rows count privacy ids.
+        Keys: those of ``public_partitions``, else all present when
+        ``params.public_partitions_already_filtered`` declares them
+        public, else post-aggregation thresholding or DP selection."""
+        if params.custom_combiners or \
+                not set(params.metric_kinds) <= _PARTIAL_METRICS:
+            raise ValueError("aggregate_partials releases only COUNT, "
+                             "PRIVACY_ID_COUNT, SUM, MEAN and VARIANCE")
+        report = [f"DPEngine.aggregate_partials: metrics={params.metrics}"]
+        self._reports.append(report)
+        pub_df = (None if public_partitions is None else
+                  self._as_partitions_df(partials.sparkSession, pk_cols,
+                                         public_partitions, like=partials))
+        specs = self._request_budgets(params, pub_df is not None, report)
+        merged = _merge_partials(partials, pk_cols, report)
+        return DPResult(
+            lambda: self._release(merged, params, specs, pk_cols, pub_df,
+                                  report),
+            self._accountant)
 
-        return DPResult(finalize, accountant)
+    def _release(self, merged: DataFrame, params, specs: dict,
+                 pk_cols: Sequence[str], pub_df: Optional[DataFrame],
+                 report: List[str], pct_hist: Optional[DataFrame] = None,
+                 extra_cols: Sequence[Column] = ()) -> DataFrame:
+        """Partition handling, then the noisy metrics (``extra_cols``
+        after them) of merged partials."""
+        out = merged
+        if pub_df is not None:
+            # Every public key appears; missing ones get empty accumulators
+            # (reference: pipeline_dp/dp_engine.py:315-330).
+            out = pub_df.join(out, on=list(pk_cols), how="left").fillna(
+                {c: 0 for c in out.columns if c not in pk_cols})
+            report.append("Added empty public partitions")
+        elif "partition_selection" in specs:
+            out = self._select_private_partitions(
+                out, specs["partition_selection"], params, report)
+        pct_values = None
+        if pct_hist is not None:
+            release = (self._percentile_tree_values
+                       if params.percentile_algorithm == "tree"
+                       else self._percentile_values)
+            pct_values = release(pct_hist, params, specs["percentile"],
+                                 pk_cols, report)
+            for m in params.metrics:
+                if m.metric == Metric.PERCENTILE:
+                    pct_values = pct_values.withColumnRenamed(
+                        str(float(m.parameter)), m.output_name)
+        out, cols = self._compute_metrics(out, params, specs, pk_cols, report,
+                                          pct_values)
+        return out.select(*cols, *extra_cols)
 
     # ------------------------------------------------------------------
     def _extract(self, df: DataFrame, params, extractors: DataFrameExtractors,
@@ -456,7 +513,8 @@ class DPEngine:
                 else:
                     specs["privacy_id_count"] = \
                         self._accountant.request_budget(mt)
-            if not public and not params.post_aggregation_thresholding:
+            if not (public or params.public_partitions_already_filtered
+                    or params.post_aggregation_thresholding):
                 specs["partition_selection"] = self._accountant.request_budget(
                     params.partition_selection_strategy.mechanism_type)
                 report.append(
@@ -481,18 +539,18 @@ class DPEngine:
             if per_partition_clip:
                 partials.append(
                     _clip(F.sum(_VALUE), params.min_sum_per_partition,
-                          params.max_sum_per_partition).alias(_PP_SUM))
+                          params.max_sum_per_partition).alias(PARTIAL_SUM))
             else:
                 partials.append(
                     F.sum(_clip(F.col(_VALUE), params.min_value,
-                                params.max_value)).alias(_PP_SUM))
+                                params.max_value)).alias(PARTIAL_SUM))
         if metric_kinds & {Metric.MEAN, Metric.VARIANCE}:
             mid = (params.min_value + params.max_value) / 2.0
             norm = _clip(F.col(_VALUE), params.min_value,
                          params.max_value) - F.lit(mid)
-            partials.append(F.sum(norm).alias(_PP_NORM_SUM))
+            partials.append(F.sum(norm).alias(PARTIAL_NORM_SUM))
             if Metric.VARIANCE in metric_kinds:
-                partials.append(F.sum(norm * norm).alias(_PP_NORM_SQ))
+                partials.append(F.sum(norm * norm).alias(PARTIAL_NORM_SQ))
 
         if params.max_contributions is not None and \
                 not params.contribution_bounds_already_enforced:
@@ -593,52 +651,40 @@ class DPEngine:
             stddev_vals["sum"] = dp.noise_std(params.noise_kind, spec.eps,
                                               spec.delta, sens)
             report.append(f"SUM: {kind} noise, scale={scale:.4g}")
-        if "mean" in specs:
-            spec = specs["mean"]
-            ms = dp.mean_scales(params.noise_kind, spec.eps, spec.delta, l0,
-                                linf, params.min_value, params.max_value)
-            dp_count = noise.add_noise(
-                F.col(_COUNT).cast(DoubleType()), kind, ms.count_scale)
-            dp_norm_sum = noise.add_noise(F.col(_NORM_SUM), kind,
-                                          ms.norm_sum_scale)
-            out = out.withColumn("__dp_count__", dp_count) \
-                     .withColumn("__dp_norm_sum__", dp_norm_sum)
-            dp_mean = (F.lit(ms.mid) + F.col("__dp_norm_sum__") /
-                       F.greatest(F.lit(1.0), F.col("__dp_count__")))
-            metric_cols["mean"] = dp_mean
-            if Metric.COUNT in params.metric_kinds:
-                metric_cols["count"] = F.col("__dp_count__")
-            if Metric.SUM in params.metric_kinds:
-                metric_cols["sum"] = dp_mean * F.col("__dp_count__")
-            report.append(f"MEAN: normalized-sum estimator, mid={ms.mid}")
-        if "variance" in specs:
-            spec = specs["variance"]
-            vs = dp.variance_scales(params.noise_kind, spec.eps, spec.delta,
-                                    l0, linf, params.min_value,
-                                    params.max_value)
+        # MEAN and VARIANCE: noisy count and normalized sum (plus sum of
+        # squares for VARIANCE) under one spec; COUNT and SUM derive.
+        moments = specs.get("variance") or specs.get("mean")
+        if moments is not None:
+            variance = "variance" in specs
+            ms = (dp.variance_scales if variance else dp.mean_scales)(
+                params.noise_kind, moments.eps, moments.delta, l0, linf,
+                params.min_value, params.max_value)
             out = out.withColumn(
                 "__dp_count__",
                 noise.add_noise(F.col(_COUNT).cast(DoubleType()), kind,
-                                vs.count_scale))
+                                ms.count_scale))
             out = out.withColumn(
                 "__dp_norm_sum__",
-                noise.add_noise(F.col(_NORM_SUM), kind, vs.norm_sum_scale))
-            out = out.withColumn(
-                "__dp_norm_sq__",
-                noise.add_noise(F.col(_NORM_SQ), kind, vs.norm_sum_sq_scale))
+                noise.add_noise(F.col(_NORM_SUM), kind, ms.norm_sum_scale))
             denom = F.greatest(F.lit(1.0), F.col("__dp_count__"))
             mean_norm = F.col("__dp_norm_sum__") / denom
-            mean_sq_norm = F.col("__dp_norm_sq__") / denom
-            dp_var = mean_sq_norm - mean_norm * mean_norm
-            dp_mean = F.lit(vs.mid) + mean_norm
-            metric_cols["variance"] = dp_var
+            dp_mean = F.lit(ms.mid) + mean_norm
+            if variance:
+                out = out.withColumn(
+                    "__dp_norm_sq__",
+                    noise.add_noise(F.col(_NORM_SQ), kind,
+                                    ms.norm_sum_sq_scale))
+                metric_cols["variance"] = (F.col("__dp_norm_sq__") / denom
+                                           - mean_norm * mean_norm)
+                report.append("VARIANCE: 3-way budget split estimator")
+            else:
+                report.append(f"MEAN: normalized-sum estimator, mid={ms.mid}")
             if Metric.MEAN in params.metric_kinds:
                 metric_cols["mean"] = dp_mean
             if Metric.COUNT in params.metric_kinds:
                 metric_cols["count"] = F.col("__dp_count__")
             if Metric.SUM in params.metric_kinds:
                 metric_cols["sum"] = dp_mean * F.col("__dp_count__")
-            report.append("VARIANCE: 3-way budget split estimator")
         if "privacy_id_count" in specs:
             spec = specs["privacy_id_count"]
             sens = dp.privacy_id_count_sensitivities(
@@ -775,10 +821,6 @@ class DPEngine:
         long_df = sel.groupBy(*pk_cols, _P).agg(
             F.min_by(val, F.col(_BIN)).alias("__val__"))
         out = long_df.groupBy(*pk_cols).pivot(_P, ps).agg(F.first("__val__"))
-        for m in params.metrics:
-            if m.metric == Metric.PERCENTILE:
-                out = out.withColumnRenamed(str(float(m.parameter)),
-                                            m.output_name)
         report.append(f"PERCENTILE: noise scale={scale:.4g}, qs={ps}")
         return out
 
@@ -794,7 +836,6 @@ class DPEngine:
         partition key in an Arrow-batched applyInPandas, drawing fresh
         noise for every visited node (empty ones included) at the
         per-level budget eps/height and sharing draws across quantiles."""
-        import pandas as pd
         from pipelinedp_spark import quantile_tree as qt
         from pyspark.sql.types import StructField, StructType
 
@@ -830,10 +871,6 @@ class DPEngine:
             return pd.DataFrame(row)
 
         out = hist.groupBy(*pk_cols).applyInPandas(descend, schema)
-        for m in params.metrics:
-            if m.metric == Metric.PERCENTILE:
-                out = out.withColumnRenamed(str(float(m.parameter)),
-                                            m.output_name)
         report.append(
             f"PERCENTILE: quantile tree h={height} b={branching}, "
             f"per-node scale={scale:.4g}, qs={ps}")
@@ -1034,12 +1071,10 @@ class DPEngine:
         report.append(
             f"Shared contribution bounding: Linf <= {linf}, L0 <= {l0}")
 
-        final_aggs = [F.count(F.lit(1)).alias(_PID_COUNT),
-                      F.sum(_PP_COUNT).alias(_COUNT)] + \
-            [F.sum(f"__pp_sum{i}__").alias(f"__sum{i}__")
-             for i in range(len(sum_specs))]
-        aggregated = per_pid_pk.groupBy(*pk_cols).agg(*final_aggs)
-        engine = self
+        merged = _merge_partials(per_pid_pk, pk_cols, report, {
+            PARTIAL_COUNT: _COUNT,
+            **{f"__pp_sum{i}__": f"__sum{i}__"
+               for i in range(len(sum_specs))}})
         # Noises COUNT / PRIVACY_ID_COUNT when their spec was requested.
         agg_params = AggregateParams(
             metrics=[Metrics.COUNT, Metrics.PRIVACY_ID_COUNT],
@@ -1050,16 +1085,8 @@ class DPEngine:
             pre_threshold=params.pre_threshold)
 
         def finalize() -> DataFrame:
-            out = aggregated
-            if pub_df is not None:
-                out = engine._add_empty_public_partitions(out, pub_df,
-                                                          pk_cols)
-            else:
-                out = engine._select_private_partitions(
-                    out, specs["partition_selection"], agg_params, report)
             kind = params.noise_kind.value
-            out, ordered = engine._compute_metrics(out, agg_params, specs,
-                                                   pk_cols, report)
+            sums, notes = [], []
             for i, (s, spec) in enumerate(zip(sum_specs, specs["sums"])):
                 sens = dp.sum_sensitivities(
                     l0, linf, s.min_value, s.max_value,
@@ -1068,12 +1095,13 @@ class DPEngine:
                                        spec.delta, sens)
                 name = s.output_name or \
                     f"sum_{extractors.value_columns[i]}"
-                ordered.append(
-                    engine._noise.add_noise(F.col(f"__sum{i}__"), kind,
-                                            scale).alias(name))
-                report.append(f"SUM[{name}]: {kind} noise, "
-                              f"scale={scale:.4g}")
-            return out.select(*ordered)
+                sums.append(self._noise.add_noise(F.col(f"__sum{i}__"), kind,
+                                                  scale).alias(name))
+                notes.append(f"SUM[{name}]: {kind} noise, scale={scale:.4g}")
+            out = self._release(merged, agg_params, specs, pk_cols, pub_df,
+                                report, extra_cols=sums)
+            report.extend(notes)
+            return out
 
         return DPResult(finalize, self._accountant)
 
@@ -1085,15 +1113,6 @@ class DPEngine:
                                       params.max_contributions_per_partition)
 
     # ------------------------------------------------------------------
-    def _add_empty_public_partitions(self, out: DataFrame, pub_df: DataFrame,
-                                     pk_cols: Sequence[str]) -> DataFrame:
-        """Reference: pipeline_dp/dp_engine.py:315-330 — every public key
-        appears in the output; missing ones get empty accumulators."""
-        joined = pub_df.join(out, on=list(pk_cols), how="left")
-        fills = {c: 0 for c in out.columns if c not in pk_cols}
-        return joined.fillna(fills)
-
-    # ------------------------------------------------------------------
     def _sampled_pairs(self, df: DataFrame, params: SelectPartitionsParams,
                        extractors: DataFrameExtractors,
                        report: List[str]) -> DataFrame:
@@ -1102,7 +1121,7 @@ class DPEngine:
         data, _ = self._extract(df, params, extractors, None, report, [])
         return bounders.bound_cross_and_per_partition(
             data, _PID, extractors.partition_key_columns,
-            [F.count(F.lit(1)).alias(_PP_COUNT)],
+            [F.count(F.lit(1)).alias(PARTIAL_COUNT)],
             l0=params.max_partitions_contributed, order_cols=self._order_cols)
 
     # ------------------------------------------------------------------

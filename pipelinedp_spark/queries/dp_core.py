@@ -619,14 +619,17 @@ def _dp_post_agg_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     acct.compute_budgets()
     return res.dataframe()
 
+def _post_agg_threshold(eps: float, delta: float, l0: int) -> float:
+    # The engine's threshold for a Laplace privacy-id count spec at
+    # (eps, delta): half of delta funds the threshold.
+    std = dpc.noise_std(pds.NoiseKind.LAPLACE, eps, delta / 2,
+                        dpc.privacy_id_count_sensitivities(l0))
+    return dpc.thresholding_from_std(pds.NoiseKind.LAPLACE, std, delta / 2,
+                                     l0)
+
 def _post_agg_threshold_sql() -> str:
-    # Mirror the engine: full budget on one Laplace-thresholding spec;
-    # threshold from thresholding_from_std at delta/2.
-    eps, delta, l0 = 20.0, 1e-4, 25
-    sens = dpc.privacy_id_count_sensitivities(l0)
-    std = dpc.noise_std(pds.NoiseKind.LAPLACE, eps, delta / 2, sens)
-    threshold = dpc.thresholding_from_std(pds.NoiseKind.LAPLACE, std,
-                                          delta / 2, l0)
+    # Full budget on the one privacy-id count spec.
+    threshold = _post_agg_threshold(20.0, 1e-4, 25)
     return f"""
 WITH per_user AS (
     SELECT DISTINCT o_custkey, strftime(o_orderdate, '%Y-%m') AS o_month
@@ -852,9 +855,10 @@ def _dp_session_count_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     attributed to the day containing their END (last event + gap,
     exclusive boundary — the chained-window assignment Structured
     Streaming implements), per-user cap 3 sessions/day, Laplace
-    window selection on the user count, zero noise. Same threshold
-    formula as the streaming operator (eps/2 pid budget, delta/2 split
-    half noise / half threshold)."""
+    window selection on the user count, zero noise. The capped
+    per-(user, day) partials are released through the engine stage the
+    streaming operator releases through."""
+    from pipelinedp_spark.dp_engine import PARTIAL_COUNT
     from pipelinedp_spark.operators.sessions import sessionize
     ev = _t(spark, sf_dir, "events").select("user_id", "ts")
     gap_us = 1800 * 10**6
@@ -865,25 +869,22 @@ def _dp_session_count_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     sess = sess.withColumn(
         "day", F.floor((F.col("end_us") - 1) / F.lit(day_us)).cast("long"))
     per_user = (sess.groupBy("user_id", "day")
-                .agg(F.least(F.count(F.lit(1)), F.lit(3)).alias("capped")))
-    agg = per_user.groupBy("day").agg(
-        F.sum("capped").cast("double").alias("session_count"),
-        F.count(F.lit(1)).alias("__n__"))
-    threshold = _streaming_pid_threshold(60.0, 1e-4, 100)
-    return (agg.filter(F.col("__n__") >= threshold)
-            .select("day", "session_count",
-                    F.col("__n__").cast("double").alias("privacy_id_count")))
-
-def _streaming_pid_threshold(eps: float, delta: float, l0: int) -> float:
-    # Exactly streaming._pid_threshold_filter's formula at (eps/2, delta/2):
-    # noise std at (eps/2, delta/4), threshold delta/4.
-    std = dpc.noise_std(pds.NoiseKind.LAPLACE, eps / 2, delta / 4,
-                        dpc.privacy_id_count_sensitivities(l0))
-    return dpc.thresholding_from_std(pds.NoiseKind.LAPLACE, std, delta / 4,
-                                     l0)
+                .agg(F.least(F.count(F.lit(1)), F.lit(3))
+                     .alias(PARTIAL_COUNT)))
+    acct = pds.NaiveBudgetAccountant(60.0, 1e-4)
+    res = pds.DPEngine(acct, noise_mode="zero").aggregate_partials(
+        per_user, pds.AggregateParams(
+            metrics=[pds.Metrics.COUNT, pds.Metrics.PRIVACY_ID_COUNT],
+            max_partitions_contributed=100,
+            max_contributions_per_partition=3,
+            post_aggregation_thresholding=True), ["day"])
+    acct.compute_budgets()
+    return res.dataframe().withColumnRenamed("count", "session_count")
 
 def _dp_session_count_events_sql() -> str:
-    threshold = _streaming_pid_threshold(60.0, 1e-4, 100)
+    # The privacy-id count spec gets eps/2 and, under Laplace noise, all
+    # of delta.
+    threshold = _post_agg_threshold(30.0, 1e-4, 100)
     return f"""
 WITH x AS (SELECT user_id, epoch_us(ts) AS t FROM events),
 d AS (

@@ -1,47 +1,44 @@
 """DP aggregations over Structured Streaming.
 
-Net-new (the reference is batch-only: SURVEY.md §2.F). Semantics carry the
-batch engine's DP machinery to event-time windows:
+Net-new (the reference is batch-only: SURVEY.md §2.F). Streaming bounds
+its own partials and releases them through the batch engine:
 
-  watermark -> per-(user, window) partial with an Linf cap ->
-  per-window merge -> noise in the output projection
+  watermark -> event-time window [-> session stage] -> per-(user, window)
+  bounded partial -> DPEngine.aggregate_partials (window = partition key)
 
-Contribution bounding in a stream: the exact batch bounder samples rows
-per (user, partition) with a window sort, which is not available mid-
-stream; instead the per-(user, window) COUNT/SUM partial is capped with
-least()/clip() — exactly the batch engine's count fast path, and the same
-sensitivity guarantee (each user moves a window's aggregate by at most
+The batch bounders sample rows per (user, partition) with a window sort,
+which is not available mid-stream; instead each per-(user, window) partial
+is capped with least()/clip() — the batch engine's count fast path, with
+the same sensitivity (each user moves a window's aggregate by at most
 linf / the clip range). Cross-window L0 bounding has no streaming
 equivalent with bounded state, so epsilon spends per *window* and callers
 bound user scope by keying windows into the privacy unit via
 `l0_per_window` (documented, mirrors production DP streaming systems).
-
-Chained stateful aggregations (groupBy(user, window) then groupBy(window))
-require Spark >= 3.4 append-mode multiple-stateful-operator support; both
-aggregations share the event-time watermark.
+Chained stateful aggregations require Spark >= 3.4 append-mode
+multiple-stateful-operator support; all share the event-time watermark.
 
 **Window-presence privacy.** A streaming stateful aggregation only ever
 produces groups that received data, so a window row's *existence* reveals
 "at least one event happened in this window". When ``delta_per_window > 0``
-(and ``threshold_windows`` is not explicitly disabled) both aggregations
-therefore run DP partition selection over the window grid: the noisy
-per-window privacy-id count is compared against a Laplace/Gaussian
-threshold funded by half of ``delta_per_window`` — the same
-post-aggregation-thresholding construction as the batch engine
-(dp_engine's PRIVACY_ID_COUNT thresholding path; reference semantics:
-pipeline_dp/combiners.py:360-416). With ``delta_per_window == 0`` and
-``threshold_windows=None`` the output is (eps, 0)-DP *conditional on the
-released window set*: window presence itself is released exactly, which is
-only safe when the window grid is public knowledge (e.g. "every hour has
-traffic"). Callers wanting that must pass ``threshold_windows=False``
-explicitly; otherwise a pure-eps budget raises.
+(and ``threshold_windows`` is not explicitly disabled) a window is released
+only if its noisy privacy-id count clears a threshold: the engine's
+post-aggregation thresholding (reference: pipeline_dp/combiners.py:
+360-416). Budget split: epsilon evenly between the metric and the
+privacy-id count; delta evenly among the mechanisms that use it, half of
+the privacy-id count's share funding the threshold — delta/2 under Laplace
+noise, delta/4 under Gaussian. With ``delta_per_window == 0`` and
+``threshold_windows=None`` the output would be (eps, 0)-DP only
+*conditional on the released window set*, safe only when the window grid
+is public knowledge (e.g. "every hour has traffic"). Callers wanting that
+must pass ``threshold_windows=False`` explicitly (every window present is
+then a public key); otherwise a pure-eps budget raises.
 """
 
 from __future__ import annotations
 
 import re as _re
 
-from typing import Optional
+from typing import List, Optional, Sequence
 
 import pandas as pd
 
@@ -50,7 +47,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
 from pipelinedp_spark import dp_computations as dp
-from pipelinedp_spark.aggregate_params import NoiseKind
+from pipelinedp_spark.aggregate_params import (AggregateParams, MetricSpec,
+                                               Metrics, NoiseKind)
+from pipelinedp_spark.budget_accounting import NaiveBudgetAccountant
+from pipelinedp_spark.dp_engine import (PARTIAL_COUNT, PARTIAL_NORM_SQ,
+                                        PARTIAL_NORM_SUM, PARTIAL_SUM,
+                                        DPEngine)
 from pipelinedp_spark.noise import create_noise_source
 from pipelinedp_spark import store
 
@@ -77,21 +79,42 @@ def _resolve_thresholding(threshold_windows: Optional[bool],
     return threshold_windows
 
 
-def _pid_threshold_filter(per_window: DataFrame, noise, noise_kind: NoiseKind,
-                          eps: float, delta: float, l0: int,
-                          pids_col: str) -> DataFrame:
-    """Noise the per-window privacy-id count with (eps, delta/2) and keep
-    windows whose noisy count clears the (delta/2)-funded threshold —
-    the batch engine's post-aggregation-thresholding construction."""
-    pid_sens = dp.privacy_id_count_sensitivities(l0)
-    nk = noise_kind
-    std = dp.noise_std(nk, eps, delta / 2, pid_sens)
-    threshold = dp.thresholding_from_std(nk, std, delta / 2, l0)
-    noisy = noise.add_noise(
-        F.col(pids_col).cast(DoubleType()), nk.value,
-        dp.noise_scale(nk, eps, delta / 2, pid_sens))
-    out = per_window.withColumn("__dp_pids__", noisy)
-    return out.filter(F.col("__dp_pids__") >= F.lit(threshold))
+def _per_user_window(stream: DataFrame, privacy_id_col: str,
+                     timestamp_col: str, window_duration: str,
+                     watermark_delay: str, *partials: Column,
+                     slide_duration: Optional[str] = None,
+                     keys: Sequence[str] = ()) -> DataFrame:
+    """Per-(user, event-time window[, keys]) partials behind the
+    watermark."""
+    return (stream
+            .withWatermark(timestamp_col, watermark_delay)
+            .groupBy(F.col(privacy_id_col).alias("__pid__"),
+                     F.window(F.col(timestamp_col), window_duration,
+                              slide_duration).alias("window"), *keys)
+            .agg(*partials))
+
+
+def _release_windows(per_user: DataFrame, metrics: List[MetricSpec],
+                     threshold_windows: Optional[bool],
+                     epsilon_per_window: float, delta_per_window: float,
+                     noise_kind: NoiseKind, noise_mode: str,
+                     l0_per_window: int, linf: Optional[int] = None,
+                     **bounds) -> DataFrame:
+    """Release per-(user, window) partials through the engine, the window
+    as partition key; AggregateParams validates the caps and bounds."""
+    do_threshold = _resolve_thresholding(threshold_windows, delta_per_window)
+    if do_threshold and Metrics.PRIVACY_ID_COUNT not in metrics:
+        metrics = [*metrics, Metrics.PRIVACY_ID_COUNT]
+    params = AggregateParams(
+        metrics=metrics, max_partitions_contributed=l0_per_window,
+        max_contributions_per_partition=linf, noise_kind=noise_kind,
+        post_aggregation_thresholding=do_threshold,
+        public_partitions_already_filtered=not do_threshold, **bounds)
+    accountant = NaiveBudgetAccountant(epsilon_per_window, delta_per_window)
+    result = DPEngine(accountant, noise_mode).aggregate_partials(
+        per_user, params, ["window"])
+    accountant.compute_budgets()
+    return result.dataframe()
 
 
 def dp_streaming_count(stream: DataFrame,
@@ -109,56 +132,25 @@ def dp_streaming_count(stream: DataFrame,
                        threshold_windows: Optional[bool] = None) -> DataFrame:
     """DP event count per event-time window.
 
-    Plan: watermark -> groupBy(pid, window) count capped at linf ->
-    groupBy(window) sum + privacy-id count -> noise projection ->
-    (default) DP window selection on the noisy privacy-id count. Returns
-    (window, count, privacy_id_count) with noised doubles; the released
-    privacy_id_count is the SAME noisy draw the threshold filter saw.
+    Plan: watermark -> groupBy(pid, window) count capped at linf -> the
+    engine's release. Returns (window, count, privacy_id_count), noised
+    doubles, epsilon split in half; the released privacy_id_count is the
+    SAME noisy draw the window threshold saw.
 
     ``threshold_windows=None`` (default) enables selection and requires
     ``delta_per_window > 0``; passing ``False`` asserts the window grid is
     public and releases every non-empty window (presence leak documented in
     the module docstring).
     """
-    do_threshold = _resolve_thresholding(threshold_windows, delta_per_window)
-    win = F.window(F.col(timestamp_col), window_duration, slide_duration) \
-        if slide_duration else F.window(F.col(timestamp_col),
-                                        window_duration)
-    linf = max_contributions_per_window
-    per_user = (stream
-                .withWatermark(timestamp_col, watermark_delay)
-                .groupBy(F.col(privacy_id_col).alias("__pid__"),
-                         win.alias("window"))
-                .agg(F.least(F.count(F.lit(1)), F.lit(linf))
-                     .alias("__capped__")))
-    per_window = per_user.groupBy("window").agg(
-        F.sum("__capped__").alias("__count__"),
-        F.count(F.lit(1)).alias("__pids__"))
-
-    sens = dp.count_sensitivities(l0_per_window, linf)
-    scale = dp.noise_scale(noise_kind, epsilon_per_window / 2,
-                           delta_per_window / 2 if delta_per_window else 0.0,
-                           sens)
-    noise = create_noise_source(noise_mode)
-    if do_threshold:
-        # pid metric's budget share is (eps/2, delta/2); within it, half the
-        # delta funds the noise (Gaussian only) and half the threshold.
-        per_window = _pid_threshold_filter(
-            per_window, noise, noise_kind, epsilon_per_window / 2,
-            delta_per_window / 2, l0_per_window, "__pids__")
-        pid_col = F.col("__dp_pids__")
-    else:
-        pid_sens = dp.privacy_id_count_sensitivities(l0_per_window)
-        pid_scale = dp.noise_scale(
-            noise_kind, epsilon_per_window / 2,
-            delta_per_window / 2 if delta_per_window else 0.0, pid_sens)
-        pid_col = noise.add_noise(F.col("__pids__").cast(DoubleType()),
-                                  noise_kind.value, pid_scale)
-    return per_window.select(
-        "window",
-        noise.add_noise(F.col("__count__").cast(DoubleType()),
-                        noise_kind.value, scale).alias("count"),
-        pid_col.alias("privacy_id_count"))
+    per_user = _per_user_window(
+        stream, privacy_id_col, timestamp_col, window_duration,
+        watermark_delay,
+        F.least(F.count(F.lit(1)), F.lit(max_contributions_per_window))
+        .alias(PARTIAL_COUNT), slide_duration=slide_duration)
+    return _release_windows(
+        per_user, [Metrics.COUNT, Metrics.PRIVACY_ID_COUNT],
+        threshold_windows, epsilon_per_window, delta_per_window, noise_kind,
+        noise_mode, l0_per_window, max_contributions_per_window)
 
 
 def dp_streaming_sum(stream: DataFrame,
@@ -180,32 +172,36 @@ def dp_streaming_sum(stream: DataFrame,
     selection enabled (the default; requires ``delta_per_window > 0``) the
     epsilon splits half to the sum noise and half to the selection noise.
     Returns (window, sum)."""
-    do_threshold = _resolve_thresholding(threshold_windows, delta_per_window)
-    per_user = (stream
-                .withWatermark(timestamp_col, watermark_delay)
-                .groupBy(F.col(privacy_id_col).alias("__pid__"),
-                         F.window(F.col(timestamp_col), window_duration)
-                         .alias("window"))
-                .agg(_clip(F.sum(F.col(value_col).cast(DoubleType())),
-                           min_sum_per_window, max_sum_per_window)
-                     .alias("__clipped__")))
-    per_window = per_user.groupBy("window").agg(
-        F.sum("__clipped__").alias("__sum__"),
-        F.count(F.lit(1)).alias("__pids__"))
-    eps_sum = epsilon_per_window / 2 if do_threshold else epsilon_per_window
-    delta_sum = delta_per_window / 2 if do_threshold else delta_per_window
-    sens = dp.sum_sensitivities(l0_per_window, None, None, None,
-                                min_sum_per_window, max_sum_per_window)
-    scale = dp.noise_scale(noise_kind, eps_sum, delta_sum or 0.0, sens)
-    noise = create_noise_source(noise_mode)
-    if do_threshold:
-        per_window = _pid_threshold_filter(
-            per_window, noise, noise_kind, epsilon_per_window / 2,
-            delta_per_window / 2, l0_per_window, "__pids__")
-    return per_window.select(
-        "window",
-        noise.add_noise(F.col("__sum__"), noise_kind.value, scale)
-        .alias("sum"))
+    per_user = _per_user_window(
+        stream, privacy_id_col, timestamp_col, window_duration,
+        watermark_delay,
+        _clip(F.sum(F.col(value_col).cast(DoubleType())),
+              min_sum_per_window, max_sum_per_window).alias(PARTIAL_SUM))
+    return _release_windows(
+        per_user, [Metrics.SUM], threshold_windows, epsilon_per_window,
+        delta_per_window, noise_kind, noise_mode, l0_per_window,
+        min_sum_per_partition=min_sum_per_window,
+        max_sum_per_partition=max_sum_per_window).select("window", "sum")
+
+
+def _normalized_partials(value_col: str, min_value: float, max_value: float,
+                         linf: int, squares: bool) -> List[Column]:
+    """Capped count and normalized-sum partials of MEAN / VARIANCE: each
+    value is clipped to [min_value, max_value] (as in batch) and centred on
+    the midpoint; the per-user sums are then clipped at linf times their
+    per-value range. Deviation from batch: a user with more than linf rows
+    is clipped toward the cap, not row-sampled (a stream cannot
+    order-sample rows); the sensitivity is the same."""
+    half = (max_value - min_value) / 2.0
+    nval = (_clip(F.col(value_col).cast(DoubleType()), min_value, max_value)
+            - F.lit((min_value + max_value) / 2.0))
+    partials = [F.least(F.count(F.lit(1)), F.lit(linf)).alias(PARTIAL_COUNT),
+                _clip(F.sum(nval), -linf * half, linf * half)
+                .alias(PARTIAL_NORM_SUM)]
+    if squares:
+        partials.append(_clip(F.sum(nval * nval), 0.0, linf * half * half)
+                        .alias(PARTIAL_NORM_SQ))
+    return partials
 
 
 def dp_streaming_mean(stream: DataFrame,
@@ -225,66 +221,17 @@ def dp_streaming_mean(stream: DataFrame,
                       threshold_windows: Optional[bool] = None) -> DataFrame:
     """DP mean per event-time window: the batch engine's normalized-sum
     construction (noisy clipped-sum / noisy capped-count, each with half
-    the metric budget) on top of the same watermark -> per-(user, window)
-    partial -> per-window merge plan. Window selection as in
-    dp_streaming_count. Returns (window, mean)."""
-    do_threshold = _resolve_thresholding(threshold_windows, delta_per_window)
+    the metric budget). Window selection as in dp_streaming_count.
+    Returns (window, mean)."""
     linf = max_contributions_per_window
-    mid = (min_value + max_value) / 2.0
-    half = (max_value - min_value) / 2.0
-    # Clip EVERY contribution to [min_value, max_value] first (batch-engine
-    # per-value clipping: one out-of-range value shifts the user's window
-    # sum by at most half, it cannot saturate it), then bound the per-user
-    # normalized sum at +-linf*half. Deviation from the batch engine,
-    # documented: a user with more than linf rows has their normalized sum
-    # clipped toward the cap instead of row-sampled (streaming aggregates
-    # cannot order-sample rows); sensitivity is identical, and the capped
-    # count uses the same linf.
-    clipped = stream.withColumn(
-        "__nval__",
-        _clip(F.col(value_col).cast(DoubleType()), float(min_value),
-              float(max_value)) - F.lit(mid))
-    per_user = (clipped
-                .withWatermark(timestamp_col, watermark_delay)
-                .groupBy(F.col(privacy_id_col).alias("__pid__"),
-                         F.window(F.col(timestamp_col), window_duration)
-                         .alias("window"))
-                .agg(F.least(F.count(F.lit(1)), F.lit(linf))
-                     .alias("__capped__"),
-                     _clip(F.sum("__nval__"),
-                           -float(linf) * half, float(linf) * half)
-                     .alias("__nsum__")))
-    per_window = per_user.groupBy("window").agg(
-        F.sum("__capped__").alias("__count__"),
-        F.sum("__nsum__").alias("__nsum__"),
-        F.count(F.lit(1)).alias("__pids__"))
-
-    eps_metric = epsilon_per_window / 2 if do_threshold \
-        else epsilon_per_window
-    delta_metric = delta_per_window / 2 if do_threshold \
-        else delta_per_window
-    cnt_sens = dp.count_sensitivities(l0_per_window, linf)
-    sum_sens = dp.sum_sensitivities(l0_per_window, linf, -half, half,
-                                    None, None)
-    cnt_scale = dp.noise_scale(noise_kind, eps_metric / 2,
-                               delta_metric / 2 if delta_metric else 0.0,
-                               cnt_sens)
-    sum_scale = dp.noise_scale(noise_kind, eps_metric / 2,
-                               delta_metric / 2 if delta_metric else 0.0,
-                               sum_sens)
-    noise = create_noise_source(noise_mode)
-    if do_threshold:
-        per_window = _pid_threshold_filter(
-            per_window, noise, noise_kind, epsilon_per_window / 2,
-            delta_per_window / 2, l0_per_window, "__pids__")
-    noisy_cnt = noise.add_noise(F.col("__count__").cast(DoubleType()),
-                                noise_kind.value, cnt_scale)
-    noisy_sum = noise.add_noise(F.col("__nsum__"), noise_kind.value,
-                                sum_scale)
-    return per_window.select(
-        "window",
-        (F.lit(mid) + noisy_sum / F.greatest(noisy_cnt, F.lit(1.0)))
-        .alias("mean"))
+    per_user = _per_user_window(
+        stream, privacy_id_col, timestamp_col, window_duration,
+        watermark_delay,
+        *_normalized_partials(value_col, min_value, max_value, linf, False))
+    return _release_windows(
+        per_user, [Metrics.MEAN], threshold_windows, epsilon_per_window,
+        delta_per_window, noise_kind, noise_mode, l0_per_window, linf,
+        min_value=min_value, max_value=max_value).select("window", "mean")
 
 
 def dp_streaming_variance(stream: DataFrame,
@@ -304,72 +251,21 @@ def dp_streaming_variance(stream: DataFrame,
                           threshold_windows: Optional[bool] = None
                           ) -> DataFrame:
     """DP variance per event-time window: the batch engine's three-part
-    construction (noisy capped count, noisy clipped normalized sum, noisy
-    clipped normalized sum of squares, each with a third of the metric
-    budget — dp_computations.variance_scales / reference
-    pipeline_dp/dp_computations.py:284-312) on the same watermark ->
-    per-(user, window) partial -> per-window merge plan as
-    dp_streaming_mean, with the same per-value clipping and the same
-    capped-sum deviation (documented there). Window selection as in
-    dp_streaming_count. Returns (window, variance)."""
-    do_threshold = _resolve_thresholding(threshold_windows, delta_per_window)
+    construction (noisy capped count, normalized sum and sum of squares,
+    each with a third of the metric budget; reference
+    pipeline_dp/dp_computations.py:284-312) on the partials of
+    dp_streaming_mean. Window selection as in dp_streaming_count.
+    Returns (window, variance)."""
     linf = max_contributions_per_window
-    mid = (min_value + max_value) / 2.0
-    half = (max_value - min_value) / 2.0
-    clipped = stream.withColumn(
-        "__nval__",
-        _clip(F.col(value_col).cast(DoubleType()), float(min_value),
-              float(max_value)) - F.lit(mid))
-    per_user = (clipped
-                .withWatermark(timestamp_col, watermark_delay)
-                .groupBy(F.col(privacy_id_col).alias("__pid__"),
-                         F.window(F.col(timestamp_col), window_duration)
-                         .alias("window"))
-                .agg(F.least(F.count(F.lit(1)), F.lit(linf))
-                     .alias("__capped__"),
-                     _clip(F.sum("__nval__"),
-                           -float(linf) * half, float(linf) * half)
-                     .alias("__nsum__"),
-                     _clip(F.sum(F.col("__nval__") * F.col("__nval__")),
-                           0.0, float(linf) * half * half)
-                     .alias("__nsq__")))
-    per_window = per_user.groupBy("window").agg(
-        F.sum("__capped__").alias("__count__"),
-        F.sum("__nsum__").alias("__nsum__"),
-        F.sum("__nsq__").alias("__nsq__"),
-        F.count(F.lit(1)).alias("__pids__"))
-
-    eps_metric = epsilon_per_window / 2 if do_threshold \
-        else epsilon_per_window
-    delta_metric = delta_per_window / 2 if do_threshold \
-        else delta_per_window
-    eps3 = eps_metric / 3
-    delta3 = delta_metric / 3 if delta_metric else 0.0
-    cnt_scale = dp.noise_scale(
-        noise_kind, eps3, delta3, dp.count_sensitivities(l0_per_window,
-                                                         linf))
-    sum_scale = dp.noise_scale(
-        noise_kind, eps3, delta3,
-        dp.sum_sensitivities(l0_per_window, linf, -half, half, None, None))
-    sq_scale = dp.noise_scale(
-        noise_kind, eps3, delta3,
-        dp.sum_sensitivities(l0_per_window, linf, 0.0, half * half,
-                             None, None))
-    noise = create_noise_source(noise_mode)
-    if do_threshold:
-        per_window = _pid_threshold_filter(
-            per_window, noise, noise_kind, epsilon_per_window / 2,
-            delta_per_window / 2, l0_per_window, "__pids__")
-    noisy_cnt = F.greatest(
-        noise.add_noise(F.col("__count__").cast(DoubleType()),
-                        noise_kind.value, cnt_scale), F.lit(1.0))
-    noisy_sum = noise.add_noise(F.col("__nsum__"), noise_kind.value,
-                                sum_scale)
-    noisy_sq = noise.add_noise(F.col("__nsq__"), noise_kind.value,
-                               sq_scale)
-    m = noisy_sum / noisy_cnt
-    return per_window.select(
-        "window", (noisy_sq / noisy_cnt - m * m).alias("variance"))
+    per_user = _per_user_window(
+        stream, privacy_id_col, timestamp_col, window_duration,
+        watermark_delay,
+        *_normalized_partials(value_col, min_value, max_value, linf, True))
+    return _release_windows(
+        per_user, [Metrics.VARIANCE], threshold_windows, epsilon_per_window,
+        delta_per_window, noise_kind, noise_mode, l0_per_window, linf,
+        min_value=min_value, max_value=max_value).select("window",
+                                                         "variance")
 
 
 def streaming_exact_dedup(stream: DataFrame,
@@ -474,8 +370,6 @@ def dp_streaming_session_count(stream: DataFrame,
     construction and presence-leak contract as dp_streaming_count).
     Returns (window, session_count, privacy_id_count), noised doubles.
     """
-    do_threshold = _resolve_thresholding(threshold_windows, delta_per_window)
-    linf = max_sessions_per_window
     sessions = (stream
                 .withWatermark(timestamp_col, watermark_delay)
                 .groupBy(F.col(privacy_id_col).alias("__pid__"),
@@ -486,34 +380,14 @@ def dp_streaming_session_count(stream: DataFrame,
                 .groupBy("__pid__",
                          F.window(F.col("__sw__"), window_duration)
                          .alias("window"))
-                .agg(F.least(F.count(F.lit(1)), F.lit(linf))
-                     .alias("__capped__")))
-    per_window = per_user.groupBy("window").agg(
-        F.sum("__capped__").alias("__count__"),
-        F.count(F.lit(1)).alias("__pids__"))
-
-    sens = dp.count_sensitivities(l0_per_window, linf)
-    scale = dp.noise_scale(noise_kind, epsilon_per_window / 2,
-                           delta_per_window / 2 if delta_per_window else 0.0,
-                           sens)
-    noise = create_noise_source(noise_mode)
-    if do_threshold:
-        per_window = _pid_threshold_filter(
-            per_window, noise, noise_kind, epsilon_per_window / 2,
-            delta_per_window / 2, l0_per_window, "__pids__")
-        pid_col = F.col("__dp_pids__")
-    else:
-        pid_sens = dp.privacy_id_count_sensitivities(l0_per_window)
-        pid_scale = dp.noise_scale(
-            noise_kind, epsilon_per_window / 2,
-            delta_per_window / 2 if delta_per_window else 0.0, pid_sens)
-        pid_col = noise.add_noise(F.col("__pids__").cast(DoubleType()),
-                                  noise_kind.value, pid_scale)
-    return per_window.select(
-        "window",
-        noise.add_noise(F.col("__count__").cast(DoubleType()),
-                        noise_kind.value, scale).alias("session_count"),
-        pid_col.alias("privacy_id_count"))
+                .agg(F.least(F.count(F.lit(1)),
+                             F.lit(max_sessions_per_window))
+                     .alias(PARTIAL_COUNT)))
+    return _release_windows(
+        per_user, [Metrics.COUNT, Metrics.PRIVACY_ID_COUNT],
+        threshold_windows, epsilon_per_window, delta_per_window, noise_kind,
+        noise_mode, l0_per_window, max_sessions_per_window
+    ).withColumnRenamed("count", "session_count")
 
 
 def dp_streaming_vector_sum(stream: DataFrame,
@@ -548,6 +422,8 @@ def dp_streaming_vector_sum(stream: DataFrame,
     correctness-breaking inconsistency. Only a PUBLIC window grid is
     safe; ``threshold_windows=True`` raises.
     """
+    if dims < 1:
+        raise ValueError("dims must be positive")
     if threshold_windows:
         raise ValueError(
             "dp_streaming_vector_sum cannot threshold windows: per-dim "
@@ -558,15 +434,10 @@ def dp_streaming_vector_sum(stream: DataFrame,
         F.col(privacy_id_col).alias("__pid__"),
         F.col(timestamp_col),
         F.posexplode(F.col(vector_col)).alias("dim", "__v__"))
-    per_user = (exploded
-                .withWatermark(timestamp_col, watermark_delay)
-                .groupBy(F.col("__pid__"),
-                         F.window(F.col(timestamp_col), window_duration)
-                         .alias("window"),
-                         F.col("dim"))
-                .agg(_clip(F.sum(F.col("__v__").cast(DoubleType())),
-                           -max_abs_per_dim, max_abs_per_dim)
-                     .alias("__clipped__")))
+    per_user = _per_user_window(
+        exploded, "__pid__", timestamp_col, window_duration, watermark_delay,
+        _clip(F.sum(F.col("__v__").cast(DoubleType())), -max_abs_per_dim,
+              max_abs_per_dim).alias("__clipped__"), keys=["dim"])
     per_window = per_user.groupBy("window", "dim").agg(
         F.sum("__clipped__").alias("__sum__"))
     sens = dp.Sensitivities(l0=dims, linf=float(max_abs_per_dim))
@@ -624,21 +495,24 @@ def dp_streaming_percentile(stream: DataFrame,
     is alone in a bin shifts the read-off by at most one bin width beyond
     what the count noise covers. Use more users per window (the
     thresholding default) or coarser bins where that residual matters.
+    Budget: the bins get all of epsilon; with selection on, they get half
+    of delta and the threshold the other half (the threshold reads the
+    bins' own noisy total, so it spends no epsilon).
     Returns (window, percentile_value, n_users) with n_users the noisy
     total.
     """
     do_threshold = _resolve_thresholding(threshold_windows, delta_per_window)
-    mid = (min_value + max_value) / 2.0
+    if l0_per_window < 1:
+        raise ValueError("l0_per_window must be positive")
+    if min_value > max_value:
+        raise ValueError("min_value must be <= max_value")
     width = (max_value - min_value) / n_bins
 
-    per_user = (stream
-                .withWatermark(timestamp_col, watermark_delay)
-                .groupBy(F.col(privacy_id_col).alias("__pid__"),
-                         F.window(F.col(timestamp_col), window_duration)
-                         .alias("window"))
-                .agg(F.avg(_clip(F.col(value_col).cast(DoubleType()),
-                                 float(min_value), float(max_value)))
-                     .alias("__uval__")))
+    per_user = _per_user_window(
+        stream, privacy_id_col, timestamp_col, window_duration,
+        watermark_delay,
+        F.avg(_clip(F.col(value_col).cast(DoubleType()), min_value,
+                    max_value)).alias("__uval__"))
     if percentile_algorithm == "tree":
         return _streaming_percentile_tree(
             per_user, do_threshold, epsilon_per_window, delta_per_window,
@@ -648,24 +522,16 @@ def dp_streaming_percentile(stream: DataFrame,
         raise ValueError(
             f"percentile_algorithm must be 'histogram' or 'tree', got "
             f"{percentile_algorithm!r}")
-    binned = per_user.withColumn(
-        "__bin__",
-        F.least(F.greatest(
-            F.floor((F.col("__uval__") - F.lit(float(min_value)))
-                    / F.lit(width)).cast("int"), F.lit(0)),
-            F.lit(n_bins - 1)))
-    per_bin = binned.groupBy("window", "__bin__").agg(
-        F.count(F.lit(1)).alias("__n__"))
+    per_bin = _users_per_bin(per_user, min_value, width, n_bins)
 
     # Per-bin noise BEFORE the final collect: each user sits in exactly one
     # bin, so bin counts are disjoint count queries (parallel composition
-    # within a window; epsilon spends once per window, not per bin).
-    eps_metric = epsilon_per_window / 2 if do_threshold else epsilon_per_window
-    delta_metric = (delta_per_window / 2 if do_threshold
-                    else delta_per_window)
+    # within a window; epsilon spends once per window, not per bin). The
+    # bins get all of epsilon: the window threshold reads their own noisy
+    # total, so it spends only its half of delta.
+    delta_bins = delta_per_window / 2 if do_threshold else delta_per_window
     sens = dp.count_sensitivities(l0_per_window, 1)
-    scale = dp.noise_scale(noise_kind, eps_metric,
-                           delta_metric if delta_metric else 0.0, sens)
+    scale = dp.noise_scale(noise_kind, epsilon_per_window, delta_bins, sens)
     noise = create_noise_source(noise_mode)
     noisy_bins = per_bin.withColumn(
         "__nn__", noise.add_noise(F.col("__n__").cast(DoubleType()),
@@ -701,14 +567,25 @@ def dp_streaming_percentile(stream: DataFrame,
         # Threshold on the noisy total: in the worst case (one user) the
         # total is a single draw of the per-bin noise, so the threshold is
         # calibrated against THAT std; it consumes the other delta half.
-        bin_std = dp.noise_std(noise_kind, eps_metric,
-                               delta_metric if delta_metric else 0.0, sens)
+        bin_std = dp.noise_std(noise_kind, epsilon_per_window, delta_bins,
+                               sens)
         threshold = dp.thresholding_from_std(
             noise_kind, bin_std, delta_per_window / 2, l0_per_window)
         out = out.filter(F.col("__total__") >= F.lit(threshold))
     return out.select("window",
                       F.col("percentile_value"),
                       F.col("__total__").alias("n_users"))
+
+
+def _users_per_bin(per_user: DataFrame, lo: float, width: float,
+                   n_bins: int) -> DataFrame:
+    """Users per (window, bin) of their window average ``__uval__``, over
+    ``n_bins`` bins of ``width`` from ``lo``."""
+    bin_col = F.least(F.greatest(
+        F.floor((F.col("__uval__") - F.lit(float(lo))) / F.lit(width))
+        .cast("int"), F.lit(0)), F.lit(n_bins - 1))
+    return per_user.groupBy("window", bin_col.alias("__bin__")).agg(
+        F.count(F.lit(1)).alias("__n__"))
 
 
 def _streaming_percentile_tree(per_user: DataFrame,
@@ -733,16 +610,15 @@ def _streaming_percentile_tree(per_user: DataFrame,
     (empty children included) at the per-level budget eps/height — noise
     at READ time, exactly like batch, so state stores no noise.
 
-    Budget: thresholding on -> (eps/2, delta/2) to the tree, (eps/2,
-    delta/2) to the noisy privacy-id count that funds the threshold (the
-    `dp_streaming_count` construction); off -> the tree gets the full
+    Budget: thresholding on -> eps/2 to the tree and eps/2 to the noisy
+    privacy-id count that funds the threshold, with delta split by the
+    engine's rule (module docstring); off -> the tree gets the full
     budget and ``n_users`` is the descent's own level-1 noisy total
     (reuses the descent draws — no extra release).
 
     Returns (window, percentile_value, n_users) like the histogram path.
     """
     import numpy as np
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     from pipelinedp_spark import quantile_tree as qt
@@ -752,16 +628,9 @@ def _streaming_percentile_tree(per_user: DataFrame,
     n_leaves = branching ** height
     leaf_width = (max_value - min_value) / n_leaves
 
-    leafed = per_user.withColumn(
-        "__leaf__",
-        F.least(F.greatest(
-            F.floor((F.col("__uval__") - F.lit(min_value))
-                    / F.lit(leaf_width)).cast("int"), F.lit(0)),
-            F.lit(n_leaves - 1)))
-    per_leaf = leafed.groupBy("window", "__leaf__").agg(
-        F.count(F.lit(1)).alias("__n__"))
+    per_leaf = _users_per_bin(per_user, min_value, leaf_width, n_leaves)
     per_window = per_leaf.groupBy("window").agg(
-        F.collect_list(F.struct("__leaf__", "__n__")).alias("__hist__"),
+        F.collect_list(F.struct("__bin__", "__n__")).alias("__hist__"),
         F.sum("__n__").alias("__pids__"))
 
     eps_tree = epsilon_per_window / 2 if do_threshold else epsilon_per_window
@@ -779,7 +648,7 @@ def _streaming_percentile_tree(per_user: DataFrame,
     def _descend(hist: pd.Series) -> pd.DataFrame:
         out_v, out_n = [], []
         for h in hist:
-            leaves = np.array([e["__leaf__"] for e in h], dtype=np.int64)
+            leaves = np.array([e["__bin__"] for e in h], dtype=np.int64)
             counts = np.array([e["__n__"] for e in h], dtype=np.float64)
             vals, total = qt.compute_tree_quantiles(
                 leaves, counts, [pct], lo, hi,
@@ -789,12 +658,21 @@ def _streaming_percentile_tree(per_user: DataFrame,
             out_n.append(total)
         return pd.DataFrame({"percentile_value": out_v, "n_users": out_n})
 
-    noise = create_noise_source(noise_mode)
     out = per_window.withColumn("__res__", _descend(F.col("__hist__")))
     if do_threshold:
-        out = _pid_threshold_filter(
-            out, noise, noise_kind, epsilon_per_window / 2,
-            delta_per_window / 2, l0_per_window, "__pids__")
+        # The engine's post-aggregation thresholding at the privacy-id
+        # count's share: eps/2 and the delta the tree leaves (all of it
+        # under Laplace noise), half of which funds the threshold.
+        thr_delta = (delta_per_window if noise_kind == NoiseKind.LAPLACE
+                     else delta_per_window / 2) / 2
+        sens = dp.privacy_id_count_sensitivities(l0_per_window)
+        args = (noise_kind, epsilon_per_window / 2, thr_delta, sens)
+        threshold = dp.thresholding_from_std(
+            noise_kind, dp.noise_std(*args), thr_delta, l0_per_window)
+        out = out.withColumn("__dp_pids__", create_noise_source(
+            noise_mode).add_noise(F.col("__pids__").cast(DoubleType()),
+                                  kind_value, dp.noise_scale(*args)))
+        out = out.filter(F.col("__dp_pids__") >= F.lit(threshold))
         n_users = F.col("__dp_pids__")
     else:
         n_users = F.col("__res__.n_users")

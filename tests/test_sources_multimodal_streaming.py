@@ -1,21 +1,17 @@
-"""Sources catalog, multimodal plumbing, and streaming DP tests."""
+"""Sources catalog, multimodal plumbing, and streaming operator tests."""
 
 import os
 import struct
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import (DoubleType, IntegerType, StringType,
-                               StructField, StructType, TimestampType)
+from pyspark.sql.types import (IntegerType, StringType, StructField,
+                               StructType, TimestampType)
 
 from pipelinedp_spark import sources, store
 from pipelinedp_spark.aggregate_params import NoiseKind
 from pipelinedp_spark.operators import multimodal as MM
-from pipelinedp_spark.streaming import (dp_streaming_count,
-                                        dp_streaming_percentile,
-                                        dp_streaming_session_count,
-                                        dp_streaming_sum,
-                                        session_window_counts)
+from pipelinedp_spark.streaming import session_window_counts
 
 SF = "/root/testdata/sf0.001"
 
@@ -201,110 +197,6 @@ def test_media_dedup(spark):
 # ---------------------------------------------------------------------------
 
 
-EVENTS_SCHEMA = StructType([
-    StructField("user_id", IntegerType()),
-    StructField("ts", TimestampType()),
-    StructField("value", DoubleType()),
-])
-
-
-@pytest.fixture
-def stream_dir(spark, tmp_path):
-    rows = []
-    for u in range(20):
-        for k in range(3):  # 3 events per user in window 1
-            rows.append((u, f"2024-01-01 00:00:{10 + k:02d}", 2.0))
-        rows.append((u, "2024-01-01 00:01:30", 4.0))  # window 2
-    # Sparse window (minute 2): only 2 users — dropped by DP selection.
-    rows.append((0, "2024-01-01 00:02:30", 1.0))
-    rows.append((1, "2024-01-01 00:02:31", 1.0))
-    # Append-mode only emits windows the watermark has passed: one late
-    # "flush" event closes the windows under test.
-    rows.append((0, "2024-01-01 00:05:00", 0.0))
-    df = spark.createDataFrame(
-        [(u, __import__("datetime").datetime.fromisoformat(t), v)
-         for u, t, v in rows], EVENTS_SCHEMA)
-    path = str(tmp_path / "stream")
-    df.coalesce(1).write.parquet(path)
-    return path
-
-
-def _run_stream(spark, out_df, name):
-    q = (out_df.writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    return spark.sql(f"select * from {name}")
-
-
-def test_dp_streaming_count(spark, stream_dir):
-    stream = sources.read_stream(spark, stream_dir, EVENTS_SCHEMA)
-    out = dp_streaming_count(
-        stream, "user_id", "ts", window_duration="1 minute",
-        watermark_delay="0 seconds", epsilon_per_window=1.0,
-        max_contributions_per_window=2, noise_mode="zero",
-        threshold_windows=False)
-    got = _run_stream(spark, out, "dp_count_stream")
-    rows = {r["window"]["start"].minute: r for r in got.collect()}
-    # Window 0: 3 events/user capped at 2 -> 40; window 1: 1 event/user.
-    assert rows[0]["count"] == 40.0
-    assert rows[0]["privacy_id_count"] == 20.0
-    assert rows[1]["count"] == 20.0
-
-
-def test_dp_streaming_count_window_selection(spark, stream_dir):
-    """DP window selection: the sparse minute-2 window (2 users) falls
-    below the Laplace threshold (~2.98 at eps=10, delta=1e-4) and is
-    suppressed; dense windows survive and release the same noisy pid
-    count the filter saw (exact, in zero-noise mode)."""
-    stream = sources.read_stream(spark, stream_dir, EVENTS_SCHEMA)
-    out = dp_streaming_count(
-        stream, "user_id", "ts", window_duration="1 minute",
-        watermark_delay="0 seconds", epsilon_per_window=10.0,
-        delta_per_window=1e-4, max_contributions_per_window=2,
-        noise_mode="zero")
-    got = _run_stream(spark, out, "dp_count_stream_sel")
-    rows = {r["window"]["start"].minute: r for r in got.collect()}
-    assert set(rows) == {0, 1}
-    assert rows[0]["privacy_id_count"] == 20.0
-
-
-def test_dp_streaming_pure_eps_requires_explicit_waiver(spark, stream_dir):
-    stream = sources.read_stream(spark, stream_dir, EVENTS_SCHEMA)
-    with pytest.raises(ValueError, match="presence"):
-        dp_streaming_count(
-            stream, "user_id", "ts", window_duration="1 minute",
-            watermark_delay="0 seconds", epsilon_per_window=1.0,
-            max_contributions_per_window=2, noise_mode="zero")
-
-
-def test_dp_streaming_sum(spark, stream_dir):
-    stream = sources.read_stream(spark, stream_dir, EVENTS_SCHEMA)
-    out = dp_streaming_sum(
-        stream, "user_id", "ts", "value", window_duration="1 minute",
-        watermark_delay="0 seconds", epsilon_per_window=1.0,
-        min_sum_per_window=0.0, max_sum_per_window=5.0, noise_mode="zero",
-        threshold_windows=False)
-    got = _run_stream(spark, out, "dp_sum_stream")
-    rows = {r["window"]["start"].minute: r["sum"] for r in got.collect()}
-    # Window 0: per-user sum 6.0 clipped to 5.0 -> 100; window 1: 4*20=80.
-    assert rows[0] == 100.0
-    assert rows[1] == 80.0
-
-
-def test_dp_streaming_sum_window_selection(spark, stream_dir):
-    stream = sources.read_stream(spark, stream_dir, EVENTS_SCHEMA)
-    out = dp_streaming_sum(
-        stream, "user_id", "ts", "value", window_duration="1 minute",
-        watermark_delay="0 seconds", epsilon_per_window=10.0,
-        delta_per_window=1e-4, min_sum_per_window=0.0,
-        max_sum_per_window=5.0, noise_mode="zero")
-    got = _run_stream(spark, out, "dp_sum_stream_sel")
-    rows = {r["window"]["start"].minute: r["sum"] for r in got.collect()}
-    assert set(rows) == {0, 1}
-    assert rows[0] == 100.0
-    assert rows[1] == 80.0
-
-
 def test_streaming_exact_dedup(spark, tmp_path):
     from pyspark.sql.types import LongType, StringType
     schema = StructType([StructField("fp", StringType()),
@@ -371,136 +263,18 @@ def test_bucketed_join_is_colocated(spark):
         spark.sql("DROP TABLE IF EXISTS buck_r")
 
 
-def test_session_window_counts(spark, stream_dir):
-    stream = sources.read_stream(spark, stream_dir, EVENTS_SCHEMA)
+def test_session_window_counts(spark, stream_dir, events_schema,
+                               run_stream):
+    stream = sources.read_stream(spark, stream_dir, events_schema)
     out = session_window_counts(stream, "user_id", "ts",
                                 gap_duration="30 seconds",
                                 watermark_delay="0 seconds")
-    got = _run_stream(spark, out, "session_stream")
+    got = run_stream(out, "session_stream")
     per_user = {}
     for r in got.collect():
         per_user.setdefault(r["pid"], []).append(r["n_events"])
     # User 2 (no sparse-window event): one 3-event and one 1-event session.
     assert sorted(per_user[2]) == [1, 3]
-
-
-def test_dp_streaming_session_count(spark, stream_dir):
-    """3-chained stateful plan: session close -> per-(user, tumble) capped
-    session count -> per-window merge. Fixture sessions (gap 30s): every
-    user closes one session ending inside minute 0 ([*:10, *:42)) and one
-    ending exactly at 00:02:00 (exclusive boundary -> minute 1). The
-    sparse-minute sessions of users 0/1 end in minutes 2/3."""
-    stream = sources.read_stream(spark, stream_dir, EVENTS_SCHEMA)
-    out = dp_streaming_session_count(
-        stream, "user_id", "ts", gap_duration="30 seconds",
-        window_duration="1 minute", watermark_delay="0 seconds",
-        epsilon_per_window=1.0, max_sessions_per_window=2,
-        noise_mode="zero", threshold_windows=False)
-    got = _run_stream(spark, out, "dp_sess_stream")
-    rows = {r["window"]["start"].minute: r for r in got.collect()}
-    assert rows[0]["session_count"] == 20.0
-    assert rows[0]["privacy_id_count"] == 20.0
-    assert rows[1]["session_count"] == 20.0
-    # user 0's sparse session [150,180) ends exactly 00:03:00 -> minute 2;
-    # user 1's [151,181) -> minute 3.
-    assert rows[2]["session_count"] == 1.0
-    assert rows[3]["session_count"] == 1.0
-
-
-def test_dp_streaming_session_count_selection(spark, stream_dir):
-    stream = sources.read_stream(spark, stream_dir, EVENTS_SCHEMA)
-    out = dp_streaming_session_count(
-        stream, "user_id", "ts", gap_duration="30 seconds",
-        window_duration="1 minute", watermark_delay="0 seconds",
-        epsilon_per_window=10.0, delta_per_window=1e-4,
-        max_sessions_per_window=2, noise_mode="zero")
-    got = _run_stream(spark, out, "dp_sess_stream_sel")
-    rows = {r["window"]["start"].minute: r for r in got.collect()}
-    # single-user windows (minutes 2 and 3) fall below the threshold
-    assert set(rows) == {0, 1}
-    assert rows[0]["session_count"] == 20.0
-
-
-def test_dp_streaming_percentile(spark, stream_dir):
-    """Histogram-sketch DP percentile over per-user window averages:
-    window 0 user averages are all 2.0 (bin 2 of 8, width 1) -> midpoint
-    2.5; window 1 all 4.0 -> 4.5."""
-    stream = sources.read_stream(spark, stream_dir, EVENTS_SCHEMA)
-    out = dp_streaming_percentile(
-        stream, "user_id", "ts", "value", window_duration="1 minute",
-        watermark_delay="0 seconds", epsilon_per_window=1.0,
-        min_value=0.0, max_value=8.0, percentile=50.0, n_bins=8,
-        noise_mode="zero", threshold_windows=False)
-    got = _run_stream(spark, out, "dp_pct_stream")
-    rows = {r["window"]["start"].minute: r for r in got.collect()}
-    assert rows[0]["percentile_value"] == pytest.approx(2.5)
-    assert rows[0]["n_users"] == pytest.approx(20.0)
-    assert rows[1]["percentile_value"] == pytest.approx(4.5)
-    assert rows[2]["percentile_value"] == pytest.approx(1.5)  # 2 users @1.0
-    assert rows[2]["n_users"] == pytest.approx(2.0)
-
-
-def test_dp_streaming_percentile_selection(spark, stream_dir):
-    stream = sources.read_stream(spark, stream_dir, EVENTS_SCHEMA)
-    out = dp_streaming_percentile(
-        stream, "user_id", "ts", "value", window_duration="1 minute",
-        watermark_delay="0 seconds", epsilon_per_window=10.0,
-        delta_per_window=1e-4, min_value=0.0, max_value=8.0,
-        percentile=50.0, n_bins=8, noise_mode="zero")
-    got = _run_stream(spark, out, "dp_pct_stream_sel")
-    rows = {r["window"]["start"].minute: r for r in got.collect()}
-    assert set(rows) == {0, 1}  # sparse minute-2 window suppressed
-    assert rows[1]["percentile_value"] == pytest.approx(4.5)
-
-
-def test_dp_streaming_mean(spark, stream_dir):
-    from pipelinedp_spark.streaming import dp_streaming_mean
-    stream = sources.read_stream(spark, stream_dir, EVENTS_SCHEMA)
-    out = dp_streaming_mean(
-        stream, "user_id", "ts", "value", window_duration="1 minute",
-        watermark_delay="0 seconds", epsilon_per_window=10.0,
-        min_value=0.0, max_value=5.0, max_contributions_per_window=3,
-        delta_per_window=1e-4, noise_mode="zero")
-    got = _run_stream(spark, out, "dp_mean_stream")
-    rows = {r["window"]["start"].minute: r["mean"] for r in got.collect()}
-    # Window 0: each user 3 events of 2.0 -> mean 2.0; window 1: 4.0.
-    # Sparse window 2 (2 users) is suppressed by selection.
-    assert rows[0] == pytest.approx(2.0)
-    assert rows[1] == pytest.approx(4.0)
-    assert 2 not in rows
-
-
-def test_dp_streaming_variance(spark, tmp_path):
-    from pipelinedp_spark.streaming import dp_streaming_variance
-    import datetime
-    rows = []
-    for u in range(10):
-        # window 0: values {1, 4} per user -> variance 2.25 around mean 2.5
-        rows.append((u, "2024-01-01 00:00:10", 1.0))
-        rows.append((u, "2024-01-01 00:00:20", 4.0))
-        # window 1: constant 2.0 -> variance 0
-        rows.append((u, "2024-01-01 00:01:30", 2.0))
-    # sparse window 2: 2 users, below the selection threshold
-    rows.append((0, "2024-01-01 00:02:30", 1.0))
-    rows.append((1, "2024-01-01 00:02:31", 1.0))
-    rows.append((0, "2024-01-01 00:05:00", 0.0))  # watermark flush
-    df = spark.createDataFrame(
-        [(u, datetime.datetime.fromisoformat(t), v) for u, t, v in rows],
-        EVENTS_SCHEMA)
-    path = str(tmp_path / "varstream")
-    df.coalesce(1).write.parquet(path)
-
-    stream = sources.read_stream(spark, path, EVENTS_SCHEMA)
-    out = dp_streaming_variance(
-        stream, "user_id", "ts", "value", window_duration="1 minute",
-        watermark_delay="0 seconds", epsilon_per_window=10.0,
-        min_value=0.0, max_value=5.0, max_contributions_per_window=2,
-        delta_per_window=1e-4, noise_mode="zero")
-    got = _run_stream(spark, out, "dp_var_stream")
-    res = {r["window"]["start"].minute: r["variance"] for r in got.collect()}
-    assert res[0] == pytest.approx(2.25)
-    assert res[1] == pytest.approx(0.0)
-    assert 2 not in res  # suppressed by DP window selection
 
 
 def test_read_csv_and_json_roundtrip(spark, tmp_path):
@@ -523,70 +297,6 @@ def test_read_csv_and_json_roundtrip(spark, tmp_path):
     assert dict(inferred.dtypes)["id"] in ("int", "bigint")
 
 
-def test_dp_streaming_vector_sum(spark, tmp_path):
-    """Streaming VECTOR_SUM batch mirror: per-(window, dim) sums with the
-    per-user per-dim clip binding for one hot user; zero noise makes the
-    check exact."""
-    import datetime
-    from pyspark.sql.types import (ArrayType, DoubleType, IntegerType,
-                                   StructField, StructType, TimestampType)
-    from pipelinedp_spark.streaming import dp_streaming_vector_sum
-    schema = StructType([
-        StructField("user_id", IntegerType()),
-        StructField("ts", TimestampType()),
-        StructField("vec", ArrayType(DoubleType())),
-    ])
-    rows = []
-    t0 = datetime.datetime.fromisoformat("2024-01-01 00:00:10")
-    for u in range(5):
-        rows.append((u, t0, [1.0, -2.0]))
-    # hot user 0: 4 more events in window 0 -> per-dim sum 5.0 / -10.0,
-    # clipped to +-3.0
-    for k in range(4):
-        rows.append((0, t0 + datetime.timedelta(seconds=k + 1),
-                     [1.0, -2.0]))
-    # window 1 + flush event
-    rows.append((1, datetime.datetime.fromisoformat("2024-01-01 00:01:30"),
-                 [0.5, 0.5]))
-    rows.append((0, datetime.datetime.fromisoformat("2024-01-01 00:05:00"),
-                 [0.0, 0.0]))
-    df = spark.createDataFrame(rows, schema)
-    path = str(tmp_path / "vecstream")
-    df.coalesce(1).write.parquet(path)
-    stream = sources.read_stream(spark, path, schema)
-    out = dp_streaming_vector_sum(
-        stream, "user_id", "ts", "vec", window_duration="1 minute",
-        watermark_delay="0 seconds", epsilon_per_window=1.0,
-        max_abs_per_dim=3.0, dims=2, noise_mode="zero")
-    got = _run_stream(spark, out, "dp_vecsum_stream")
-    res = {(r["window"]["start"].minute, r["dim"]): r["vector_sum"]
-           for r in got.collect()}
-    # window 0, dim 0: user0 clipped 5.0 -> 3.0, users 1-4: 1.0 each = 7.0
-    assert res[(0, 0)] == pytest.approx(7.0)
-    # window 0, dim 1: user0 -10 -> -3.0, others -2.0 each = -11.0
-    assert res[(0, 1)] == pytest.approx(-11.0)
-    assert res[(1, 0)] == pytest.approx(0.5)
-    assert res[(1, 1)] == pytest.approx(0.5)
-
-
-def test_dp_streaming_vector_sum_refuses_thresholding(spark, tmp_path):
-    from pyspark.sql.types import (ArrayType, DoubleType, IntegerType,
-                                   StructField, StructType, TimestampType)
-    from pipelinedp_spark.streaming import dp_streaming_vector_sum
-    schema = StructType([
-        StructField("user_id", IntegerType()),
-        StructField("ts", TimestampType()),
-        StructField("vec", ArrayType(DoubleType())),
-    ])
-    stream = sources.read_stream(spark, str(tmp_path), schema)
-    with pytest.raises(ValueError, match="per-dim"):
-        dp_streaming_vector_sum(
-            stream, "user_id", "ts", "vec", window_duration="1 minute",
-            watermark_delay="0 seconds", epsilon_per_window=1.0,
-            max_abs_per_dim=3.0, dims=2, delta_per_window=1e-4,
-            threshold_windows=True)
-
-
 def test_orc_roundtrip(spark, tmp_path):
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
     p = str(tmp_path / "orc")
@@ -600,8 +310,9 @@ def test_orc_roundtrip(spark, tmp_path):
     assert any("id" in f for f in pushed), pushed
 
 
-def test_write_stream_checkpointed_roundtrip(spark, tmp_path, stream_dir):
-    stream = sources.read_stream(spark, stream_dir, EVENTS_SCHEMA)
+def test_write_stream_checkpointed_roundtrip(spark, tmp_path, stream_dir,
+                                            events_schema):
+    stream = sources.read_stream(spark, stream_dir, events_schema)
     out_dir = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     q = sources.write_stream(stream.select("user_id", "value"), out_dir,
@@ -611,7 +322,7 @@ def test_write_stream_checkpointed_roundtrip(spark, tmp_path, stream_dir):
     assert back.count() == spark.read.parquet(stream_dir).count()
     # restart with the same checkpoint: nothing reprocessed
     q2 = sources.write_stream(
-        sources.read_stream(spark, stream_dir, EVENTS_SCHEMA)
+        sources.read_stream(spark, stream_dir, events_schema)
         .select("user_id", "value"), out_dir, ckpt, available_now=True)
     q2.awaitTermination(120)
     assert spark.read.parquet(out_dir).count() == back.count()
@@ -683,69 +394,6 @@ def test_near_dup_dedup_rejects_bad_hamming_radius(spark):
     b = spark.createDataFrame([(1, "some text")], "doc_id long, text string")
     with pytest.raises(ValueError, match="pigeonhole"):
         near_dup_dedup_batch(b, None, num_blocks=4, max_hamming=4)
-
-
-def test_dp_streaming_percentile_tree_matches_quantile_tree(spark,
-                                                            stream_dir):
-    """percentile_algorithm='tree' parity with the batch quantile-tree
-    path: zero noise, the streaming value must equal a direct
-    compute_tree_quantiles descent over the same leaf histogram, and
-    n_users must be the exact user count (the level-1 total)."""
-    import numpy as np
-    from pipelinedp_spark import quantile_tree as qt
-    stream = sources.read_stream(spark, stream_dir, EVENTS_SCHEMA)
-    out = dp_streaming_percentile(
-        stream, "user_id", "ts", "value", window_duration="1 minute",
-        watermark_delay="0 seconds", epsilon_per_window=1.0,
-        min_value=0.0, max_value=8.0, percentile=50.0,
-        noise_mode="zero", threshold_windows=False,
-        percentile_algorithm="tree")
-    got = _run_stream(spark, out, "dp_pct_tree_stream")
-    rows = {r["window"]["start"].minute: r for r in got.collect()}
-
-    n_leaves = qt.num_leaves()
-    def mirror(avg, n):
-        leaf = int(avg / 8.0 * n_leaves)
-        return qt.compute_tree_quantiles(
-            np.array([leaf]), np.array([float(n)]), [50.0], 0.0, 8.0,
-            lambda: 0.0)[0]
-
-    # minute 0: 20 users, every per-user window avg is 2.0; minute 1:
-    # 4.0; minute 2: 2 users at 1.0 (same fixture facts as the
-    # histogram-path test above).
-    assert rows[0]["percentile_value"] == pytest.approx(mirror(2.0, 20))
-    assert rows[0]["n_users"] == pytest.approx(20.0)
-    assert rows[1]["percentile_value"] == pytest.approx(mirror(4.0, 20))
-    assert rows[2]["percentile_value"] == pytest.approx(mirror(1.0, 2))
-    assert rows[2]["n_users"] == pytest.approx(2.0)
-    # tree read-off lands inside the (tiny) leaf containing the true
-    # value -- far tighter than the histogram path's bin midpoint
-    assert abs(rows[0]["percentile_value"] - 2.0) < 8.0 / n_leaves
-
-
-def test_dp_streaming_percentile_tree_selection(spark, stream_dir):
-    stream = sources.read_stream(spark, stream_dir, EVENTS_SCHEMA)
-    out = dp_streaming_percentile(
-        stream, "user_id", "ts", "value", window_duration="1 minute",
-        watermark_delay="0 seconds", epsilon_per_window=10.0,
-        delta_per_window=1e-4, min_value=0.0, max_value=8.0,
-        percentile=50.0, noise_mode="zero",
-        percentile_algorithm="tree")
-    got = _run_stream(spark, out, "dp_pct_tree_stream_sel")
-    rows = {r["window"]["start"].minute: r for r in got.collect()}
-    assert set(rows) == {0, 1}   # sparse windows suppressed
-    assert rows[0]["n_users"] == pytest.approx(20.0)
-
-
-def test_dp_streaming_percentile_rejects_unknown_algorithm(spark,
-                                                           stream_dir):
-    stream = sources.read_stream(spark, stream_dir, EVENTS_SCHEMA)
-    with pytest.raises(ValueError, match="percentile_algorithm"):
-        dp_streaming_percentile(
-            stream, "user_id", "ts", "value", window_duration="1 minute",
-            watermark_delay="0 seconds", epsilon_per_window=1.0,
-            min_value=0.0, max_value=8.0, noise_mode="zero",
-            threshold_windows=False, percentile_algorithm="sketchy")
 
 
 def _write_docs_stream(spark, path, rows):
