@@ -172,8 +172,9 @@ class AggregateParams:
     # When True, the caller asserts rows with non-public partition keys are
     # already removed, so the engine skips its drop filter; aggregate()
     # requires public partitions with it (reference:
-    # pipeline_dp/aggregate_params.py:267-269, 304), while
-    # aggregate_partials() without them keeps every key present as public.
+    # pipeline_dp/aggregate_params.py:267-269, 304). aggregate_partials()
+    # takes no public partitions: there the flag declares every key present
+    # public, which only the streaming threshold_windows=False path sets.
     public_partitions_already_filtered: bool = False
     # User-defined combiners (reference: pipeline_dp/aggregate_params.py:
     # 254-257,296): mutually exclusive with `metrics`; routed through

@@ -366,10 +366,7 @@ class DPEngine:
 
     # ------------------------------------------------------------------
     def aggregate_partials(self, partials: DataFrame, params: AggregateParams,
-                           pk_cols: Sequence[str],
-                           public_partitions: Optional[Union[DataFrame,
-                                                             Sequence]] = None
-                           ) -> DPResult:
+                           pk_cols: Sequence[str]) -> DPResult:
         """The release stage ``aggregate`` and ``aggregate_multi_sum`` end
         in, for partials the caller bounded itself (streaming windows).
 
@@ -380,22 +377,20 @@ class DPEngine:
         ``PARTIAL_NORM_SQ`` (sums of values clipped to [min_value,
         max_value] minus their midpoint, and of their squares; MEAN,
         VARIANCE). Each is summed per key; the rows count privacy ids.
-        Keys: those of ``public_partitions``, else all present when
-        ``params.public_partitions_already_filtered`` declares them
-        public, else post-aggregation thresholding or DP selection."""
+        Keys: post-aggregation thresholding or DP selection, unless
+        ``params.public_partitions_already_filtered`` declares every key
+        present public (the streaming ``threshold_windows=False``
+        contract; it releases key presence exactly)."""
         if params.custom_combiners or \
                 not set(params.metric_kinds) <= _PARTIAL_METRICS:
             raise ValueError("aggregate_partials releases only COUNT, "
                              "PRIVACY_ID_COUNT, SUM, MEAN and VARIANCE")
         report = [f"DPEngine.aggregate_partials: metrics={params.metrics}"]
         self._reports.append(report)
-        pub_df = (None if public_partitions is None else
-                  self._as_partitions_df(partials.sparkSession, pk_cols,
-                                         public_partitions, like=partials))
-        specs = self._request_budgets(params, pub_df is not None, report)
+        specs = self._request_budgets(params, False, report)
         merged = _merge_partials(partials, pk_cols, report)
         return DPResult(
-            lambda: self._release(merged, params, specs, pk_cols, pub_df,
+            lambda: self._release(merged, params, specs, pk_cols, None,
                                   report),
             self._accountant)
 
@@ -629,28 +624,23 @@ class DPEngine:
         # (reference: pipeline_dp/combiners.py:276-288,323-335,439-454).
         stddev_vals: dict = {}
 
-        if "count" in specs:
-            spec = specs["count"]
-            sens = self._count_sensitivities(params)
+        def additive(name: str, col: Column, spec: MechanismSpec,
+                     sens: dp.Sensitivities) -> None:
             scale = dp.noise_scale(params.noise_kind, spec.eps, spec.delta,
                                    sens)
-            metric_cols["count"] = noise.add_noise(
-                F.col(_COUNT).cast(DoubleType()), kind, scale)
-            stddev_vals["count"] = dp.noise_std(params.noise_kind, spec.eps,
-                                                spec.delta, sens)
-            report.append(f"COUNT: {kind} noise, scale={scale:.4g}")
+            metric_cols[name] = noise.add_noise(col, kind, scale)
+            stddev_vals[name] = dp.noise_std(params.noise_kind, spec.eps,
+                                             spec.delta, sens)
+            report.append(f"{name.upper()}: {kind} noise, scale={scale:.4g}")
+
+        if "count" in specs:
+            additive("count", F.col(_COUNT).cast(DoubleType()),
+                     specs["count"], self._count_sensitivities(params))
         if "sum" in specs:
-            spec = specs["sum"]
-            sens = dp.sum_sensitivities(
+            additive("sum", F.col(_SUM), specs["sum"], dp.sum_sensitivities(
                 l0 or params.max_contributions, linf, params.min_value,
                 params.max_value, params.min_sum_per_partition,
-                params.max_sum_per_partition)
-            scale = dp.noise_scale(params.noise_kind, spec.eps, spec.delta,
-                                   sens)
-            metric_cols["sum"] = noise.add_noise(F.col(_SUM), kind, scale)
-            stddev_vals["sum"] = dp.noise_std(params.noise_kind, spec.eps,
-                                              spec.delta, sens)
-            report.append(f"SUM: {kind} noise, scale={scale:.4g}")
+                params.max_sum_per_partition))
         # MEAN and VARIANCE: noisy count and normalized sum (plus sum of
         # squares for VARIANCE) under one spec; COUNT and SUM derive.
         moments = specs.get("variance") or specs.get("mean")
@@ -715,14 +705,8 @@ class DPEngine:
                     f"PRIVACY_ID_COUNT: post-aggregation thresholding at "
                     f"{threshold:.3f}")
             else:
-                scale = dp.noise_scale(params.noise_kind, spec.eps, spec.delta,
-                                       sens)
-                metric_cols["privacy_id_count"] = noise.add_noise(
-                    F.col(_PID_COUNT).cast(DoubleType()), kind, scale)
-                stddev_vals["privacy_id_count"] = dp.noise_std(
-                    params.noise_kind, spec.eps, spec.delta, sens)
-                report.append(
-                    f"PRIVACY_ID_COUNT: {kind} noise, scale={scale:.4g}")
+                additive("privacy_id_count",
+                         F.col(_PID_COUNT).cast(DoubleType()), spec, sens)
 
         if pct_values is not None:
             # Left join: empty public partitions have no histogram rows; a

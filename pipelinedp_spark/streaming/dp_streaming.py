@@ -32,6 +32,11 @@ noise, delta/4 under Gaussian. With ``delta_per_window == 0`` and
 is public knowledge (e.g. "every hour has traffic"). Callers wanting that
 must pass ``threshold_windows=False`` explicitly (every window present is
 then a public key); otherwise a pure-eps budget raises.
+
+**Checkpoints.** Count, sum, mean, variance and session-count state holds
+the engine's merged partials. Checkpoints written before these functions
+released through the engine cannot be resumed (their state can match by
+type with columns swapped): restart such queries from an empty checkpoint.
 """
 
 from __future__ import annotations
@@ -47,7 +52,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
 from pipelinedp_spark import dp_computations as dp
-from pipelinedp_spark.aggregate_params import (AggregateParams, MetricSpec,
+from pipelinedp_spark.aggregate_params import (AggregateParams,
+                                               MechanismType, MetricSpec,
                                                Metrics, NoiseKind)
 from pipelinedp_spark.budget_accounting import NaiveBudgetAccountant
 from pipelinedp_spark.dp_engine import (PARTIAL_COUNT, PARTIAL_NORM_SQ,
@@ -62,9 +68,13 @@ def _clip(col: Column, lo: float, hi: float) -> Column:
 
 
 def _resolve_thresholding(threshold_windows: Optional[bool],
-                          delta_per_window: float) -> bool:
+                          delta_per_window: float,
+                          noise_kind: NoiseKind) -> bool:
     """Default: threshold whenever a delta budget exists; refuse the silent
-    presence leak on a pure-eps budget unless explicitly waived."""
+    presence leak on a pure-eps budget unless explicitly waived. Gaussian
+    noise needs a delta either way."""
+    if noise_kind == NoiseKind.GAUSSIAN and delta_per_window <= 0.0:
+        raise ValueError("Gaussian noise requires delta_per_window > 0")
     if threshold_windows is None:
         if delta_per_window <= 0.0:
             raise ValueError(
@@ -102,9 +112,13 @@ def _release_windows(per_user: DataFrame, metrics: List[MetricSpec],
                      **bounds) -> DataFrame:
     """Release per-(user, window) partials through the engine, the window
     as partition key; AggregateParams validates the caps and bounds."""
-    do_threshold = _resolve_thresholding(threshold_windows, delta_per_window)
+    do_threshold = _resolve_thresholding(threshold_windows, delta_per_window,
+                                         noise_kind)
     if do_threshold and Metrics.PRIVACY_ID_COUNT not in metrics:
         metrics = [*metrics, Metrics.PRIVACY_ID_COUNT]
+    # threshold_windows=False: the caller asserts the window grid is
+    # public, so every window present is declared a public key. This is
+    # the only caller that sets the flag without public partitions.
     params = AggregateParams(
         metrics=metrics, max_partitions_contributed=l0_per_window,
         max_contributions_per_partition=linf, noise_kind=noise_kind,
@@ -134,8 +148,8 @@ def dp_streaming_count(stream: DataFrame,
 
     Plan: watermark -> groupBy(pid, window) count capped at linf -> the
     engine's release. Returns (window, count, privacy_id_count), noised
-    doubles, epsilon split in half; the released privacy_id_count is the
-    SAME noisy draw the window threshold saw.
+    doubles; the released privacy_id_count is the SAME noisy draw the
+    window threshold saw.
 
     ``threshold_windows=None`` (default) enables selection and requires
     ``delta_per_window > 0``; passing ``False`` asserts the window grid is
@@ -168,10 +182,8 @@ def dp_streaming_sum(stream: DataFrame,
                      noise_mode: str = "secure",
                      threshold_windows: Optional[bool] = None) -> DataFrame:
     """DP sum per event-time window with a per-(user, window) sum clip —
-    the batch engine's per-partition clipping regime. With window
-    selection enabled (the default; requires ``delta_per_window > 0``) the
-    epsilon splits half to the sum noise and half to the selection noise.
-    Returns (window, sum)."""
+    the batch engine's per-partition clipping regime. Window selection as
+    in dp_streaming_count. Returns (window, sum)."""
     per_user = _per_user_window(
         stream, privacy_id_col, timestamp_col, window_duration,
         watermark_delay,
@@ -365,10 +377,9 @@ def dp_streaming_session_count(stream: DataFrame,
     assignment Spark implements for ``window(session_window_col, dur)``.
     Sensitivity mirrors dp_streaming_count with sessions as the
     contribution unit: a user moves a window's session count by at most
-    linf and its privacy-id count by 1. Epsilon splits half to the count
-    noise, half to the pid-count noise / DP window selection (same
-    construction and presence-leak contract as dp_streaming_count).
-    Returns (window, session_count, privacy_id_count), noised doubles.
+    linf and its privacy-id count by 1. Window selection as in
+    dp_streaming_count. Returns (window, session_count,
+    privacy_id_count), noised doubles.
     """
     sessions = (stream
                 .withWatermark(timestamp_col, watermark_delay)
@@ -501,7 +512,8 @@ def dp_streaming_percentile(stream: DataFrame,
     Returns (window, percentile_value, n_users) with n_users the noisy
     total.
     """
-    do_threshold = _resolve_thresholding(threshold_windows, delta_per_window)
+    do_threshold = _resolve_thresholding(threshold_windows, delta_per_window,
+                                         noise_kind)
     if l0_per_window < 1:
         raise ValueError("l0_per_window must be positive")
     if min_value > max_value:
@@ -633,12 +645,16 @@ def _streaming_percentile_tree(per_user: DataFrame,
         F.collect_list(F.struct("__bin__", "__n__")).alias("__hist__"),
         F.sum("__n__").alias("__pids__"))
 
-    eps_tree = epsilon_per_window / 2 if do_threshold else epsilon_per_window
-    delta_tree = (delta_per_window / 2 if do_threshold
-                  else delta_per_window)
+    accountant = NaiveBudgetAccountant(epsilon_per_window, delta_per_window)
+    tree = accountant.request_budget(noise_kind.convert_to_mechanism_type())
+    if do_threshold:
+        thr = accountant.request_budget(
+            MechanismType.LAPLACE_THRESHOLDING
+            if noise_kind == NoiseKind.LAPLACE
+            else MechanismType.GAUSSIAN_THRESHOLDING)
+    accountant.compute_budgets()
     tree_scale = dp.noise_scale(
-        noise_kind, eps_tree / height,
-        (delta_tree / height) if delta_tree else 0.0,
+        noise_kind, tree.eps / height, tree.delta / height,
         dp.count_sensitivities(l0_per_window, 1))
     kind_value = noise_kind.value
     pct = float(percentile)
@@ -661,12 +677,10 @@ def _streaming_percentile_tree(per_user: DataFrame,
     out = per_window.withColumn("__res__", _descend(F.col("__hist__")))
     if do_threshold:
         # The engine's post-aggregation thresholding at the privacy-id
-        # count's share: eps/2 and the delta the tree leaves (all of it
-        # under Laplace noise), half of which funds the threshold.
-        thr_delta = (delta_per_window if noise_kind == NoiseKind.LAPLACE
-                     else delta_per_window / 2) / 2
+        # count's share, half of whose delta funds the threshold.
+        thr_delta = thr.delta / 2
         sens = dp.privacy_id_count_sensitivities(l0_per_window)
-        args = (noise_kind, epsilon_per_window / 2, thr_delta, sens)
+        args = (noise_kind, thr.eps, thr.delta - thr_delta, sens)
         threshold = dp.thresholding_from_std(
             noise_kind, dp.noise_std(*args), thr_delta, l0_per_window)
         out = out.withColumn("__dp_pids__", create_noise_source(

@@ -506,11 +506,17 @@ def _bad_call(fn, **bad):
     _bad_call(dp_streaming_percentile, l0_per_window=0),
     _bad_call(dp_streaming_percentile, min_value=6.0),
     _bad_call(dp_streaming_vector_sum, dims=0),
+    *[_bad_call(fn, noise_kind=NoiseKind.GAUSSIAN)
+      for fn in (dp_streaming_count, dp_streaming_sum, dp_streaming_mean,
+                 dp_streaming_variance, dp_streaming_session_count)],
+    _bad_call(dp_streaming_percentile, noise_kind=NoiseKind.GAUSSIAN,
+              percentile_algorithm="tree"),
 ])
 def test_streaming_rejects_inputs_that_weaken_the_guarantee(spark, fn,
                                                             kwargs):
     """A zero cap would zero the sensitivity and the noise, releasing
-    exact values as DP output; inverted bounds break the clip."""
+    exact values as DP output; inverted bounds break the clip; Gaussian
+    noise cannot be calibrated without a delta."""
     rate = spark.readStream.format("rate").load()
     stream = rate.select(F.col("value").alias("user_id"),
                          F.col("timestamp").alias("ts"),
