@@ -6,25 +6,30 @@ binning that keeps the 3 most-significant digits of the bin lower
 (count_histogram_computation.py:35-54 — "for scalability"); float histograms
 (sums) use equal-width bins.
 
-All heavy lifting is native: value extraction -> binning expression ->
-groupBy(bin).agg(count/sum/min/max) -> collect of the (tiny) binned summary.
-The raw data is scanned twice (integer histograms fused in one pass over
-per-(pid, pk) aggregates; sum histograms need a min/max pre-pass).
+All heavy lifting is native: the raw data is grouped once into the
+per-(pid, pk) pre-aggregate (``pre_aggregation.preaggregate``); every
+histogram's values are tagged (hist, v) rows of it or of its per-pid /
+per-partition groupBy, unioned, and one groupBy(hist, lower) bins all
+seven; only the binned summary is collected. Sum histograms need a min/max
+pre-pass for their bin width. Measured on the 36-row analysis test table
+(``local[4]``, AQE on): ``compute_dataset_histograms`` runs 8 Spark jobs.
+``parameter_tuning.tune`` bins the pre-aggregate it also analyzes.
 """
 
 from __future__ import annotations
 
 import dataclasses
 import enum
-import math
 from typing import List, Optional, Sequence, Tuple
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pipelinedp_spark.analysis.pre_aggregation import preaggregate
 from pipelinedp_spark.dp_engine import DataFrameExtractors
 
 NUMBER_OF_SUM_BUCKETS = 10_000
+_FLOAT_TAGS = ("linf_sum", "sum_pp")
 
 
 class HistogramType(enum.Enum):
@@ -111,103 +116,89 @@ def _log_bin_lower(value_col) -> "F.Column":
     return (F.floor(value_col.cast("double") / base) * base).cast("long")
 
 
-def _binned(df: DataFrame, value_col: str, tag: str,
-            lower_expr) -> DataFrame:
-    """(hist, lower, count, sum, max, min) binned frame, lazily."""
-    v = F.col(value_col).cast("double")
-    return (df.select(F.lit(tag).alias("hist"),
-                      lower_expr.cast("double").alias("lower"), v)
-            .groupBy("hist", "lower")
-            .agg(F.count(F.lit(1)).alias("count"), F.sum("v").alias("sum"),
-                 F.max("v").alias("max"), F.min("v").alias("min")))
-
-
 def compute_dataset_histograms(df: DataFrame,
                                extractors: DataFrameExtractors
                                ) -> DatasetHistograms:
-    """Computes ALL contribution/partition histograms in a fixed small
-    number of Spark jobs regardless of histogram count (reference:
+    """All seven contribution/partition histograms of ``df`` (reference:
     computing_histograms.py:89-186 runs 5 branches over the raw
-    collection): one cached per-(pid, pk) aggregate, one tiny union-agg
-    for the float ranges, then every histogram's binned frame is tagged
-    and unioned into a SINGLE collect — 7 separate collect jobs measured
-    ~3x slower at bench scale."""
+    collection). Builds the per-(pid, pk) pre-aggregate once, caches it
+    for the call and bins it with
+    ``compute_dataset_histograms_on_preaggregated_data``. Measured on the
+    36-row analysis test table (``local[4]``, AQE on): 8 Spark jobs with a
+    value column, 7 without."""
+    pre = preaggregate(df, extractors, keep_privacy_id=True).cache()
+    try:
+        return compute_dataset_histograms_on_preaggregated_data(pre,
+                                                                extractors)
+    finally:
+        pre.unpersist()
+
+
+def compute_dataset_histograms_on_preaggregated_data(
+        pre: DataFrame, extractors: DataFrameExtractors) -> DatasetHistograms:
+    """The seven histograms of ``pre``, the output of
+    ``preaggregate(..., keep_privacy_id=True)`` (reference:
+    computing_histograms.py compute_dataset_histograms_on_preaggregated_data).
+    The per-pid L0/L1 values are its ``n_partitions`` / ``n_contributions``;
+    the per-partition values come from one groupBy of it. Callers that use
+    ``pre`` again should cache it first.
+
+    Two queries: one aggregate for both float-histogram ranges (with a
+    value column only), then every histogram's ``(hist, lower, v)`` rows
+    tagged, unioned and binned by a single groupBy(hist, lower), so the
+    binned summary is one collect."""
     pid = extractors.privacy_id_column
     pk_cols = list(extractors.partition_key_columns)
-    value = extractors.value_column
-    has_value = value is not None
+    has_value = extractors.value_column is not None
 
-    value_expr = (F.sum(F.col(value).cast("double")) if has_value
-                  else F.lit(0.0))
-    per_pid_pk = df.groupBy(pid, *pk_cols).agg(
-        F.count(F.lit(1)).alias("count"), value_expr.alias("sum")).cache()
-    try:
-        return _histograms_from_cached(per_pid_pk, pid, pk_cols, has_value)
-    finally:
-        per_pid_pk.unpersist()
+    # ``pre`` is partitioned by pid, so this groupBy needs no shuffle.
+    per_pid = pre.groupBy(pid).agg(F.max("n_partitions").alias("l0"),
+                                   F.max("n_contributions").alias("l1"))
+    per_pk = pre.groupBy(*pk_cols).agg(
+        F.count(F.lit(1)).alias("pid_pp"),
+        F.sum("count").alias("count_pp"),
+        F.sum("sum").alias("sum_pp"),
+        F.min("sum").alias("linf_sum_lo"),
+        F.max("sum").alias("linf_sum_hi"))
 
-
-def _histograms_from_cached(per_pid_pk: DataFrame, pid: str,
-                            pk_cols: list, has_value: bool
-                            ) -> DatasetHistograms:
-    per_pid = per_pid_pk.groupBy(pid).agg(
-        F.count(F.lit(1)).alias("n_partitions"),
-        F.sum("count").alias("n_contributions"))
-    per_pk = per_pid_pk.groupBy(*pk_cols).agg(
-        F.count(F.lit(1)).alias("n_privacy_ids"),
-        F.sum("count").alias("count"),
-        F.sum("sum").alias("sum"))
-
-    # One tiny job for both float-histogram ranges.
-    ranges = {}
+    # tag -> (lo, width) of its equal-width bins, from one aggregate of
+    # per_pk. Empty input or an all-null value column (lo is None) has no
+    # bins: its histogram comes back empty, like the reference.
+    float_bins = {}
     if has_value:
-        rr = (per_pid_pk.select(F.lit("linf_sum").alias("t"),
-                                F.col("sum").cast("double").alias("v"))
-              .unionByName(per_pk.select(F.lit("sum_pp").alias("t"),
-                                         F.col("sum").cast("double")
-                                         .alias("v")))
-              .groupBy("t").agg(F.min("v").alias("lo"),
-                                F.max("v").alias("hi"))).collect()
-        ranges = {r["t"]: (r["lo"], r["hi"]) for r in rr}
+        r = per_pk.agg(F.min("linf_sum_lo"), F.max("linf_sum_hi"),
+                       F.min("sum_pp"), F.max("sum_pp")).collect()[0]
+        for tag, lo, hi in (("linf_sum", r[0], r[1]),
+                            ("sum_pp", r[2], r[3])):
+            if lo is not None:
+                float_bins[tag] = (
+                    lo, (hi - lo) / NUMBER_OF_SUM_BUCKETS if hi > lo else 1.0)
 
-    def float_bins(tag: str, buckets: int = NUMBER_OF_SUM_BUCKETS):
-        lo, hi = ranges[tag]
-        width = (hi - lo) / buckets if hi > lo else 1.0
-        v = F.col("v")
-        idx = F.least(F.lit(buckets - 1),
-                      F.floor((v - F.lit(lo)) / F.lit(width)).cast("int"))
-        return idx, lo, width
+    def tagged(src: DataFrame, *tag_cols) -> DataFrame:
+        """One (hist, v) row per input row and (tag, column) pair."""
+        rows = [F.struct(F.lit(tag).alias("hist"),
+                         F.col(col).cast("double").alias("v"))
+                for tag, col in tag_cols
+                if tag in float_bins or tag not in _FLOAT_TAGS]
+        return src.select(F.explode(F.array(*rows)).alias("t")).select("t.*")
 
-    frames = [
-        _binned(per_pid.withColumnRenamed("n_partitions", "v"), "v",
-                "l0", _log_bin_lower(F.col("v"))),
-        _binned(per_pid.withColumnRenamed("n_contributions", "v"), "v",
-                "l1", _log_bin_lower(F.col("v"))),
-        _binned(per_pid_pk.withColumnRenamed("count", "v"), "v",
-                "linf", _log_bin_lower(F.col("v"))),
-        _binned(per_pk.withColumnRenamed("count", "v"), "v",
-                "count_pp", _log_bin_lower(F.col("v"))),
-        _binned(per_pk.withColumnRenamed("n_privacy_ids", "v"), "v",
-                "pid_pp", _log_bin_lower(F.col("v"))),
-    ]
-    meta = {}
-    if has_value:
-        for tag, src in (("linf_sum", per_pid_pk), ("sum_pp", per_pk)):
-            # Empty input (no range rows) or an all-null value column
-            # (lo is None) would blow up the bin math; skip the frame so
-            # flt_hist returns Histogram(name, []) like the reference.
-            if tag not in ranges or ranges[tag][0] is None:
-                continue
-            renamed = src.select(F.col("sum").cast("double").alias("v"))
-            idx, lo, width = float_bins(tag)
-            frames.append(_binned(renamed, "v", tag, idx))
-            meta[tag] = (lo, width)
-
-    union = frames[0]
-    for f in frames[1:]:
-        union = union.unionByName(f)
+    v = F.col("v")
+    bin_lower = _log_bin_lower(v)
+    for tag, (lo, width) in float_bins.items():
+        bin_lower = F.when(F.col("hist") == tag, F.least(
+            F.lit(NUMBER_OF_SUM_BUCKETS - 1),
+            F.floor((v - F.lit(lo)) / F.lit(width)))).otherwise(bin_lower)
+    union = (tagged(per_pid, ("l0", "l0"), ("l1", "l1"))
+             .unionByName(tagged(pre, ("linf", "count"), ("linf_sum", "sum")))
+             .unionByName(tagged(per_pk, ("count_pp", "count_pp"),
+                                 ("pid_pp", "pid_pp"), ("sum_pp", "sum_pp"))))
     rows_by_tag: dict = {}
-    for r in union.collect():                      # the single big collect
+    # A pair whose values are all null has a null sum: no float bin.
+    for r in (union.where(v.isNotNull())
+              .groupBy("hist", bin_lower.cast("double").alias("lower"))
+              .agg(F.count(F.lit(1)).alias("count"), F.sum("v").alias("sum"),
+                   F.max("v").alias("max"), F.min("v").alias("min"))
+              .collect()):
         rows_by_tag.setdefault(r["hist"], []).append(r)
 
     def int_hist(tag: str, name: HistogramType) -> Histogram:
@@ -225,9 +216,9 @@ def _histograms_from_cached(per_pid_pk: DataFrame, pid: str,
     def flt_hist(tag: str, name: HistogramType) -> Optional[Histogram]:
         if not has_value:
             return None
-        if tag not in meta:
+        if tag not in float_bins:
             return Histogram(name, [])
-        lo, width = meta[tag]
+        lo, width = float_bins[tag]
         bins = [FrequencyBin(lower=lo + int(r["lower"]) * width,
                              upper=lo + (int(r["lower"]) + 1) * width,
                              count=int(r["count"]), sum=float(r["sum"]),

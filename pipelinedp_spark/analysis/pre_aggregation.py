@@ -8,11 +8,14 @@ row per (privacy_id, partition_key) present in the data, carrying
   n_partitions    distinct partitions this privacy id contributed to anywhere
   n_contributions total rows this privacy id contributed anywhere
 
-Spark shape: one groupBy(pid, pk) then one window over pid (both hash-
-partition by pid, so the window reuses the aggregation's shuffle). The
-optional partition sampling is deterministic (hash-based), mirroring the
-reference's seeded ValueSampler (pipeline_dp/sampling_utils.py:32-51) so
-analysis runs are reproducible.
+Spark shape: one shuffle. The raw rows are hash-partitioned by privacy
+id; the groupBy(pid, pk) and the window over pid both run inside that
+partitioning, and so does a later groupBy(pid) of the output (a cached
+output keeps it). The rows cross that shuffle without a map-side partial
+aggregate; grouping first would shuffle twice, by (pid, pk) and then by
+pid, one Spark job each under AQE. The optional partition sampling is
+deterministic (hash-based), mirroring the reference's seeded ValueSampler
+(pipeline_dp/sampling_utils.py:32-51) so analysis runs are reproducible.
 """
 
 from __future__ import annotations
@@ -49,6 +52,7 @@ def preaggregate(df: DataFrame,
         df = df.filter(
             bucket < F.lit(int(partitions_sampling_prob * _HASH_BUCKETS)))
 
+    df = df.repartition(pid)
     value_expr = (F.sum(F.col(value).cast("double")) if value is not None
                   else F.lit(0.0))
     aggs = [F.count(F.lit(1)).alias("count"), value_expr.alias("sum")]

@@ -94,6 +94,28 @@ class UtilityReport:
     metric_errors: List[MetricUtility]
 
 
+def warn_if_values_out_of_range(df: DataFrame, params: AggregateParams,
+                                extractors: DataFrameExtractors) -> None:
+    """Range check for the VARIANCE in-range assumption (see
+    ``UtilityAnalysisEngine``): one tiny agg job on the raw frame, run
+    before the analysis, that warns when values leave
+    ``[min_value, max_value]``."""
+    if extractors.value_column is None or params.min_value is None \
+            or params.max_value is None:
+        return
+    v = F.col(extractors.value_column).cast("double")
+    r = df.agg(F.min(v).alias("lo"), F.max(v).alias("hi")).collect()[0]
+    if r["lo"] is not None and (r["lo"] < params.min_value
+                                or r["hi"] > params.max_value):
+        warnings.warn(
+            "VARIANCE utility analysis assumes values lie in "
+            f"[{params.min_value}, {params.max_value}] but the "
+            f"data spans [{r['lo']}, {r['hi']}]; per-value "
+            "clipping is not modeled, so reported VARIANCE "
+            "rmse/bias will diverge from the actual DP "
+            "mechanism for out-of-range values", UserWarning)
+
+
 class UtilityAnalysisEngine:
     """Reference: analysis/utility_analysis_engine.py:31-201.
 
@@ -105,7 +127,8 @@ class UtilityAnalysisEngine:
     VARIANCE diverge from the actual DP variance mechanism, which clips
     each contribution; ``analyze`` emits a ``UserWarning`` when it can
     detect this (non-preaggregated input whose value range exceeds the
-    configured bounds)."""
+    configured bounds), and so does ``parameter_tuning.tune``, which
+    checks its raw input before analyzing its own pre-aggregate."""
 
     def __init__(self, epsilon: float, delta: float):
         self._eps = epsilon
@@ -148,23 +171,8 @@ class UtilityAnalysisEngine:
                     f"preaggregated input missing columns: {sorted(missing)}")
             pre = df
         else:
-            if want_variance and extractors.value_column is not None:
-                # Piggy-backed range check for the VARIANCE in-range
-                # assumption (see class docstring) — one tiny agg job on
-                # the raw frame, executed before the main analysis job.
-                v = F.col(extractors.value_column).cast("double")
-                r = df.agg(F.min(v).alias("lo"), F.max(v).alias("hi")) \
-                    .collect()[0]
-                if r["lo"] is not None and (
-                        r["lo"] < params.min_value
-                        or r["hi"] > params.max_value):
-                    warnings.warn(
-                        "VARIANCE utility analysis assumes values lie in "
-                        f"[{params.min_value}, {params.max_value}] but the "
-                        f"data spans [{r['lo']}, {r['hi']}]; per-value "
-                        "clipping is not modeled, so reported VARIANCE "
-                        "rmse/bias will diverge from the actual DP "
-                        "mechanism for out-of-range values", UserWarning)
+            if want_variance:
+                warn_if_values_out_of_range(df, params, extractors)
             pre = preaggregate(df, extractors, keep_privacy_id=False,
                                include_sum_squares=want_variance)
 

@@ -1191,15 +1191,17 @@ class DPEngine:
         """DP choice of max_partitions_contributed via the exponential
         mechanism over log-spaced candidates
         (reference: pipeline_dp/dp_engine.py:479-531 +
-        private_contribution_bounds.py:27-195). Runs two small jobs: the
-        L0 histogram and the distinct-partition count."""
+        private_contribution_bounds.py:27-195). One pass over ``df``:
+        ``compute_dataset_histograms`` groups it once per (pid, pk); the L0
+        histogram and the partition count (the count-per-partition
+        histogram's total, one per distinct key) both come from that
+        pre-aggregate."""
         from pipelinedp_spark.analysis.histograms import \
             compute_dataset_histograms
         from pipelinedp_spark.private_contribution_bounds import (
             PrivateContributionBounds, PrivateL0Calculator)
         histograms = compute_dataset_histograms(df, extractors)
-        n_partitions = df.select(
-            *extractors.partition_key_columns).distinct().count()
+        n_partitions = histograms.count_per_partition_histogram.total_count
         calc = PrivateL0Calculator(params, n_partitions,
                                    histograms.l0_contributions_histogram)
         if self._noise_mode == "zero":

@@ -2,7 +2,11 @@
 utility analysis, tuning, strategy selection."""
 
 import math
+import uuid
+import warnings
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,6 +17,8 @@ from pipelinedp_spark.aggregate_params import (AggregateParams, Metric,
 from pipelinedp_spark.analysis.histograms import HistogramType
 from pipelinedp_spark.dp_computations import Sensitivities
 from pipelinedp_spark.dp_engine import DataFrameExtractors
+
+pytestmark = pytest.mark.analysis
 
 
 @pytest.fixture
@@ -77,6 +83,172 @@ def test_dataset_histograms_all_null_value(spark):
     assert h.sum_per_partition_histogram.bins == []
     # integer histograms still real
     assert h.l0_contributions_histogram.total_count == 2
+
+
+def _skewed_rows(null_pairs: bool):
+    """Seeded skewed table: a hot user with ~1500 rows, power-law users
+    and partitions, dyadic values (so every sum is exact in any order).
+    With ``null_pairs`` some (pid, pk) pairs hold only null values and
+    some others hold a null beside real values."""
+    r = np.random.default_rng(11)
+    n = 4000
+    uid = np.where(r.random(n) < 0.35, 0,
+                   (r.random(n) ** 3 * 600).astype(int) + 1)
+    pk = (r.random(n) ** 2 * 40).astype(int)
+    region = r.integers(0, 2, n)
+    v = r.integers(-8, 40, n) / 4.0
+    rows = [(int(a), f"p{b}", int(c), float(d))
+            for a, b, c, d in zip(uid, pk, region, v)]
+    if null_pairs:
+        rows = [(a, b, c, None if a % 7 == 3 and b == "p1" else d)
+                for a, b, c, d in rows]
+        rows += [(5, "p2", 0, None), (9999, "p39", 1, None)]
+    return rows
+
+
+def _sig3(n: int) -> int:
+    """Lower bound of n's log bin: n with all but its 3 most significant
+    digits zeroed."""
+    base = 10 ** max(0, len(str(n)) - 3)
+    return n // base * base
+
+
+def _int_bins(values):
+    groups = {}
+    for x in values:
+        groups.setdefault(_sig3(int(x)), []).append(float(x))
+    return [(lo, lo + 10 ** max(0, len(str(lo)) - 3), len(xs), sum(xs),
+             max(xs), min(xs)) for lo, xs in sorted(groups.items())]
+
+
+def _float_bins(values, buckets=10_000):
+    xs = [float(x) for x in values if not pd.isna(x)]
+    if not xs:
+        return []
+    lo, hi = min(xs), max(xs)
+    width = (hi - lo) / buckets if hi > lo else 1.0
+    groups = {}
+    for x in xs:
+        groups.setdefault(min(buckets - 1, math.floor((x - lo) / width)),
+                          []).append(x)
+    return [(lo + i * width, lo + (i + 1) * width, len(g), sum(g), max(g),
+             min(g)) for i, g in sorted(groups.items())]
+
+
+def _reference_histograms(rows):
+    """The seven histograms computed with pandas from the raw rows."""
+    pdf = pd.DataFrame(rows, columns=["uid", "pk", "region", "v"])
+    pair = pdf.groupby(["uid", "pk", "region"]).agg(
+        count=("v", "size"), sum=("v", lambda s: s.sum(min_count=1)))
+    per_pid = pair.groupby(level="uid")["count"].agg(["size", "sum"])
+    per_pk = pair.groupby(level=["pk", "region"]).agg(
+        pids=("count", "size"), count=("count", "sum"),
+        sum=("sum", lambda s: s.sum(min_count=1)))
+    return {
+        "l0_contributions_histogram": _int_bins(per_pid["size"]),
+        "l1_contributions_histogram": _int_bins(per_pid["sum"]),
+        "linf_contributions_histogram": _int_bins(pair["count"]),
+        "linf_sum_contributions_histogram": _float_bins(pair["sum"]),
+        "count_per_partition_histogram": _int_bins(per_pk["count"]),
+        "count_privacy_id_per_partition": _int_bins(per_pk["pids"]),
+        "sum_per_partition_histogram": _float_bins(per_pk["sum"]),
+    }
+
+
+@pytest.mark.parametrize("case",
+                         ["skewed", "null_pairs", "empty", "all_null"])
+def test_histograms_match_pandas_reference(spark, case):
+    """All seven histograms against an independent pandas computation:
+    bin bounds, counts, min and max exact, bin sums to 1e-9 relative."""
+    if case == "empty":
+        rows = []
+    elif case == "all_null":
+        rows = [(u, f"p{u % 3}", 0, None) for u in range(20)]
+    else:
+        rows = _skewed_rows(null_pairs=case == "null_pairs")
+    df = spark.createDataFrame(rows, "uid int, pk string, region int, "
+                                     "v double")
+    h = A.compute_dataset_histograms(
+        df, DataFrameExtractors("uid", ["pk", "region"], "v"))
+    for name, want in _reference_histograms(rows).items():
+        got = getattr(h, name).bins
+        assert [(b.lower, b.upper, b.count, b.max, b.min) for b in got] == \
+            [(lo, up, n, mx, mn) for lo, up, n, _, mx, mn in want], name
+        assert [b.sum for b in got] == pytest.approx(
+            [w[3] for w in want], rel=1e-9, abs=0.0), name
+    if case == "skewed":
+        # The hot user reaches the 4-digit bins.
+        assert h.l1_contributions_histogram.max_value >= 1000
+
+
+def _jobs_and_no_cache_left(spark, fn) -> int:
+    """Spark jobs ``fn`` runs under its own job group; also checks that no
+    cached blocks outlive the call."""
+    sc = spark.sparkContext
+    cached = sc._jsc.getPersistentRDDs().size()
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc._jsc.getPersistentRDDs().size() == cached
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_histograms_and_tune_job_counts(spark, data):
+    """The raw frame is grouped once and the seven histograms bin in one
+    aggregate: at most 8 jobs for the histograms and 12 for tune, which
+    shares its pre-aggregate with the utility analysis."""
+    params = AggregateParams(metrics=[Metrics.COUNT],
+                             max_partitions_contributed=1,
+                             max_contributions_per_partition=1)
+    assert _jobs_and_no_cache_left(
+        spark, lambda: A.compute_dataset_histograms(data, EXT)) <= 8
+    assert _jobs_and_no_cache_left(spark, lambda: A.tune(
+        data, params, EXT, epsilon=100.0, delta=1e-6,
+        public_partitions=["p0", "p1", "p2"])) <= 12
+
+
+def test_tune_uses_given_histograms(data):
+    params = AggregateParams(metrics=[Metrics.COUNT],
+                             max_partitions_contributed=1,
+                             max_contributions_per_partition=1)
+    h = A.compute_dataset_histograms(data, EXT)
+    # Only L0 = 1 and Linf = 1 are offered as candidates.
+    h.l0_contributions_histogram.bins = h.l0_contributions_histogram.bins[:1]
+    h.linf_contributions_histogram.bins = [
+        A.FrequencyBin(1, 2, 24, 24.0, 1.0, 1.0)]
+    result = A.tune(data, params, EXT, epsilon=100.0, delta=1e-6,
+                    public_partitions=["p0", "p1", "p2"], histograms=h)
+    assert result.histograms is h
+    assert result.configurations.size == 1
+    assert result.recommended_max_partitions_contributed == 1
+    assert result.recommended_max_contributions_per_partition == 1
+
+
+def test_tune_variance_warns_on_out_of_range_values(spark):
+    """tune analyzes its own pre-aggregate, which carries only sums; it
+    still warns when raw values leave [min_value, max_value]."""
+    params = AggregateParams(metrics=[Metrics.VARIANCE],
+                             max_partitions_contributed=1,
+                             max_contributions_per_partition=2,
+                             min_value=0.0, max_value=4.0)
+    kw = dict(epsilon=3.0, delta=1e-6, tuned_metric=Metric.VARIANCE,
+              public_partitions=["A"])
+    out_of_range = spark.createDataFrame(
+        [(1, "A", 1.0), (2, "A", 9.0), (2, "A", 2.0)],
+        "uid int, pk string, v double")
+    with pytest.warns(UserWarning, match="assumes values lie in"):
+        A.tune(out_of_range, params, EXT, **kw)
+    in_range = spark.createDataFrame(
+        [(1, "A", 1.0), (2, "A", 4.0), (2, "A", 2.0)],
+        "uid int, pk string, v double")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        result = A.tune(in_range, params, EXT, **kw)
+    assert result.utility_reports[0].metric_errors[0].metric == \
+        Metric.VARIANCE
 
 
 def test_log_binning_large_values(spark):

@@ -60,6 +60,20 @@ def test_dp_count_partial_aggregation_and_shuffles(spark):
     assert P.count_shuffles(out) <= 4
 
 
+def test_preaggregate_single_shuffle(spark):
+    """The analysis pre-aggregate shuffles once, by privacy id: the
+    (pid, pk) aggregate and the per-pid window both run in that
+    partitioning."""
+    from pipelinedp_spark.analysis import preaggregate
+    out = preaggregate(_orders(spark), pds.DataFrameExtractors(
+        "o_custkey", "o_orderpriority", "o_totalprice"))
+    assert P.count_shuffles(out) == 1
+    assert "Exchange hashpartitioning(o_custkey#" in P.explain_str(
+        out, "simple")
+    assert [sorted(c) for c in P.scan_columns(out)] == [
+        ["o_custkey", "o_orderpriority", "o_totalprice"]]
+
+
 def test_broadcast_join_for_query_keys(spark):
     """cosine_topk broadcasts the query side instead of shuffling the
     corpus."""

@@ -8,6 +8,8 @@ import pytest
 
 from pipelinedp_spark.analysis import poisson_binomial as pb
 
+pytestmark = pytest.mark.analysis
+
 
 def test_exact_pmf_binomial_case():
     # all p equal -> plain binomial

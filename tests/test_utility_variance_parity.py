@@ -25,6 +25,8 @@ from pipelinedp_spark.aggregate_params import (AggregateParams, Metrics,
                                                NoiseKind)
 from pipelinedp_spark.dp_engine import DataFrameExtractors
 
+pytestmark = pytest.mark.analysis
+
 EXT = DataFrameExtractors("uid", "pk", "v")
 
 MIN_V, MAX_V = 0.0, 4.0
