@@ -12,7 +12,7 @@ histogram's values are tagged (hist, v) rows of it or of its per-pid /
 per-partition groupBy, unioned, and one groupBy(hist, lower) bins all
 seven; only the binned summary is collected. Sum histograms need a min/max
 pre-pass for their bin width. Measured on the 36-row analysis test table
-(``local[4]``, AQE on): ``compute_dataset_histograms`` runs 8 Spark jobs.
+(``local[4]``, AQE on): ``compute_dataset_histograms`` runs 9 Spark jobs.
 ``parameter_tuning.tune`` bins the pre-aggregate it also analyzes.
 """
 
@@ -29,7 +29,6 @@ from pipelinedp_spark.analysis.pre_aggregation import preaggregate
 from pipelinedp_spark.dp_engine import DataFrameExtractors
 
 NUMBER_OF_SUM_BUCKETS = 10_000
-_FLOAT_TAGS = ("linf_sum", "sum_pp")
 
 
 class HistogramType(enum.Enum):
@@ -124,8 +123,8 @@ def compute_dataset_histograms(df: DataFrame,
     collection). Builds the per-(pid, pk) pre-aggregate once, caches it
     for the call and bins it with
     ``compute_dataset_histograms_on_preaggregated_data``. Measured on the
-    36-row analysis test table (``local[4]``, AQE on): 8 Spark jobs with a
-    value column, 7 without."""
+    36-row analysis test table (``local[4]``, AQE on): 9 Spark jobs with a
+    value column, 8 without."""
     pre = preaggregate(df, extractors, keep_privacy_id=True).cache()
     try:
         return compute_dataset_histograms_on_preaggregated_data(pre,
@@ -151,7 +150,9 @@ def compute_dataset_histograms_on_preaggregated_data(
     pk_cols = list(extractors.partition_key_columns)
     has_value = extractors.value_column is not None
 
-    # ``pre`` is partitioned by pid, so this groupBy needs no shuffle.
+    # ``pre`` is hash-partitioned by pid (its window), so this groupBy adds
+    # no shuffle; for a cached ``pre``, only once the cache is built (the
+    # float-range aggregate below builds it first).
     per_pid = pre.groupBy(pid).agg(F.max("n_partitions").alias("l0"),
                                    F.max("n_contributions").alias("l1"))
     per_pk = pre.groupBy(*pk_cols).agg(
@@ -174,12 +175,11 @@ def compute_dataset_histograms_on_preaggregated_data(
                 float_bins[tag] = (
                     lo, (hi - lo) / NUMBER_OF_SUM_BUCKETS if hi > lo else 1.0)
 
-    def tagged(src: DataFrame, *tag_cols) -> DataFrame:
+    def tagged(src: DataFrame, tag_cols) -> DataFrame:
         """One (hist, v) row per input row and (tag, column) pair."""
         rows = [F.struct(F.lit(tag).alias("hist"),
                          F.col(col).cast("double").alias("v"))
-                for tag, col in tag_cols
-                if tag in float_bins or tag not in _FLOAT_TAGS]
+                for tag, col in tag_cols]
         return src.select(F.explode(F.array(*rows)).alias("t")).select("t.*")
 
     v = F.col("v")
@@ -188,10 +188,16 @@ def compute_dataset_histograms_on_preaggregated_data(
         bin_lower = F.when(F.col("hist") == tag, F.least(
             F.lit(NUMBER_OF_SUM_BUCKETS - 1),
             F.floor((v - F.lit(lo)) / F.lit(width)))).otherwise(bin_lower)
-    union = (tagged(per_pid, ("l0", "l0"), ("l1", "l1"))
-             .unionByName(tagged(pre, ("linf", "count"), ("linf_sum", "sum")))
-             .unionByName(tagged(per_pk, ("count_pp", "count_pp"),
-                                 ("pid_pp", "pid_pp"), ("sum_pp", "sum_pp"))))
+    # A float histogram is binned only when it has a range.
+    pair_tags = [("linf", "count")]
+    pk_tags = [("count_pp", "count_pp"), ("pid_pp", "pid_pp")]
+    if "linf_sum" in float_bins:
+        pair_tags.append(("linf_sum", "sum"))
+    if "sum_pp" in float_bins:
+        pk_tags.append(("sum_pp", "sum_pp"))
+    union = (tagged(per_pid, [("l0", "l0"), ("l1", "l1")])
+             .unionByName(tagged(pre, pair_tags))
+             .unionByName(tagged(per_pk, pk_tags)))
     rows_by_tag: dict = {}
     # A pair whose values are all null has a null sum: no float bin.
     for r in (union.where(v.isNotNull())

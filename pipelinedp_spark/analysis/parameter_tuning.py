@@ -74,15 +74,17 @@ def tune(df: DataFrame,
     (reference: parameter_tuning.py:332-419).
 
     The raw frame is grouped once: the per-(pid, pk) pre-aggregate is
-    cached for the call, binned into the histograms (unless
-    ``histograms`` is given) and analyzed as ``preaggregated`` input.
+    analyzed as ``preaggregated`` input and, unless ``histograms`` is
+    given, cached for the call and binned into the histograms first.
     Measured on the 36-row analysis test table (``local[4]``, AQE on):
-    12 Spark jobs."""
+    13 Spark jobs."""
     want_variance = any(m.metric == Metric.VARIANCE for m in params.metrics)
     pre = preaggregate(df, extractors, keep_privacy_id=True,
-                       include_sum_squares=want_variance).cache()
+                       include_sum_squares=want_variance)
     try:
         if histograms is None:
+            # ``analyze`` reads ``pre`` again: cache it for the call.
+            pre.cache()
             histograms = compute_dataset_histograms_on_preaggregated_data(
                 pre, extractors)
         l0_cands = _candidates_constant_relative_step(

@@ -8,13 +8,15 @@ row per (privacy_id, partition_key) present in the data, carrying
   n_partitions    distinct partitions this privacy id contributed to anywhere
   n_contributions total rows this privacy id contributed anywhere
 
-Spark shape: one shuffle. The raw rows are hash-partitioned by privacy
-id; the groupBy(pid, pk) and the window over pid both run inside that
-partitioning, and so does a later groupBy(pid) of the output (a cached
-output keeps it). The rows cross that shuffle without a map-side partial
-aggregate; grouping first would shuffle twice, by (pid, pk) and then by
-pid, one Spark job each under AQE. The optional partition sampling is
-deterministic (hash-based), mirroring the reference's seeded ValueSampler
+Spark shape: two shuffles. The groupBy(pid, pk) hash-partitions by
+(pid, pk) after a map-side partial aggregate, so the rows of one pair
+cross it as at most one partial row per map task, and a heavy privacy
+id's rows spread over its partition keys. The window over pid then
+hash-partitions the per-pair rows by pid. The output keeps that pid
+partitioning, so a later groupBy(pid) of it adds no third shuffle; nor
+does one of a cached output, once the cache is built. The optional
+partition sampling is deterministic (hash-based), mirroring the
+reference's seeded ValueSampler
 (pipeline_dp/sampling_utils.py:32-51) so analysis runs are reproducible.
 """
 
@@ -52,7 +54,6 @@ def preaggregate(df: DataFrame,
         df = df.filter(
             bucket < F.lit(int(partitions_sampling_prob * _HASH_BUCKETS)))
 
-    df = df.repartition(pid)
     value_expr = (F.sum(F.col(value).cast("double")) if value is not None
                   else F.lit(0.0))
     aggs = [F.count(F.lit(1)).alias("count"), value_expr.alias("sum")]

@@ -5,6 +5,8 @@ These pin the engine's scale-critical physical properties so regressions
 fail tests (the 100 TB posture is a plan property, not a data property).
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -60,18 +62,35 @@ def test_dp_count_partial_aggregation_and_shuffles(spark):
     assert P.count_shuffles(out) <= 4
 
 
-def test_preaggregate_single_shuffle(spark):
-    """The analysis pre-aggregate shuffles once, by privacy id: the
-    (pid, pk) aggregate and the per-pid window both run in that
-    partitioning."""
+def test_preaggregate_shuffles(spark):
+    """The analysis pre-aggregate shuffles twice: by (pid, pk) after a
+    map-side partial aggregate, then the per-pair rows by pid for the
+    per-pid window. A groupBy(pid) of its output adds no shuffle, nor
+    does one of its cached output once the cache is built."""
     from pipelinedp_spark.analysis import preaggregate
     out = preaggregate(_orders(spark), pds.DataFrameExtractors(
-        "o_custkey", "o_orderpriority", "o_totalprice"))
-    assert P.count_shuffles(out) == 1
-    assert "Exchange hashpartitioning(o_custkey#" in P.explain_str(
-        out, "simple")
+        "o_custkey", "o_orderpriority", "o_totalprice"),
+        keep_privacy_id=True)
+    exchanges = re.findall(r"Exchange hashpartitioning\(([^)]*)\)",
+                           P.explain_str(out, "simple"))
+    # Top-down: the window's exchange by pid, then the aggregate's.
+    assert [re.sub(r"#\d+L?|, \d+$", "", e) for e in exchanges] == [
+        "o_custkey", "o_custkey, o_orderpriority"]
+    assert P.count_shuffles(out) == 2
+    assert P.has_partial_aggregation(out)
     assert [sorted(c) for c in P.scan_columns(out)] == [
         ["o_custkey", "o_orderpriority", "o_totalprice"]]
+    assert P.count_shuffles(
+        out.groupBy("o_custkey").agg(F.max("n_partitions"))) == 2
+    cached = out.cache()
+    try:
+        cached.count()
+        per_pid = cached.groupBy("o_custkey").agg(F.max("n_partitions"))
+        above_cache = P.explain_str(per_pid, "simple").split(
+            "InMemoryRelation")[0]
+        assert "Exchange" not in above_cache
+    finally:
+        cached.unpersist()
 
 
 def test_broadcast_join_for_query_keys(spark):
