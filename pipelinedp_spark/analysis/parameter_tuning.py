@@ -22,7 +22,8 @@ from pipelinedp_spark.analysis.pre_aggregation import preaggregate
 from pipelinedp_spark.analysis.utility_analysis import (
     MultiParameterConfiguration, UtilityAnalysisEngine, UtilityReport,
     warn_if_values_out_of_range)
-from pipelinedp_spark.dp_engine import DataFrameExtractors
+from pipelinedp_spark.dp_engine import (DataFrameExtractors,
+                                        drop_non_public_partitions)
 
 MAX_CANDIDATES = 100
 
@@ -76,9 +77,15 @@ def tune(df: DataFrame,
     The raw frame is grouped once: the per-(pid, pk) pre-aggregate is
     analyzed as ``preaggregated`` input and, unless ``histograms`` is
     given, cached for the call and binned into the histograms first.
+    With ``public_partitions`` the rows of unlisted keys are dropped
+    first, as the engine drops them before bounding, so the histograms
+    and the analysis see the public keys only.
     Measured on the 36-row analysis test table (``local[4]``, AQE on):
     13 Spark jobs."""
     want_variance = any(m.metric == Metric.VARIANCE for m in params.metrics)
+    if public_partitions is not None:
+        df, _ = drop_non_public_partitions(
+            df, extractors.partition_key_columns, public_partitions)
     pre = preaggregate(df, extractors, keep_privacy_id=True,
                        include_sum_squares=want_variance)
     try:
@@ -98,8 +105,7 @@ def tune(df: DataFrame,
         conf = MultiParameterConfiguration(
             max_partitions_contributed=[g[0] for g in grid],
             max_contributions_per_partition=[g[1] for g in grid])
-        if want_variance:
-            warn_if_values_out_of_range(df, params, extractors)
+        warn_if_values_out_of_range(df, params, extractors)
         reports = UtilityAnalysisEngine(epsilon, delta).analyze(
             pre, params, extractors, conf, public_partitions,
             preaggregated=True)

@@ -1,17 +1,18 @@
-"""Poisson-binomial machinery for partition-selection keep-probability.
+"""Poisson-binomial machinery for the partition keep probability.
 
-Reference semantics: analysis/poisson_binomial.py:26-83 — the number of
+Reference semantics: analysis/poisson_binomial.py:26-83 -- the number of
 privacy ids that survive cross-partition L0 sampling in a partition is
 Poisson-binomial (each id kept independently with its own probability
-p_i = min(1, l0 / n_partitions_i)); the partition's keep probability under
-Laplace thresholding is the expectation of the thresholding tail over that
-distribution, NOT the tail at the expected count (the Laplace-CDF-at-mean
-shortcut is biased exactly for small partitions, where selection matters).
+p_i = min(1, l0 / n_partitions_i)); the partition's keep probability is
+the expectation of the keep rule's P(keep | n) over that distribution,
+NOT P(keep | expected count) (that shortcut is biased exactly for small
+partitions, where selection matters). The keep rule comes from the engine
+(``dp_engine.KeepRule.keep_probabilities``) as a vector indexed by n.
 
 Two PMFs, as in the reference: an exact O(n^2) probability-generating-
 function convolution for small n / tests, and the refined normal
 approximation (normal CDF + skewness correction, Hong 2013 §3.3) from the
-first three moments — which is what the Spark path uses, because the
+first three moments -- which is what the Spark path uses, because the
 moments are plain per-partition SUM aggregates.
 """
 
@@ -50,23 +51,19 @@ def _refined_normal_cdf(x: np.ndarray, skewness: float) -> np.ndarray:
     return np.clip(cdf + skewness * (1.0 - x * x) * phi_pdf / 6.0, 0.0, 1.0)
 
 
-def _laplace_tail(k: np.ndarray, threshold: float, scale: float) -> np.ndarray:
-    """P(k + Laplace(scale) >= threshold), vectorized over k."""
-    d = (np.asarray(k, dtype=float) - threshold) / scale
-    return np.where(d >= 0, 1.0 - 0.5 * np.exp(-d), 0.5 * np.exp(d))
+def _at(keep: np.ndarray, k) -> np.ndarray:
+    """keep[k], the last entry holding for larger k."""
+    return keep[np.minimum(np.asarray(k, dtype=np.int64), len(keep) - 1)]
 
 
 def keep_probability(mean: float, var: float, m3: float, n: int,
-                     scale: float, threshold: float) -> float:
-    """E_{N ~ PoissonBinomial}[ P(N + Laplace(scale) >= threshold) ] using
-    the refined-normal PMF from (mean, var, m3). `n` caps the support."""
-    if scale <= 0:
-        # zero-noise / degenerate: deterministic threshold on the mean
-        return 1.0 if mean >= threshold else 0.0
+                     keep: np.ndarray) -> float:
+    """E_{N ~ PoissonBinomial}[ keep[N] ] using the refined-normal PMF
+    from (mean, var, m3); ``keep[k]`` = P(keep | k privacy ids). `n` caps
+    the support."""
     sigma = math.sqrt(max(var, 0.0))
     if sigma == 0.0:
-        return float(_laplace_tail(np.array([round(mean)]), threshold,
-                                   scale)[0])
+        return float(_at(keep, round(mean)))
     skew = m3 / sigma ** 3
     start = max(0, int(math.floor(mean - 8.0 * sigma)))
     end = min(int(n), int(round(mean + 8.0 * sigma)))
@@ -79,17 +76,13 @@ def keep_probability(mean: float, var: float, m3: float, n: int,
     pmf = np.diff(cdf)
     total = pmf.sum()
     if total <= 0:
-        return float(_laplace_tail(np.array([round(mean)]), threshold,
-                                   scale)[0])
+        return float(_at(keep, round(mean)))
     pmf /= total
-    return float(np.dot(pmf, _laplace_tail(ks, threshold, scale)))
+    return float(np.dot(pmf, _at(keep, ks)))
 
 
-def keep_probability_exact(probabilities: Sequence[float], scale: float,
-                           threshold: float) -> float:
+def keep_probability_exact(probabilities: Sequence[float],
+                           keep: np.ndarray) -> float:
     """Brute-force expectation with the exact PMF (tests / small n)."""
     pmf = compute_pmf(probabilities)
-    ks = np.arange(len(pmf))
-    if scale <= 0:
-        return float(np.dot(pmf, (ks >= threshold).astype(float)))
-    return float(np.dot(pmf, _laplace_tail(ks, threshold, scale)))
+    return float(np.dot(pmf, _at(keep, np.arange(len(pmf)))))

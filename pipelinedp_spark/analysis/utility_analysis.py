@@ -1,9 +1,14 @@
-"""Multi-configuration utility analysis: expected DP error per parameter set.
+"""Multi-configuration utility analysis: the expected error of a DP
+aggregation under each candidate contribution bound.
 
 Reference semantics: analysis/utility_analysis_engine.py:31-201 +
 analysis/per_partition_combiners.py:37-476 + analysis/cross_partition_
-combiners.py:25-347 — instead of running noisy aggregations, compute the
-*closed-form expected error* of each candidate configuration:
+combiners.py:25-347. There the analysis engine is a DPEngine with error
+combiners; here each configuration (the caller's AggregateParams with the
+grid's bounds) takes its budget split from ``DPEngine.request_budgets``,
+its noise from ``dp_engine.noise_draws`` and its partition handling from
+``dp_engine.partition_keep_rule``, so it prices the mechanisms the engine
+runs. The error is closed-form:
 
 per (privacy_id, partition) with true (count, sum, n_partitions):
   keep_prob p      = min(1, l0 / n_partitions)     [L0 sampling model]
@@ -12,44 +17,64 @@ per (privacy_id, partition) with true (count, sum, n_partitions):
   variance contribution V = p (1-p) clipped^2      [Bernoulli keep]
 per (config, partition):
   bias = sum E, var = sum V + noise_var
-  keep probability under private partition selection: the expectation of
-  the thresholding tail over the Poisson-binomial distribution of the
-  surviving privacy-id count (refined-normal PMF from three moment sums;
-  matches the reference's analysis/poisson_binomial.py machinery)
+  p_keep: 1 for public partitions; else the expectation of the keep
+  rule's P(keep | n) over the Poisson-binomial count n of surviving
+  privacy ids (analysis/poisson_binomial.py)
   rmse^2 = p_keep * (bias^2 + var) + (1 - p_keep) * true^2
-per config: RMSE = sqrt(mean over partitions of rmse^2).
+per config: RMSE = sqrt(mean over partitions of rmse^2); a public
+partition without rows has only noise error.
 
-Beyond the reference's COUNT / PRIVACY_ID_COUNT / SUM / MEAN, this engine
-also analyzes VARIANCE: the delta-method error of Q/C - (S/C)^2 over the
-three mechanisms (count, normalized sum, normalized sum of squares),
-carrying the FULL sampling covariance of (C, S, Q) — the Bernoulli keep
-event is shared per privacy id — so the linearized error moments are
-exact under the bounding model (brute-force-enumeration parity:
-tests/test_utility_variance_parity.py).
+SUM: with sum bounds (the grid's, else the params') each per-(pid, pk) sum
+is clipped to them; with value bounds Linf bounding is uniform thinning
+(the per-(pid, pk) sum scaled by clipped / count).
 
-Everything runs in ONE Spark pass: the per-(pid, pk) pre-aggregate is
-cross-joined with the (broadcast, tiny) config grid, then two groupBys
-(config, pk) -> (config). Only per-config summaries are collected.
+MEAN and VARIANCE use the engine's normalized moments: C (count), S (sum
+of values minus the midpoint of [min_value, max_value]) and, for
+VARIANCE, Q (sum of their squares); mean = mid + S/C, variance = Q/C -
+(S/C)^2. Their error is the delta method around the true moments with
+the FULL sampling covariance of (C, S, Q) -- the keep event is shared per
+privacy id -- so the linearized error moments are exact under the
+bounding model (tests/test_utility_variance_parity.py). They average over
+the partitions with rows.
+
+One Spark pass: the per-(pid, pk) pre-aggregate is cross-joined with the
+(broadcast, tiny) config grid, then groupBy (config, pk) -> (config). Only
+per-config sums are collected; the noise terms, constant per
+configuration, are added on the driver.
 """
 
 from __future__ import annotations
 
 import dataclasses
+import functools
+import itertools
 import math
+import operator
 import warnings
-from typing import List, Optional, Sequence
+from typing import Dict, List, Optional, Sequence
 
+import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pipelinedp_spark import dp_computations as dp
-from pipelinedp_spark.aggregate_params import (AggregateParams, Metric,
-                                               NoiseKind,
-                                               PartitionSelectionStrategy)
+from pipelinedp_spark.aggregate_params import AggregateParams, Metric
+from pipelinedp_spark.analysis import poisson_binomial as pb
 from pipelinedp_spark.analysis.pre_aggregation import preaggregate
-from pipelinedp_spark.dp_engine import DataFrameExtractors
+from pipelinedp_spark.budget_accounting import NaiveBudgetAccountant
+from pipelinedp_spark.dp_engine import (DataFrameExtractors, DPEngine,
+                                        NoiseDraw,
+                                        drop_non_public_partitions,
+                                        noise_draws, partition_keep_rule)
+
+# Per-(config, key) column prefixes of the metrics with their own noise
+# draw, and the moments' draws each MEAN / VARIANCE estimate reads.
+_ADDITIVE = {Metric.COUNT: "count", Metric.PRIVACY_ID_COUNT: "pid",
+             Metric.SUM: "sum"}
+_MOMENTS = {Metric.MEAN: ("count", "norm_sum"),
+            Metric.VARIANCE: ("count", "norm_sum", "norm_sq")}
+_VALUE_METRICS = {Metric.SUM, Metric.MEAN, Metric.VARIANCE}
 
 
 @dataclasses.dataclass
@@ -96,43 +121,143 @@ class UtilityReport:
 
 def warn_if_values_out_of_range(df: DataFrame, params: AggregateParams,
                                 extractors: DataFrameExtractors) -> None:
-    """Range check for the VARIANCE in-range assumption (see
-    ``UtilityAnalysisEngine``): one tiny agg job on the raw frame, run
-    before the analysis, that warns when values leave
+    """Range check for the value metrics' in-range assumption (see
+    ``UtilityAnalysisEngine``): when ``params`` has SUM, MEAN or VARIANCE under
+    value bounds, one tiny agg job on the raw frame warns if values leave
     ``[min_value, max_value]``."""
     if extractors.value_column is None or params.min_value is None \
-            or params.max_value is None:
+            or not _VALUE_METRICS & set(params.metric_kinds):
         return
     v = F.col(extractors.value_column).cast("double")
     r = df.agg(F.min(v).alias("lo"), F.max(v).alias("hi")).collect()[0]
     if r["lo"] is not None and (r["lo"] < params.min_value
                                 or r["hi"] > params.max_value):
         warnings.warn(
-            "VARIANCE utility analysis assumes values lie in "
+            "utility analysis assumes values lie in "
             f"[{params.min_value}, {params.max_value}] but the "
             f"data spans [{r['lo']}, {r['hi']}]; per-value "
-            "clipping is not modeled, so reported VARIANCE "
+            "clipping is not modeled, so reported SUM, MEAN and VARIANCE "
             "rmse/bias will diverge from the actual DP "
             "mechanism for out-of-range values", UserWarning)
+
+
+@dataclasses.dataclass
+class _PricedConfiguration:
+    """One configuration's params, the noise the engine's release of them
+    draws, and its keep vector P(keep | n) (None: every partition is
+    kept)."""
+
+    params: AggregateParams
+    draws: Dict[str, NoiseDraw]
+    keep: Optional[np.ndarray]
+
+    def noise_std(self, metric: Metric) -> float:
+        """The std of the noise in the released metric; MEAN and VARIANCE
+        report their normalized-sum and sum-of-squares draws."""
+        d = self.draws
+        if metric == Metric.SUM and "sum" not in d:
+            # mid * count + norm_sum, two independent draws.
+            mid = (self.params.min_value + self.params.max_value) / 2.0
+            return math.hypot(mid * d["count"].std, d["norm_sum"].std)
+        return d[{Metric.COUNT: "count", Metric.PRIVACY_ID_COUNT:
+                  "privacy_id_count", Metric.SUM: "sum", Metric.MEAN:
+                  "norm_sum", Metric.VARIANCE: "norm_sq"}[metric]].std
+
+    def report(self, i: int, metrics: List[Metric], sums: dict,
+               n_listed: int) -> UtilityReport:
+        """Configuration ``i``'s report from the per-configuration sums of
+        ``UtilityAnalysisEngine.analyze`` (empty when no row reached it)
+        and the number of listed public keys."""
+
+        def get(key: str) -> float:
+            return sums.get(key) or 0.0
+
+        def dropped(key: str) -> float:
+            total = get(f"{key}_total")
+            return max(get(f"{key}_dropped") / total, 0.0) if total else 0.0
+
+        # A listed key without rows has n = 0 and only noise error.
+        n_rows = int(get("n_partitions"))
+        n_empty = max(n_listed - n_rows, 0)
+        kept = get("partitions_kept") + n_empty * (
+            1.0 if self.keep is None else float(self.keep[0]))
+        errors = []
+        for m in metrics:
+            std = self.noise_std(m)
+            if m in _ADDITIVE:
+                key = _ADDITIVE[m]
+                sq = get(f"{key}_sq") + std * std * kept
+                n, ratio_dropped = n_rows + n_empty, dropped(key)
+            else:
+                # Averaged over the partitions with rows: an empty
+                # partition has no true mean or variance.
+                key = m.value
+                sq = get(f"{key}_sq") + sum(
+                    get(f"{key}_noise_{k}") * self.draws[k].std ** 2
+                    for k in _MOMENTS[m])
+                n, ratio_dropped = n_rows, dropped("count")
+            errors.append(MetricUtility(
+                metric=m,
+                noise_std=std,
+                rmse=math.sqrt(max(sq / n, 0.0)) if n else math.nan,
+                expected_abs_bias=get(f"{key}_abs_bias") / n if n
+                else math.nan,
+                ratio_data_dropped=ratio_dropped))
+        return UtilityReport(configuration_index=i,
+                             partitions_kept_expected=kept,
+                             partitions_total=n_rows + n_empty,
+                             metric_errors=errors)
 
 
 class UtilityAnalysisEngine:
     """Reference: analysis/utility_analysis_engine.py:31-201.
 
-    VARIANCE caveat: variance utility analysis assumes raw values already
-    lie within ``[min_value, max_value]``. Per-value clipping is NOT
-    modeled (``preaggregate`` carries only per-(pid, pk) ``sum`` /
-    ``sum_sq``, so individual out-of-range values can't be clipped after
-    the fact). For data outside the bounds the reported rmse/bias for
-    VARIANCE diverge from the actual DP variance mechanism, which clips
-    each contribution; ``analyze`` emits a ``UserWarning`` when it can
-    detect this (non-preaggregated input whose value range exceeds the
-    configured bounds), and so does ``parameter_tuning.tune``, which
-    checks its raw input before analyzing its own pre-aggregate."""
+    SUM under value bounds, MEAN and VARIANCE assume raw values lie within
+    ``[min_value, max_value]``: ``preaggregate`` carries only per-(pid, pk)
+    ``sum`` / ``sum_sq``, so per-value clipping is not modeled, and their
+    rmse/bias diverge from the mechanism for out-of-range data.
+    ``analyze`` warns when it can see this (raw input), and so does
+    ``parameter_tuning.tune``."""
 
     def __init__(self, epsilon: float, delta: float):
         self._eps = epsilon
         self._delta = delta
+
+    def _price(self, params: AggregateParams,
+               configurations: MultiParameterConfiguration, i: int,
+               public: bool) -> _PricedConfiguration:
+        """Configuration ``i`` as the engine would run it: the params
+        (AggregateParams validates them), their budget on a fresh
+        accountant, noise draws and keep vector."""
+        bounds = {}
+        sums = (configurations.min_sum_per_partition,
+                configurations.max_sum_per_partition)
+        if any(sums):
+            # The grid's sum bounds replace the value bounds.
+            lo, hi = (b[i] if b else None for b in sums)
+            bounds = dict(min_value=None, max_value=None,
+                          min_sum_per_partition=lo, max_sum_per_partition=hi)
+        params = dataclasses.replace(
+            params, max_contributions=None,
+            max_partitions_contributed=(
+                configurations.max_partitions_contributed[i]),
+            max_contributions_per_partition=(
+                configurations.max_contributions_per_partition[i]),
+            **bounds)
+        accountant = NaiveBudgetAccountant(self._eps, self._delta)
+        try:
+            specs = DPEngine(accountant).request_budgets(params, public, [])
+        except AssertionError as e:
+            # The accountant refuses delta-spending mechanisms (partition
+            # selection, thresholding, Gaussian noise) when delta is 0.
+            raise ValueError(f"utility analysis: {e}") from e
+        accountant.compute_budgets()
+        keep_spec = (specs["privacy_id_count"]
+                     if params.post_aggregation_thresholding
+                     else specs.get("partition_selection"))
+        keep = (None if keep_spec is None else
+                partition_keep_rule(keep_spec, params).keep_probabilities())
+        return _PricedConfiguration(params, noise_draws(params, specs), keep)
 
     def analyze(self,
                 df: DataFrame,
@@ -142,324 +267,167 @@ class UtilityAnalysisEngine:
                 public_partitions: Optional[Sequence] = None,
                 preaggregated: bool = False) -> List[UtilityReport]:
         """``preaggregated=True`` accepts input already shaped as the
-        preaggregate() output — partition cols + (count, sum, n_partitions,
-        n_contributions) — the reference's PreAggregateExtractors path
-        (reference: pipeline_dp/data_extractors.py:47-66)."""
+        preaggregate() output -- partition cols + (count, sum, n_partitions,
+        n_contributions) -- the reference's PreAggregateExtractors path
+        (reference: pipeline_dp/data_extractors.py:47-66). With
+        ``public_partitions`` the rows of unlisted keys are dropped: from
+        raw input before pre-aggregation, as the engine drops them before
+        bounding, so ``n_partitions`` counts public keys only.
+        Preaggregated input must have been pre-aggregated from rows
+        restricted that way (``tune`` does it).
+
+        Raises ValueError, before any Spark job, for a configuration the
+        engine refuses: one AggregateParams rejects, or a mechanism that
+        needs delta (private partitions, thresholding, Gaussian noise)
+        when delta is 0."""
         metrics = [m.metric for m in params.metrics
-                   if m.metric in (Metric.COUNT, Metric.PRIVACY_ID_COUNT,
-                                   Metric.SUM, Metric.MEAN, Metric.VARIANCE)]
+                   if m.metric in _ADDITIVE or m.metric in _MOMENTS]
         if not metrics:
             raise ValueError("utility analysis supports COUNT / "
                              "PRIVACY_ID_COUNT / SUM / MEAN / VARIANCE")
-        if Metric.MEAN in metrics and not configurations.max_sum_per_partition:
-            raise ValueError("MEAN analysis needs min/max_sum_per_partition "
-                             "in the configuration grid (the sum clip)")
+        public = public_partitions is not None
+        priced = [self._price(params, configurations, i, public)
+                  for i in range(configurations.size)]
+        if not priced:
+            return []
+        first = priced[0].params
         want_variance = Metric.VARIANCE in metrics
-        if want_variance and (params.min_value is None
-                              or params.max_value is None):
-            raise ValueError("VARIANCE analysis needs params.min_value / "
-                             "max_value (the per-contribution value bounds)")
-        spark = df.sparkSession
         pk_cols = list(extractors.partition_key_columns)
+        if public:
+            df, _ = drop_non_public_partitions(df, pk_cols, public_partitions)
         if preaggregated:
-            required = {"count", "sum", "n_partitions"}
-            if want_variance:
-                required = required | {"sum_sq"}
-            missing = required - set(df.columns)
+            missing = ({"count", "sum", "n_partitions"}
+                       | ({"sum_sq"} if want_variance else set())) - set(
+                           df.columns)
             if missing:
                 raise ValueError(
                     f"preaggregated input missing columns: {sorted(missing)}")
             pre = df
         else:
-            if want_variance:
-                warn_if_values_out_of_range(df, params, extractors)
+            warn_if_values_out_of_range(df, first, extractors)
             pre = preaggregate(df, extractors, keep_privacy_id=False,
                                include_sum_squares=want_variance)
 
-        # Budget: naive split across requested metrics (+ selection).
-        n_mech = len(metrics) + (0 if public_partitions is not None else 1)
-        eps_m = self._eps / n_mech
-        delta_m = self._delta / n_mech if self._delta else 0.0
-
-        conf_rows = []
-        for i in range(configurations.size):
-            l0 = configurations.max_partitions_contributed[i]
-            linf = configurations.max_contributions_per_partition[i]
-            min_s = (configurations.min_sum_per_partition[i]
-                     if configurations.min_sum_per_partition else None)
-            max_s = (configurations.max_sum_per_partition[i]
-                     if configurations.max_sum_per_partition else None)
-            noise = {}
-            for m in metrics:
-                if m == Metric.COUNT:
-                    sens = dp.count_sensitivities(l0, linf)
-                elif m == Metric.PRIVACY_ID_COUNT:
-                    sens = dp.privacy_id_count_sensitivities(l0)
-                elif m == Metric.MEAN:
-                    # mean = noisy sum / noisy count with its eps_m split
-                    # half/half between the two internal mechanisms; the
-                    # two stds combine per partition via the delta method.
-                    csens = dp.count_sensitivities(l0, linf)
-                    ssens = dp.sum_sensitivities(l0, linf, None, None,
-                                                 min_s or 0.0, max_s or 1.0)
-                    noise["mean_count"] = dp.noise_std(
-                        params.noise_kind, eps_m / 2, delta_m / 2, csens)
-                    noise["mean_sum"] = dp.noise_std(
-                        params.noise_kind, eps_m / 2, delta_m / 2, ssens)
-                    continue
-                elif m == Metric.VARIANCE:
-                    # variance = Q/C - (S/C)^2 over normalized values in
-                    # [-h, h]: three mechanisms (count, normalized sum,
-                    # normalized sum of squares), eps/delta split in 3
-                    # (mirrors dp.variance_scales / reference
-                    # pipeline_dp/dp_computations.py:284-312).
-                    h = (params.max_value - params.min_value) / 2.0
-                    noise["var_count"] = dp.noise_std(
-                        params.noise_kind, eps_m / 3, delta_m / 3,
-                        dp.Sensitivities(l0=l0, linf=float(linf)))
-                    noise["var_sum"] = dp.noise_std(
-                        params.noise_kind, eps_m / 3, delta_m / 3,
-                        dp.Sensitivities(l0=l0, linf=linf * h)) \
-                        if h > 0 else 0.0
-                    noise["var_sq"] = dp.noise_std(
-                        params.noise_kind, eps_m / 3, delta_m / 3,
-                        dp.Sensitivities(l0=l0, linf=linf * h * h)) \
-                        if h > 0 else 0.0
-                    continue
-                else:
-                    sens = dp.sum_sensitivities(l0, linf, None, None,
-                                                min_s or 0.0, max_s or 1.0)
-                noise[m.value] = dp.noise_std(params.noise_kind, eps_m,
-                                              delta_m, sens)
-            if public_partitions is None:
-                scale, threshold = dp.laplace_thresholding(eps_m,
-                                                           delta_m or 1e-10,
-                                                           l0)
-            else:
-                scale, threshold = 0.0, 0.0
-            conf_rows.append((i, l0, linf, min_s, max_s,
-                              noise.get("count", 0.0),
-                              noise.get("privacy_id_count", 0.0),
-                              noise.get("sum", 0.0),
-                              noise.get("mean_count", 0.0),
-                              noise.get("mean_sum", 0.0),
-                              noise.get("var_count", 0.0),
-                              noise.get("var_sum", 0.0),
-                              noise.get("var_sq", 0.0),
-                              scale, threshold))
-        confs = spark.createDataFrame(
-            conf_rows,
-            "conf int, l0 int, linf int, min_s double, max_s double, "
-            "count_std double, pid_std double, sum_std double, "
-            "mcount_std double, msum_std double, "
-            "vcount_std double, vsum_std double, vsq_std double, "
-            "sel_scale double, sel_threshold double")
-
+        confs = df.sparkSession.createDataFrame(
+            [(i, c.params.max_partitions_contributed,
+              c.params.max_contributions_per_partition,
+              c.params.min_sum_per_partition, c.params.max_sum_per_partition)
+             for i, c in enumerate(priced)],
+            "conf int, l0 int, linf int, min_s double, max_s double")
         j = pre.crossJoin(F.broadcast(confs))
         p = F.least(F.lit(1.0), F.col("l0") / F.col("n_partitions"))
+        pq = p * (1 - p)
+        cnt = F.col("count").cast("double")
         clipped_cnt = F.least(F.col("count"), F.col("linf").cast("long")) \
             .cast("double")
-        cnt = F.col("count").cast("double")
+        ratio = clipped_cnt / cnt
         exprs = [
-            F.count(F.lit(1)).alias("true_pids"),
-            F.sum(p).alias("exp_pids"),
-            F.sum(cnt).alias("true_count"),
-            F.sum(p * clipped_cnt - cnt).alias("count_bias"),
-            F.sum(p * (1 - p) * clipped_cnt * clipped_cnt)
-            .alias("count_var"),
+            F.count(F.lit(1)).alias("pid_true"),
+            F.sum(p).alias("pid_mean"),
+            F.sum(pq).alias("pid_var"),
+            F.sum(pq * (1 - 2 * p)).alias("pid_m3"),
             F.sum(p - 1).alias("pid_bias"),
-            F.sum(p * (1 - p)).alias("pid_var"),
-            F.sum(p * (1 - p) * (1 - 2 * p)).alias("pid_m3"),
-            F.first("count_std").alias("count_std"),
-            F.first("pid_std").alias("pid_std"),
-            F.first("sum_std").alias("sum_std"),
-            F.first("mcount_std").alias("mcount_std"),
-            F.first("msum_std").alias("msum_std"),
-            F.first("sel_scale").alias("sel_scale"),
-            F.first("sel_threshold").alias("sel_threshold"),
+            F.sum(cnt).alias("count_true"),
+            F.sum(p * clipped_cnt - cnt).alias("count_bias"),
+            F.sum(pq * clipped_cnt * clipped_cnt).alias("count_var"),
         ]
-        if Metric.SUM in metrics or Metric.MEAN in metrics:
+        if Metric.SUM in metrics:
             s = F.col("sum")
-            clipped_sum = F.greatest(F.least(s, F.col("max_s")),
-                                     F.col("min_s"))
+            clipped_sum = (
+                F.greatest(F.least(s, F.col("max_s")), F.col("min_s"))
+                if first.min_sum_per_partition is not None else s * ratio)
             exprs += [
-                F.sum(s).alias("true_sum"),
+                F.sum(s).alias("sum_true"),
                 F.sum(p * clipped_sum - s).alias("sum_bias"),
-                F.sum(p * (1 - p) * clipped_sum * clipped_sum)
-                .alias("sum_var"),
+                F.sum(pq * clipped_sum * clipped_sum).alias("sum_var"),
             ]
-        if want_variance:
-            # Normalized per-(pid, pk) moments around mid (values assumed
-            # within [min_value, max_value]; per-value clipping is not
-            # modeled — preaggregate only carries sums). Linf bounding is
-            # modeled as uniform thinning: keeping clipped/count of the
-            # rows scales each moment by that ratio.
-            mid = (params.min_value + params.max_value) / 2.0
-            vs = F.col("sum") - cnt * F.lit(mid)
-            vq = (F.col("sum_sq") - 2 * F.lit(mid) * F.col("sum")
-                  + cnt * F.lit(mid * mid))
-            ratio = clipped_cnt / cnt
-            vs_c, vq_c = vs * ratio, vq * ratio
-            pq = p * (1 - p)
-            exprs += [
-                F.sum(vs).alias("vr_true_s"),
-                F.sum(vq).alias("vr_true_q"),
-                F.sum(p * vs_c - vs).alias("vr_bias_s"),
-                F.sum(p * vq_c - vq).alias("vr_bias_q"),
-                F.sum(pq * vs_c * vs_c).alias("vr_var_s"),
-                F.sum(pq * vq_c * vq_c).alias("vr_var_q"),
-                F.sum(pq * clipped_cnt * vs_c).alias("vr_cov_cs"),
-                F.sum(pq * clipped_cnt * vq_c).alias("vr_cov_cq"),
-                F.sum(pq * vs_c * vq_c).alias("vr_cov_sq"),
-                F.first("vcount_std").alias("vcount_std"),
-                F.first("vsum_std").alias("vsum_std"),
-                F.first("vsq_std").alias("vsq_std"),
-            ]
+        moments = [m for m in metrics if m in _MOMENTS]
+        if moments:
+            # Normalized per-(pid, pk) moments around mid; Linf bounding
+            # is uniform thinning: keeping clipped/count of the rows
+            # scales each moment by that ratio.
+            mid = (first.min_value + first.max_value) / 2.0
+            raw = {"norm_sum": F.col("sum") - cnt * F.lit(mid)}
+            if want_variance:
+                raw["norm_sq"] = (F.col("sum_sq")
+                                  - 2 * F.lit(mid) * F.col("sum")
+                                  + cnt * F.lit(mid * mid))
+            thinned = {"count": clipped_cnt,
+                       **{k: v * ratio for k, v in raw.items()}}
+            for k, v in raw.items():
+                exprs += [F.sum(v).alias(f"{k}_true"),
+                          F.sum(p * thinned[k] - v).alias(f"{k}_bias"),
+                          F.sum(pq * thinned[k] * thinned[k])
+                          .alias(f"{k}_var")]
+            exprs += [F.sum(pq * thinned[a] * thinned[b]).alias(f"cov_{a}_{b}")
+                      for a, b in itertools.combinations(thinned, 2)]
         per_pk = j.groupBy("conf", *pk_cols).agg(*exprs)
 
-        # Keep probability under Laplace thresholding: expectation of the
-        # thresholding tail over the Poisson-binomial count of surviving
-        # privacy ids (refined-normal PMF from the three per-partition
-        # moment sums; reference: analysis/poisson_binomial.py:26-83).
-        if public_partitions is None:
-            from pipelinedp_spark.analysis import poisson_binomial as pb
+        if priced[0].keep is not None:
+            keep = {i: c.keep for i, c in enumerate(priced)}
 
             @F.pandas_udf("double")
-            def _p_keep(mean: pd.Series, var: pd.Series, m3: pd.Series,
-                        n: pd.Series, scale: pd.Series,
-                        threshold: pd.Series) -> pd.Series:
+            def _p_keep(conf: pd.Series, mean: pd.Series, var: pd.Series,
+                        m3: pd.Series, n: pd.Series) -> pd.Series:
                 return pd.Series([
                     pb.keep_probability(mean.iat[i], var.iat[i], m3.iat[i],
-                                        int(n.iat[i]), scale.iat[i],
-                                        threshold.iat[i])
-                    for i in range(len(mean))])
+                                        int(n.iat[i]), keep[conf.iat[i]])
+                    for i in range(len(conf))])
 
-            p_keep = _p_keep(F.col("exp_pids"), F.col("pid_var"),
-                             F.col("pid_m3"), F.col("true_pids"),
-                             F.col("sel_scale"), F.col("sel_threshold"))
+            p_keep = _p_keep(F.col("conf"), F.col("pid_mean"),
+                             F.col("pid_var"), F.col("pid_m3"),
+                             F.col("pid_true"))
         else:
             p_keep = F.lit(1.0)
-        per_pk = per_pk.withColumn("p_keep", p_keep)
+        kept = F.col("p_keep")
 
-        def rmse2(bias, var, std, true):
-            kept = F.col("p_keep")
-            in_err = bias * bias + var + F.lit(1.0) * std * std
-            return kept * in_err + (1 - kept) * true * true
+        def squared_error(bias: Column, var: Column, true: Column) -> Column:
+            """Expected squared error of a partition, noise left out."""
+            return kept * (bias * bias + var) + (1 - kept) * true * true
 
-        agg_exprs = [
-            F.count(F.lit(1)).alias("n_partitions"),
-            F.sum("p_keep").alias("partitions_kept"),
-            F.avg(rmse2(F.col("count_bias"), F.col("count_var"),
-                        F.col("count_std"), F.col("true_count")))
-            .alias("count_rmse2"),
-            F.avg(F.abs(F.col("count_bias"))).alias("count_abs_bias"),
-            (F.sum(-F.col("count_bias")) / F.sum("true_count"))
-            .alias("count_dropped"),
-            F.avg(rmse2(F.col("pid_bias"), F.col("pid_var"),
-                        F.col("pid_std"), F.col("true_pids")))
-            .alias("pid_rmse2"),
-            F.avg(F.abs(F.col("pid_bias"))).alias("pid_abs_bias"),
-            (F.sum(-F.col("pid_bias")) / F.sum("true_pids"))
-            .alias("pid_dropped"),
-        ]
-        if Metric.SUM in metrics or Metric.MEAN in metrics:
-            agg_exprs += [
-                F.avg(rmse2(F.col("sum_bias"), F.col("sum_var"),
-                            F.col("sum_std"), F.col("true_sum")))
-                .alias("sum_rmse2"),
-                F.avg(F.abs(F.col("sum_bias"))).alias("sum_abs_bias"),
-                (F.sum(-F.col("sum_bias")) /
-                 F.sum(F.abs(F.col("true_sum")))).alias("sum_dropped"),
-            ]
-        if want_variance:
-            # Delta method around the true normalized (C, S, Q):
-            # variance = Q/C - (S/C)^2, with gradient
-            #   fC = -Q/C^2 + 2 S^2/C^3,  fS = -2 S/C^2,  fQ = 1/C.
-            # Unlike the MEAN path, the full sampling covariance of
-            # (C, S, Q) is carried — the Bernoulli keep event is shared
-            # per privacy id, so Cov(X, Y) = sum_i p(1-p) x_i y_i — which
-            # makes the linearized error moments EXACT under the
-            # keep/thinning model (brute-force parity:
-            # tests/test_utility_variance_parity.py).
-            C = F.col("true_count").cast("double")
-            S, Q = F.col("vr_true_s"), F.col("vr_true_q")
-            f_true = Q / C - (S / C) * (S / C)
-            fC = -Q / (C * C) + 2 * S * S / (C * C * C)
-            fS = -2 * S / (C * C)
-            fQ = 1 / C
-            v_bias = (fC * F.col("count_bias") + fS * F.col("vr_bias_s")
-                      + fQ * F.col("vr_bias_q"))
-            v_var = (fC * fC * (F.col("count_var")
-                                + F.col("vcount_std") * F.col("vcount_std"))
-                     + fS * fS * (F.col("vr_var_s")
-                                  + F.col("vsum_std") * F.col("vsum_std"))
-                     + fQ * fQ * (F.col("vr_var_q")
-                                  + F.col("vsq_std") * F.col("vsq_std"))
-                     + 2 * fC * fS * F.col("vr_cov_cs")
-                     + 2 * fC * fQ * F.col("vr_cov_cq")
-                     + 2 * fS * fQ * F.col("vr_cov_sq"))
-            kept = F.col("p_keep")
-            agg_exprs += [
-                F.avg(kept * (v_bias * v_bias + v_var)
-                      + (1 - kept) * f_true * f_true).alias("var_rmse2"),
-                F.avg(F.abs(v_bias)).alias("var_abs_bias"),
-            ]
-        if Metric.MEAN in metrics:
-            # Delta method around the true (C, S): mean = S/C, so
-            # err_mean ~ err_S / C - M * err_C / C with M = S/C; bias and
-            # the sampling/noise variances of S and C combine accordingly
-            # (cross-covariance of the bounding events ignored —
-            # documented approximation, conservative in the regimes where
-            # clipping binds one of the two).
-            C = F.col("true_count").cast("double")
-            M = F.col("true_sum") / C
-            mean_bias = (F.col("sum_bias") - M * F.col("count_bias")) / C
-            mean_var = (F.col("sum_var")
-                        + F.col("msum_std") * F.col("msum_std")
-                        + M * M * (F.col("count_var")
-                                   + F.col("mcount_std")
-                                   * F.col("mcount_std"))) / (C * C)
-            kept = F.col("p_keep")
-            agg_exprs += [
-                F.avg(kept * (mean_bias * mean_bias + mean_var)
-                      + (1 - kept) * M * M).alias("mean_rmse2"),
-                F.avg(F.abs(mean_bias)).alias("mean_abs_bias"),
-            ]
-        per_conf = {r["conf"]: r for r in
-                    per_pk.groupBy("conf").agg(*agg_exprs).collect()}
+        # Per configuration: sums over its partitions with rows. The noise
+        # terms, constant per configuration, are added on the driver.
+        agg_exprs = {"n_partitions": F.count(F.lit(1)),
+                     "partitions_kept": F.sum(kept)}
+        for key in dict.fromkeys(
+                ["count"] + [_ADDITIVE[m] for m in metrics if m in _ADDITIVE]):
+            bias, true = F.col(f"{key}_bias"), F.col(f"{key}_true")
+            agg_exprs.update({
+                f"{key}_sq": F.sum(squared_error(bias, F.col(f"{key}_var"),
+                                                 true)),
+                f"{key}_abs_bias": F.sum(F.abs(bias)),
+                f"{key}_dropped": F.sum(-bias),
+                f"{key}_total": F.sum(F.abs(true))})
+        C, S = F.col("count_true"), F.col("norm_sum_true")
+        for m in moments:
+            # Delta method around the true moments: the gradient of
+            # mean = mid + S/C, or of variance = Q/C - (S/C)^2.
+            if m == Metric.MEAN:
+                f_true = F.lit(mid) + S / C
+                grad = {"count": -S / (C * C), "norm_sum": 1 / C}
+            else:
+                Q = F.col("norm_sq_true")
+                f_true = Q / C - (S / C) * (S / C)
+                grad = {"count": -Q / (C * C) + 2 * S * S / (C * C * C),
+                        "norm_sum": -2 * S / (C * C), "norm_sq": 1 / C}
+            bias = functools.reduce(operator.add, [
+                g * F.col(f"{k}_bias") for k, g in grad.items()])
+            var = functools.reduce(operator.add, [
+                g * g * F.col(f"{k}_var") for k, g in grad.items()] + [
+                2 * grad[a] * grad[b] * F.col(f"cov_{a}_{b}")
+                for a, b in itertools.combinations(grad, 2)])
+            key = m.value
+            agg_exprs.update({
+                f"{key}_sq": F.sum(squared_error(bias, var, f_true)),
+                f"{key}_abs_bias": F.sum(F.abs(bias)),
+                **{f"{key}_noise_{k}": F.sum(kept * g * g)
+                   for k, g in grad.items()}})
+        per_conf = {r["conf"]: r.asDict() for r in (
+            per_pk.withColumn("p_keep", p_keep).groupBy("conf")
+            .agg(*[e.alias(k) for k, e in agg_exprs.items()]).collect())}
 
-        reports = []
-        for i, row in enumerate(conf_rows):
-            r = per_conf.get(row[0])
-            if r is None:
-                continue
-            errors = []
-            for m in metrics:
-                key = {"count": "count", "privacy_id_count": "pid",
-                       "sum": "sum", "mean": "mean",
-                       "variance": "var"}[m.value]
-                # mean / variance have no single noise std: report the
-                # (normalized-)sum-mechanism component for mean and the
-                # squares mechanism for variance (the dominant terms);
-                # their data-dropped ratio is the contributing metric's.
-                noise_std = row[{"count": 5, "privacy_id_count": 6,
-                                 "sum": 7, "mean": 9,
-                                 "variance": 12}[m.value]]
-                if key == "mean":
-                    dropped = r["sum_dropped"]
-                elif key == "var":
-                    dropped = r["count_dropped"]
-                else:
-                    dropped = r[f"{key}_dropped"]
-                errors.append(MetricUtility(
-                    metric=m,
-                    noise_std=noise_std,
-                    rmse=math.sqrt(max(r[f"{key}_rmse2"], 0.0)),
-                    expected_abs_bias=r[f"{key}_abs_bias"],
-                    ratio_data_dropped=max(dropped or 0.0, 0.0)))
-            reports.append(UtilityReport(
-                configuration_index=row[0],
-                partitions_kept_expected=r["partitions_kept"],
-                partitions_total=r["n_partitions"],
-                metric_errors=errors))
-        return reports
+        n_listed = (len(dict.fromkeys(
+            k if isinstance(k, tuple) else (k,) for k in public_partitions))
+            if public else 0)
+        return [c.report(i, metrics, per_conf.get(i, {}), n_listed)
+                for i, c in enumerate(priced) if i in per_conf or n_listed]

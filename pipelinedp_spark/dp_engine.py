@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import dataclasses
 import math
-from typing import Callable, List, Optional, Sequence, Tuple, Union
+from typing import Callable, Dict, List, Optional, Sequence, Tuple, Union
 
 import numpy as np
 import pandas as pd
@@ -295,6 +295,158 @@ def _vector_clip_udf(norm_kind: str, max_norm: float):
     return _clipv
 
 
+@dataclasses.dataclass(frozen=True)
+class NoiseDraw:
+    """One additive noise draw: Laplace scale b or Gaussian sigma."""
+
+    kind: NoiseKind
+    scale: float
+
+    @property
+    def std(self) -> float:
+        return (self.scale * math.sqrt(2) if self.kind == NoiseKind.LAPLACE
+                else self.scale)
+
+
+@dataclasses.dataclass(frozen=True)
+class KeepRule:
+    """How a release keeps a partition with n privacy ids. With ``noise``
+    it adds that draw to n and keeps the partition if the sum reaches
+    ``threshold``; with ``probabilities`` (truncated geometric) it keeps it
+    with probability ``probabilities[n - pre_threshold + 1]``, the last
+    entry holding for larger n. A partition with fewer than
+    ``pre_threshold`` privacy ids is never kept."""
+
+    pre_threshold: Optional[int] = None
+    noise: Optional[NoiseDraw] = None
+    threshold: float = 0.0
+    probabilities: Optional[np.ndarray] = None
+
+    def keep_probabilities(self) -> np.ndarray:
+        """P(keep | n) for n = 0, 1, ... up to the first n where it reaches
+        1, and at most 100000 (as ``truncated_geometric_probabilities``);
+        the last entry holds for larger n."""
+        pre = self.pre_threshold or 1
+        if self.probabilities is not None:
+            return np.concatenate([np.zeros(pre - 1), self.probabilities])
+        b = self.noise.scale
+        top = min(100_000, max(pre, math.ceil(self.threshold + 40 * b)))
+        d = (np.arange(top + 1) - self.threshold) / b
+        if self.noise.kind == NoiseKind.LAPLACE:
+            tail = 0.5 * np.exp(-np.abs(d))
+            p = np.where(d >= 0, 1.0 - tail, tail)
+        else:
+            p = 0.5 * np.vectorize(math.erfc)(-d / math.sqrt(2.0))
+        if self.pre_threshold is not None:
+            p[:pre] = 0.0
+        ones = np.flatnonzero(p >= 1.0)
+        return p[:ones[0] + 1] if len(ones) else p
+
+
+def partition_keep_rule(spec: MechanismSpec,
+                        params: AggregateParams) -> KeepRule:
+    """The keep rule ``spec`` funds: DP partition selection by
+    ``params.partition_selection_strategy``, or, with
+    ``params.post_aggregation_thresholding``, the threshold on the noisy
+    privacy-id count that spec releases. An accountant that reserves a
+    distinct thresholding budget (PLD) pins the threshold's delta in
+    ``spec.thresholding_delta``; otherwise Laplace selection gives it all
+    of delta (its noise is pure-eps) and every other rule half."""
+    l0 = params.max_partitions_contributed or params.max_contributions
+    thr_delta = spec.thresholding_delta
+    post = params.post_aggregation_thresholding
+    strategy = params.partition_selection_strategy
+    if not post and strategy == PartitionSelectionStrategy.TRUNCATED_GEOMETRIC:
+        return KeepRule(params.pre_threshold,
+                        probabilities=dp.truncated_geometric_probabilities(
+                            spec.eps, spec.delta, l0))
+    if not post and strategy == PartitionSelectionStrategy.LAPLACE_THRESHOLDING:
+        scale, threshold = dp.laplace_thresholding(
+            spec.eps, spec.delta if thr_delta is None else thr_delta, l0)
+        return KeepRule(params.pre_threshold,
+                        NoiseDraw(NoiseKind.LAPLACE, scale), threshold)
+    kind = spec.mechanism_type.to_noise_kind()
+    if thr_delta is None:
+        thr_delta = spec.delta / 2
+    noise = NoiseDraw(kind, dp.noise_scale(
+        kind, spec.eps, spec.delta - thr_delta,
+        dp.privacy_id_count_sensitivities(l0)))
+    # Post-aggregation thresholding applies no pre_threshold, and splits
+    # the threshold's delta over max_partitions_contributed partitions (1
+    # when only max_contributions bounds them).
+    return KeepRule(None if post else params.pre_threshold, noise,
+                    dp.thresholding_from_std(
+                        kind, noise.std, thr_delta,
+                        (params.max_partitions_contributed or 1) if post
+                        else l0))
+
+
+def noise_draws(params: AggregateParams, specs: dict) -> Dict[str, NoiseDraw]:
+    """The noise each scalar metric's release adds under ``specs`` (from
+    ``DPEngine.request_budgets``, budgets computed): ``count``, ``sum`` and
+    ``privacy_id_count``; under MEAN or VARIANCE, ``count`` is the
+    moments' count draw (the one COUNT releases) and ``norm_sum`` /
+    ``norm_sq`` draw on the normalized sum and (VARIANCE) sum of
+    squares. SUM under MEAN or VARIANCE has no draw of its own: it
+    releases mid * count + norm_sum."""
+    kind = params.noise_kind
+    l0 = params.max_partitions_contributed or params.max_contributions
+    linf = params.max_contributions_per_partition
+    draws: Dict[str, NoiseDraw] = {}
+
+    def additive(name: str, sens: dp.Sensitivities) -> None:
+        spec = specs[name]
+        draws[name] = NoiseDraw(kind, dp.noise_scale(kind, spec.eps,
+                                                     spec.delta, sens))
+
+    if "count" in specs:
+        m = params.max_contributions
+        additive("count", dp.count_sensitivities(l0, linf) if m is None
+                 else dp.Sensitivities(l1=float(m), l2=float(m)))
+    if "sum" in specs:
+        additive("sum", dp.sum_sensitivities(
+            l0, linf, params.min_value, params.max_value,
+            params.min_sum_per_partition, params.max_sum_per_partition))
+    moments = specs.get("variance") or specs.get("mean")
+    if moments is not None:
+        ms = (dp.variance_scales if "variance" in specs else dp.mean_scales)(
+            kind, moments.eps, moments.delta, params.max_partitions_contributed,
+            linf, params.min_value, params.max_value)
+        draws["count"] = NoiseDraw(kind, ms.count_scale)
+        draws["norm_sum"] = NoiseDraw(kind, ms.norm_sum_scale)
+        if "variance" in specs:
+            draws["norm_sq"] = NoiseDraw(kind, ms.norm_sum_sq_scale)
+    if "privacy_id_count" in specs:
+        if params.post_aggregation_thresholding:
+            draws["privacy_id_count"] = partition_keep_rule(
+                specs["privacy_id_count"], params).noise
+        else:
+            additive("privacy_id_count",
+                     dp.privacy_id_count_sensitivities(l0))
+    return draws
+
+
+def drop_non_public_partitions(data: DataFrame, pk_cols: Sequence[str],
+                               public_partitions,
+                               pub_df: Optional[DataFrame] = None
+                               ) -> Tuple[DataFrame, str]:
+    """The rows of ``data`` whose key is public, and a report line. A small
+    local single-column key list compiles to a pushed-down ``isin`` scan
+    filter with no broadcast exchange; otherwise a broadcast left-semi
+    join with ``pub_df`` (built from ``public_partitions`` if not given)."""
+    if (not isinstance(public_partitions, DataFrame)
+            and len(pk_cols) == 1 and len(public_partitions) <= 1000):
+        keys = [p[0] if isinstance(p, tuple) else p
+                for p in public_partitions]
+        return (data.filter(F.col(pk_cols[0]).isin(keys)),
+                "Dropped non-public partitions (isin pushdown)")
+    if pub_df is None:
+        pub_df = DPEngine._as_partitions_df(
+            data.sparkSession, pk_cols, public_partitions, like=data)
+    return (data.join(F.broadcast(pub_df), on=list(pk_cols), how="left_semi"),
+            "Dropped non-public partitions (broadcast semi-join)")
+
+
 class DPEngine:
     """Reference: pipeline_dp/dp_engine.py:71-305 (semantics)."""
 
@@ -345,7 +497,7 @@ class DPEngine:
                                      public_partitions, report)
 
         # --- stage 3: budget requests. ---
-        specs = self._request_budgets(params, pub_df is not None, report)
+        specs = self.request_budgets(params, pub_df is not None, report)
 
         # --- stage 4: contribution bounding + per-(pid,pk) partials. ---
         per_pid_pk = self._bound_contributions(data, params, pk_cols,
@@ -387,7 +539,7 @@ class DPEngine:
                              "PRIVACY_ID_COUNT, SUM, MEAN and VARIANCE")
         report = [f"DPEngine.aggregate_partials: metrics={params.metrics}"]
         self._reports.append(report)
-        specs = self._request_budgets(params, False, report)
+        specs = self.request_budgets(params, False, report)
         merged = _merge_partials(partials, pk_cols, report)
         return DPResult(
             lambda: self._release(merged, params, specs, pk_cols, None,
@@ -457,23 +609,19 @@ class DPEngine:
         if prefiltered:
             report.append(
                 "Public partitions pre-filtered by caller (drop skipped)")
-        elif (not isinstance(public_partitions, DataFrame)
-                and len(pk_cols) == 1 and len(public_partitions) <= 1000):
-            # Small local key list: isin() compiles to a pushed-down
-            # scan filter — no broadcast exchange at all.
-            keys = [p[0] if isinstance(p, tuple) else p
-                    for p in public_partitions]
-            data = data.filter(F.col(pk_cols[0]).isin(keys))
-            report.append("Dropped non-public partitions (isin pushdown)")
         else:
-            data = data.join(F.broadcast(pub_df), on=pk_cols, how="left_semi")
-            report.append(
-                "Dropped non-public partitions (broadcast semi-join)")
+            data, note = drop_non_public_partitions(
+                data, pk_cols, public_partitions, pub_df)
+            report.append(note)
         return data, pub_df
 
     # ------------------------------------------------------------------
-    def _request_budgets(self, params: AggregateParams, public: bool,
-                         report: List[str]) -> dict:
+    def request_budgets(self, params: AggregateParams, public: bool,
+                        report: List[str]) -> dict:
+        """The budget requests of ``params``' metrics on this engine's
+        accountant, by name (``count``, ``sum``, ``mean``, ``variance``,
+        ``privacy_id_count``, ``partition_selection``, ...); ``public``: the
+        partition keys are public, so no selection is funded."""
         specs: dict = {}
         mt = params.noise_kind.convert_to_mechanism_type()
         metric_kinds = set(params.metric_kinds)
@@ -565,43 +713,21 @@ class DPEngine:
                                    params: AggregateParams,
                                    report: List[str]) -> DataFrame:
         """Reference: pipeline_dp/dp_engine.py:332-400 (semantics)."""
-        l0 = params.max_partitions_contributed or params.max_contributions
-        strategy = params.partition_selection_strategy
-        pre = params.pre_threshold
+        rule = partition_keep_rule(spec, params)
         pid_count = F.col(_PID_COUNT)
-        if strategy == PartitionSelectionStrategy.TRUNCATED_GEOMETRIC:
-            probs = dp.truncated_geometric_probabilities(
-                spec.eps, spec.delta, l0)
-            keep = self._noise.geometric_keep(pid_count, probs, pre)
+        if rule.noise is None:
+            keep = self._noise.geometric_keep(pid_count,
+                                              rule.keep_probabilities())
             report.append("Partition selection: truncated geometric")
             return out.filter(keep)
-        # An accountant that reserved a distinct thresholding budget (PLD)
-        # pins the threshold's delta via spec.thresholding_delta; otherwise
-        # the historical split applies (full delta for Laplace, whose noise
-        # is pure-eps; half/half for Gaussian).
-        thr_delta = spec.thresholding_delta
-        if strategy == PartitionSelectionStrategy.LAPLACE_THRESHOLDING:
-            scale, threshold = dp.laplace_thresholding(
-                spec.eps, thr_delta if thr_delta is not None else spec.delta,
-                l0)
-            noisy = self._noise.add_noise(pid_count.cast(DoubleType()),
-                                          "laplace", scale)
-        else:
-            if thr_delta is None:
-                sigma, threshold = dp.gaussian_thresholding(
-                    spec.eps, spec.delta, l0)
-            else:
-                sigma = dp.gaussian_sigma(spec.eps, spec.delta - thr_delta,
-                                          math.sqrt(l0))
-                threshold = dp.thresholding_from_std(
-                    NoiseKind.GAUSSIAN, sigma, thr_delta, l0)
-            noisy = self._noise.add_noise(pid_count.cast(DoubleType()),
-                                          "gaussian", sigma)
-        keep = noisy >= F.lit(threshold)
-        if pre is not None:
-            keep = keep & (pid_count >= F.lit(pre))
+        noisy = self._noise.add_noise(pid_count.cast(DoubleType()),
+                                      rule.noise.kind.value, rule.noise.scale)
+        keep = noisy >= F.lit(rule.threshold)
+        if rule.pre_threshold is not None:
+            keep = keep & (pid_count >= F.lit(rule.pre_threshold))
         report.append(
-            f"Partition selection: {strategy.value}, threshold={threshold:.3f}")
+            f"Partition selection: {params.partition_selection_strategy.value}"
+            f", threshold={rule.threshold:.3f}")
         return out.filter(keep)
 
     # ------------------------------------------------------------------
@@ -612,10 +738,8 @@ class DPEngine:
                          ) -> Tuple[DataFrame, List[Column]]:
         """Noisy metric columns: returns the frame to select from and the
         partition-key + metric columns, in ``params.metrics`` order."""
-        kind = params.noise_kind.value
-        l0 = params.max_partitions_contributed
-        linf = params.max_contributions_per_partition
         noise = self._noise
+        draws = noise_draws(params, specs)
         metric_cols: dict = {}
         # metric name -> applied noise stddev (constant per metric: the
         # mechanism scale depends only on budget + sensitivities, never on
@@ -624,89 +748,64 @@ class DPEngine:
         # (reference: pipeline_dp/combiners.py:276-288,323-335,439-454).
         stddev_vals: dict = {}
 
-        def additive(name: str, col: Column, spec: MechanismSpec,
-                     sens: dp.Sensitivities) -> None:
-            scale = dp.noise_scale(params.noise_kind, spec.eps, spec.delta,
-                                   sens)
-            metric_cols[name] = noise.add_noise(col, kind, scale)
-            stddev_vals[name] = dp.noise_std(params.noise_kind, spec.eps,
-                                             spec.delta, sens)
-            report.append(f"{name.upper()}: {kind} noise, scale={scale:.4g}")
+        def noisy(col: Column, name: str) -> Column:
+            d = draws[name]
+            return noise.add_noise(col, d.kind.value, d.scale)
+
+        def additive(name: str, col: Column) -> None:
+            metric_cols[name] = noisy(col, name)
+            stddev_vals[name] = draws[name].std
+            report.append(f"{name.upper()}: {draws[name].kind.value} noise, "
+                          f"scale={draws[name].scale:.4g}")
 
         if "count" in specs:
-            additive("count", F.col(_COUNT).cast(DoubleType()),
-                     specs["count"], self._count_sensitivities(params))
+            additive("count", F.col(_COUNT).cast(DoubleType()))
         if "sum" in specs:
-            additive("sum", F.col(_SUM), specs["sum"], dp.sum_sensitivities(
-                l0 or params.max_contributions, linf, params.min_value,
-                params.max_value, params.min_sum_per_partition,
-                params.max_sum_per_partition))
+            additive("sum", F.col(_SUM))
         # MEAN and VARIANCE: noisy count and normalized sum (plus sum of
         # squares for VARIANCE) under one spec; COUNT and SUM derive.
-        moments = specs.get("variance") or specs.get("mean")
-        if moments is not None:
+        if "variance" in specs or "mean" in specs:
             variance = "variance" in specs
-            ms = (dp.variance_scales if variance else dp.mean_scales)(
-                params.noise_kind, moments.eps, moments.delta, l0, linf,
-                params.min_value, params.max_value)
+            mid = (params.min_value + params.max_value) / 2.0
             out = out.withColumn(
                 "__dp_count__",
-                noise.add_noise(F.col(_COUNT).cast(DoubleType()), kind,
-                                ms.count_scale))
-            out = out.withColumn(
-                "__dp_norm_sum__",
-                noise.add_noise(F.col(_NORM_SUM), kind, ms.norm_sum_scale))
+                noisy(F.col(_COUNT).cast(DoubleType()), "count"))
+            out = out.withColumn("__dp_norm_sum__",
+                                 noisy(F.col(_NORM_SUM), "norm_sum"))
             denom = F.greatest(F.lit(1.0), F.col("__dp_count__"))
             mean_norm = F.col("__dp_norm_sum__") / denom
-            dp_mean = F.lit(ms.mid) + mean_norm
+            dp_mean = F.lit(mid) + mean_norm
             if variance:
-                out = out.withColumn(
-                    "__dp_norm_sq__",
-                    noise.add_noise(F.col(_NORM_SQ), kind,
-                                    ms.norm_sum_sq_scale))
+                out = out.withColumn("__dp_norm_sq__",
+                                     noisy(F.col(_NORM_SQ), "norm_sq"))
                 metric_cols["variance"] = (F.col("__dp_norm_sq__") / denom
                                            - mean_norm * mean_norm)
                 report.append("VARIANCE: 3-way budget split estimator")
             else:
-                report.append(f"MEAN: normalized-sum estimator, mid={ms.mid}")
+                report.append(f"MEAN: normalized-sum estimator, mid={mid}")
             if Metric.MEAN in params.metric_kinds:
                 metric_cols["mean"] = dp_mean
             if Metric.COUNT in params.metric_kinds:
                 metric_cols["count"] = F.col("__dp_count__")
             if Metric.SUM in params.metric_kinds:
                 metric_cols["sum"] = dp_mean * F.col("__dp_count__")
-        if "privacy_id_count" in specs:
-            spec = specs["privacy_id_count"]
-            sens = dp.privacy_id_count_sensitivities(
-                l0 or params.max_contributions)
-            if params.post_aggregation_thresholding:
-                # Reference: combiners.py:360-416 + dp_computations.py:821-885:
-                # noised pid-count released iff >= threshold; rows below are
-                # dropped entirely.
-                nk = spec.mechanism_type.to_noise_kind()
-                # Thresholding delta: accountant-pinned reservation when
-                # present (PLD), else half of the mechanism delta.
-                thr_delta = (spec.thresholding_delta
-                             if spec.thresholding_delta is not None
-                             else spec.delta / 2)
-                noise_delta = spec.delta - thr_delta
-                std = dp.noise_std(nk, spec.eps, noise_delta, sens)
-                threshold = dp.thresholding_from_std(nk, std, thr_delta,
-                                                     l0 or 1)
-                noisy = noise.add_noise(
-                    F.col(_PID_COUNT).cast(DoubleType()), nk.value,
-                    dp.noise_scale(nk, spec.eps, noise_delta, sens))
-                out = out.withColumn("__dp_pid_count__", noisy)
-                out = out.filter(
-                    F.col("__dp_pid_count__") >= F.lit(threshold))
-                metric_cols["privacy_id_count"] = F.col("__dp_pid_count__")
-                stddev_vals["privacy_id_count"] = std
-                report.append(
-                    f"PRIVACY_ID_COUNT: post-aggregation thresholding at "
-                    f"{threshold:.3f}")
-            else:
-                additive("privacy_id_count",
-                         F.col(_PID_COUNT).cast(DoubleType()), spec, sens)
+        pid_count = F.col(_PID_COUNT).cast(DoubleType())
+        if params.post_aggregation_thresholding:
+            # Reference: combiners.py:360-416 + dp_computations.py:821-885:
+            # noised pid-count released iff >= threshold; rows below are
+            # dropped entirely.
+            rule = partition_keep_rule(specs["privacy_id_count"], params)
+            out = out.withColumn("__dp_pid_count__",
+                                 noisy(pid_count, "privacy_id_count"))
+            out = out.filter(
+                F.col("__dp_pid_count__") >= F.lit(rule.threshold))
+            metric_cols["privacy_id_count"] = F.col("__dp_pid_count__")
+            stddev_vals["privacy_id_count"] = rule.noise.std
+            report.append(
+                f"PRIVACY_ID_COUNT: post-aggregation thresholding at "
+                f"{rule.threshold:.3f}")
+        elif "privacy_id_count" in specs:
+            additive("privacy_id_count", pid_count)
 
         if pct_values is not None:
             # Left join: empty public partitions have no histogram rows; a
@@ -878,7 +977,7 @@ class DPEngine:
             df, params, extractors, public_partitions, report,
             [F.col(extractors.value_column).cast("array<double>")
              .alias(_VALUE)])
-        specs = self._request_budgets(params, public_partitions is not None,
+        specs = self.request_budgets(params, public_partitions is not None,
                                       report)
         # Bounding runs on whole vectors, before the d-fold explode.
         data = bounders.bound_rows(data, _PID, pk_cols,
@@ -1088,13 +1187,6 @@ class DPEngine:
             return out
 
         return DPResult(finalize, self._accountant)
-
-    def _count_sensitivities(self, params: AggregateParams) -> dp.Sensitivities:
-        if params.max_contributions is not None:
-            m = params.max_contributions
-            return dp.Sensitivities(l1=float(m), l2=float(m))
-        return dp.count_sensitivities(params.max_partitions_contributed,
-                                      params.max_contributions_per_partition)
 
     # ------------------------------------------------------------------
     def _sampled_pairs(self, df: DataFrame, params: SelectPartitionsParams,

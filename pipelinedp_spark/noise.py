@@ -13,8 +13,6 @@ pandas-UDF cost is negligible relative to the scan/shuffle work.
 
 from __future__ import annotations
 
-from typing import Optional
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column
@@ -38,11 +36,11 @@ class NoiseSource:
             self.gaussian(scale)
         return col + noise
 
-    def geometric_keep(self, count_col: Column, probs: np.ndarray,
-                       pre_threshold: Optional[int]) -> Column:
+    def geometric_keep(self, count_col: Column, probs: np.ndarray) -> Column:
         """Boolean keep decision for truncated-geometric partition selection,
-        given the exact privacy-id count column and precomputed keep
-        probabilities p[n] (index clamps at the top: p[-1] == 1.0)."""
+        given the exact privacy-id count column and the keep probabilities
+        P(keep | n) = probs[n] (index clamps at the top: probs[-1] ==
+        1.0; ``dp_engine.KeepRule.keep_probabilities``)."""
         raise NotImplementedError
 
 
@@ -69,22 +67,14 @@ class SecureNoiseSource(NoiseSource):
 
         return _noise.asNondeterministic()(F.lit(0.0))
 
-    def geometric_keep(self, count_col: Column, probs: np.ndarray,
-                       pre_threshold: Optional[int]) -> Column:
-        pre = pre_threshold or 1
-        probs_arr = probs  # closure-captured; small (reaches 1.0 quickly)
-
+    def geometric_keep(self, count_col: Column, probs: np.ndarray) -> Column:
+        # probs is closure-captured; small (reaches 1.0 quickly)
         @F.pandas_udf(BooleanType())
         def _keep(n: pd.Series) -> pd.Series:
             rng = np.random.default_rng()
-            # pre-thresholding: partitions below pre_threshold never kept;
-            # DP probability applies to (n - pre + 1).
-            eff = (n.to_numpy(dtype=np.int64) - (pre - 1))
-            idx = np.clip(eff, 0, len(probs_arr) - 1)
-            p = probs_arr[idx]
-            p = np.where(eff <= 0, 0.0, p)
+            idx = np.clip(n.to_numpy(dtype=np.int64), 0, len(probs) - 1)
             u = rng.random(len(n))
-            return pd.Series(u < p)
+            return pd.Series(u < probs[idx])
 
         return _keep.asNondeterministic()(count_col)
 
@@ -99,13 +89,10 @@ class ZeroNoiseSource(NoiseSource):
     def gaussian(self, sigma: float) -> Column:
         return F.lit(0.0)
 
-    def geometric_keep(self, count_col: Column, probs: np.ndarray,
-                       pre_threshold: Optional[int]) -> Column:
-        pre = pre_threshold or 1
+    def geometric_keep(self, count_col: Column, probs: np.ndarray) -> Column:
         # First n whose keep-probability reaches 0.5 — deterministic cutover.
         above = np.nonzero(probs >= 0.5)[0]
-        cutoff = int(above[0]) if len(above) else len(probs)
-        return count_col >= F.lit(cutoff + (pre - 1))
+        return count_col >= F.lit(int(above[0]) if len(above) else len(probs))
 
 
 def create_noise_source(mode: str = "secure") -> NoiseSource:

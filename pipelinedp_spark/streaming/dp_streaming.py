@@ -58,7 +58,7 @@ from pipelinedp_spark.aggregate_params import (AggregateParams,
 from pipelinedp_spark.budget_accounting import NaiveBudgetAccountant
 from pipelinedp_spark.dp_engine import (PARTIAL_COUNT, PARTIAL_NORM_SQ,
                                         PARTIAL_NORM_SUM, PARTIAL_SUM,
-                                        DPEngine)
+                                        DPEngine, partition_keep_rule)
 from pipelinedp_spark.noise import create_noise_source
 from pipelinedp_spark import store
 
@@ -677,16 +677,16 @@ def _streaming_percentile_tree(per_user: DataFrame,
     out = per_window.withColumn("__res__", _descend(F.col("__hist__")))
     if do_threshold:
         # The engine's post-aggregation thresholding at the privacy-id
-        # count's share, half of whose delta funds the threshold.
-        thr_delta = thr.delta / 2
-        sens = dp.privacy_id_count_sensitivities(l0_per_window)
-        args = (noise_kind, thr.eps, thr.delta - thr_delta, sens)
-        threshold = dp.thresholding_from_std(
-            noise_kind, dp.noise_std(*args), thr_delta, l0_per_window)
+        # count's share.
+        rule = partition_keep_rule(thr, AggregateParams(
+            metrics=[Metrics.PRIVACY_ID_COUNT],
+            max_partitions_contributed=l0_per_window,
+            max_contributions_per_partition=1, noise_kind=noise_kind,
+            post_aggregation_thresholding=True))
         out = out.withColumn("__dp_pids__", create_noise_source(
             noise_mode).add_noise(F.col("__pids__").cast(DoubleType()),
-                                  kind_value, dp.noise_scale(*args)))
-        out = out.filter(F.col("__dp_pids__") >= F.lit(threshold))
+                                  kind_value, rule.noise.scale))
+        out = out.filter(F.col("__dp_pids__") >= F.lit(rule.threshold))
         n_users = F.col("__dp_pids__")
     else:
         n_users = F.col("__res__.n_users")

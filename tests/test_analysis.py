@@ -365,19 +365,17 @@ def test_strategy_selector():
 
 
 def test_utility_analysis_mean_path(data):
-    """MEAN error via the delta method on (count, sum) errors. With huge
-    epsilon and non-binding bounds the mean is exact up to noise: rmse
-    must be small relative to the true mean (1.5) and shrink as epsilon
-    grows; bias is zero when nothing clips."""
+    """MEAN error via the delta method on the engine's normalized (count,
+    sum) moments. With huge epsilon and non-binding bounds the mean is
+    exact up to noise: rmse must be small relative to the true mean (1.5)
+    and shrink as epsilon grows; bias is zero when nothing clips."""
     params = AggregateParams(metrics=[Metrics.MEAN],
                              max_partitions_contributed=1,
                              max_contributions_per_partition=1,
                              min_value=0.0, max_value=3.0)
     conf = A.MultiParameterConfiguration(
         max_partitions_contributed=[3],
-        max_contributions_per_partition=[2],
-        min_sum_per_partition=[0.0],
-        max_sum_per_partition=[3.0])
+        max_contributions_per_partition=[2])
     rmses = {}
     for eps in (10.0, 1000.0):
         reports = A.UtilityAnalysisEngine(eps, 1e-6).analyze(
@@ -390,14 +388,173 @@ def test_utility_analysis_mean_path(data):
     assert rmses[1000.0] < 0.05  # near-exact at eps=1000
 
 
-def test_utility_analysis_mean_requires_sum_bounds(data):
+def test_utility_analysis_mean_needs_value_bounds(data):
+    """MEAN runs on min/max_value: grid sum bounds, which replace the
+    value bounds, make a configuration AggregateParams refuses."""
     params = AggregateParams(metrics=[Metrics.MEAN],
                              max_partitions_contributed=1,
                              max_contributions_per_partition=1,
                              min_value=0.0, max_value=3.0)
     conf = A.MultiParameterConfiguration(
         max_partitions_contributed=[3],
-        max_contributions_per_partition=[2])
-    with pytest.raises(ValueError, match="sum_per_partition"):
+        max_contributions_per_partition=[2],
+        min_sum_per_partition=[0.0],
+        max_sum_per_partition=[3.0])
+    with pytest.raises(ValueError, match="min_value, max_value"):
         A.UtilityAnalysisEngine(10.0, 1e-6).analyze(
             data, params, EXT, conf, public_partitions=["p0"])
+
+
+def test_utility_analysis_preaggregated_input(spark):
+    rows = [(u, "g", 1.0) for u in range(10)]
+    df = spark.createDataFrame(rows, "uid int, pk string, v double")
+    ext = DataFrameExtractors("uid", "pk", "v")
+    pre = A.preaggregate(df, ext)
+    params = AggregateParams(metrics=[Metrics.COUNT],
+                             max_partitions_contributed=1,
+                             max_contributions_per_partition=1)
+    conf = A.MultiParameterConfiguration(
+        max_partitions_contributed=[1],
+        max_contributions_per_partition=[1])
+    direct = A.UtilityAnalysisEngine(10.0, 1e-6).analyze(
+        df, params, ext, conf, public_partitions=["g"])
+    from_pre = A.UtilityAnalysisEngine(10.0, 1e-6).analyze(
+        pre, params, ext, conf, public_partitions=["g"],
+        preaggregated=True)
+    assert direct[0].metric_errors[0].rmse == pytest.approx(
+        from_pre[0].metric_errors[0].rmse)
+
+
+def test_utility_analysis_honours_public_partitions(spark):
+    """Rows of unlisted keys are dropped before pre-aggregation and a
+    listed key without rows is a partition whose only error is noise."""
+    df = spark.createDataFrame(
+        [(u, "a", 1.0) for u in range(6)] + [(u, "zz", 1.0)
+                                             for u in range(4)],
+        "uid int, pk string, v double")
+    params = AggregateParams(metrics=[Metrics.COUNT],
+                             max_partitions_contributed=2,
+                             max_contributions_per_partition=1)
+    conf = A.MultiParameterConfiguration(
+        max_partitions_contributed=[1], max_contributions_per_partition=[1])
+    engine = A.UtilityAnalysisEngine(1.0, 1e-6)
+    only_a = engine.analyze(df, params, EXT, conf, public_partitions=["a"])
+    assert only_a[0].partitions_total == 1
+    # Restricted to "a", every id is in one partition: no bounding error.
+    err = only_a[0].metric_errors[0]
+    assert err.rmse == pytest.approx(err.noise_std, rel=1e-12)
+    three = engine.analyze(df, params, EXT, conf,
+                           public_partitions=["a", "b", "c"])
+    assert three[0].partitions_total == 3
+    assert three[0].partitions_kept_expected == 3
+    err = three[0].metric_errors[0]
+    assert err.rmse == pytest.approx(err.noise_std, rel=1e-12)
+    assert err.noise_std == pytest.approx(math.sqrt(2.0), rel=1e-12)
+    empty = engine.analyze(df, params, EXT, conf, public_partitions=["b"])
+    assert empty[0].partitions_total == 1
+    assert empty[0].metric_errors[0].rmse == pytest.approx(math.sqrt(2.0))
+
+
+def test_utility_analysis_refuses_before_any_job(spark, data):
+    """Private partitions at delta == 0, and a configuration AggregateParams
+    rejects, raise ValueError before a Spark job runs."""
+    count = AggregateParams(metrics=[Metrics.COUNT],
+                            max_partitions_contributed=1,
+                            max_contributions_per_partition=1)
+    conf = A.MultiParameterConfiguration(
+        max_partitions_contributed=[1], max_contributions_per_partition=[1])
+
+    def refused(params, configurations, delta, match):
+        with pytest.raises(ValueError, match=match):
+            A.UtilityAnalysisEngine(1.0, delta).analyze(
+                data, params, EXT, configurations)
+
+    assert _jobs_and_no_cache_left(
+        spark, lambda: refused(count, conf, 0.0, "requires delta")) == 0
+    bad = A.MultiParameterConfiguration(
+        max_partitions_contributed=[1, 0],
+        max_contributions_per_partition=[1, 1])
+    assert _jobs_and_no_cache_left(
+        spark, lambda: refused(count, bad, 1e-6, "must be positive")) == 0
+
+
+def _engine_stddevs(df, params, eps, delta, public):
+    acc = pds.NaiveBudgetAccountant(eps, delta)
+    result = pds.DPEngine(acc, noise_mode="zero").aggregate(
+        df, params, EXT, public_partitions=public)
+    acc.compute_budgets()
+    row = result.dataframe().collect()[0]
+    return {m.output_name: row[f"{m.output_name}_noise_stddev"]
+            for m in params.metrics}
+
+
+@pytest.mark.parametrize("public,kind,post", [
+    (True, NoiseKind.LAPLACE, False), (True, NoiseKind.GAUSSIAN, False),
+    (False, NoiseKind.LAPLACE, False), (False, NoiseKind.GAUSSIAN, False),
+    (False, NoiseKind.LAPLACE, True)])
+def test_utility_noise_std_matches_engine(spark, public, kind, post):
+    """The analysis reports the noise the engine releases: its noise_std
+    equals the engine's `<metric>_noise_stddev` under the same budget."""
+    df = spark.createDataFrame([(u, "g", 1.0) for u in range(60)],
+                               "uid int, pk string, v double")
+    params = AggregateParams(
+        metrics=[Metrics.COUNT, Metrics.PRIVACY_ID_COUNT, Metrics.SUM],
+        max_partitions_contributed=2, max_contributions_per_partition=3,
+        min_value=-1.0, max_value=5.0, noise_kind=kind,
+        post_aggregation_thresholding=post, output_noise_stddev=True)
+    eps, delta = 10.0, 1e-5
+    keys = ["g"] if public else None
+    want = _engine_stddevs(df, params, eps, delta, keys)
+    conf = A.MultiParameterConfiguration(
+        max_partitions_contributed=[2], max_contributions_per_partition=[3])
+    report = A.UtilityAnalysisEngine(eps, delta).analyze(
+        df, params, EXT, conf, public_partitions=keys)[0]
+    got = {e.metric.value: e.noise_std for e in report.metric_errors}
+    assert got == want
+
+
+@pytest.mark.parametrize("pre", [None, 4])
+@pytest.mark.parametrize("strategy", ["geometric", "laplace", "gaussian"])
+def test_partitions_kept_matches_keep_rule(spark, strategy, pre):
+    """Every id in one partition (zero keep variance): the expected kept
+    count is the sum over keys of P(keep | n) of the engine's selection,
+    which gets half of epsilon (COUNT has the other half) and all of
+    delta (COUNT's Laplace noise spends none)."""
+    from pipelinedp_spark import dp_computations as dp
+    from pipelinedp_spark.aggregate_params import PartitionSelectionStrategy
+    sizes = {"k1": 1, "k3": 3, "k6": 6, "k10": 10, "k20": 20}
+    rows, uid = [], 0
+    for key, n in sizes.items():
+        for _ in range(n):
+            rows.append((uid, key, 1.0))
+            uid += 1
+    df = spark.createDataFrame(rows, "uid int, pk string, v double")
+    eps, delta = 2.0, 1e-3
+    sel = {"geometric": PartitionSelectionStrategy.TRUNCATED_GEOMETRIC,
+           "laplace": PartitionSelectionStrategy.LAPLACE_THRESHOLDING,
+           "gaussian": PartitionSelectionStrategy.GAUSSIAN_THRESHOLDING}
+    params = AggregateParams(metrics=[Metrics.COUNT],
+                             max_partitions_contributed=1,
+                             max_contributions_per_partition=1,
+                             partition_selection_strategy=sel[strategy],
+                             pre_threshold=pre)
+    # P(keep | n) from the published formulas.
+    if strategy == "geometric":
+        probs = dp.truncated_geometric_probabilities(eps / 2, delta, 1)
+        keep = lambda n: probs[min(n - (pre or 1) + 1, len(probs) - 1)]
+    elif strategy == "laplace":
+        b, t = dp.laplace_thresholding(eps / 2, delta, 1)
+        keep = lambda n: (1.0 - 0.5 * math.exp(-(n - t) / b) if n >= t
+                          else 0.5 * math.exp((n - t) / b))
+    else:
+        sigma, t = dp.gaussian_thresholding(eps / 2, delta, 1)
+        keep = lambda n: 0.5 * math.erfc((t - n) / (sigma * math.sqrt(2.0)))
+    want = sum(0.0 if pre is not None and n < pre else keep(n)
+               for n in sizes.values())
+    conf = A.MultiParameterConfiguration(
+        max_partitions_contributed=[1], max_contributions_per_partition=[1])
+    report = A.UtilityAnalysisEngine(eps, delta).analyze(
+        df, params, EXT, conf)[0]
+    assert report.partitions_total == len(sizes)
+    assert report.partitions_kept_expected == pytest.approx(want, rel=1e-9)
+    assert 0.5 < want < len(sizes) - 0.5

@@ -1,12 +1,8 @@
-"""Multi-column sum (single bounding pass) and preaggregated-input tests."""
+"""Multi-column sum (single bounding pass) tests."""
 
 import pytest
-from pyspark.sql import functions as F
 
 import pipelinedp_spark as pds
-from pipelinedp_spark import analysis as A
-from pipelinedp_spark.aggregate_params import AggregateParams, Metrics
-from pipelinedp_spark.dp_engine import DataFrameExtractors
 
 pytestmark = pytest.mark.dp
 
@@ -103,23 +99,3 @@ def test_engine_multi_sum_private_selection(spark):
     assert out["big"]["sum_a"] == 50.0
     assert out["big"]["sum_b"] == 100.0
     assert out["big"]["privacy_id_count"] == 50.0
-
-
-def test_utility_analysis_preaggregated_input(spark):
-    rows = [(u, "g", 1.0) for u in range(10)]
-    df = spark.createDataFrame(rows, "uid int, pk string, v double")
-    ext = DataFrameExtractors("uid", "pk", "v")
-    pre = A.preaggregate(df, ext)
-    params = AggregateParams(metrics=[Metrics.COUNT],
-                             max_partitions_contributed=1,
-                             max_contributions_per_partition=1)
-    conf = A.MultiParameterConfiguration(
-        max_partitions_contributed=[1],
-        max_contributions_per_partition=[1])
-    direct = A.UtilityAnalysisEngine(10.0, 1e-6).analyze(
-        df, params, ext, conf, public_partitions=["g"])
-    from_pre = A.UtilityAnalysisEngine(10.0, 1e-6).analyze(
-        pre, params, ext, conf, public_partitions=["g"],
-        preaggregated=True)
-    assert direct[0].metric_errors[0].rmse == pytest.approx(
-        from_pre[0].metric_errors[0].rmse)

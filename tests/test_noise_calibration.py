@@ -82,7 +82,7 @@ def test_truncated_geometric_keep_matches_closed_form(spark):
     assert 0.2 < p < 0.8
     n_draws = 400_000
     src = SecureNoiseSource()
-    keep = src.geometric_keep(F.lit(n_star).cast("long"), probs, None)
+    keep = src.geometric_keep(F.lit(n_star).cast("long"), probs)
     df = spark.range(n_draws).select(keep.alias("k"))
     p_hat = df.filter("k").count() / n_draws
     band = 5.0 * math.sqrt(p * (1 - p) / n_draws)   # ~0.004

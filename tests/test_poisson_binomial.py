@@ -6,9 +6,17 @@ import math
 import numpy as np
 import pytest
 
+from pipelinedp_spark.aggregate_params import NoiseKind
 from pipelinedp_spark.analysis import poisson_binomial as pb
+from pipelinedp_spark.dp_engine import KeepRule, NoiseDraw
 
 pytestmark = pytest.mark.analysis
+
+
+def _laplace(scale, threshold):
+    """P(keep | n) of Laplace(scale) thresholding at ``threshold``."""
+    return KeepRule(noise=NoiseDraw(NoiseKind.LAPLACE, scale),
+                    threshold=threshold).keep_probabilities()
 
 
 def test_exact_pmf_binomial_case():
@@ -40,8 +48,9 @@ def test_keep_probability_matches_exact_expectation(n, scale, threshold):
     rng = np.random.default_rng(n)
     ps = rng.uniform(0.05, 1.0, n)
     mean, var, m3 = pb.moments(ps)
-    want = pb.keep_probability_exact(ps, scale, threshold)
-    got = pb.keep_probability(mean, var, m3, n, scale, threshold)
+    keep = _laplace(scale, threshold)
+    want = pb.keep_probability_exact(ps, keep)
+    got = pb.keep_probability(mean, var, m3, n, keep)
     assert got == pytest.approx(want, abs=2e-3)
 
 
@@ -51,9 +60,10 @@ def test_keep_probability_beats_cdf_at_mean_for_small_partitions():
     not."""
     ps = [0.5] * 6          # mean 3, substantial spread
     scale, threshold = 1.0, 4.0
-    exact = pb.keep_probability_exact(ps, scale, threshold)
+    keep = _laplace(scale, threshold)
+    exact = pb.keep_probability_exact(ps, keep)
     mean, var, m3 = pb.moments(ps)
-    ours = pb.keep_probability(mean, var, m3, len(ps), scale, threshold)
+    ours = pb.keep_probability(mean, var, m3, len(ps), keep)
     d = (mean - threshold) / scale
     at_mean = 1.0 - 0.5 * math.exp(-d) if d >= 0 else 0.5 * math.exp(d)
     assert abs(ours - exact) < abs(at_mean - exact) / 3
@@ -62,11 +72,12 @@ def test_keep_probability_beats_cdf_at_mean_for_small_partitions():
 
 def test_keep_probability_degenerate_cases():
     # deterministic count (all p == 1)
-    assert pb.keep_probability(5.0, 0.0, 0.0, 5, 1.0, 3.0) == \
+    assert pb.keep_probability(5.0, 0.0, 0.0, 5, _laplace(1.0, 3.0)) == \
         pytest.approx(1.0 - 0.5 * math.exp(-2.0))
-    # zero scale -> hard threshold on the mean
-    assert pb.keep_probability(5.0, 1.0, 0.0, 5, 0.0, 3.0) == 1.0
-    assert pb.keep_probability(2.0, 1.0, 0.0, 5, 0.0, 3.0) == 0.0
+    # a step keep vector (no noise) on a deterministic count
+    step = np.array([0.0, 0.0, 0.0, 1.0])
+    assert pb.keep_probability(5.0, 0.0, 0.0, 5, step) == 1.0
+    assert pb.keep_probability(2.0, 0.0, 0.0, 5, step) == 0.0
 
 
 def test_monte_carlo_cross_check():
@@ -78,5 +89,6 @@ def test_monte_carlo_cross_check():
     noisy = counts + rng.laplace(0.0, scale, size=draws)
     mc = float((noisy >= threshold).mean())
     mean, var, m3 = pb.moments(ps)
-    got = pb.keep_probability(mean, var, m3, len(ps), scale, threshold)
+    got = pb.keep_probability(mean, var, m3, len(ps),
+                              _laplace(scale, threshold))
     assert got == pytest.approx(mc, abs=5e-3)
