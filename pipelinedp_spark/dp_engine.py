@@ -14,7 +14,8 @@ pipeline_dp/dp_engine.py:115-195, re-expressed Spark-first):
 
 The stages from the final merge on are one release stage
 (``DPEngine.aggregate_partials``), shared by ``aggregate``,
-``aggregate_multi_sum`` and the streaming window aggregations.
+``aggregate_multi_sum`` and the streaming window aggregations; PERCENTILE
+joins a per-key sparse histogram to it and releases it there.
 
 Budget protocol is two-phase like the reference: ``aggregate`` registers
 MechanismSpecs and returns a lazy result; the noise projection is built only
@@ -37,6 +38,7 @@ from pyspark.sql.types import DoubleType
 
 from pipelinedp_spark import contribution_bounders as bounders
 from pipelinedp_spark import dp_computations as dp
+from pipelinedp_spark import quantile_tree as qt
 from pipelinedp_spark.aggregate_params import (AddDPNoiseParams,
                                                AggregateParams, MechanismType,
                                                Metric, Metrics, NoiseKind,
@@ -54,6 +56,11 @@ PARTIAL_COUNT = "__pp_count__"
 PARTIAL_SUM = "__pp_sum__"
 PARTIAL_NORM_SUM = "__pp_norm_sum__"
 PARTIAL_NORM_SQ = "__pp_norm_sq__"
+# The one value a privacy id holds in a key (PERCENTILE), binned per key;
+# ``aggregate_partials`` returns the noisy histogram total as
+# ``PERCENTILE_TOTAL``.
+PARTIAL_VALUE = "__pp_value__"
+PERCENTILE_TOTAL = "__pct_total__"
 _PID_COUNT = "__pid_count__"
 _COUNT = "__count__"
 _SUM = "__sum__"
@@ -63,9 +70,9 @@ _MERGED = {PARTIAL_COUNT: _COUNT, PARTIAL_SUM: _SUM,
            PARTIAL_NORM_SUM: _NORM_SUM, PARTIAL_NORM_SQ: _NORM_SQ}
 _BIN = "__bin__"
 _BCNT = "__bcnt__"
-_CUM = "__cum__"
+_HIST = "__hist__"
+_PCT = "__pct__"
 _TOT = "__tot__"
-_P = "__p__"
 _POS = "__pos__"
 _VV = "__vv__"
 
@@ -295,6 +302,92 @@ def _vector_clip_udf(norm_kind: str, max_norm: float):
     return _clipv
 
 
+# PERCENTILE (reference semantics: pipeline_dp/combiners.py:629-719, a
+# quantile tree that noises every node it visits). Values are clipped to
+# [min_value, max_value] and binned; a per-key sparse histogram (the
+# occupied bins and their counts) is the only per-key state, and one
+# Arrow-batched function releases it: "histogram" noises every bin of the
+# domain and interpolates inside the bin where the noisy cumulative count
+# reaches the rank; "tree" runs the quantile tree's noisy descent
+# (`quantile_tree.py`) with the bins as leaves. A key without rows is
+# released from an empty histogram the same way.
+def _percentile_domain(params: AggregateParams
+                       ) -> Tuple[float, float, int, float]:
+    """(lo, hi, number of bins, bin width); the tree's leaves are bins."""
+    lo, hi = float(params.min_value), float(params.max_value)
+    nbins = (qt.num_leaves() if params.percentile_algorithm == "tree"
+             else params.percentile_bins)
+    return lo, hi, nbins, (hi - lo) / nbins if hi > lo else 1.0
+
+
+def _bin_column(value: Column, params: AggregateParams) -> Column:
+    lo, hi, nbins, width = _percentile_domain(params)
+    return F.least(F.lit(nbins - 1).cast("long"),
+                   F.floor((_clip(value, lo, hi) - F.lit(lo)) / F.lit(width))
+                   ).cast("int").alias(_BIN)
+
+
+def _sparse_histogram(rows: DataFrame, value: Column, params: AggregateParams,
+                      pk_cols: Sequence[str], *aggs: Column) -> DataFrame:
+    """One row per key: ``_HIST``, the (bin, count) pairs of its occupied
+    bins of ``value``, and ``aggs`` over the per-bin counts ``_BCNT``."""
+    return (rows.groupBy(*pk_cols, _bin_column(value, params))
+            .agg(F.count(F.lit(1)).alias(_BCNT))
+            .groupBy(*pk_cols)
+            .agg(F.collect_list(F.struct(_BIN, _BCNT)).alias(_HIST), *aggs))
+
+
+def _percentile_release(params: AggregateParams, draw: NoiseDraw,
+                        noise_mode: str):
+    """The release of ``(bins, counts)`` histogram arrays (null for a key
+    without rows): a struct of the requested percentiles by output name
+    and the noisy total ``_TOT``. A noisy total of 0 reads min_value."""
+    lo, hi, nbins, width = _percentile_domain(params)
+    ps = [float(p) for p in params.percentiles_to_compute]
+    names = [m.output_name for m in params.metrics
+             if m.metric == Metric.PERCENTILE] + [_TOT]
+    kind = draw.kind.value
+
+    def histogram(bins, counts, rng):
+        hist = np.zeros(nbins)
+        hist[bins] = counts
+        if noise_mode != "zero":
+            hist += (rng.laplace(0.0, draw.scale, nbins) if kind == "laplace"
+                     else rng.normal(0.0, draw.scale, nbins))
+        hist = np.maximum(hist, 0.0)
+        cum = np.cumsum(hist)
+        vals = []
+        for p in ps:
+            rank = p / 100.0 * cum[-1]
+            hit = np.flatnonzero((hist > 0) & (cum >= rank))
+            b = hit[0] if len(hit) else None
+            vals.append(lo if b is None else lo + width * (
+                b + (rank - (cum[b] - hist[b])) / hist[b]))
+        return vals, cum[-1]
+
+    def tree(bins, counts, rng):
+        return qt.compute_tree_quantiles(
+            bins, counts, ps, lo, hi,
+            qt.make_noise_fn(noise_mode, kind, draw.scale, rng),
+            return_total=True)
+
+    read_off = tree if params.percentile_algorithm == "tree" else histogram
+
+    @F.pandas_udf(", ".join(f"`{n}` double" for n in names))
+    def release(bins: pd.Series, counts: pd.Series) -> pd.DataFrame:
+        rng = np.random.default_rng()
+        rows = []
+        for b, c in zip(bins, counts):
+            vals, total = read_off(
+                np.asarray([] if b is None else b, np.int64),
+                np.asarray([] if c is None else c, np.float64), rng)
+            rows.append([*(vals if total > 0 else [lo] * len(ps)), total])
+        return pd.DataFrame(rows, columns=names, dtype="float64")
+
+    # Nondeterministic: every field read shares one evaluation (one draw).
+    return release.asNondeterministic()
+
+
 @dataclasses.dataclass(frozen=True)
 class NoiseDraw:
     """One additive noise draw: Laplace scale b or Gaussian sigma."""
@@ -342,6 +435,15 @@ class KeepRule:
         ones = np.flatnonzero(p >= 1.0)
         return p[:ones[0] + 1] if len(ones) else p
 
+    def keeps(self, noisy: Column, pid_count: Column) -> Column:
+        """The keep predicate of a noise rule: ``noisy`` (the privacy-id
+        count plus ``noise``) reaches the threshold and ``pid_count``
+        reaches ``pre_threshold``."""
+        keep = noisy >= F.lit(self.threshold)
+        if self.pre_threshold is not None:
+            keep = keep & (pid_count >= F.lit(self.pre_threshold))
+        return keep
+
 
 def partition_keep_rule(spec: MechanismSpec,
                         params: AggregateParams) -> KeepRule:
@@ -371,14 +473,8 @@ def partition_keep_rule(spec: MechanismSpec,
     noise = NoiseDraw(kind, dp.noise_scale(
         kind, spec.eps, spec.delta - thr_delta,
         dp.privacy_id_count_sensitivities(l0)))
-    # Post-aggregation thresholding applies no pre_threshold, and splits
-    # the threshold's delta over max_partitions_contributed partitions (1
-    # when only max_contributions bounds them).
-    return KeepRule(None if post else params.pre_threshold, noise,
-                    dp.thresholding_from_std(
-                        kind, noise.std, thr_delta,
-                        (params.max_partitions_contributed or 1) if post
-                        else l0))
+    return KeepRule(params.pre_threshold, noise, dp.thresholding_from_std(
+        kind, noise.std, thr_delta, l0))
 
 
 def noise_draws(params: AggregateParams, specs: dict) -> Dict[str, NoiseDraw]:
@@ -388,7 +484,9 @@ def noise_draws(params: AggregateParams, specs: dict) -> Dict[str, NoiseDraw]:
     moments' count draw (the one COUNT releases) and ``norm_sum`` /
     ``norm_sq`` draw on the normalized sum and (VARIANCE) sum of
     squares. SUM under MEAN or VARIANCE has no draw of its own: it
-    releases mid * count + norm_sum."""
+    releases mid * count + norm_sum. ``percentile`` is the draw on each
+    histogram bin, or on each visited quantile-tree node (every level is
+    a histogram released with eps/height and delta/height)."""
     kind = params.noise_kind
     l0 = params.max_partitions_contributed or params.max_contributions
     linf = params.max_contributions_per_partition
@@ -416,6 +514,14 @@ def noise_draws(params: AggregateParams, specs: dict) -> Dict[str, NoiseDraw]:
         draws["norm_sum"] = NoiseDraw(kind, ms.norm_sum_scale)
         if "variance" in specs:
             draws["norm_sq"] = NoiseDraw(kind, ms.norm_sum_sq_scale)
+    if "percentile" in specs:
+        spec = specs["percentile"]
+        levels = (qt.DEFAULT_TREE_HEIGHT
+                  if params.percentile_algorithm == "tree" else 1)
+        draws["percentile"] = NoiseDraw(kind, dp.noise_scale(
+            kind, spec.eps / levels, spec.delta / levels,
+            dp.count_sensitivities(params.max_partitions_contributed or 1,
+                                   linf or 1)))
     if "privacy_id_count" in specs:
         if params.post_aggregation_thresholding:
             draws["privacy_id_count"] = partition_keep_rule(
@@ -503,11 +609,17 @@ class DPEngine:
         per_pid_pk = self._bound_contributions(data, params, pk_cols,
                                                metric_kinds, report)
 
-        # Percentiles ride a parallel bounded-histogram pipeline and join
-        # back on the partition key in the release (independent Linf/L0
-        # sample from the scalar partials; both enforce the declared bounds).
-        pct_hist = (self._percentile_histogram(data, params, pk_cols, report)
-                    if params.percentiles_to_compute else None)
+        # Percentiles bin their own bounded rows into a per-key histogram
+        # that joins the merged partials in the release (an independent
+        # Linf/L0 sample; both enforce the declared bounds).
+        pct_hist = None
+        if params.percentiles_to_compute:
+            rows = bounders.bound_rows(data, _PID, pk_cols,
+                                       *_bounding_caps(params),
+                                       self._order_cols)
+            pct_hist = _sparse_histogram(rows, F.col(_VALUE), params, pk_cols)
+            report.append(f"PERCENTILE: {_percentile_domain(params)[2]}-bin "
+                          f"histogram of clipped values")
 
         # --- stage 5: merge, partition handling, noise. ---
         merged = _merge_partials(per_pid_pk, pk_cols, report)
@@ -529,21 +641,37 @@ class DPEngine:
         ``PARTIAL_NORM_SQ`` (sums of values clipped to [min_value,
         max_value] minus their midpoint, and of their squares; MEAN,
         VARIANCE). Each is summed per key; the rows count privacy ids.
+        PERCENTILE reads ``PARTIAL_VALUE``, one value per row (Linf = 1),
+        binned into a per-key histogram whose total counts the privacy
+        ids, so it combines only with PRIVACY_ID_COUNT; its output also
+        holds the noisy histogram total, ``PERCENTILE_TOTAL``.
         Keys: post-aggregation thresholding or DP selection, unless
         ``params.public_partitions_already_filtered`` declares every key
         present public (the streaming ``threshold_windows=False``
         contract; it releases key presence exactly)."""
+        kinds = set(params.metric_kinds)
+        percentile = Metric.PERCENTILE in kinds
         if params.custom_combiners or \
-                not set(params.metric_kinds) <= _PARTIAL_METRICS:
-            raise ValueError("aggregate_partials releases only COUNT, "
-                             "PRIVACY_ID_COUNT, SUM, MEAN and VARIANCE")
+                not kinds <= _PARTIAL_METRICS | {Metric.PERCENTILE} or \
+                percentile and not kinds <= {Metric.PERCENTILE,
+                                             Metric.PRIVACY_ID_COUNT}:
+            raise ValueError(
+                "aggregate_partials releases COUNT, PRIVACY_ID_COUNT, SUM, "
+                "MEAN and VARIANCE, or PERCENTILE with PRIVACY_ID_COUNT")
         report = [f"DPEngine.aggregate_partials: metrics={params.metrics}"]
         self._reports.append(report)
         specs = self.request_budgets(params, False, report)
-        merged = _merge_partials(partials, pk_cols, report)
+        if percentile:
+            merged = _sparse_histogram(partials, F.col(PARTIAL_VALUE), params,
+                                       pk_cols, F.sum(_BCNT).alias(_PID_COUNT))
+            report.append("Binned value partials per partition key")
+        else:
+            merged = _merge_partials(partials, pk_cols, report)
+        total = ([F.col(_PCT)[_TOT].alias(PERCENTILE_TOTAL)] if percentile
+                 else [])
         return DPResult(
             lambda: self._release(merged, params, specs, pk_cols, None,
-                                  report),
+                                  report, extra_cols=total),
             self._accountant)
 
     def _release(self, merged: DataFrame, params, specs: dict,
@@ -562,19 +690,11 @@ class DPEngine:
         elif "partition_selection" in specs:
             out = self._select_private_partitions(
                 out, specs["partition_selection"], params, report)
-        pct_values = None
         if pct_hist is not None:
-            release = (self._percentile_tree_values
-                       if params.percentile_algorithm == "tree"
-                       else self._percentile_values)
-            pct_values = release(pct_hist, params, specs["percentile"],
-                                 pk_cols, report)
-            for m in params.metrics:
-                if m.metric == Metric.PERCENTILE:
-                    pct_values = pct_values.withColumnRenamed(
-                        str(float(m.parameter)), m.output_name)
-        out, cols = self._compute_metrics(out, params, specs, pk_cols, report,
-                                          pct_values)
+            # Keys without rows (empty public keys, keys the percentile's
+            # own L0 sample emptied) get a null histogram, noised like any.
+            out = out.join(pct_hist, on=list(pk_cols), how="left")
+        out, cols = self._compute_metrics(out, params, specs, pk_cols, report)
         return out.select(*cols, *extra_cols)
 
     # ------------------------------------------------------------------
@@ -722,22 +842,20 @@ class DPEngine:
             return out.filter(keep)
         noisy = self._noise.add_noise(pid_count.cast(DoubleType()),
                                       rule.noise.kind.value, rule.noise.scale)
-        keep = noisy >= F.lit(rule.threshold)
-        if rule.pre_threshold is not None:
-            keep = keep & (pid_count >= F.lit(rule.pre_threshold))
         report.append(
             f"Partition selection: {params.partition_selection_strategy.value}"
             f", threshold={rule.threshold:.3f}")
-        return out.filter(keep)
+        return out.filter(rule.keeps(noisy, pid_count))
 
     # ------------------------------------------------------------------
     def _compute_metrics(self, out: DataFrame, params: AggregateParams,
                          specs: dict, pk_cols: Sequence[str],
-                         report: List[str],
-                         pct_values: Optional[DataFrame] = None
+                         report: List[str]
                          ) -> Tuple[DataFrame, List[Column]]:
         """Noisy metric columns: returns the frame to select from and the
-        partition-key + metric columns, in ``params.metrics`` order."""
+        partition-key + metric columns, in ``params.metrics`` order. The
+        PERCENTILE columns (and the noisy total, ``_PCT.__tot__``) read the
+        per-key histogram column ``_HIST``."""
         noise = self._noise
         draws = noise_draws(params, specs)
         metric_cols: dict = {}
@@ -797,8 +915,8 @@ class DPEngine:
             rule = partition_keep_rule(specs["privacy_id_count"], params)
             out = out.withColumn("__dp_pid_count__",
                                  noisy(pid_count, "privacy_id_count"))
-            out = out.filter(
-                F.col("__dp_pid_count__") >= F.lit(rule.threshold))
+            out = out.filter(rule.keeps(F.col("__dp_pid_count__"),
+                                        F.col(_PID_COUNT)))
             metric_cols["privacy_id_count"] = F.col("__dp_pid_count__")
             stddev_vals["privacy_id_count"] = rule.noise.std
             report.append(
@@ -806,158 +924,29 @@ class DPEngine:
                 f"{rule.threshold:.3f}")
         elif "privacy_id_count" in specs:
             additive("privacy_id_count", pid_count)
-
-        if pct_values is not None:
-            # Left join: empty public partitions have no histogram rows; a
-            # missing quantile of an empty partition resolves to min_value
-            # (rank 0 of an empty distribution).
-            out = out.join(pct_values, on=list(pk_cols), how="left")
+        if "percentile" in specs:
+            draw = draws["percentile"]
+            release = _percentile_release(params, draw, self._noise_mode)
+            out = out.withColumn(
+                _PCT, release(F.col(_HIST)[_BIN], F.col(_HIST)[_BCNT]))
+            for m in params.metrics:
+                if m.metric == Metric.PERCENTILE:
+                    metric_cols[m.output_name] = F.col(_PCT)[m.output_name]
+            report.append(
+                f"PERCENTILE ({params.percentile_algorithm}): "
+                f"{draw.kind.value} noise on every bin or visited node, "
+                f"scale={draw.scale:.4g}, qs={params.percentiles_to_compute}")
 
         ordered = [F.col(c) for c in pk_cols]
         for m in params.metrics:
             name = m.output_name
             if name in metric_cols:
                 ordered.append(metric_cols[name].cast(DoubleType()).alias(name))
-            elif m.metric == Metric.PERCENTILE and pct_values is not None:
-                ordered.append(
-                    F.coalesce(F.col(name), F.lit(float(params.min_value)))
-                    .cast(DoubleType()).alias(name))
             if params.output_noise_stddev and name in stddev_vals:
                 ordered.append(
                     F.lit(float(stddev_vals[name])).cast(DoubleType())
                     .alias(f"{name}_noise_stddev"))
         return out, ordered
-
-    # ------------------------------------------------------------------
-    # PERCENTILE: bounded-domain histogram sketch
-    # (reference semantics: pipeline_dp/combiners.py:629-719 — the reference
-    # uses a PyDP QuantileTree; this engine releases a DP histogram of
-    # `percentile_bins` equi-width bins over [min_value, max_value] and
-    # interpolates quantiles from the noised cumulative counts. Fully
-    # native: two bounded groupBys + window cumsum, no per-key sketch
-    # state, no UDAF.)
-    # ------------------------------------------------------------------
-    def _percentile_histogram(self, data: DataFrame, params: AggregateParams,
-                              pk_cols: Sequence[str],
-                              report: List[str]) -> DataFrame:
-        """Contribution-bounded per-(pk, bin) counts of clipped values; the
-        quantile tree's leaves are its bins."""
-        from pipelinedp_spark import quantile_tree as qt
-        nbins = (qt.num_leaves() if params.percentile_algorithm == "tree"
-                 else params.percentile_bins)
-        lo, hi = float(params.min_value), float(params.max_value)
-        width = (hi - lo) / nbins if hi > lo else 1.0
-        bin_col = F.least(
-            F.lit(nbins - 1).cast("long"),
-            F.floor((_clip(F.col(_VALUE), lo, hi) - F.lit(lo)) /
-                    F.lit(width))).cast("int")
-        report.append(
-            f"PERCENTILE: {nbins}-bin histogram sketch over [{lo}, {hi}]")
-        binned = data.withColumn(_BIN, bin_col)
-        rows = bounders.bound_rows(binned, _PID, pk_cols,
-                                   *_bounding_caps(params), self._order_cols)
-        return (rows.groupBy(*pk_cols, _BIN)
-                .agg(F.count(F.lit(1)).cast("double").alias(_BCNT)))
-
-    def _percentile_values(self, hist: DataFrame, params: AggregateParams,
-                           spec: MechanismSpec, pk_cols: Sequence[str],
-                           report: List[str]) -> DataFrame:
-        """Noise the histogram cells, then linearly interpolate each
-        requested quantile from the cumulative counts. One mechanism
-        releases the whole histogram (each user's rows touch <= l0*linf
-        cells with <= linf per cell -> the scalar count sensitivities)."""
-        nbins = params.percentile_bins
-        lo, hi = float(params.min_value), float(params.max_value)
-        width = (hi - lo) / nbins if hi > lo else 1.0
-        l0 = params.max_partitions_contributed or 1
-        linf = params.max_contributions_per_partition or 1
-        scale = dp.noise_scale(params.noise_kind, spec.eps, spec.delta,
-                               dp.count_sensitivities(l0, linf))
-        # Densify to the full public bin domain before noising: empty bins
-        # MUST draw noise too, otherwise bin occupancy (which one user can
-        # flip) reaches the release un-noised. nbins rows per partition
-        # key, generated post-aggregation — negligible at any scale.
-        pks = hist.select(*pk_cols).distinct()
-        full = (pks.withColumn(
-            _BIN, F.explode(F.sequence(F.lit(0), F.lit(nbins - 1))))
-            .withColumn(_BIN, F.col(_BIN).cast("int")))
-        hist = (full.join(hist, on=[*pk_cols, _BIN], how="left")
-                .fillna(0.0, subset=[_BCNT]))
-        noisy = F.greatest(
-            self._noise.add_noise(F.col(_BCNT).cast(DoubleType()),
-                                  params.noise_kind.value, scale),
-            F.lit(0.0))
-        hist = hist.withColumn(_BCNT, noisy)
-        wcum = Window.partitionBy(*pk_cols).orderBy(_BIN)
-        wtot = Window.partitionBy(*pk_cols)
-        hist = (hist.withColumn(_CUM, F.sum(_BCNT).over(wcum))
-                .withColumn(_TOT, F.sum(_BCNT).over(wtot)))
-        ps = [float(p) for p in params.percentiles_to_compute]
-        hp = hist.withColumn(_P, F.explode(F.array(*[F.lit(p) for p in ps])))
-        rank = F.col(_P) / F.lit(100.0) * F.col(_TOT)
-        # Linear interpolation inside the first bin whose cumulative count
-        # reaches the rank (min_by over qualifying bins).
-        val = (F.lit(lo) + F.lit(width) *
-               (F.col(_BIN) +
-                (rank - (F.col(_CUM) - F.col(_BCNT))) / F.col(_BCNT)))
-        sel = hp.filter((F.col(_BCNT) > 0) & (F.col(_CUM) >= rank))
-        long_df = sel.groupBy(*pk_cols, _P).agg(
-            F.min_by(val, F.col(_BIN)).alias("__val__"))
-        out = long_df.groupBy(*pk_cols).pivot(_P, ps).agg(F.first("__val__"))
-        report.append(f"PERCENTILE: noise scale={scale:.4g}, qs={ps}")
-        return out
-
-    def _percentile_tree_values(self, hist: DataFrame,
-                                params: AggregateParams,
-                                spec: MechanismSpec,
-                                pk_cols: Sequence[str],
-                                report: List[str]) -> DataFrame:
-        """Quantile-tree path (reference: pipeline_dp/combiners.py:629-719
-        semantics; height-4 branching-16 hierarchical histogram). The
-        sketch state is the native leaf-count histogram from
-        `_percentile_histogram(nbins=16^4)`; the noisy descent runs per
-        partition key in an Arrow-batched applyInPandas, drawing fresh
-        noise for every visited node (empty ones included) at the
-        per-level budget eps/height and sharing draws across quantiles."""
-        from pipelinedp_spark import quantile_tree as qt
-        from pyspark.sql.types import StructField, StructType
-
-        lo, hi = float(params.min_value), float(params.max_value)
-        height = qt.DEFAULT_TREE_HEIGHT
-        branching = qt.DEFAULT_BRANCHING_FACTOR
-        l0 = params.max_partitions_contributed or 1
-        linf = params.max_contributions_per_partition or 1
-        kind = params.noise_kind
-        # Per-level composition: each entry touches one node per level, so
-        # each level is a histogram of sensitivity l0*linf released with
-        # eps/height (and delta/height for Gaussian).
-        scale = dp.noise_scale(
-            kind, spec.eps / height,
-            (spec.delta / height) if spec.delta else 0.0,
-            dp.count_sensitivities(l0, linf))
-        ps = [float(p) for p in params.percentiles_to_compute]
-        noise_mode = self._noise_mode
-        kind_value = kind.value
-
-        pk_fields = [f for f in hist.schema.fields if f.name in pk_cols]
-        schema = StructType(pk_fields +
-                            [StructField(str(p), DoubleType())
-                             for p in ps])
-
-        def descend(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            vals = qt.compute_tree_quantiles(
-                pdf[_BIN].to_numpy(), pdf[_BCNT].to_numpy(), ps, lo, hi,
-                qt.make_noise_fn(noise_mode, kind_value, scale),
-                height, branching)
-            row = {c: [pdf[c].iloc[0]] for c in pk_cols}
-            row.update({str(p): [v] for p, v in zip(ps, vals)})
-            return pd.DataFrame(row)
-
-        out = hist.groupBy(*pk_cols).applyInPandas(descend, schema)
-        report.append(
-            f"PERCENTILE: quantile tree h={height} b={branching}, "
-            f"per-node scale={scale:.4g}, qs={ps}")
-        return out
 
     # ------------------------------------------------------------------
     # VECTOR_SUM: per-vector norm clip + elementwise DP sum

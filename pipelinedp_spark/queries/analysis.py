@@ -973,17 +973,16 @@ def _dp_windowed_percentile_tree_events(spark: SparkSession,
     """Batch mirror of streaming.dp_streaming_percentile with
     ``percentile_algorithm="tree"``: the per-(event_type, day) median of
     per-user day averages via the reference h=4/b=16 quantile tree
-    (leaf resolution 16^4 over [0, 500]), zero noise — exercising the
-    SAME `_streaming_percentile_tree` plan the stream runs (exact
-    per-(window, leaf) counts + Arrow-batched noisy descent), with the
-    batch groupBy standing in for the stateful aggregation. The oracle
-    reproduces the zero-noise descent in closed form: first leaf whose
-    cumulative count crosses rank = 0.5 * total, with within-leaf linear
-    interpolation — the flat equivalent of the nested first-crossing
-    descent."""
-    from pipelinedp_spark.aggregate_params import NoiseKind
-    from pipelinedp_spark.streaming.dp_streaming import (
-        _streaming_percentile_tree)
+    (leaf resolution 16^4 over [0, 500]), zero noise, windows declared
+    public. The per-user averages are released through the engine stage
+    the stream releases through (``DPEngine.aggregate_partials``: per-key
+    sparse leaf histogram, then the Arrow-batched noisy descent), with the
+    batch groupBy standing in for the stateful aggregation; ``n_users`` is
+    the descent's noisy total. The oracle reproduces the zero-noise
+    descent in closed form: first leaf whose cumulative count crosses
+    rank = 0.5 * total, with within-leaf linear interpolation — the flat
+    equivalent of the nested first-crossing descent."""
+    from pipelinedp_spark.dp_engine import PARTIAL_VALUE, PERCENTILE_TOTAL
     ev = _t(spark, sf_dir, "events")
     day_us = 86_400_000_000
     per_user = (ev.withColumn(
@@ -992,17 +991,20 @@ def _dp_windowed_percentile_tree_events(spark: SparkSession,
                  F.struct(F.col("event_type"), F.col("day"))
                  .alias("window"))
         .agg(F.avg(F.greatest(F.least(F.col("value"), F.lit(500.0)),
-                              F.lit(0.0))).alias("__uval__")))
-    out = _streaming_percentile_tree(
-        per_user, do_threshold=False, epsilon_per_window=1.0,
-        delta_per_window=0.0, min_value=0.0, max_value=500.0,
-        percentile=50.0, l0_per_window=1,
-        noise_kind=NoiseKind.LAPLACE, noise_mode="zero")
-    return out.select(
+                              F.lit(0.0))).alias(PARTIAL_VALUE)))
+    acct = pds.NaiveBudgetAccountant(1.0, 0.0)
+    res = pds.DPEngine(acct, noise_mode="zero").aggregate_partials(
+        per_user, pds.AggregateParams(
+            metrics=[pds.Metrics.PERCENTILE(50)],
+            max_partitions_contributed=1, max_contributions_per_partition=1,
+            min_value=0.0, max_value=500.0, percentile_algorithm="tree",
+            public_partitions_already_filtered=True), ["window"])
+    acct.compute_budgets()
+    return res.dataframe().select(
         F.col("window.event_type").alias("event_type"),
         F.col("window.day").cast("long").alias("day"),
-        F.round(F.col("percentile_value"), 6).alias("p50_tree"),
-        F.col("n_users").cast("long").alias("n_users"))
+        F.round(F.col("percentile_50"), 6).alias("p50_tree"),
+        F.col(PERCENTILE_TOTAL).cast("long").alias("n_users"))
 
 _DP_WINDOWED_PCT_TREE_SQL = """
 WITH ev AS (

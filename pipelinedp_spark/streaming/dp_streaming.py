@@ -34,9 +34,11 @@ must pass ``threshold_windows=False`` explicitly (every window present is
 then a public key); otherwise a pure-eps budget raises.
 
 **Checkpoints.** Count, sum, mean, variance and session-count state holds
-the engine's merged partials. Checkpoints written before these functions
-released through the engine cannot be resumed (their state can match by
-type with columns swapped): restart such queries from an empty checkpoint.
+the engine's merged partials, and percentile state the engine's per-window
+sparse histogram. Checkpoints written before these functions released
+through the engine cannot be resumed (their state can match by type with
+columns swapped, and percentile state changed shape): restart such
+queries from an empty checkpoint.
 """
 
 from __future__ import annotations
@@ -52,13 +54,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
 from pipelinedp_spark import dp_computations as dp
-from pipelinedp_spark.aggregate_params import (AggregateParams,
-                                               MechanismType, MetricSpec,
+from pipelinedp_spark.aggregate_params import (AggregateParams, MetricSpec,
                                                Metrics, NoiseKind)
 from pipelinedp_spark.budget_accounting import NaiveBudgetAccountant
 from pipelinedp_spark.dp_engine import (PARTIAL_COUNT, PARTIAL_NORM_SQ,
                                         PARTIAL_NORM_SUM, PARTIAL_SUM,
-                                        DPEngine, partition_keep_rule)
+                                        PARTIAL_VALUE, PERCENTILE_TOTAL,
+                                        DPEngine)
 from pipelinedp_spark.noise import create_noise_source
 from pipelinedp_spark import store
 
@@ -480,220 +482,38 @@ def dp_streaming_percentile(stream: DataFrame,
                             percentile_algorithm: str = "histogram"
                             ) -> DataFrame:
     """DP percentile per event-time window over PER-USER window averages,
-    via the batch engine's equi-width histogram sketch — or, with
-    ``percentile_algorithm="tree"``, the reference quantile tree (the
-    same height-4 branching-16 hierarchical histogram as the batch
-    ``percentile_algorithm="tree"`` path; `quantile_tree.py`).
+    released by the batch engine's PERCENTILE: an ``n_bins`` equi-width
+    histogram, or with ``percentile_algorithm="tree"`` the reference
+    quantile tree (height 4, branching 16; `quantile_tree.py`).
 
     Contribution unit: each user contributes exactly ONE value per window
     — the average of their clipped contributions — so every user moves
-    exactly one histogram bin count by 1 (Linf = 1 by construction; the
-    sketch's count-histogram sensitivity, no row sampling needed
+    one bin count by 1 (Linf = 1 by construction, no row sampling needed
     mid-stream). Plan: watermark -> per-(user, window) clipped mean
-    (stateful) -> bin projection -> per-(window, bin) count (stateful,
-    chained) -> per-bin noise -> per-window collect + quantile read-off
-    (stateful, chained). The released percentile is the left-cumulative
-    bin midpoint, exactly the batch QuantileCombiner histogram fast path.
-
-    Window selection (default on, same contract as dp_streaming_count)
-    thresholds on the noisy total user count = sum of noisy bin counts.
-    The threshold is calibrated for the worst case it protects — a
-    one-user window has exactly one occupied bin, so its noisy total is a
-    single draw of the bin noise. Caveat (documented deviation from the
-    batch sketch, which noises a dense bin grid): a streaming aggregation
-    only materializes OCCUPIED (window, bin) rows, so within a released
-    window the occupancy pattern of bins is not itself noised; a user who
-    is alone in a bin shifts the read-off by at most one bin width beyond
-    what the count noise covers. Use more users per window (the
-    thresholding default) or coarser bins where that residual matters.
-    Budget: the bins get all of epsilon; with selection on, they get half
-    of delta and the threshold the other half (the threshold reads the
-    bins' own noisy total, so it spends no epsilon).
-    Returns (window, percentile_value, n_users) with n_users the noisy
-    total.
+    (stateful) -> per-(window, bin) user count (stateful, chained) ->
+    per-window sparse histogram and user count (stateful, chained) -> the
+    engine's release, which noises every bin of the domain (or every
+    visited tree node), empty ones included, when the window is read.
+    Window selection as in dp_streaming_count, on the user count.
+    Returns (window, percentile_value, n_users): n_users is the released
+    privacy-id count when windows are thresholded, else the histogram's
+    noisy total.
     """
-    do_threshold = _resolve_thresholding(threshold_windows, delta_per_window,
-                                         noise_kind)
-    if l0_per_window < 1:
-        raise ValueError("l0_per_window must be positive")
-    if min_value > max_value:
-        raise ValueError("min_value must be <= max_value")
-    width = (max_value - min_value) / n_bins
-
     per_user = _per_user_window(
         stream, privacy_id_col, timestamp_col, window_duration,
         watermark_delay,
         F.avg(_clip(F.col(value_col).cast(DoubleType()), min_value,
-                    max_value)).alias("__uval__"))
-    if percentile_algorithm == "tree":
-        return _streaming_percentile_tree(
-            per_user, do_threshold, epsilon_per_window, delta_per_window,
-            float(min_value), float(max_value), percentile,
-            l0_per_window, noise_kind, noise_mode)
-    if percentile_algorithm != "histogram":
-        raise ValueError(
-            f"percentile_algorithm must be 'histogram' or 'tree', got "
-            f"{percentile_algorithm!r}")
-    per_bin = _users_per_bin(per_user, min_value, width, n_bins)
-
-    # Per-bin noise BEFORE the final collect: each user sits in exactly one
-    # bin, so bin counts are disjoint count queries (parallel composition
-    # within a window; epsilon spends once per window, not per bin). The
-    # bins get all of epsilon: the window threshold reads their own noisy
-    # total, so it spends only its half of delta.
-    delta_bins = delta_per_window / 2 if do_threshold else delta_per_window
-    sens = dp.count_sensitivities(l0_per_window, 1)
-    scale = dp.noise_scale(noise_kind, epsilon_per_window, delta_bins, sens)
-    noise = create_noise_source(noise_mode)
-    noisy_bins = per_bin.withColumn(
-        "__nn__", noise.add_noise(F.col("__n__").cast(DoubleType()),
-                                  noise_kind.value, scale))
-
-    per_window = noisy_bins.groupBy("window").agg(
-        F.sort_array(F.collect_list(F.struct("__bin__", "__nn__")))
-        .alias("__hist__"))
-
-    total = F.aggregate("__hist__", F.lit(0.0),
-                        lambda acc, x: acc + F.greatest(x["__nn__"],
-                                                        F.lit(0.0)))
-    per_window = per_window.withColumn("__total__", total)
-    target = F.col("__total__") * F.lit(percentile / 100.0)
-    # scan: first bin where the cumulative (positive-clamped) count
-    # reaches the target rank
-    scan = F.aggregate(
-        "__hist__",
-        F.struct(F.lit(0.0).alias("cum"), F.lit(-1).alias("bin")),
-        lambda acc, x: F.struct(
-            (acc["cum"] + F.greatest(x["__nn__"], F.lit(0.0))).alias("cum"),
-            F.when(acc["bin"] >= 0, acc["bin"])
-            .when(acc["cum"] + F.greatest(x["__nn__"], F.lit(0.0))
-                  >= target, x["__bin__"])
-            .otherwise(F.lit(-1)).alias("bin")),
-        lambda acc: acc["bin"])
-    chosen = F.when(scan >= 0, scan).otherwise(F.lit(n_bins - 1))
-    value = (F.lit(float(min_value))
-             + (chosen.cast("double") + F.lit(0.5)) * F.lit(width))
-
-    out = per_window.withColumn("percentile_value", value)
-    if do_threshold:
-        # Threshold on the noisy total: in the worst case (one user) the
-        # total is a single draw of the per-bin noise, so the threshold is
-        # calibrated against THAT std; it consumes the other delta half.
-        bin_std = dp.noise_std(noise_kind, epsilon_per_window, delta_bins,
-                               sens)
-        threshold = dp.thresholding_from_std(
-            noise_kind, bin_std, delta_per_window / 2, l0_per_window)
-        out = out.filter(F.col("__total__") >= F.lit(threshold))
-    return out.select("window",
-                      F.col("percentile_value"),
-                      F.col("__total__").alias("n_users"))
-
-
-def _users_per_bin(per_user: DataFrame, lo: float, width: float,
-                   n_bins: int) -> DataFrame:
-    """Users per (window, bin) of their window average ``__uval__``, over
-    ``n_bins`` bins of ``width`` from ``lo``."""
-    bin_col = F.least(F.greatest(
-        F.floor((F.col("__uval__") - F.lit(float(lo))) / F.lit(width))
-        .cast("int"), F.lit(0)), F.lit(n_bins - 1))
-    return per_user.groupBy("window", bin_col.alias("__bin__")).agg(
-        F.count(F.lit(1)).alias("__n__"))
-
-
-def _streaming_percentile_tree(per_user: DataFrame,
-                               do_threshold: bool,
-                               epsilon_per_window: float,
-                               delta_per_window: float,
-                               min_value: float,
-                               max_value: float,
-                               percentile: float,
-                               l0_per_window: int,
-                               noise_kind: NoiseKind,
-                               noise_mode: str) -> DataFrame:
-    """Quantile-tree streaming percentile (batch parity: the engine's
-    ``percentile_algorithm="tree"`` path, `dp_engine._percentile_tree_values`,
-    mirroring the reference combiner's h=4/b=16 hierarchical histogram).
-
-    Plan: the stateful aggregation keeps EXACT per-(window, leaf) counts
-    (leaf = 16^4-resolution bin of the per-user clipped window average —
-    the same mergeable sketch state as batch); the noisy root-to-leaf
-    descent runs in an Arrow-batched UDF over each window's collected
-    sparse leaf histogram, drawing fresh noise for every visited node
-    (empty children included) at the per-level budget eps/height — noise
-    at READ time, exactly like batch, so state stores no noise.
-
-    Budget: thresholding on -> eps/2 to the tree and eps/2 to the noisy
-    privacy-id count that funds the threshold, with delta split by the
-    engine's rule (module docstring); off -> the tree gets the full
-    budget and ``n_users`` is the descent's own level-1 noisy total
-    (reuses the descent draws — no extra release).
-
-    Returns (window, percentile_value, n_users) like the histogram path.
-    """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    from pipelinedp_spark import quantile_tree as qt
-
-    height = qt.DEFAULT_TREE_HEIGHT
-    branching = qt.DEFAULT_BRANCHING_FACTOR
-    n_leaves = branching ** height
-    leaf_width = (max_value - min_value) / n_leaves
-
-    per_leaf = _users_per_bin(per_user, min_value, leaf_width, n_leaves)
-    per_window = per_leaf.groupBy("window").agg(
-        F.collect_list(F.struct("__bin__", "__n__")).alias("__hist__"),
-        F.sum("__n__").alias("__pids__"))
-
-    accountant = NaiveBudgetAccountant(epsilon_per_window, delta_per_window)
-    tree = accountant.request_budget(noise_kind.convert_to_mechanism_type())
-    if do_threshold:
-        thr = accountant.request_budget(
-            MechanismType.LAPLACE_THRESHOLDING
-            if noise_kind == NoiseKind.LAPLACE
-            else MechanismType.GAUSSIAN_THRESHOLDING)
-    accountant.compute_budgets()
-    tree_scale = dp.noise_scale(
-        noise_kind, tree.eps / height, tree.delta / height,
-        dp.count_sensitivities(l0_per_window, 1))
-    kind_value = noise_kind.value
-    pct = float(percentile)
-    lo, hi = min_value, max_value
-
-    @pandas_udf("percentile_value double, n_users double")
-    def _descend(hist: pd.Series) -> pd.DataFrame:
-        out_v, out_n = [], []
-        for h in hist:
-            leaves = np.array([e["__bin__"] for e in h], dtype=np.int64)
-            counts = np.array([e["__n__"] for e in h], dtype=np.float64)
-            vals, total = qt.compute_tree_quantiles(
-                leaves, counts, [pct], lo, hi,
-                qt.make_noise_fn(noise_mode, kind_value, tree_scale),
-                height, branching, return_total=True)
-            out_v.append(vals[0])
-            out_n.append(total)
-        return pd.DataFrame({"percentile_value": out_v, "n_users": out_n})
-
-    out = per_window.withColumn("__res__", _descend(F.col("__hist__")))
-    if do_threshold:
-        # The engine's post-aggregation thresholding at the privacy-id
-        # count's share.
-        rule = partition_keep_rule(thr, AggregateParams(
-            metrics=[Metrics.PRIVACY_ID_COUNT],
-            max_partitions_contributed=l0_per_window,
-            max_contributions_per_partition=1, noise_kind=noise_kind,
-            post_aggregation_thresholding=True))
-        out = out.withColumn("__dp_pids__", create_noise_source(
-            noise_mode).add_noise(F.col("__pids__").cast(DoubleType()),
-                                  kind_value, rule.noise.scale))
-        out = out.filter(F.col("__dp_pids__") >= F.lit(rule.threshold))
-        n_users = F.col("__dp_pids__")
-    else:
-        n_users = F.col("__res__.n_users")
-    return out.select("window",
-                      F.col("__res__.percentile_value")
-                      .alias("percentile_value"),
-                      n_users.alias("n_users"))
+                    max_value)).alias(PARTIAL_VALUE))
+    spec = Metrics.PERCENTILE(percentile)
+    out = _release_windows(
+        per_user, [spec], threshold_windows, epsilon_per_window,
+        delta_per_window, noise_kind, noise_mode, l0_per_window, 1,
+        min_value=min_value, max_value=max_value, percentile_bins=n_bins,
+        percentile_algorithm=percentile_algorithm)
+    n_users = ("privacy_id_count" if "privacy_id_count" in out.columns
+               else PERCENTILE_TOTAL)
+    return out.select("window", F.col(spec.output_name).alias(
+        "percentile_value"), F.col(n_users).alias("n_users"))
 
 
 def near_dup_dedup_batch(batch: DataFrame,

@@ -348,3 +348,46 @@ def test_max_contributions_rejected_where_unenforced(metric, extra):
         name = metric.metric.value
     with pytest.raises(ValueError, match=f"max_contributions .*{name}"):
         pds.AggregateParams(max_contributions=1, **shape)
+
+
+def _post_aggregation_keys(spark, ids_per_key, eps, delta, **params):
+    """Keys a zero-noise post-aggregation-thresholded COUNT +
+    PRIVACY_ID_COUNT release keeps, each key holding the given number of
+    single-row privacy ids."""
+    rows = [(f"{k}{i}", k, 1.0) for k, n in ids_per_key.items()
+            for i in range(n)]
+    acct = pds.NaiveBudgetAccountant(eps, delta)
+    res = pds.DPEngine(acct, noise_mode="zero").aggregate(
+        _make_df(spark, rows), pds.AggregateParams(
+            metrics=[pds.Metrics.COUNT, pds.Metrics.PRIVACY_ID_COUNT],
+            post_aggregation_thresholding=True, **params),
+        pds.DataFrameExtractors("pid", "pk", None))
+    acct.compute_budgets()
+    return {r["pk"] for r in res.dataframe().collect()}
+
+
+def test_post_aggregation_threshold_splits_delta_over_max_contributions(
+        spark):
+    """One privacy id reaches up to max_contributions keys, so the
+    threshold's delta is split over that many: 52.60 at eps 2, delta 1e-5,
+    max_contributions 4 (47.05 when split over one key)."""
+    from pipelinedp_spark.budget_accounting import NaiveBudgetAccountant
+    from pipelinedp_spark.dp_engine import DPEngine, partition_keep_rule
+    params = pds.AggregateParams(
+        metrics=[pds.Metrics.COUNT, pds.Metrics.PRIVACY_ID_COUNT],
+        max_contributions=4, post_aggregation_thresholding=True)
+    acct = NaiveBudgetAccountant(2.0, 1e-5)
+    specs = DPEngine(acct).request_budgets(params, False, [])
+    acct.compute_budgets()
+    rule = partition_keep_rule(specs["privacy_id_count"], params)
+    assert rule.threshold == pytest.approx(52.60, abs=0.01)
+    assert _post_aggregation_keys(spark, {"a": 50, "b": 60}, 2.0, 1e-5,
+                                  max_contributions=4) == {"b"}
+
+
+def test_post_aggregation_thresholding_applies_pre_threshold(spark):
+    """A key with fewer privacy ids than pre_threshold is not released,
+    though its noisy count clears the threshold (~1.8 here)."""
+    assert _post_aggregation_keys(
+        spark, {"a": 30, "b": 50}, 20.0, 1e-5, max_partitions_contributed=1,
+        max_contributions_per_partition=1, pre_threshold=40) == {"b"}

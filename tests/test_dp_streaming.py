@@ -154,7 +154,7 @@ def test_dp_streaming_percentile(spark, stream_dir, events_schema, run_stream):
 
 def test_dp_streaming_percentile_selection(spark, stream_dir, events_schema,
                                            run_stream):
-    """At eps=1 the Laplace threshold on the noisy user total is 10.21:
+    """At eps=1 the Laplace threshold on the noisy user count is 19.42:
     the 20-user windows are released, the 2-user window is not."""
     stream = sources.read_stream(spark, stream_dir, events_schema)
     out = dp_streaming_percentile(
@@ -402,6 +402,18 @@ _PARITY = {
         dict(metrics=[Metrics.COUNT, Metrics.PRIVACY_ID_COUNT],
              max_contributions_per_partition=2),
         {"session_count": "count"}),
+    **{f"percentile_{algorithm}": (
+        lambda s, algorithm=algorithm, **kw: dp_streaming_percentile(
+            s, "user_id", "ts", "value", min_value=0.0, max_value=5.0,
+            percentile=30.0, n_bins=16, percentile_algorithm=algorithm,
+            **kw),
+        dict(metrics=[Metrics.PERCENTILE(30), Metrics.PRIVACY_ID_COUNT],
+             max_contributions_per_partition=1, min_value=0.0,
+             max_value=5.0, percentile_bins=16,
+             percentile_algorithm=algorithm),
+        {"percentile_value": "percentile_30",
+         "n_users": "privacy_id_count"})
+       for algorithm in ("histogram", "tree")},
 }
 
 
@@ -416,7 +428,8 @@ def test_stream_batch_parity(spark, parity_dir, events_schema, run_stream,
                              name, noise_kind, eps):
     """Zero noise, window selection on, caps that never bind: a streaming
     window aggregation releases exactly what DPEngine.aggregate releases
-    over the same rows keyed by F.window(ts, ...)."""
+    over the same rows keyed by F.window(ts, ...); for percentiles, over
+    each user's window average of clipped values."""
     stream_fn, batch_kwargs, renames = _PARITY[name]
     stream = sources.read_stream(spark, parity_dir, events_schema)
     got = run_stream(
@@ -430,6 +443,9 @@ def test_stream_batch_parity(spark, parity_dir, events_schema, run_stream,
                              .alias("ts"))
                 .agg(F.count(F.lit(1)).alias("value")))
     rows = rows.withColumn("window", F.window("ts", "1 minute"))
+    if name.startswith("percentile"):
+        rows = rows.groupBy("user_id", "window").agg(F.avg(F.least(
+            F.greatest("value", F.lit(0.0)), F.lit(5.0))).alias("value"))
     accountant = NaiveBudgetAccountant(eps, 1e-4)
     result = DPEngine(accountant, noise_mode="zero").aggregate(
         rows, AggregateParams(max_partitions_contributed=1,
@@ -453,12 +469,12 @@ def test_stream_batch_parity(spark, parity_dir, events_schema, run_stream,
 
 def test_dp_streaming_percentile_releases_mid_sized_window(
         spark, parity_dir, events_schema, run_stream):
-    """The bins get all of epsilon, so at eps=1 the threshold on the noisy
-    user total is 10.21 (19.42 if the bins spent eps/2): the 12-user minute
-    is released next to the 20-user one; the 2-user minute is not."""
+    """The bins and the thresholded user count get eps/2 each, so at
+    eps=3 the threshold is 7.14 (19.42 at eps=1): the 12-user minute is
+    released next to the 20-user one; the 2-user minute is not."""
     stream = sources.read_stream(spark, parity_dir, events_schema)
     out = dp_streaming_percentile(
-        stream, "user_id", "ts", "value", epsilon_per_window=1.0,
+        stream, "user_id", "ts", "value", epsilon_per_window=3.0,
         delta_per_window=1e-4, min_value=0.0, max_value=8.0, n_bins=8,
         noise_mode="zero", **_WINDOW)
     rows = {r["window"]["start"].minute: r

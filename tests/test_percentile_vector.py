@@ -78,6 +78,31 @@ def test_percentile_empty_public_partition(spark):
     assert rows["b"]["percentile_50"] == 0.0  # min_value for empty
 
 
+@pytest.mark.parametrize("algorithm", ["histogram", "tree"])
+def test_percentile_noises_empty_public_partition(spark, algorithm):
+    """Secure mode: an empty public key is released from a noised empty
+    histogram like any other key, so it does not read exactly min_value on
+    every run (which would tell it apart from a key with users)."""
+    df = spark.createDataFrame([(u, "a", 5.0) for u in range(3)],
+                               "pid int, pk string, v double")
+    got = []
+    for _ in range(5):
+        acct = pds.NaiveBudgetAccountant(1.0, 1e-6)
+        res = pds.DPEngine(acct, noise_mode="secure").aggregate(
+            df, pds.AggregateParams(
+                metrics=[pds.Metrics.PERCENTILE(50)],
+                max_partitions_contributed=1,
+                max_contributions_per_partition=1, min_value=0.0,
+                max_value=10.0, percentile_algorithm=algorithm),
+            pds.DataFrameExtractors("pid", "pk", "v"),
+            public_partitions=["a", "b"])
+        acct.compute_budgets()
+        got += [r["percentile_50"] for r in res.dataframe().collect()
+                if r["pk"] == "b"]
+    assert len(got) == 5
+    assert any(v != 0.0 for v in got), got
+
+
 def test_percentile_alongside_count(spark):
     rows = [(u, "a", float(u % 10)) for u in range(50)]
     df = spark.createDataFrame(rows, "pid int, pk string, v double")

@@ -233,6 +233,33 @@ def test_quantile_tree_scan_pruning(spark):
         assert set(cols) <= {"o_custkey", "o_orderpriority", "o_totalprice"}
 
 
+def test_percentile_histogram_release_shape(spark):
+    """Batch histogram percentile: each key's (bin, count) pairs are one
+    groupBy(key) collect_list feeding one Arrow eval. The only windows are
+    the bounders' per-privacy-id samples: no window over the key
+    (cumulative sums), no pivot, no densified bin grid (sequence
+    explode + join)."""
+    acct = pds.NaiveBudgetAccountant(1.0, 1e-6)
+    res = pds.DPEngine(acct, noise_mode="secure").aggregate(
+        _orders(spark), pds.AggregateParams(
+            metrics=[pds.Metrics.PERCENTILE(50), pds.Metrics.PERCENTILE(90)],
+            max_partitions_contributed=3, max_contributions_per_partition=5,
+            min_value=0.0, max_value=1000.0),
+        pds.DataFrameExtractors("o_custkey", "o_orderpriority",
+                                "o_totalprice"),
+        public_partitions=["1-URGENT", "2-HIGH"])
+    acct.compute_budgets()
+    plan = P.explain_str(res.dataframe(), mode="simple")
+    assert plan.count("ArrowEvalPython") == 1
+    assert len(re.findall(r"Aggregate\(keys=\[o_orderpriority#\d+\], "
+                          r"functions=\[collect_list", plan)) == 1
+    windows = [ln for ln in plan.splitlines() if re.search(r"\bWindow \[", ln)]
+    assert windows and all(re.search(r"\], \[__pid__#", ln)
+                           for ln in windows), windows
+    for absent in ("pivotfirst", "sequence(", "Generate"):
+        assert absent not in plan, absent
+
+
 def test_running_sum_stays_range_partitioned(spark):
     from pipelinedp_spark.operators.running import running_sum
     df = spark.range(1000).withColumn("v", (F.col("id") % 9) + 1)
