@@ -330,8 +330,11 @@ def _bin_column(value: Column, params: AggregateParams) -> Column:
 def _sparse_histogram(rows: DataFrame, value: Column, params: AggregateParams,
                       pk_cols: Sequence[str], *aggs: Column) -> DataFrame:
     """One row per key: ``_HIST``, the (bin, count) pairs of its occupied
-    bins of ``value``, and ``aggs`` over the per-bin counts ``_BCNT``."""
-    return (rows.groupBy(*pk_cols, _bin_column(value, params))
+    bins of ``value``, and ``aggs`` over the per-bin counts ``_BCNT``.
+    Null values are dropped first: ``least`` skips a null, so binned they
+    would land in the top bin."""
+    return (rows.filter(value.isNotNull())
+            .groupBy(*pk_cols, _bin_column(value, params))
             .agg(F.count(F.lit(1)).alias(_BCNT))
             .groupBy(*pk_cols)
             .agg(F.collect_list(F.struct(_BIN, _BCNT)).alias(_HIST), *aggs))

@@ -9,7 +9,18 @@
   state and results are reproducible across retries. Signature and
   pair-cosine evaluation run as Arrow-batched pandas UDFs: higher-order
   column lambdas are interpreted (no codegen, no CSE), so per-row numpy
-  beats them by ~2 orders of magnitude on 64-dim vectors.
+  beats them by ~2 orders of magnitude on 64-dim vectors. That per-row
+  win has a fixed price: every Python-worker task pays ~0.2 s of CPU
+  before its first row (PySpark's worker setup calls
+  ``importlib.invalidate_caches()``, and under Python 3.11 each of ~16
+  zipimporters then re-reads the directory of ``pyspark.zip``), so a
+  UDF on a small input costs more than the work it does.
+- IVF / PQ / IVF-PQ: one quantizer kernel, `_quantizer_udf`. The corpus
+  side is one Arrow pass (nearest cell and PQ codes); the query side is
+  one Arrow pass (probe cells and the flattened m x ksub ADC table); ADC
+  scoring is a Catalyst expression of m array lookups (`_adc_expr`), so
+  scoring runs no Python worker and every PQ scorer sums the same terms
+  in the same order.
 
 No reference counterpart (net-new per project north star).
 """
@@ -65,12 +76,7 @@ def cosine_topk(corpus: DataFrame,
         .crossJoin(F.broadcast(q)) \
         .select(F.col(query_id), F.col(corpus_id),
                 cos(F.col(corpus_vec), F.col(query_vec)).alias("cosine"))
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(),
-                                             F.col(corpus_id).asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id, corpus_id, "rank",
-                    F.round(F.col("cosine"), 6).alias("cosine")))
+    return _top_k(scored, k, query_id, corpus_id, "cosine")
 
 
 def _md5_unit(seed: str) -> float:
@@ -181,6 +187,106 @@ def sample_corpus_matrix(corpus: DataFrame, corpus_id: str, corpus_vec: str,
     return np.stack(pdf[corpus_vec].to_numpy()).astype("float64")
 
 
+def _quantizer_udf(cts: Optional[np.ndarray], cb: Optional[np.ndarray],
+                   nprobe: Optional[int] = None):
+    """The IVF/PQ kernel as one Arrow-batched pass over a vector column,
+    given centroids ``cts`` and/or PQ codebooks ``cb`` (closure-captured,
+    a few KB).
+
+    Corpus side (``nprobe`` None): struct(``cell`` int, the nearest
+    cell; ``codes`` array<int>, the m PQ codes). Query side (``nprobe``
+    given, 0 without centroids): struct(``cells`` array<int>, the
+    ``nprobe`` nearest cells; ``tbl``
+    array<double>, the flattened m x ksub ADC table, entry
+    ``j * ksub + i`` = |q_j - cb[j, i]|^2). Fields of a model not given
+    are left out. Distances use the identity a.a - 2 a.b + b.b, term
+    order matching the SQL oracles. The helpers are nested so the
+    closure pickles by value: the Python worker never imports this
+    package."""
+    query = nprobe is not None
+    dim = cts.shape[1] if cts is not None else cb.shape[0] * cb.shape[2]
+    fields = []
+    if cts is not None:
+        fields.append("cells array<int>" if query else "cell int")
+    if cb is not None:
+        fields.append("tbl array<double>" if query else "codes array<int>")
+
+    def cell_sims(v):
+        v = v / np.maximum(np.linalg.norm(v, axis=1, keepdims=True), 1e-12)
+        return v @ cts.T
+
+    def pq_codes(v):
+        m, _, sub = cb.shape
+        codes = np.empty((len(v), m), dtype="int32")
+        for j in range(m):
+            vs = v[:, j * sub:(j + 1) * sub]
+            d = ((vs * vs).sum(axis=1, keepdims=True)
+                 - 2.0 * vs @ cb[j].T
+                 + (cb[j] * cb[j]).sum(axis=1)[None, :])
+            codes[:, j] = d.argmin(axis=1)
+        return codes
+
+    def adc_table(q):
+        m, ksub, sub = cb.shape
+        tbl = np.empty((m, ksub))
+        for j in range(m):
+            qs = q[j * sub:(j + 1) * sub]
+            tbl[j] = ((qs * qs).sum() - 2.0 * cb[j] @ qs
+                      + (cb[j] * cb[j]).sum(axis=1))
+        return tbl.ravel()
+
+    @pandas_udf(", ".join(fields))
+    def _kernel(vec: pd.Series) -> pd.DataFrame:
+        v = (np.stack(vec.to_numpy()).astype("float64") if len(vec)
+             else np.empty((0, dim)))
+        out = {}
+        if cts is not None:
+            sims = cell_sims(v)
+            if query:
+                out["cells"] = list(np.argsort(-sims, axis=1)
+                                    [:, :nprobe].astype("int32"))
+            else:
+                out["cell"] = sims.argmax(axis=1).astype("int32")
+        if cb is not None:
+            if query:
+                out["tbl"] = [adc_table(q) for q in v]
+            else:
+                out["codes"] = list(pq_codes(v))
+        return pd.DataFrame(out)
+
+    # Nondeterministic only to the optimizer: a join on the cell infers
+    # isnotnull(cell), and pushed below the projection that filter would
+    # run the kernel a second time.
+    return _kernel.asNondeterministic()
+
+
+def _adc_expr(codes: Column, tbl: Column, m: int, ksub: int) -> Column:
+    """Asymmetric (ADC) distance of a coded vector to a query as a
+    Catalyst expression: ``sum_j tbl[j * ksub + codes[j]]`` over a
+    query's flattened table, summed left to right in j order. Every PQ
+    scorer (`pq_topk`, `ivf_pq_topk`, `ann_search_from_index`) sums
+    through it, so they agree bit for bit; for m < 8 it is also
+    bit-identical to numpy's row sum of the gathered table (numpy sums
+    rows of 8 or more pairwise)."""
+    out = None
+    for j in range(m):
+        t = F.element_at(tbl, codes[j] + (j * ksub + 1))
+        out = t if out is None else out + t
+    return out
+
+
+def _top_k(scored: DataFrame, k: int, query_id: str, corpus_id: str,
+           score: str, ascending: bool = False) -> DataFrame:
+    """Rank ``scored`` per query by ``score`` (ties to the lower corpus
+    id) and keep the top ``k``, score rounded to 6 dp."""
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    w = Window.partitionBy(query_id).orderBy(order, F.col(corpus_id).asc())
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select(query_id, corpus_id, "rank",
+                    F.round(F.col(score), 6).alias(score)))
+
+
 def ivf_topk(corpus: DataFrame,
              queries: DataFrame,
              k: int = 10,
@@ -209,38 +315,19 @@ def ivf_topk(corpus: DataFrame,
         x = sample_corpus_matrix(corpus, corpus_id, corpus_vec, sample_size)
         centroids = train_ivf_centroids(x, num_cells, seed)
 
-    cts = np.asarray(centroids, dtype="float64")  # closure-captured, small
-
-    def cell_udf(top: int):
-        @pandas_udf("array<int>")
-        def _cells(vec: pd.Series) -> pd.Series:
-            if len(vec) == 0:
-                return pd.Series([], dtype="object")
-            v = np.stack(vec.to_numpy()).astype("float64")
-            v = v / np.maximum(np.linalg.norm(v, axis=1, keepdims=True),
-                               1e-12)
-            sims = v @ cts.T
-            order = np.argsort(-sims, axis=1)[:, :top].astype("int32")
-            return pd.Series(list(order))
-
-        return _cells
-
+    cts = np.asarray(centroids, dtype="float64")
     cos = cosine_pairs_udf()
     c = corpus.select(
         F.col(corpus_id), F.col(corpus_vec),
-        F.element_at(cell_udf(1)(F.col(corpus_vec)), 1).alias("cell"))
+        _quantizer_udf(cts, None)(F.col(corpus_vec))["cell"].alias("cell"))
     q = queries.select(
         F.col(query_id), F.col(query_vec),
-        F.explode(cell_udf(nprobe)(F.col(query_vec))).alias("cell"))
+        F.explode(_quantizer_udf(cts, None, nprobe)(F.col(query_vec))
+                  ["cells"]).alias("cell"))
     scored = c.join(F.broadcast(q), "cell").select(
         F.col(query_id), F.col(corpus_id),
         cos(F.col(corpus_vec), F.col(query_vec)).alias("cosine"))
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(),
-                                             F.col(corpus_id).asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id, corpus_id, "rank",
-                    F.round(F.col("cosine"), 6).alias("cosine")))
+    return _top_k(scored, k, query_id, corpus_id, "cosine")
 
 
 def lsh_topk(corpus: DataFrame,
@@ -265,12 +352,7 @@ def lsh_topk(corpus: DataFrame,
     scored = c.join(F.broadcast(q), "bucket").select(
         F.col(query_id), F.col(corpus_id),
         cos(F.col(corpus_vec), F.col(query_vec)).alias("cosine"))
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(),
-                                             F.col(corpus_id).asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id, corpus_id, "rank",
-                    F.round(F.col("cosine"), 6).alias("cosine")))
+    return _top_k(scored, k, query_id, corpus_id, "cosine")
 
 
 def train_pq_codebooks(x: "np.ndarray", m: int = 4, ksub: int = 16,
@@ -333,57 +415,15 @@ def pq_topk(corpus: DataFrame,
         x = sample_corpus_matrix(corpus, corpus_id, corpus_vec, sample_size)
         codebooks = train_pq_codebooks(x, m, ksub, seed)
     cb = np.asarray(codebooks, dtype="float64")   # (m, ksub, sub)
-    m_, ksub_, sub = cb.shape
-
-    @pandas_udf("array<int>")
-    def _encode(vec: pd.Series) -> pd.Series:
-        if len(vec) == 0:
-            return pd.Series([], dtype="object")
-        v = np.stack(vec.to_numpy()).astype("float64")
-        codes = np.empty((len(v), m_), dtype="int32")
-        for j in range(m_):
-            vs = v[:, j * sub:(j + 1) * sub]
-            # |a-b|^2 via the identity, term order matching the oracle
-            d = ((vs * vs).sum(axis=1, keepdims=True)
-                 - 2.0 * vs @ cb[j].T
-                 + (cb[j] * cb[j]).sum(axis=1)[None, :])
-            codes[:, j] = d.argmin(axis=1)
-        return pd.Series(list(codes))
-
-    @pandas_udf("double")
-    def _adc(codes: pd.Series, qv: pd.Series) -> pd.Series:
-        if len(codes) == 0:
-            return pd.Series([], dtype="float64")
-        q = np.stack(qv.to_numpy()).astype("float64")
-        c = np.stack(codes.to_numpy()).astype("int64")
-        out = np.zeros(len(c))
-        # table per distinct query in the batch (queries are broadcast,
-        # so batches hold few distinct queries, many corpus rows)
-        uniq, inv = np.unique(q, axis=0, return_inverse=True)
-        for ui, qrow in enumerate(uniq):
-            tbl = np.empty((m_, ksub_))
-            for j in range(m_):
-                qs = qrow[j * sub:(j + 1) * sub]
-                tbl[j] = ((qs * qs).sum()
-                          - 2.0 * cb[j] @ qs
-                          + (cb[j] * cb[j]).sum(axis=1))
-            mask = inv == ui
-            rows = c[mask]
-            out[mask] = tbl[np.arange(m_)[None, :], rows].sum(axis=1)
-        return pd.Series(out)
-
-    coded = corpus.select(F.col(corpus_id),
-                          _encode(F.col(corpus_vec)).alias("__codes__"))
-    scored = coded.crossJoin(
-        F.broadcast(queries.select(query_id, query_vec))).select(
-        F.col(query_id), F.col(corpus_id),
-        _adc(F.col("__codes__"), F.col(query_vec)).alias("adist"))
-    w = Window.partitionBy(query_id).orderBy(F.col("adist").asc(),
-                                             F.col(corpus_id).asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id, corpus_id, "rank",
-                    F.round(F.col("adist"), 6).alias("adist")))
+    coded = corpus.select(
+        F.col(corpus_id),
+        _quantizer_udf(None, cb)(F.col(corpus_vec))["codes"]
+        .alias("__codes__"))
+    q = queries.select(
+        F.col(query_id),
+        _quantizer_udf(None, cb, 0)(F.col(query_vec))["tbl"]
+        .alias("__tbl__"))
+    return _adc_topk(coded, q, cb, k, query_id, corpus_id, "__codes__")
 
 
 def ivf_pq_topk(corpus: DataFrame,
@@ -419,69 +459,38 @@ def ivf_pq_topk(corpus: DataFrame,
             codebooks = train_pq_codebooks(x, m, ksub, seed)
     cts = np.asarray(centroids, dtype="float64")
     cb = np.asarray(codebooks, dtype="float64")
-    m_, ksub_, sub = cb.shape
-
-    def cell_udf(top: int):
-        @pandas_udf("array<int>")
-        def _cells(vec: pd.Series) -> pd.Series:
-            if len(vec) == 0:
-                return pd.Series([], dtype="object")
-            v = np.stack(vec.to_numpy()).astype("float64")
-            v = v / np.maximum(np.linalg.norm(v, axis=1, keepdims=True),
-                               1e-12)
-            order = np.argsort(-(v @ cts.T), axis=1)[:, :top].astype(
-                "int32")
-            return pd.Series(list(order))
-        return _cells
-
-    @pandas_udf("array<int>")
-    def _encode(vec: pd.Series) -> pd.Series:
-        if len(vec) == 0:
-            return pd.Series([], dtype="object")
-        v = np.stack(vec.to_numpy()).astype("float64")
-        codes = np.empty((len(v), m_), dtype="int32")
-        for j in range(m_):
-            vs = v[:, j * sub:(j + 1) * sub]
-            d = ((vs * vs).sum(axis=1, keepdims=True)
-                 - 2.0 * vs @ cb[j].T
-                 + (cb[j] * cb[j]).sum(axis=1)[None, :])
-            codes[:, j] = d.argmin(axis=1)
-        return pd.Series(list(codes))
-
-    @pandas_udf("double")
-    def _adc(codes: pd.Series, qv: pd.Series) -> pd.Series:
-        if len(codes) == 0:
-            return pd.Series([], dtype="float64")
-        q = np.stack(qv.to_numpy()).astype("float64")
-        c = np.stack(codes.to_numpy()).astype("int64")
-        out = np.zeros(len(c))
-        uniq, inv = np.unique(q, axis=0, return_inverse=True)
-        for ui, qrow in enumerate(uniq):
-            tbl = np.empty((m_, ksub_))
-            for j in range(m_):
-                qs = qrow[j * sub:(j + 1) * sub]
-                tbl[j] = ((qs * qs).sum() - 2.0 * cb[j] @ qs
-                          + (cb[j] * cb[j]).sum(axis=1))
-            mask = inv == ui
-            out[mask] = tbl[np.arange(m_)[None, :], c[mask]].sum(axis=1)
-        return pd.Series(out)
-
     coded = corpus.select(
         F.col(corpus_id),
-        F.element_at(cell_udf(1)(F.col(corpus_vec)), 1).alias("cell"),
-        _encode(F.col(corpus_vec)).alias("__codes__"))
-    q = queries.select(
-        F.col(query_id), F.col(query_vec),
-        F.explode(cell_udf(nprobe)(F.col(query_vec))).alias("cell"))
-    scored = coded.join(F.broadcast(q), "cell").select(
+        _quantizer_udf(cts, cb)(F.col(corpus_vec)).alias("__e__")) \
+        .select(corpus_id, "__e__.cell", F.col("__e__.codes")
+                .alias("__codes__"))
+    return _adc_topk(coded, _probe_queries(queries, cts, cb, nprobe,
+                                          query_id, query_vec),
+                     cb, k, query_id, corpus_id, "__codes__", "cell")
+
+
+def _probe_queries(queries: DataFrame, cts: np.ndarray, cb: np.ndarray,
+                   nprobe: int, query_id: str, query_vec: str) -> DataFrame:
+    """The query side of IVF-PQ search, one Arrow pass: a row per (query,
+    probe cell) carrying the query's ADC table as ``__tbl__``."""
+    return (queries.select(F.col(query_id), _quantizer_udf(cts, cb, nprobe)(
+                F.col(query_vec)).alias("__q__"))
+            .select(F.col(query_id), F.explode("__q__.cells").alias("cell"),
+                    F.col("__q__.tbl").alias("__tbl__")))
+
+
+def _adc_topk(coded: DataFrame, q: DataFrame, cb: np.ndarray, k: int,
+              query_id: str, corpus_id: str, codes_col: str,
+              on: Optional[str] = None) -> DataFrame:
+    """Score coded rows against the broadcast query tables ``q`` with
+    `_adc_expr` (pairs joined on ``on``; every pair when None) and keep
+    each query's top ``k`` by (adist, id). Returns (query_id, corpus_id,
+    rank, adist)."""
+    scored = coded.join(F.broadcast(q), on).select(
         F.col(query_id), F.col(corpus_id),
-        _adc(F.col("__codes__"), F.col(query_vec)).alias("adist"))
-    w = Window.partitionBy(query_id).orderBy(F.col("adist").asc(),
-                                             F.col(corpus_id).asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id, corpus_id, "rank",
-                    F.round(F.col("adist"), 6).alias("adist")))
+        _adc_expr(F.col(codes_col), F.col("__tbl__"), cb.shape[0],
+                 cb.shape[1]).alias("adist"))
+    return _top_k(scored, k, query_id, corpus_id, "adist", ascending=True)
 
 
 def ivf_pq_rerank_topk(corpus: DataFrame,
@@ -527,12 +536,7 @@ def ivf_pq_rerank_topk(corpus: DataFrame,
     scored = withv.select(
         F.col(query_id), F.col(corpus_id),
         cos(F.col(corpus_vec), F.col(query_vec)).alias("cosine"))
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(),
-                                             F.col(corpus_id).asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id, corpus_id, "rank",
-                    F.round(F.col("cosine"), 6).alias("cosine")))
+    return _top_k(scored, k, query_id, corpus_id, "cosine")
 
 
 def hard_negatives(corpus: DataFrame,
@@ -566,13 +570,8 @@ def hard_negatives(corpus: DataFrame,
               .select(F.col(query_id), F.col(corpus_id),
                       cos(F.col(corpus_vec), F.col(query_vec))
                       .alias("cosine")))
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(),
-                                             F.col(corpus_id).asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id, corpus_id,
-                    F.col("rank").cast("long").alias("rank"),
-                    F.round(F.col("cosine"), 6).alias("cosine")))
+    return _top_k(scored, k, query_id, corpus_id, "cosine") \
+        .withColumn("rank", F.col("rank").cast("long"))
 
 
 def label_positives(corpus: DataFrame,
@@ -599,13 +598,8 @@ def label_positives(corpus: DataFrame,
               .select(F.col(query_id), F.col(corpus_id),
                       cos(F.col(corpus_vec), F.col(query_vec))
                       .alias("cosine")))
-    w = Window.partitionBy(query_id).orderBy(F.col("cosine").desc(),
-                                             F.col(corpus_id).asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id, corpus_id,
-                    F.col("rank").cast("long").alias("rank"),
-                    F.round(F.col("cosine"), 6).alias("cosine")))
+    return _top_k(scored, k, query_id, corpus_id, "cosine") \
+        .withColumn("rank", F.col("rank").cast("long"))
 
 
 def mine_triplets(corpus: DataFrame,
@@ -741,21 +735,12 @@ def build_ann_index(corpus: DataFrame,
     the PERSISTED models are loaded and reused (training is skipped —
     retraining would silently re-shard the existing codes), and the
     new codes land in their cell partitions."""
-    from pipelinedp_spark import store
     spark = corpus.sparkSession
     meta = store.begin_build(
         spark, store_name, mode,
         ("_codes", "_centroids", "_codebooks", "_meta"))
     if meta is not None:
-        m_, ksub_, sub = (int(meta["m"]), int(meta["ksub"]),
-                          int(meta["subdim"]))
-        cts = np.array([r["cv"] for r in
-                        spark.table(f"{store_name}_centroids")
-                        .orderBy("cell").collect()], dtype="float64")
-        cb = np.array([r["c"] for r in
-                       spark.table(f"{store_name}_codebooks")
-                       .orderBy("sub", "idx").collect()],
-                      dtype="float64").reshape(m_, ksub_, sub)
+        cts, cb = _read_models(spark, store_name, meta)
     else:
         if centroids is None or codebooks is None:
             x = sample_corpus_matrix(corpus, corpus_id, corpus_vec,
@@ -766,35 +751,11 @@ def build_ann_index(corpus: DataFrame,
                 codebooks = train_pq_codebooks(x, m, ksub, seed)
         cts = np.asarray(centroids, dtype="float64")
         cb = np.asarray(codebooks, dtype="float64")
-        m_, ksub_, sub = cb.shape
-
-    @pandas_udf("int")
-    def _cell(vec: pd.Series) -> pd.Series:
-        if len(vec) == 0:
-            return pd.Series([], dtype="int32")
-        v = np.stack(vec.to_numpy()).astype("float64")
-        v = v / np.maximum(np.linalg.norm(v, axis=1, keepdims=True),
-                           1e-12)
-        return pd.Series((v @ cts.T).argmax(axis=1).astype("int32"))
-
-    @pandas_udf("array<int>")
-    def _encode(vec: pd.Series) -> pd.Series:
-        if len(vec) == 0:
-            return pd.Series([], dtype="object")
-        v = np.stack(vec.to_numpy()).astype("float64")
-        codes = np.empty((len(v), m_), dtype="int32")
-        for j in range(m_):
-            vs = v[:, j * sub:(j + 1) * sub]
-            d = ((vs * vs).sum(axis=1, keepdims=True)
-                 - 2.0 * vs @ cb[j].T
-                 + (cb[j] * cb[j]).sum(axis=1)[None, :])
-            codes[:, j] = d.argmin(axis=1)
-        return pd.Series(list(codes))
-
+    m_, ksub_, sub = cb.shape
     coded = corpus.select(
         F.col(corpus_id).alias("id"),
-        _cell(F.col(corpus_vec)).alias("cell"),
-        _encode(F.col(corpus_vec)).alias("codes"))
+        _quantizer_udf(cts, cb)(F.col(corpus_vec)).alias("__e__")) \
+        .select("id", "__e__.cell", "__e__.codes")
     # provenance stamps (see build_bm25_index): a guarded streaming
     # append marks its code rows so a crash between apply and
     # ingest-log write rolls back convergently — a half-applied
@@ -844,72 +805,39 @@ def ann_search_from_index(queries: DataFrame,
     (equality-pinned). The corpus is never re-encoded.
     Returns (query_id, corpus_id, rank, adist)."""
     spark = queries.sparkSession
-    meta = store.read_meta(spark, store_name)
-    m_, ksub_, sub = int(meta["m"]), int(meta["ksub"]), \
-        int(meta["subdim"])
-    cts_rows = spark.table(f"{store_name}_centroids") \
-        .orderBy("cell").collect()
-    cts = np.array([r["cv"] for r in cts_rows], dtype="float64")
-    cb_rows = spark.table(f"{store_name}_codebooks") \
-        .orderBy("sub", "idx").collect()
-    cb = np.array([r["c"] for r in cb_rows],
-                  dtype="float64").reshape(m_, ksub_, sub)
-
-    @pandas_udf("array<int>")
-    def _qcells(vec: pd.Series) -> pd.Series:
-        if len(vec) == 0:
-            return pd.Series([], dtype="object")
-        v = np.stack(vec.to_numpy()).astype("float64")
-        v = v / np.maximum(np.linalg.norm(v, axis=1, keepdims=True),
-                           1e-12)
-        order = np.argsort(-(v @ cts.T), axis=1)[:, :nprobe].astype(
-            "int32")
-        return pd.Series(list(order))
-
-    @pandas_udf("double")
-    def _adc(codes: pd.Series, qv: pd.Series) -> pd.Series:
-        if len(codes) == 0:
-            return pd.Series([], dtype="float64")
-        q = np.stack(qv.to_numpy()).astype("float64")
-        c = np.stack(codes.to_numpy()).astype("int64")
-        out = np.zeros(len(c))
-        uniq, inv = np.unique(q, axis=0, return_inverse=True)
-        for ui, qrow in enumerate(uniq):
-            tbl = np.empty((m_, ksub_))
-            for j in range(m_):
-                qs = qrow[j * sub:(j + 1) * sub]
-                tbl[j] = ((qs * qs).sum() - 2.0 * cb[j] @ qs
-                          + (cb[j] * cb[j]).sum(axis=1))
-            mask = inv == ui
-            out[mask] = tbl[np.arange(m_)[None, :], c[mask]].sum(axis=1)
-        return pd.Series(out)
-
-    q = (queries.select(F.col(query_id), F.col(query_vec),
-                        F.explode(_qcells(F.col(query_vec)))
-                        .alias("cell"))
-         .localCheckpoint())
-    probe = sorted({r["cell"] for r in q.select("cell")
-                    .distinct().collect()})
+    cts, cb = _read_models(spark, store_name,
+                           store.read_meta(spark, store_name))
+    q = _probe_queries(queries, cts, cb, nprobe, query_id,
+                       query_vec).localCheckpoint()
+    # (query, cell) rows are few: dedup on the driver (a distinct()
+    # would add a shuffle job)
+    probe = sorted({r["cell"] for r in q.select("cell").collect()})
     codes = spark.table(f"{store_name}_codes") \
         .filter(F.col("cell").isin(probe))
     # Logical takedowns (`remove_from_ann_index`): tombstoned vectors
     # drop via an anti-join on the already-pruned scan (broadcast only
     # while the tombstone table is small — store.tombstones guards the
     # hint); `store.compact` applies them physically.
-    from pipelinedp_spark import store as _store
-    ts = _store.tombstones(spark, store_name)
+    ts = store.tombstones(spark, store_name)
     if ts is not None:
         codes = codes.join(ts, "id", "left_anti")
-    scored = codes.join(F.broadcast(q), "cell").select(
-        F.col(query_id), F.col("id").alias(corpus_id),
-        _adc(F.col("codes"), F.col(query_vec)).alias("adist"))
-    w = Window.partitionBy(query_id).orderBy(F.col("adist").asc(),
-                                             F.col(corpus_id).asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id, corpus_id,
-                    F.col("rank").cast("long").alias("rank"),
-                    F.round(F.col("adist"), 6).alias("adist")))
+    return _adc_topk(codes.withColumnRenamed("id", corpus_id), q, cb, k,
+                     query_id, corpus_id, "codes", "cell") \
+        .withColumn("rank", F.col("rank").cast("long"))
+
+
+def _read_models(spark, store_name: str, meta) -> tuple:
+    """The persisted quantizers of an ANN store, (centroids (cells, dim),
+    codebooks (m, ksub, subdim)), read on the driver by
+    `store.read_small_table` and ordered by cell / (sub, idx) there."""
+    _, rows = store.read_small_table(spark, f"{store_name}_centroids")
+    cts = np.array([r["cv"] for r in sorted(rows, key=lambda r: r["cell"])],
+                   dtype="float64")
+    _, rows = store.read_small_table(spark, f"{store_name}_codebooks")
+    rows.sort(key=lambda r: (r["sub"], r["idx"]))
+    cb = np.array([r["c"] for r in rows], dtype="float64").reshape(
+        int(meta["m"]), int(meta["ksub"]), int(meta["subdim"]))
+    return cts, cb
 
 
 def remove_from_ann_index(vec_ids: DataFrame,

@@ -186,37 +186,44 @@ def write_bucketed(df: DataFrame, table: str, bucket_col: str,
 _META_CACHE: dict = {}
 
 
-def read_meta(spark, store_name: str):
-    """The one-row ``{store}_meta`` knob Row, without a Spark job on
-    the hot path: every store reader (incremental dedup, BM25/ANN
-    serving, streaming ingest bodies) needs the knob row, and a
-    ``spark.table(...).collect()`` costs a full job (~100 ms measured)
-    per call for one row of driver metadata. File-backed warehouses
-    read the parquet file directly with pyarrow (~3 ms, always-current
-    files); other catalogs fall back to the collect. Either way the
-    Row is memoized per (session, store) — `write_meta` and
-    `drop_store_table` invalidate on every rebuild/compaction in this
-    process, and a rebuild from a DIFFERENT process is the same
-    staleness class as Spark's own relation cache (readers refresh
-    after external writes)."""
-    hit = _META_CACHE.get(store_name)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    from pyspark.sql import Row
-    table = f"{store_name}_meta"
-    row = None
+def read_small_table(spark, table: str) -> tuple[list[str], list[dict]]:
+    """(column names, rows as dicts) of a small managed table, read on
+    the driver without a Spark job: the store's driver metadata (the
+    one-row ``{store}_meta``, the ingest log, the ANN quantizer models)
+    is read on every ingest and serve, and a ``collect`` of it costs a
+    job (~100-250 ms measured) for what pyarrow reads from the table's
+    files in a few ms. Those files are the truth a Spark scan would
+    read; hidden and in-flight files (``_``/``.`` prefixes) are skipped
+    the same way. A warehouse that is not file-backed, a table the
+    catalog does not hold, or an unreadable file falls back to a Spark
+    collect. Row order is the files' order: callers sort on the driver.
+    """
     loc = _managed_location(spark, table)
     if (loc is not None and os.path.isdir(loc)
             and spark.catalog.tableExists(table)):
         try:
             import pyarrow.parquet as pq
-            rows = pq.read_table(loc).to_pylist()
-            if len(rows) == 1:
-                row = Row(**rows[0])
+            t = pq.read_table(loc)
+            return t.schema.names, t.to_pylist()
         except Exception:
-            row = None
-    if row is None:
-        row = spark.table(table).collect()[0]
+            pass
+    df = spark.table(table)
+    return df.columns, [r.asDict() for r in df.collect()]
+
+
+def read_meta(spark, store_name: str):
+    """The one-row ``{store}_meta`` knob Row, read by `read_small_table`
+    and memoized per (session, store): every store reader (incremental
+    dedup, BM25/ANN serving, streaming ingest bodies) needs it.
+    `write_meta` and `drop_store_table` invalidate on every
+    rebuild/compaction in this process, and a rebuild from a DIFFERENT
+    process is the same staleness class as Spark's own relation cache
+    (readers refresh after external writes)."""
+    hit = _META_CACHE.get(store_name)
+    if hit is not None and hit[0] is spark:
+        return hit[1]
+    from pyspark.sql import Row
+    row = Row(**read_small_table(spark, f"{store_name}_meta")[1][0])
     if len(_META_CACHE) >= 512:
         _META_CACHE.clear()
     _META_CACHE[store_name] = (spark, row)
@@ -482,24 +489,6 @@ def anti_orphans(df: DataFrame, orphans: "DataFrame | None"):
                     "left_anti"))
 
 
-def _read_log_rows(spark, log_table: str):
-    """(column_names, rows-as-dicts) of a file-backed ingest log read
-    driver-side with pyarrow, or None when the warehouse isn't
-    file-backed / a file is unreadable (caller falls back to a Spark
-    scan). The log is bounded — one row per applied batch, folded to
-    one range row per lineage by `compact_ingest_log` — so a full
-    driver read is metadata-sized by construction."""
-    loc = _managed_location(spark, log_table)
-    if loc is None or not os.path.isdir(loc):
-        return None
-    try:
-        import pyarrow.parquet as pq
-        t = pq.read_table(loc)
-    except Exception:
-        return None
-    return set(t.schema.names), t.to_pylist()
-
-
 def _append_log_row(spark, log_table: str, batch_id: int,
                     run_id: str | None, has_hi: bool) -> bool:
     """Append one ingest-log row by writing its parquet file straight
@@ -645,7 +634,6 @@ def apply_batch_once(spark, store_name: str, batch_id: int,
     interval [batch_id, coalesce(hi, batch_id)] so `compact_ingest_log`
     can fold a long stream's one-row-per-batch history to one range
     row per lineage without losing replay suppression."""
-    from pyspark.sql import functions as F
     log_table = f"{store_name}_ingest_log"
     rid = str(run_id or "")
     b = int(batch_id)
@@ -674,54 +662,31 @@ def apply_batch_once(spark, store_name: str, batch_id: int,
         drop_store_table(spark, log_table)
     if exists:
         refresh_table(spark, log_table)
-        # Fast path: the log is driver metadata (one small row per
-        # applied batch, one range row per lineage after compaction),
-        # yet the replay probe below costs a full Spark job (~150-250
-        # ms measured). On a file-backed warehouse read the current
-        # files directly with pyarrow (~3 ms) and probe in Python —
-        # the files ARE the truth the Spark scan would read.
-        log_rows = _read_log_rows(spark, log_table)
-        if log_rows is not None:
-            cols, rows = log_rows
-            legacy = "run_id" not in cols
-            has_hi = "hi" in cols
-            if legacy and rid:
-                raise ValueError(
-                    f"store {store_name}'s ingest log predates run-id "
-                    f"namespacing (batch-id-only rows); rebuild the "
-                    f"store (mode='overwrite' resets the log) before "
-                    f"streaming into it with a checkpoint lineage")
-            for r in rows:
-                lo = r["batch_id"]
-                hi_v = r.get("hi")
-                if hi_v is None:
-                    hi_v = lo
-                if (lo <= b <= hi_v
-                        and (legacy or r.get("run_id") == rid)):
-                    return False
-        else:
-            log = spark.table(log_table)
-            legacy = "run_id" not in log.columns
-            has_hi = "hi" in log.columns
-            if legacy and rid:
-                # A batch-only log cannot say WHICH lineage its ids
-                # belong to: matching on batch_id alone would silently
-                # drop a NEW stream's first batches as "replays" of the
-                # old one, and ignoring the log would double-apply a
-                # RESUMED old stream's replays. Neither silent outcome
-                # is acceptable — fail loudly with the remedy (same
-                # contract as begin_build's missing-knob check).
-                raise ValueError(
-                    f"store {store_name}'s ingest log predates run-id "
-                    f"namespacing (batch-id-only rows); rebuild the "
-                    f"store (mode='overwrite' resets the log) before "
-                    f"streaming into it with a checkpoint lineage")
-            hi = (F.coalesce(F.col("hi"), F.col("batch_id")) if has_hi
-                  else F.col("batch_id"))
-            done = log.filter((F.col("batch_id") <= b) & (hi >= b))
-            if not legacy:
-                done = done.filter(F.col("run_id") == rid)
-            if done.limit(1).count():
+        # The log is driver metadata (one small row per applied batch,
+        # one range row per lineage after compaction): probe it in
+        # Python instead of a Spark filter job.
+        cols, rows = read_small_table(spark, log_table)
+        legacy = "run_id" not in cols
+        has_hi = "hi" in cols
+        if legacy and rid:
+            # A batch-only log cannot say WHICH lineage its ids belong
+            # to: matching on batch_id alone would silently drop a NEW
+            # stream's first batches as "replays" of the old one, and
+            # ignoring the log would double-apply a RESUMED old
+            # stream's replays. Neither silent outcome is acceptable —
+            # fail loudly with the remedy (same contract as
+            # begin_build's missing-knob check).
+            raise ValueError(
+                f"store {store_name}'s ingest log predates run-id "
+                f"namespacing (batch-id-only rows); rebuild the "
+                f"store (mode='overwrite' resets the log) before "
+                f"streaming into it with a checkpoint lineage")
+        for r in rows:
+            lo = r["batch_id"]
+            hi_v = r.get("hi")
+            if hi_v is None:
+                hi_v = lo
+            if lo <= b <= hi_v and (legacy or r.get("run_id") == rid):
                 return False
     if stamped:
         # Happy-path probe elision: a half-applied batch can only be

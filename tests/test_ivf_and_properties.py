@@ -306,3 +306,153 @@ def test_ivf_pq_rerank_equals_bruteforce_on_shortlist(spark):
         rows.sort()
         expect = sorted(byq[qid], key=lambda t: (-t[1], t[0]))[:5]
         assert [(v, c) for _, v, c in rows] == expect, qid
+
+
+# -- IVF-PQ serving: job counts, plan shapes, one scorer ---------------------
+
+
+def _jobs(spark, fn):
+    """(Spark jobs ``fn`` runs under its own job group, its result)."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def _python_evals(df) -> tuple[int, int, int]:
+    """Python eval nodes in ``df``'s physical plan: (all of them, those
+    under its broadcast join's broadcast side, those under its other
+    side)."""
+    import re
+    nodes = []
+    for ln in (df._jdf.queryExecution().executedPlan().toString()
+               .splitlines()):
+        m = re.match(r"^([\s:+|-]*)(\w+)", ln)
+        if m:
+            nodes.append((len(m.group(1)), m.group(2)))
+
+    def subtree(i):
+        end = i + 1
+        while end < len(nodes) and nodes[end][0] > nodes[i][0]:
+            end += 1
+        return range(i + 1, end)
+
+    def evals(idx):
+        return sum(1 for i in idx if nodes[i][1].endswith("EvalPython"))
+
+    join = next(i for i, (_, n) in enumerate(nodes)
+                if n.startswith("Broadcast") and n.endswith("Join"))
+    bcast = next(i for i in subtree(join)
+                 if nodes[i][1] == "BroadcastExchange")
+    return (evals(range(len(nodes))), evals(subtree(bcast)),
+            evals(subtree(join)) - evals(subtree(bcast)))
+
+
+def _drop_ann(spark, name):
+    from pipelinedp_spark import store
+    for suffix in ("_codes", "_centroids", "_codebooks", "_meta"):
+        store.drop_store_table(spark, name + suffix)
+
+
+def _emb_queries(spark):
+    """A 400-vector, dim-16 corpus computed by Spark, and 3 of its rows as
+    queries."""
+    emb = spark.range(400).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[F.sin(F.col("id") * (d + 1) + d) for d in range(16)])
+        .alias("embedding"))
+    q = (emb.filter(F.col("vec_id") < 3)
+         .select(F.col("vec_id").alias("query_id"),
+                 F.col("embedding").alias("query_vec")))
+    return emb, q
+
+
+@pytest.mark.store
+def test_ann_serving_runs_no_model_read_jobs(spark):
+    """The quantizers are read on the driver, not by Spark jobs: an
+    append runs only its write, and a search's eager phase only the query
+    checkpoint and the probe-cell collect."""
+    from pipelinedp_spark.operators import similarity as S
+    emb, q = _emb_queries(spark)
+    S.build_ann_index(emb.filter("vec_id % 2 = 0"), "annjobs_idx",
+                      num_cells=8)
+    try:
+        n, _ = _jobs(spark, lambda: S.build_ann_index(
+            emb.filter("vec_id % 2 = 1"), "annjobs_idx", mode="append"))
+        assert n == 1
+        n, out = _jobs(spark, lambda: S.ann_search_from_index(
+            q, "annjobs_idx", k=5, nprobe=2))
+        assert n == 2
+        assert out.count() == 15
+    finally:
+        _drop_ann(spark, "annjobs_idx")
+
+
+def test_pq_scoring_runs_no_corpus_side_python(spark):
+    """ADC scoring is a Catalyst expression: no Python eval node sits
+    above the corpus/codes side of the broadcast join or above the join,
+    and the query side is one Arrow pass. The corpus side of `pq_topk` /
+    `ivf_pq_topk` keeps its one encode pass; a served search reads codes
+    with no Python at all (its query pass ran in the checkpoint)."""
+    import numpy as np
+
+    from pipelinedp_spark import store
+    from pipelinedp_spark.operators import similarity as S
+    emb, q = _emb_queries(spark)
+    assert _python_evals(S.pq_topk(emb, q, k=5)) == (2, 1, 1)
+    assert _python_evals(S.ivf_pq_topk(emb, q, k=5, num_cells=4)) \
+        == (2, 1, 1)
+    S.build_ann_index(emb, "annplan_idx", num_cells=8)
+    try:
+        assert _python_evals(S.ann_search_from_index(
+            q, "annplan_idx", k=5, nprobe=2)) == (0, 0, 0)
+        cts, cb = S._read_models(spark, "annplan_idx",
+                                 store.read_meta(spark, "annplan_idx"))
+        probe = S._probe_queries(q, cts, cb, 2, "query_id", "query_vec")
+        plan = probe._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("EvalPython") == 1, plan
+        assert np.asarray(cts).shape == (8, 16)
+    finally:
+        _drop_ann(spark, "annplan_idx")
+
+
+def test_pq_scorers_agree_bitwise_at_m8(spark):
+    """`pq_topk`, `ivf_pq_topk` and `ann_search_from_index` give the same
+    adist, to the bit, for every pair they share, at m = 8 (dim 32, sub
+    4), where numpy's pairwise row sum and a j-order sum differ in the
+    last bits. Coordinates ~1e5 put the distances' last bit above the
+    6 dp output rounding, so the comparison sees every bit."""
+    import numpy as np
+
+    from pipelinedp_spark.operators import similarity as S
+    rng = np.random.default_rng(11)
+    x = (rng.normal(size=(12, 32))[rng.integers(0, 12, 400)]
+         + 0.3 * rng.normal(size=(400, 32))) * 1e5
+    corpus = spark.createDataFrame(
+        [(i, [float(v) for v in x[i]]) for i in range(len(x))],
+        "vec_id long, embedding array<double>")
+    q = (corpus.filter(F.col("vec_id") < 4)
+         .select(F.col("vec_id").alias("query_id"),
+                 F.col("embedding").alias("query_vec")))
+    cts = S.train_ivf_centroids(x, 4)
+    cb = S.train_pq_codebooks(x, m=8, ksub=16)
+    full = {(r["query_id"], r["vec_id"]): r["adist"]
+            for r in S.pq_topk(corpus, q, k=10_000, codebooks=cb).collect()}
+    ivf = {(r["query_id"], r["vec_id"]): r["adist"]
+           for r in S.ivf_pq_topk(corpus, q, k=60, nprobe=2, centroids=cts,
+                                  codebooks=cb).collect()}
+    S.build_ann_index(corpus, "annm8_idx", centroids=cts, codebooks=cb)
+    try:
+        ann = {(r["query_id"], r["vec_id"]): r["adist"]
+               for r in S.ann_search_from_index(q, "annm8_idx", k=60,
+                                                nprobe=2).collect()}
+    finally:
+        _drop_ann(spark, "annm8_idx")
+    assert len(full) == 1600 and len(ivf) == 240
+    assert ann == ivf
+    assert all(full[p] == d for p, d in ivf.items())

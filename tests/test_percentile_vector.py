@@ -78,6 +78,26 @@ def test_percentile_empty_public_partition(spark):
     assert rows["b"]["percentile_50"] == 0.0  # min_value for empty
 
 
+def test_percentile_ignores_null_values(spark):
+    """Null values are not binned: a key holding 1.0, 1.0 and three nulls
+    reads the median of the two 1.0s (a null used to land in the top bin,
+    and this median read 9.17)."""
+    df = spark.createDataFrame(
+        [(0, "a", 1.0), (1, "a", 1.0), (2, "a", None), (3, "a", None),
+         (4, "a", None)], "pid int, pk string, v double")
+    acct = pds.NaiveBudgetAccountant(1.0, 1e-6)
+    res = pds.DPEngine(acct, noise_mode="zero").aggregate(
+        df, pds.AggregateParams(
+            metrics=[pds.Metrics.PERCENTILE(50)],
+            max_partitions_contributed=1, max_contributions_per_partition=1,
+            min_value=0.0, max_value=10.0, percentile_bins=10),
+        pds.DataFrameExtractors("pid", "pk", "v"), public_partitions=["a"])
+    acct.compute_budgets()
+    row = res.dataframe().collect()[0]
+    assert row["percentile_50"] == pytest.approx(
+        _pct_expected([1.0, 1.0], 50, 0.0, 10.0, 10))
+
+
 @pytest.mark.parametrize("algorithm", ["histogram", "tree"])
 def test_percentile_noises_empty_public_partition(spark, algorithm):
     """Secure mode: an empty public key is released from a noised empty
