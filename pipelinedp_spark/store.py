@@ -1006,8 +1006,10 @@ def compact(spark, store_name: str, kind: str) -> None:
       batches plus unguarded builds; a later resume replays the batch
       fresh;
     * rows dedup on the table's key;
-    * tombstoned keys are removed, and ``{store}_tombstones`` (and the
-      pHash ``{store}_removed_ids`` log) are dropped afterwards;
+    * tombstoned keys are removed (read through `tombstones`, so a
+      table past its broadcast gate is shuffled, not broadcast), and
+      ``{store}_tombstones`` (and the pHash ``{store}_removed_ids``
+      log) are dropped afterwards;
     * the kind's hook runs: minhash re-applies the build-time
       ``max_bucket_size`` cap globally (a bucket that grew past it
       across appends would blow up the candidate join); bm25
@@ -1022,12 +1024,9 @@ def compact(spark, store_name: str, kind: str) -> None:
     contract. Finally the ingest log folds to one range row per
     lineage (`compact_ingest_log`), bounding the exactly-once
     bookkeeping of a long stream."""
-    from pyspark.sql import functions as F
     k = KINDS[kind]
     meta = read_meta(spark, store_name)
-    ts_table = f"{store_name}_tombstones"
-    ts = (F.broadcast(spark.table(ts_table))
-          if spark.catalog.tableExists(ts_table) else None)
+    ts = tombstones(spark, store_name)
     tables = [sfx for sfx in k.tables
               if spark.catalog.tableExists(store_name + sfx)]
     orphans = orphan_provs(spark, store_name,

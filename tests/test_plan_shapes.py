@@ -5,8 +5,10 @@ These pin the engine's scale-critical physical properties so regressions
 fail tests (the 100 TB posture is a plan property, not a data property).
 """
 
+import math
 import re
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -153,21 +155,8 @@ def test_minhash_signature_computed_once(spark):
     assert "InMemoryTableScan" not in plan  # nothing persisted
 
 
-def test_noise_udfs_are_nondeterministic(spark):
-    """Secure-noise UDFs must be nondeterministic: Catalyst must not push
-    predicates through a noise projection or duplicate a draw, otherwise the
-    thresholded value and the released value come from independent noise
-    (breaking the thresholding DP guarantee)."""
-    from pipelinedp_spark import noise as N
-    src = N.SecureNoiseSource()
-    df = spark.range(4).select(
-        (F.col("id").cast("double") + src.laplace(1.0)).alias("noisy"))
-    plan = P.explain_str(df, mode="simple")
-    assert "ArrowEvalPython" in plan
-
-    # The DP pipeline with post-aggregation thresholding draws pid-count
-    # noise ONCE: the filter and the released column must share the single
-    # ArrowEvalPython node (no duplicated draw after predicate pushdown).
+def _thresholded_release(spark):
+    """PRIVACY_ID_COUNT under post-aggregation thresholding, secure."""
     acct = pds.NaiveBudgetAccountant(20.0, 1e-4)
     engine = pds.DPEngine(acct, noise_mode="secure")
     params = pds.AggregateParams(
@@ -179,8 +168,103 @@ def test_noise_udfs_are_nondeterministic(spark):
         _orders(spark), params,
         pds.DataFrameExtractors("o_custkey", "o_orderpriority", None))
     acct.compute_budgets()
-    nplan = P.explain_str(res.dataframe(), mode="simple")
-    assert nplan.count("ArrowEvalPython") == 1, nplan
+    return res.dataframe()
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_noise_draws_are_nondeterministic(spark):
+    """Secure draws must be nondeterministic: Catalyst must not push
+    predicates through a noise projection or duplicate a draw, otherwise the
+    thresholded value and the released value come from independent noise
+    (breaking the thresholding DP guarantee). No draw may come from a
+    seeded generator (``rand``, ``randn``, ``uuid``): a seed in the plan
+    lets its reader replay the noise."""
+    from pipelinedp_spark import noise as N
+    src = N.SecureNoiseSource()
+    draws = {"laplace": src.laplace(1.0), "gaussian": src.gaussian(1.0),
+             "geometric_keep": src.geometric_keep(
+                 F.col("id"), np.array([0.0, 0.5, 1.0]))}
+    seeded = re.compile(r"\b(rand|randn|uuid)\(")
+    for name, draw in draws.items():
+        expr = spark.range(4).select(draw.alias("x"))._jdf \
+            .queryExecution().analyzed().projectList().apply(0)
+        assert not expr.deterministic(), name
+        assert not seeded.search(expr.toString()), (name, expr.toString())
+
+    # The DP pipeline with post-aggregation thresholding draws pid-count
+    # noise ONCE: the filter and the released column read one draw (the
+    # uniforms of a single Laplace draw; no copy after predicate pushdown).
+    per_draw = _optimized(spark.range(1).select(
+        src.laplace(1.0).alias("x"))).count("reflect(")
+    assert per_draw >= 1
+    out = _thresholded_release(spark)
+    nplan = _optimized(out)
+    assert nplan.count("reflect(") == per_draw, nplan
+    assert re.search(r"Filter .*__dp_pid_count__#\d+ >= ", nplan), nplan
+    assert re.search(r"__dp_pid_count__#\d+ AS privacy_id_count", nplan), \
+        nplan
+    drawn = [ln for ln in nplan.splitlines() if "reflect(" in ln]
+    assert len(drawn) == 1 and not seeded.search(drawn[0]), drawn
+    rows = out.collect()
+    assert rows and all(math.isfinite(r["privacy_id_count"]) for r in rows)
+
+
+def _secure_scalar_releases(spark):
+    """name -> a secure release that adds only scalar noise."""
+    orders = _orders(spark)
+    ex = pds.DataFrameExtractors("o_custkey", "o_orderpriority",
+                                 "o_totalprice")
+    S = pds.PartitionSelectionStrategy
+
+    def aggregate(metrics, public=None, **kw):
+        acct = pds.NaiveBudgetAccountant(5.0, 1e-4)
+        res = pds.DPEngine(acct, noise_mode="secure").aggregate(
+            orders, pds.AggregateParams(
+                metrics=metrics, max_partitions_contributed=3,
+                max_contributions_per_partition=2, min_value=0.0,
+                max_value=1000.0, **kw), ex, public_partitions=public)
+        acct.compute_budgets()
+        return res.dataframe()
+
+    def select(strategy):
+        acct = pds.NaiveBudgetAccountant(5.0, 1e-4)
+        res = pds.DPEngine(acct, noise_mode="secure").select_partitions(
+            orders, pds.SelectPartitionsParams(
+                max_partitions_contributed=3,
+                partition_selection_strategy=strategy), ex)
+        acct.compute_budgets()
+        return res.dataframe()
+
+    M = pds.Metrics
+    return {
+        "deep": aggregate([M.COUNT, M.SUM]),
+        "wide": aggregate([M.COUNT, M.SUM, M.MEAN],
+                          public=["1-URGENT", "2-HIGH", "9-NONE"]),
+        "laplace_selection": aggregate(
+            [M.COUNT], partition_selection_strategy=S.LAPLACE_THRESHOLDING),
+        "gaussian_selection": aggregate(
+            [M.COUNT],
+            partition_selection_strategy=S.GAUSSIAN_THRESHOLDING),
+        "post_aggregation": _thresholded_release(spark),
+        "select_partitions": select(S.TRUNCATED_GEOMETRIC),
+    }
+
+
+def test_secure_scalar_releases_start_no_python(spark):
+    """Secure scalar noise and partition selection are Catalyst
+    expressions: no plan of a scalar release holds a Python eval node,
+    and every released value is finite."""
+    for name, df in _secure_scalar_releases(spark).items():
+        plan = P.explain_str(df, mode="simple")
+        for node in ("ArrowEvalPython", "BatchEvalPython"):
+            assert node not in plan, (name, plan)
+        for r in df.collect():
+            for v in r.asDict().values():
+                assert not isinstance(v, float) or math.isfinite(v), \
+                    (name, r)
 
 
 def test_jaccard_pairs_no_pair_blowup(spark):

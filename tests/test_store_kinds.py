@@ -150,3 +150,44 @@ def test_compaction_keeps_each_declared_layout(spark, kind):
     assert not spark.catalog.tableExists(f"{name}_tombstones")
     for t in names:
         store.drop_store_table(spark, t)
+
+
+def test_compaction_gates_the_tombstone_broadcast(spark, monkeypatch):
+    """`compact` reads the tombstones through `store.tombstones`: with
+    ``spark.pipelinedp.store.tombstoneBroadcastRows=0`` no frame it
+    rewrites joins them under a broadcast hint, and the compacted table
+    equals a default-conf compaction's (which hints the broadcast)."""
+    from pipelinedp_spark.plans import scoped_conf
+    rows, build, takedown = _exact()
+    plans = []
+    checkpoint = type(spark.range(1)).localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(spark.range(1)), "localCheckpoint", spy)
+    gate = "spark.pipelinedp.store.tombstoneBroadcastRows"
+    hinted, tables = {}, {}
+    for rows_cap in ("0", None):
+        name = f"sk_gate_{rows_cap or 'default'}"
+        names = [name + sfx for sfx in ("_fps", "_meta", "_tombstones",
+                                        "_ingest_log")]
+        for t in names:
+            store.drop_store_table(spark, t)
+        data = rows(spark)
+        build(data, name, "overwrite")
+        takedown(data.filter(F.col("doc_id") % 4 == 0), name)
+        plans.clear()
+        confs = {gate: rows_cap} if rows_cap is not None else {}
+        with scoped_conf(spark, **confs):
+            store.compact(spark, name, "exact")
+        joins = [ln for p in plans for ln in p.splitlines()
+                 if "LeftAnti" in ln]
+        assert joins, plans
+        hinted[rows_cap] = any("broadcast" in ln.lower() for ln in joins)
+        tables[rows_cap] = sorted(spark.table(f"{name}_fps").collect())
+        for t in names:
+            store.drop_store_table(spark, t)
+    assert hinted == {"0": False, None: True}
+    assert tables["0"] == tables[None] and tables["0"]
