@@ -15,7 +15,9 @@ pipeline_dp/dp_engine.py:115-195, re-expressed Spark-first):
 The stages from the final merge on are one release stage
 (``DPEngine.aggregate_partials``), shared by ``aggregate``,
 ``aggregate_multi_sum`` and the streaming window aggregations; PERCENTILE
-joins a per-key sparse histogram to it and releases it there.
+joins a per-key sparse histogram to it and releases it there, and
+VECTOR_SUM / VECTOR_MEAN merge per-position partials into one summed array
+per key that it noises element by element.
 
 Budget protocol is two-phase like the reference: ``aggregate`` registers
 MechanismSpecs and returns a lazy result; the noise projection is built only
@@ -42,6 +44,7 @@ from pipelinedp_spark import quantile_tree as qt
 from pipelinedp_spark.aggregate_params import (AddDPNoiseParams,
                                                AggregateParams, MechanismType,
                                                Metric, Metrics, NoiseKind,
+                                               NormKind,
                                                PartitionSelectionStrategy,
                                                SelectPartitionsParams)
 from pipelinedp_spark.budget_accounting import (MechanismSpec,
@@ -61,6 +64,9 @@ PARTIAL_NORM_SQ = "__pp_norm_sq__"
 # ``PERCENTILE_TOTAL``.
 PARTIAL_VALUE = "__pp_value__"
 PERCENTILE_TOTAL = "__pct_total__"
+# The vector position a VECTOR_SUM / VECTOR_MEAN partial row holds (its
+# element sum in ``PARTIAL_SUM``); merged into one array per key, ``_VECTOR``.
+PARTIAL_POS = "__pp_pos__"
 _PID_COUNT = "__pid_count__"
 _COUNT = "__count__"
 _SUM = "__sum__"
@@ -73,8 +79,8 @@ _BCNT = "__bcnt__"
 _HIST = "__hist__"
 _PCT = "__pct__"
 _TOT = "__tot__"
-_POS = "__pos__"
-_VV = "__vv__"
+_VECTOR = "__vector__"
+_VECTOR_METRICS = {Metric.VECTOR_SUM, Metric.VECTOR_MEAN}
 
 
 @dataclasses.dataclass
@@ -282,24 +288,38 @@ def _bounding_note(params: AggregateParams) -> str:
             f"partition), {cross}")
 
 
-def _vector_clip_udf(norm_kind: str, max_norm: float):
-    """Arrow-batched per-vector norm clip: v * min(1, max_norm/||v||)."""
+def _clip_vector(v: Column, params: AggregateParams) -> Column:
+    """Per-vector norm clip, v * min(1, max_norm / ||v||), in Catalyst: the
+    norm is folded by ``aggregate`` and bound once, as the lambda variable
+    of its finish function, which scales the elements by one ``transform``.
+    A vector inside the ball is returned as it is."""
+    kind = params.vector_norm_kind
+    max_norm = F.lit(float(params.vector_max_norm))
+    step = {NormKind.L1: lambda acc, x: acc + F.abs(x),
+            NormKind.L2: lambda acc, x: acc + x * x,
+            NormKind.LINF: lambda acc, x: F.greatest(acc, F.abs(x))}[kind]
 
-    @F.pandas_udf("array<double>")
-    def _clipv(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return v
-        a = np.stack(v.to_numpy()).astype("float64")
-        if norm_kind == "l1":
-            n = np.abs(a).sum(axis=1)
-        elif norm_kind == "l2":
-            n = np.linalg.norm(a, axis=1)
-        else:
-            n = np.abs(a).max(axis=1)
-        factor = np.where(n > max_norm, max_norm / np.maximum(n, 1e-300), 1.0)
-        return pd.Series(list(a * factor[:, None]))
+    def scale(acc: Column) -> Column:
+        norm = F.sqrt(acc) if kind == NormKind.L2 else acc
+        return F.transform(v, lambda x: F.when(
+            norm > max_norm, x * (max_norm / norm)).otherwise(x))
 
-    return _clipv
+    return F.aggregate(v, F.lit(0.0), step, scale)
+
+
+def _merge_vector_partials(partials: DataFrame, pk_cols: Sequence[str],
+                           report: List[str]) -> DataFrame:
+    """Per-key merge of per-(privacy id, key, position) vector partials:
+    ``_VECTOR``, the element sums in position order, with the key's
+    ``_PID_COUNT`` and (from ``PARTIAL_COUNT``) ``_COUNT``, which every
+    position of a privacy id's vector repeats."""
+    per_pos = _merge_partials(partials, [*pk_cols, PARTIAL_POS], report)
+    report.append("Assembled one summed vector per partition key")
+    return per_pos.groupBy(*pk_cols).agg(
+        F.transform(F.array_sort(F.collect_list(F.struct(PARTIAL_POS, _SUM))),
+                    lambda e: e[_SUM]).alias(_VECTOR),
+        *[F.max(c).alias(c) for c in (_PID_COUNT, _COUNT)
+          if c in per_pos.columns])
 
 
 # PERCENTILE (reference semantics: pipeline_dp/combiners.py:629-719, a
@@ -489,7 +509,9 @@ def noise_draws(params: AggregateParams, specs: dict) -> Dict[str, NoiseDraw]:
     squares. SUM under MEAN or VARIANCE has no draw of its own: it
     releases mid * count + norm_sum. ``percentile`` is the draw on each
     histogram bin, or on each visited quantile-tree node (every level is
-    a histogram released with eps/height and delta/height)."""
+    a histogram released with eps/height and delta/height). ``vector_sum``
+    is the draw on each element of a summed vector, ``vector_count`` the
+    one on VECTOR_MEAN's contribution count."""
     kind = params.noise_kind
     l0 = params.max_partitions_contributed or params.max_contributions
     linf = params.max_contributions_per_partition
@@ -532,6 +554,15 @@ def noise_draws(params: AggregateParams, specs: dict) -> Dict[str, NoiseDraw]:
         else:
             additive("privacy_id_count",
                      dp.privacy_id_count_sensitivities(l0))
+    if "vector_sum" in specs:
+        # One clipped vector per contribution and <= linf contributions per
+        # (pid, pk): a key's norm bound scales by linf.
+        additive("vector_sum", dp.vector_sum_sensitivities(
+            l0 or 1, params.vector_norm_kind.value,
+            float(params.vector_max_norm) * (linf or 1),
+            int(params.vector_size)))
+    if "vector_count" in specs:
+        additive("vector_count", dp.count_sensitivities(l0 or 1, linf or 1))
     return draws
 
 
@@ -597,16 +628,25 @@ class DPEngine:
         if needs_value and extractors.value_column is None:
             raise ValueError("value_column required for value metrics")
 
-        if metric_kinds & {Metric.VECTOR_SUM, Metric.VECTOR_MEAN}:
-            return self._aggregate_vector_sum(df, params, extractors,
-                                              public_partitions, report)
+        vector = bool(metric_kinds & _VECTOR_METRICS)
 
         # --- stages 1-2: projection, non-public partitions dropped. ---
-        data, pub_df = self._extract(df, params, extractors,
-                                     public_partitions, report)
+        data, pub_df = self._extract(
+            df, params, extractors, public_partitions, report,
+            [F.col(extractors.value_column).cast("array<double>")
+             .alias(_VALUE)] if vector else None)
 
         # --- stage 3: budget requests. ---
         specs = self.request_budgets(params, pub_df is not None, report)
+
+        if vector:
+            merged = _merge_vector_partials(
+                self._vector_partials(data, params, pk_cols, report),
+                pk_cols, report)
+            return DPResult(
+                lambda: self._release(merged, params, specs, pk_cols, pub_df,
+                                      report),
+                self._accountant)
 
         # --- stage 4: contribution bounding + per-(pid,pk) partials. ---
         per_pid_pk = self._bound_contributions(data, params, pk_cols,
@@ -648,19 +688,25 @@ class DPEngine:
         binned into a per-key histogram whose total counts the privacy
         ids, so it combines only with PRIVACY_ID_COUNT; its output also
         holds the noisy histogram total, ``PERCENTILE_TOTAL``.
+        VECTOR_SUM and VECTOR_MEAN (each alone) read one row per (privacy
+        id, key, position): ``PARTIAL_POS``, the position's sum of the
+        privacy id's norm-clipped vectors in ``PARTIAL_SUM`` and, for
+        VECTOR_MEAN, their number in ``PARTIAL_COUNT``; each position is
+        summed per key into one array.
         Keys: post-aggregation thresholding or DP selection, unless
         ``params.public_partitions_already_filtered`` declares every key
         present public (the streaming ``threshold_windows=False``
         contract; it releases key presence exactly)."""
         kinds = set(params.metric_kinds)
         percentile = Metric.PERCENTILE in kinds
-        if params.custom_combiners or \
-                not kinds <= _PARTIAL_METRICS | {Metric.PERCENTILE} or \
+        if params.custom_combiners or not kinds <= (
+                _PARTIAL_METRICS | _VECTOR_METRICS | {Metric.PERCENTILE}) or \
                 percentile and not kinds <= {Metric.PERCENTILE,
                                              Metric.PRIVACY_ID_COUNT}:
             raise ValueError(
                 "aggregate_partials releases COUNT, PRIVACY_ID_COUNT, SUM, "
-                "MEAN and VARIANCE, or PERCENTILE with PRIVACY_ID_COUNT")
+                "MEAN and VARIANCE, PERCENTILE with PRIVACY_ID_COUNT, or "
+                "VECTOR_SUM or VECTOR_MEAN alone")
         report = [f"DPEngine.aggregate_partials: metrics={params.metrics}"]
         self._reports.append(report)
         specs = self.request_budgets(params, False, report)
@@ -668,6 +714,8 @@ class DPEngine:
             merged = _sparse_histogram(partials, F.col(PARTIAL_VALUE), params,
                                        pk_cols, F.sum(_BCNT).alias(_PID_COUNT))
             report.append("Binned value partials per partition key")
+        elif kinds & _VECTOR_METRICS:
+            merged = _merge_vector_partials(partials, pk_cols, report)
         else:
             merged = _merge_partials(partials, pk_cols, report)
         total = ([F.col(_PCT)[_TOT].alias(PERCENTILE_TOTAL)] if percentile
@@ -686,9 +734,10 @@ class DPEngine:
         out = merged
         if pub_df is not None:
             # Every public key appears; missing ones get empty accumulators
-            # (reference: pipeline_dp/dp_engine.py:315-330).
+            # (reference: pipeline_dp/dp_engine.py:315-330); a missing
+            # vector, which ``fillna`` cannot fill, in _compute_metrics.
             out = pub_df.join(out, on=list(pk_cols), how="left").fillna(
-                {c: 0 for c in out.columns if c not in pk_cols})
+                {c: 0 for c in out.columns if c not in (*pk_cols, _VECTOR)})
             report.append("Added empty public partitions")
         elif "partition_selection" in specs:
             out = self._select_private_partitions(
@@ -832,6 +881,28 @@ class DPEngine:
             row_sampling_needed=sampling, order_cols=self._order_cols)
 
     # ------------------------------------------------------------------
+    def _vector_partials(self, data: DataFrame, params: AggregateParams,
+                         pk_cols: Sequence[str],
+                         report: List[str]) -> DataFrame:
+        """VECTOR_SUM / VECTOR_MEAN partials (reference:
+        pipeline_dp/combiners.py:850-911 semantics): per (pid, pk,
+        position), the sum of the bounded rows' norm-clipped vectors and
+        their number. Bounding samples whole vectors, before the clip and
+        the explode."""
+        rows = bounders.bound_rows(data, _PID, pk_cols,
+                                   *_bounding_caps(params), self._order_cols)
+        report.append(_bounding_note(params))
+        report.append(f"{params.metrics[0].metric.value.upper()}: per-vector "
+                      f"{params.vector_norm_kind.value}-norm clip to "
+                      f"{params.vector_max_norm}")
+        return (rows.select(_PID, *pk_cols, F.posexplode(
+                    _clip_vector(F.col(_VALUE), params)).alias(PARTIAL_POS,
+                                                               _VALUE))
+                .groupBy(_PID, *pk_cols, PARTIAL_POS)
+                .agg(F.count(F.lit(1)).alias(PARTIAL_COUNT),
+                     F.sum(_VALUE).alias(PARTIAL_SUM)))
+
+    # ------------------------------------------------------------------
     def _select_private_partitions(self, out: DataFrame, spec: MechanismSpec,
                                    params: AggregateParams,
                                    report: List[str]) -> DataFrame:
@@ -940,120 +1011,41 @@ class DPEngine:
                 f"{draw.kind.value} noise on every bin or visited node, "
                 f"scale={draw.scale:.4g}, qs={params.percentiles_to_compute}")
 
+        if "vector_sum" in specs:
+            mean = "vector_count" in specs
+            report.append(f"{params.metrics[0].metric.value.upper()}: "
+                          f"elementwise noise scale="
+                          f"{draws['vector_sum'].scale:.4g}")
+            if mean:
+                # One denominator draw per key, floored at 1.
+                out = out.withColumn("__dp_vector_count__", F.greatest(
+                    F.lit(1.0),
+                    noisy(F.col(_COUNT).cast(DoubleType()), "vector_count")))
+                report.append(f"VECTOR_MEAN: denominator noise scale="
+                              f"{draws['vector_count'].scale:.4g}")
+
+            def element(x: Column) -> Column:
+                # Evaluated afresh per element: one draw per element.
+                x = noisy(x, "vector_sum")
+                return x / F.col("__dp_vector_count__") if mean else x
+
+            # A key without rows releases noise on a zero vector.
+            metric_cols[params.metrics[0].output_name] = F.transform(
+                F.coalesce(F.col(_VECTOR), F.array_repeat(
+                    F.lit(0.0), int(params.vector_size))), element)
+
         ordered = [F.col(c) for c in pk_cols]
         for m in params.metrics:
             name = m.output_name
             if name in metric_cols:
-                ordered.append(metric_cols[name].cast(DoubleType()).alias(name))
+                col = metric_cols[name]
+                ordered.append((col if m.metric in _VECTOR_METRICS
+                                else col.cast(DoubleType())).alias(name))
             if params.output_noise_stddev and name in stddev_vals:
                 ordered.append(
                     F.lit(float(stddev_vals[name])).cast(DoubleType())
                     .alias(f"{name}_noise_stddev"))
         return out, ordered
-
-    # ------------------------------------------------------------------
-    # VECTOR_SUM: per-vector norm clip + elementwise DP sum
-    # (reference: pipeline_dp/combiners.py:850-911 semantics). Plan shape:
-    # Linf window sample -> numpy norm-clip (Arrow-batched) -> posexplode
-    # to (pid, pk, pos) -> partial sum -> L0 key sample (semi-join) ->
-    # final (pk, pos) sum -> per-element noise -> array reassembly via
-    # bounded collect_list (exactly vector_size elements per group).
-    # ------------------------------------------------------------------
-    def _aggregate_vector_sum(self, df: DataFrame, params: AggregateParams,
-                              extractors: DataFrameExtractors,
-                              public_partitions,
-                              report: List[str]) -> DPResult:
-        pk_cols = extractors.partition_key_columns
-        size = int(params.vector_size)
-        data, pub_df = self._extract(
-            df, params, extractors, public_partitions, report,
-            [F.col(extractors.value_column).cast("array<double>")
-             .alias(_VALUE)])
-        specs = self.request_budgets(params, public_partitions is not None,
-                                      report)
-        # Bounding runs on whole vectors, before the d-fold explode.
-        data = bounders.bound_rows(data, _PID, pk_cols,
-                                   *_bounding_caps(params), self._order_cols)
-        report.append(_bounding_note(params))
-        l0 = params.max_partitions_contributed
-        linf = params.max_contributions_per_partition
-        clip = _vector_clip_udf(params.vector_norm_kind.value,
-                                float(params.vector_max_norm))
-        data = data.withColumn(_VALUE, clip(F.col(_VALUE)))
-        is_mean = Metric.VECTOR_MEAN in set(params.metric_kinds)
-        which = "VECTOR_MEAN" if is_mean else "VECTOR_SUM"
-        report.append(
-            f"{which}: per-vector {params.vector_norm_kind.value}-norm "
-            f"clip to {params.vector_max_norm}, Linf <= {linf}")
-        ex = data.select(*pk_cols, F.posexplode(_VALUE).alias(_POS, _VV))
-        final = ex.groupBy(*pk_cols, _POS).agg(F.sum(_VV).alias(_VV))
-        # Denominator for VECTOR_MEAN: the bounded CONTRIBUTION count per
-        # partition (each contribution is one clipped vector), released
-        # with its own budget share; computed off the same bounded frame.
-        contrib_counts = (data.groupBy(*pk_cols)
-                          .agg(F.count(F.lit(1)).cast("double")
-                               .alias("__vn__"))
-                          if is_mean else None)
-        pid_counts = (data.select(_PID, *pk_cols).distinct()
-                      .groupBy(*pk_cols)
-                      .agg(F.count(F.lit(1)).alias(_PID_COUNT)))
-        engine = self
-        out_name = params.metrics[0].output_name
-
-        def finalize() -> DataFrame:
-            out = final
-            if pub_df is not None:
-                pos_df = df.sparkSession.range(size).select(
-                    F.col("id").cast("int").alias(_POS))
-                grid = pub_df.crossJoin(pos_df)
-                out = grid.join(final, on=[*pk_cols, _POS], how="left") \
-                    .fillna({_VV: 0.0})
-                report.append("Added empty public partitions (zero vectors)")
-            elif not params.post_aggregation_thresholding:
-                kept = engine._select_private_partitions(
-                    pid_counts, specs["partition_selection"], params, report)
-                out = out.join(kept.select(*pk_cols), on=list(pk_cols),
-                               how="left_semi")
-            # One clipped vector per contribution; <= linf contributions per
-            # (pid, pk) => per-partition norm bound scales by linf.
-            sens = dp.vector_sum_sensitivities(
-                l0 or 1, params.vector_norm_kind.value,
-                float(params.vector_max_norm) * (linf or 1), size)
-            spec = specs["vector_sum"]
-            scale = dp.noise_scale(params.noise_kind, spec.eps, spec.delta,
-                                   sens)
-            out = out.withColumn(
-                _VV, engine._noise.add_noise(F.col(_VV),
-                                             params.noise_kind.value, scale))
-            report.append(f"{which}: elementwise noise scale={scale:.4g}")
-            if is_mean:
-                # One noisy denominator draw per partition key (noise is
-                # applied on the per-pk count frame, THEN joined), floored
-                # at 1 so empty public partitions release zero vectors.
-                cnt_spec = specs["vector_count"]
-                cnt_scale = dp.noise_scale(
-                    params.noise_kind, cnt_spec.eps, cnt_spec.delta,
-                    dp.count_sensitivities(l0 or 1, linf or 1))
-                noisy_n = contrib_counts.withColumn(
-                    "__vn__", engine._noise.add_noise(
-                        F.col("__vn__"), params.noise_kind.value,
-                        cnt_scale))
-                out = (out.join(F.broadcast(noisy_n), on=list(pk_cols),
-                                how="left")
-                       .withColumn(_VV, F.col(_VV)
-                                   / F.greatest(F.coalesce(
-                                       F.col("__vn__"), F.lit(0.0)),
-                                       F.lit(1.0))))
-                report.append(
-                    f"VECTOR_MEAN: denominator noise scale="
-                    f"{cnt_scale:.4g}")
-            return out.groupBy(*pk_cols).agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct(F.col(_POS),
-                                                         F.col(_VV)))),
-                    lambda s: s[_VV]).alias(out_name))
-
-        return DPResult(finalize, self._accountant)
 
     # ------------------------------------------------------------------
     # Custom combiner plug-in

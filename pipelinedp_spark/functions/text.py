@@ -6,8 +6,6 @@ expressible in ANSI SQL for oracle checking:
 
   tokens      = split(text, ' ')                       (literal single space)
   shingles    = distinct word k-grams joined by ' '
-  minhash_i   = min over shingles of md5(i || ':' || shingle)   (lexicographic
-                min over hex strings — a valid uniform minhash)
   simhash64   = sign-aggregated 60-bit hash of distinct tokens
 
 No reference counterpart (net-new per project north star); designed
@@ -42,10 +40,6 @@ def token_count(text: Column) -> Column:
 
 def distinct_token_count(text: Column) -> Column:
     return F.size(F.array_distinct(tokens(text)))
-
-
-def char_count(text: Column) -> Column:
-    return F.length(text)
 
 
 BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
@@ -124,33 +118,6 @@ def shingles(text: Column, k: int = 3) -> Column:
         lambda s: F.concat_ws(" ", *[s[str(j)] for j in range(k)]))
     return F.when(n >= k, F.array_distinct(grams)) \
         .otherwise(F.array(F.concat_ws(" ", t)))
-
-
-def minhash_signature(shingle_col: Column, num_hashes: int = 8) -> Column:
-    """Minhash over hex-string hashes: element i is
-    min(md5(i || ':' || shingle)). Returns array<string> of length
-    num_hashes. Lexicographic min over md5 hex == uniform minhash."""
-    sigs = [
-        F.array_min(
-            F.transform(shingle_col,
-                        lambda s, i=i: F.md5(F.concat(F.lit(f"{i}:"), s))))
-        for i in range(num_hashes)
-    ]
-    return F.array(*sigs)
-
-
-def lsh_bands(signature: Column, rows_per_band: int = 4,
-              num_hashes: int = 8) -> Column:
-    """Band the signature: band j = md5 of the concatenated j-th slice.
-    Docs sharing ANY band hash are near-dup candidates."""
-    num_bands = num_hashes // rows_per_band
-    bands = [
-        F.md5(F.concat_ws(
-            "|", *[F.element_at(signature, j * rows_per_band + r + 1)
-                   for r in range(rows_per_band)]))
-        for j in range(num_bands)
-    ]
-    return F.array(*bands)
 
 
 def hex_to_long(hex_col: Column, digits: int = 15) -> Column:

@@ -67,8 +67,7 @@ def drop_store_table(spark, name: str) -> None:
     ('<db>.<table>' under '<db>.db/<table>') managed layouts."""
     import shutil
 
-    if name.endswith("_tombstones"):
-        _TS_SIZE_CACHE.pop(name[:-len("_tombstones")], None)
+    _TS_SIZE_CACHE.pop(name, None)
     if name.endswith("_ingest_log"):
         _PROBE_SKIP.pop(name[:-len("_ingest_log")], None)
     if name.endswith("_meta"):
@@ -170,8 +169,7 @@ def write_bucketed(df: DataFrame, table: str, bucket_col: str,
     one-file-per-bucket-or-fewer layout without it. Corpus-scale
     builds (more partitions than buckets, or plans whose partition
     count isn't free to read) keep the repartition."""
-    if table.endswith("_tombstones"):
-        _TS_SIZE_CACHE.pop(table[:-len("_tombstones")], None)
+    _TS_SIZE_CACHE.pop(table, None)
     nb = int(num_buckets)
     parts = _shuffle_free_partitions(df)
     if parts is not None and parts <= nb:
@@ -759,7 +757,7 @@ def tombstones(spark, store_name: str,
     ids ≈ tens of MB broadcast — comfortably under executor headroom;
     past that, `compact` is overdue anyway.
 
-    The gate decision is memoized per (session, store): serving calls
+    The gate decision is memoized per (session, table): serving calls
     and streaming micro-batches don't pay a count job each —
     `write_bucketed` / `drop_store_table` invalidate the memo on every
     tombstone append, compaction, or rebuild in this process (an
@@ -772,26 +770,36 @@ def tombstones(spark, store_name: str,
     so the fallback branch is testable — the oracle gate runs at a
     scale where 2M would otherwise never trip — and tunable per
     deployment without threading a parameter through every reader."""
+    return _gated_broadcast(spark, f"{store_name}_tombstones",
+                            broadcast_rows)
+
+
+def _gated_broadcast(spark, table: str, broadcast_rows: int | None = None):
+    """``table`` for an anti-join, broadcast-hinted up to
+    ``broadcast_rows`` rows (default: the `tombstones` conf), else plain
+    so the join shuffles; None when the table does not exist. The gate
+    of every removal log: the tombstones and pHash's removed ids. Its
+    row count is memoized per (session, table) until this module next
+    writes, drops or refreshes the table."""
     from pyspark.sql import functions as F
     if broadcast_rows is None:
         broadcast_rows = int(spark.conf.get(
             "spark.pipelinedp.store.tombstoneBroadcastRows",
             "2000000"))
-    ts_table = f"{store_name}_tombstones"
-    if not spark.catalog.tableExists(ts_table):
+    if not spark.catalog.tableExists(table):
         return None
-    ts = spark.table(ts_table)
-    hit = _TS_SIZE_CACHE.get(store_name)
+    df = spark.table(table)
+    hit = _TS_SIZE_CACHE.get(table)
     if hit is not None and hit[0] is spark:
         n = hit[1]
     else:
-        n = _file_row_count(spark, ts_table)
+        n = _file_row_count(spark, table)
         if n is None:
-            n = ts.count()
+            n = df.count()
         if len(_TS_SIZE_CACHE) >= 512:
             _TS_SIZE_CACHE.clear()
-        _TS_SIZE_CACHE[store_name] = (spark, n)
-    return F.broadcast(ts) if n <= int(broadcast_rows) else ts
+        _TS_SIZE_CACHE[table] = (spark, n)
+    return F.broadcast(df) if n <= int(broadcast_rows) else df
 
 
 def add_tombstones(keys_df: DataFrame, store_name: str, key_col: str,
@@ -866,8 +874,7 @@ def refresh_table(spark, table: str) -> None:
     otherwise keep serving the memoized knobs forever."""
     if table.endswith("_meta"):
         _META_CACHE.pop(table[:-len("_meta")], None)
-    elif table.endswith("_tombstones"):
-        _TS_SIZE_CACHE.pop(table[:-len("_tombstones")], None)
+    _TS_SIZE_CACHE.pop(table, None)
     spark.catalog.refreshTable(table)
     default = SparkSession._instantiatedSession
     if default is not None and default is not spark:
@@ -1166,12 +1173,10 @@ def _minhash_compact(spark, store_name, meta, frames):
 
 def _phash_compact(spark, store_name, meta, frames):
     # after compaction the members table IS the survivor set again
-    from pyspark.sql import functions as F
-    rm_table = f"{store_name}_removed_ids"
-    if "_members" in frames and spark.catalog.tableExists(rm_table):
+    removed = _gated_broadcast(spark, f"{store_name}_removed_ids")
+    if "_members" in frames and removed is not None:
         frames["_members"] = frames["_members"].join(
-            F.broadcast(spark.table(rm_table).select("id")), "id",
-            "left_anti")
+            removed.select("id"), "id", "left_anti")
     return frames
 
 

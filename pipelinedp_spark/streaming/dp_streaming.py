@@ -6,6 +6,9 @@ its own partials and releases them through the batch engine:
   watermark -> event-time window [-> session stage] -> per-(user, window)
   bounded partial -> DPEngine.aggregate_partials (window = partition key)
 
+Each DP window aggregation spends through its own budget accountant and
+takes its noise from the engine.
+
 The batch bounders sample rows per (user, partition) with a window sort,
 which is not available mid-stream; instead each per-(user, window) partial
 is capped with least()/clip() — the batch engine's count fast path, with
@@ -34,11 +37,12 @@ must pass ``threshold_windows=False`` explicitly (every window present is
 then a public key); otherwise a pure-eps budget raises.
 
 **Checkpoints.** Count, sum, mean, variance and session-count state holds
-the engine's merged partials, and percentile state the engine's per-window
-sparse histogram. Checkpoints written before these functions released
-through the engine cannot be resumed (their state can match by type with
-columns swapped, and percentile state changed shape): restart such
-queries from an empty checkpoint.
+the engine's merged partials, percentile state the engine's per-window
+sparse histogram, and vector-sum state the engine's per-(window, position)
+sums and per-window vector. Checkpoints written before these functions
+released through the engine cannot be resumed (their state can match by
+type with columns swapped, and percentile and vector-sum state changed
+shape): restart such queries from an empty checkpoint.
 """
 
 from __future__ import annotations
@@ -53,15 +57,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
-from pipelinedp_spark import dp_computations as dp
 from pipelinedp_spark.aggregate_params import (AggregateParams, MetricSpec,
-                                               Metrics, NoiseKind)
+                                               Metrics, NoiseKind, NormKind)
 from pipelinedp_spark.budget_accounting import NaiveBudgetAccountant
 from pipelinedp_spark.dp_engine import (PARTIAL_COUNT, PARTIAL_NORM_SQ,
-                                        PARTIAL_NORM_SUM, PARTIAL_SUM,
-                                        PARTIAL_VALUE, PERCENTILE_TOTAL,
-                                        DPEngine)
-from pipelinedp_spark.noise import create_noise_source
+                                        PARTIAL_NORM_SUM, PARTIAL_POS,
+                                        PARTIAL_SUM, PARTIAL_VALUE,
+                                        PERCENTILE_TOTAL, DPEngine)
 from pipelinedp_spark import store
 
 
@@ -416,51 +418,52 @@ def dp_streaming_vector_sum(stream: DataFrame,
                             delta_per_window: float = 0.0,
                             noise_mode: str = "secure",
                             threshold_windows: bool = False) -> DataFrame:
-    """DP element-wise vector sum per event-time window — the streaming
-    analogue of the batch VECTOR_SUM metric, in the per-partition-clip
-    regime: each user's per-(window, dim) sum is clipped to
-    [-max_abs_per_dim, +max_abs_per_dim] (an Linf-ball clip on the
-    user's per-window aggregate — the norm kinds that clip individual
-    contribution vectors need the whole vector at once, which a
-    dim-exploded stateful aggregation cannot see; batch covers those).
-    One user then moves at most ``dims`` cells by at most
-    ``max_abs_per_dim`` each, so noise is scaled with
-    Sensitivities(l0=dims, linf=max_abs_per_dim) under the chosen
-    mechanism. Returns (window, dim, vector_sum) rows — callers pivot or
-    collect dims downstream of the sink.
+    """DP element-wise vector sum per event-time window: the batch
+    VECTOR_SUM metric, released by the engine
+    (``DPEngine.aggregate_partials``, window as partition key, one
+    ``NaiveBudgetAccountant(epsilon_per_window, delta_per_window)``), in the
+    per-partition-clip regime: each user's per-(window, dim) sum is clipped
+    to [-max_abs_per_dim, +max_abs_per_dim], which bounds the Linf norm of
+    the user's per-window vector by ``max_abs_per_dim`` (the norm kinds
+    that clip individual contribution vectors need the whole vector at
+    once, which a dim-exploded stateful aggregation cannot see; batch
+    covers those). The release declares that bound: LINF norm,
+    ``max_norm = max_abs_per_dim``, one contribution per (user, window), so
+    the noise on each element is scaled to L1 = dims * max_abs_per_dim
+    (Laplace) or L2 = sqrt(dims) * max_abs_per_dim (Gaussian). Returns
+    (window, dim, vector_sum) rows — callers pivot or collect dims
+    downstream of the sink.
 
-    Window thresholding is NOT supported: the per-dim rows of one
-    window would each draw their own selection noise, so a window could
-    be released for some dims and suppressed for others — a
-    correctness-breaking inconsistency. Only a PUBLIC window grid is
-    safe; ``threshold_windows=True`` raises.
+    Window thresholding is NOT supported: a vector metric is released
+    alone, without the privacy-id count a window threshold reads, and
+    thresholding the per-dim rows one by one could release a window for
+    some dims but not others. Only a PUBLIC window grid is safe;
+    ``threshold_windows=True`` raises.
     """
     if dims < 1:
         raise ValueError("dims must be positive")
     if threshold_windows:
         raise ValueError(
-            "dp_streaming_vector_sum cannot threshold windows: per-dim "
-            "rows would draw independent selection noise and release a "
-            "window for some dims but not others. Use it only when the "
-            "window grid is public knowledge (threshold_windows=False).")
+            "dp_streaming_vector_sum cannot threshold windows: a vector "
+            "metric has no privacy-id count to threshold on, and per-dim "
+            "thresholds could release a window for some dims but not "
+            "others. Use it only when the window grid is public knowledge "
+            "(threshold_windows=False).")
     exploded = stream.select(
         F.col(privacy_id_col).alias("__pid__"),
         F.col(timestamp_col),
-        F.posexplode(F.col(vector_col)).alias("dim", "__v__"))
+        F.posexplode(F.col(vector_col)).alias(PARTIAL_POS, "__v__"))
     per_user = _per_user_window(
         exploded, "__pid__", timestamp_col, window_duration, watermark_delay,
         _clip(F.sum(F.col("__v__").cast(DoubleType())), -max_abs_per_dim,
-              max_abs_per_dim).alias("__clipped__"), keys=["dim"])
-    per_window = per_user.groupBy("window", "dim").agg(
-        F.sum("__clipped__").alias("__sum__"))
-    sens = dp.Sensitivities(l0=dims, linf=float(max_abs_per_dim))
-    scale = dp.noise_scale(noise_kind, epsilon_per_window,
-                           delta_per_window or 0.0, sens)
-    noise = create_noise_source(noise_mode)
-    return per_window.select(
-        "window", "dim",
-        noise.add_noise(F.col("__sum__"), noise_kind.value, scale)
-        .alias("vector_sum"))
+              max_abs_per_dim).alias(PARTIAL_SUM), keys=[PARTIAL_POS])
+    out = _release_windows(
+        per_user, [Metrics.VECTOR_SUM], threshold_windows, epsilon_per_window,
+        delta_per_window, noise_kind, noise_mode, 1, 1,
+        vector_norm_kind=NormKind.LINF, vector_max_norm=max_abs_per_dim,
+        vector_size=dims)
+    return out.select("window", F.posexplode("vector_sum").alias(
+        "dim", "vector_sum"))
 
 
 def dp_streaming_percentile(stream: DataFrame,

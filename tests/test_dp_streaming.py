@@ -2,13 +2,14 @@
 DP window selection, parity with the batch engine, input validation."""
 
 import datetime
+import math
 
 import pytest
 from pyspark.sql import functions as F
 
 from pipelinedp_spark import sources
 from pipelinedp_spark.aggregate_params import (AggregateParams, Metrics,
-                                               NoiseKind)
+                                               NoiseKind, NormKind)
 from pipelinedp_spark.budget_accounting import NaiveBudgetAccountant
 from pipelinedp_spark.dp_engine import DataFrameExtractors, DPEngine
 from pipelinedp_spark.streaming import (dp_streaming_count,
@@ -274,6 +275,116 @@ def test_dp_streaming_vector_sum_refuses_thresholding(spark, tmp_path):
             watermark_delay="0 seconds", epsilon_per_window=1.0,
             max_abs_per_dim=3.0, dims=2, delta_per_window=1e-4,
             threshold_windows=True)
+
+
+_VECTOR_SCHEMA = "user_id int, ts timestamp, vec array<double>"
+
+
+@pytest.fixture
+def vector_stream_dir(spark, tmp_path):
+    """3-dim vectors, entries multiples of 0.25 (every sum is exact): six
+    users in minute 0 (odd users twice), four in minute 1; no per-(user,
+    window) sum leaves [-3, 3]. User 99's late event flushes the
+    watermark."""
+    t = datetime.datetime.fromisoformat
+    rows = []
+    for u in range(6):
+        rows.append((u, t("2024-01-01 00:00:10"), [0.25 * u, -0.5, 1.0]))
+        if u % 2:
+            rows.append((u, t("2024-01-01 00:00:20"), [0.5, 0.25 * u, -1.0]))
+    for u in range(10, 14):
+        rows.append((u, t("2024-01-01 00:01:10"), [1.0, 2.0, -2.5]))
+    rows.append((99, t("2024-01-01 00:05:00"), [0.0, 0.0, 0.0]))
+    path = str(tmp_path / "vectors")
+    spark.createDataFrame(rows, _VECTOR_SCHEMA).coalesce(1).write.parquet(
+        path)
+    return path
+
+
+def _vector_stream(spark, path, **kw):
+    return dp_streaming_vector_sum(
+        sources.read_stream(spark, path, _VECTOR_SCHEMA), "user_id", "ts",
+        "vec", epsilon_per_window=1.0, max_abs_per_dim=3.0, dims=3,
+        **_WINDOW, **kw)
+
+
+def test_dp_streaming_vector_sum_matches_batch(spark, vector_stream_dir,
+                                               run_stream):
+    """Zero noise, public windows, a clip that never binds: the streaming
+    vector sum releases exactly what DPEngine.aggregate VECTOR_SUM (LINF
+    norm, max_norm = max_abs_per_dim, l0 = linf = 1) releases over the
+    per-(user, window) summed vectors, the windows as public keys."""
+    got = run_stream(_vector_stream(spark, vector_stream_dir,
+                                    noise_mode="zero"), "vecsum_parity")
+    got = {(r["window"]["start"].minute, r["dim"]): r["vector_sum"]
+           for r in got.collect()}
+
+    per_user = (spark.read.parquet(vector_stream_dir)
+                .withColumn("window", F.window("ts", "1 minute"))
+                .select("user_id", "window",
+                        F.posexplode("vec").alias("pos", "x"))
+                .groupBy("user_id", "window", "pos")
+                .agg(F.sum("x").alias("x"))
+                .groupBy("user_id", "window")
+                .agg(F.array_sort(F.collect_list(F.struct("pos", "x")))
+                     .alias("s"))
+                .select("user_id", "window", F.col("s.x").alias("vec")))
+    accountant = NaiveBudgetAccountant(1.0, 0.0)
+    result = DPEngine(accountant, noise_mode="zero").aggregate(
+        per_user, AggregateParams(
+            metrics=[Metrics.VECTOR_SUM], max_partitions_contributed=1,
+            max_contributions_per_partition=1,
+            vector_norm_kind=NormKind.LINF, vector_max_norm=3.0,
+            vector_size=3),
+        DataFrameExtractors("user_id", "window", "vec"),
+        public_partitions=per_user.select("window"))
+    accountant.compute_budgets()
+    want = {(r["window"]["start"].minute, d): v
+            for r in result.dataframe().collect()
+            for d, v in enumerate(r["vector_sum"])}
+
+    assert {m for m, _ in got} == {0, 1}
+    assert got == {k: v for k, v in want.items() if k[0] in (0, 1)}
+    assert got[(0, 0)] == 0.25 * 15 + 0.5 * 3
+
+
+def test_dp_streaming_vector_sum_secure(spark, vector_stream_dir,
+                                        run_stream):
+    """Secure noise: one finite draw per (window, dim)."""
+    got = run_stream(_vector_stream(spark, vector_stream_dir),
+                     "vecsum_secure").collect()
+    assert sorted((r["window"]["start"].minute, r["dim"]) for r in got) == \
+        [(m, d) for m in (0, 1) for d in range(3)]
+    assert all(math.isfinite(r["vector_sum"]) for r in got)
+
+
+@pytest.mark.parametrize("noise_kind", [NoiseKind.LAPLACE,
+                                        NoiseKind.GAUSSIAN])
+def test_dp_streaming_vector_sum_noise_scale(spark, tmp_path, monkeypatch,
+                                             noise_kind):
+    """The engine prices the streaming vector sum (LINF norm, max_norm =
+    max_abs_per_dim = m, l0 = linf = 1) as the per-dim clip it applies:
+    L1 = dims * m and L2 = sqrt(dims) * m, i.e. Sensitivities(l0=dims,
+    linf=m), with all of the window's epsilon and delta."""
+    from pipelinedp_spark import dp_computations as dp
+    from pipelinedp_spark import dp_engine
+    drawn, noise_draws = [], dp_engine.noise_draws
+
+    def record(params, specs):
+        drawn.append(noise_draws(params, specs))
+        return drawn[-1]
+
+    monkeypatch.setattr(dp_engine, "noise_draws", record)
+    eps, delta, m, dims = 1.5, 1e-5, 3.0, 7
+    dp_streaming_vector_sum(
+        sources.read_stream(spark, str(tmp_path), _VECTOR_SCHEMA), "user_id",
+        "ts", "vec", epsilon_per_window=eps, delta_per_window=delta,
+        max_abs_per_dim=m, dims=dims, noise_kind=noise_kind, **_WINDOW)
+    [draws] = drawn
+    assert list(draws) == ["vector_sum"]
+    assert draws["vector_sum"].scale == pytest.approx(
+        dp.noise_scale(noise_kind, eps, delta,
+                       dp.Sensitivities(l0=dims, linf=m)), rel=1e-12)
 
 
 def test_dp_streaming_percentile_tree_matches_quantile_tree(spark, stream_dir,

@@ -190,6 +190,57 @@ def test_vector_sum_must_be_alone(spark):
          .build_query())
 
 
+def test_vector_clip_matches_numpy(spark):
+    """The Catalyst norm clip equals numpy's v * min(1, max_norm / ||v||)
+    for the l1, l2 and linf norms, to 1e-12 relative (the norm sums in
+    another order); the zero vector and vectors whose norm equals
+    max_norm come back unchanged."""
+    import numpy as np
+    from pipelinedp_spark.dp_engine import _clip_vector
+    max_norm = 5.0
+    rng = np.random.default_rng(7)
+    vecs = rng.normal(0.0, 2.0, (2000, 8)) * rng.uniform(0.1, 2.0, (2000, 1))
+    on_ball = np.zeros((3, 8))
+    on_ball[0, :4] = [1.0, -2.0, 1.5, 0.5]  # l1 norm 5
+    on_ball[1, :2] = [3.0, -4.0]            # l2 norm 5
+    on_ball[2, :3] = [5.0, -1.0, 2.0]       # linf norm 5
+    vecs = np.vstack([vecs, np.zeros((1, 8)), on_ball])
+    df = spark.createDataFrame([(i, v.tolist()) for i, v in enumerate(vecs)],
+                               "id int, v array<double>")
+    kinds = {"l1": lambda a: np.abs(a).sum(axis=1),
+             "l2": lambda a: np.linalg.norm(a, axis=1),
+             "linf": lambda a: np.abs(a).max(axis=1)}
+    got = df.select("id", *[_clip_vector(F.col("v"), pds.AggregateParams(
+        metrics=[pds.Metrics.VECTOR_SUM], max_partitions_contributed=1,
+        max_contributions_per_partition=1, vector_norm_kind=pds.NormKind(k),
+        vector_max_norm=max_norm, vector_size=8)).alias(k)
+        for k in kinds]).orderBy("id").collect()
+    for i, (k, norm) in enumerate(kinds.items()):
+        clipped = np.array([r[k] for r in got])
+        with np.errstate(divide="ignore"):
+            want = vecs * np.minimum(1.0, max_norm / norm(vecs))[:, None]
+        np.testing.assert_allclose(clipped, want, rtol=1e-12, atol=0.0)
+        assert (norm(vecs) > max_norm).sum() > 500, k  # the clip binds
+        unchanged = [2000, 2001 + i]  # the zero vector, k's on_ball row
+        assert np.array_equal(clipped[unchanged], vecs[unchanged]), k
+
+
+def test_vector_sum_draws_noise_per_element(spark):
+    """Secure VECTOR_SUM adds one draw per element: an empty public key's
+    released zero vector holds distinct, finite values."""
+    df = spark.createDataFrame([(1, "a", [1.0] * 8)],
+                               "pid int, pk string, emb array<double>")
+    q = (pds.QueryBuilder(df, "pid")
+         .groupby("pk", max_groups_contributed=1,
+                  max_contributions_per_group=1, public_keys=["a", "b"])
+         .vector_sum("emb", max_norm=1.0, vector_size=8)
+         .build_query())
+    out = {r["pk"]: r["vector_sum_emb"] for r in
+           q.run_query(pds.Budget(1.0, 1e-6)).collect()}
+    assert len(out["b"]) == 8 and len(set(out["b"])) == 8
+    assert all(math.isfinite(x) for v in out.values() for x in v)
+
+
 def test_fractional_percentile_names_injective():
     from pipelinedp_spark.aggregate_params import Metrics
     assert Metrics.PERCENTILE(50).output_name == "percentile_50"

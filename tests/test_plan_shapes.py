@@ -213,7 +213,9 @@ def test_noise_draws_are_nondeterministic(spark):
 
 
 def _secure_scalar_releases(spark):
-    """name -> a secure release that adds only scalar noise."""
+    """name -> a secure release: scalar noise, or a vector sum or mean
+    noised element by element (private and public keys; L2 and Linf
+    clips)."""
     orders = _orders(spark)
     ex = pds.DataFrameExtractors("o_custkey", "o_orderpriority",
                                  "o_totalprice")
@@ -238,11 +240,32 @@ def _secure_scalar_releases(spark):
         acct.compute_budgets()
         return res.dataframe()
 
+    vec_orders = orders.withColumn("vec", F.array(
+        F.col("o_totalprice") / 1e5,
+        (F.col("o_orderkey") % 7).cast("double") - 3.0, F.lit(1.0)))
+
+    def vector(metric, norm, public=None):
+        acct = pds.NaiveBudgetAccountant(5.0, 1e-4)
+        res = pds.DPEngine(acct, noise_mode="secure").aggregate(
+            vec_orders, pds.AggregateParams(
+                metrics=[metric], max_partitions_contributed=3,
+                max_contributions_per_partition=2, vector_norm_kind=norm,
+                vector_max_norm=2.0, vector_size=3),
+            pds.DataFrameExtractors("o_custkey", "o_orderpriority", "vec"),
+            public_partitions=public)
+        acct.compute_budgets()
+        return res.dataframe()
+
     M = pds.Metrics
+    N = pds.NormKind
+    public = ["1-URGENT", "2-HIGH", "9-NONE"]
     return {
+        "vector_sum_l2": vector(M.VECTOR_SUM, N.L2),
+        "vector_sum_linf_public": vector(M.VECTOR_SUM, N.LINF, public),
+        "vector_mean_linf": vector(M.VECTOR_MEAN, N.LINF),
+        "vector_mean_l2_public": vector(M.VECTOR_MEAN, N.L2, public),
         "deep": aggregate([M.COUNT, M.SUM]),
-        "wide": aggregate([M.COUNT, M.SUM, M.MEAN],
-                          public=["1-URGENT", "2-HIGH", "9-NONE"]),
+        "wide": aggregate([M.COUNT, M.SUM, M.MEAN], public=public),
         "laplace_selection": aggregate(
             [M.COUNT], partition_selection_strategy=S.LAPLACE_THRESHOLDING),
         "gaussian_selection": aggregate(
@@ -254,17 +277,20 @@ def _secure_scalar_releases(spark):
 
 
 def test_secure_scalar_releases_start_no_python(spark):
-    """Secure scalar noise and partition selection are Catalyst
-    expressions: no plan of a scalar release holds a Python eval node,
-    and every released value is finite."""
+    """Secure noise, partition selection and the vector norm clip are
+    Catalyst expressions: no plan of a scalar or vector release holds a
+    Python eval node, and every released value is finite."""
     for name, df in _secure_scalar_releases(spark).items():
         plan = P.explain_str(df, mode="simple")
         for node in ("ArrowEvalPython", "BatchEvalPython"):
             assert node not in plan, (name, plan)
-        for r in df.collect():
+        rows = df.collect()
+        assert rows, name
+        for r in rows:
             for v in r.asDict().values():
-                assert not isinstance(v, float) or math.isfinite(v), \
-                    (name, r)
+                for x in v if isinstance(v, list) else [v]:
+                    assert not isinstance(x, float) or math.isfinite(x), \
+                        (name, r)
 
 
 def test_jaccard_pairs_no_pair_blowup(spark):

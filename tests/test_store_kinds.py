@@ -9,6 +9,8 @@ wrote it and as compaction rewrote it; the record's dedup key must be
 unique after compaction, and the tombstones must be gone.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -152,13 +154,14 @@ def test_compaction_keeps_each_declared_layout(spark, kind):
         store.drop_store_table(spark, t)
 
 
-def test_compaction_gates_the_tombstone_broadcast(spark, monkeypatch):
-    """`compact` reads the tombstones through `store.tombstones`: with
-    ``spark.pipelinedp.store.tombstoneBroadcastRows=0`` no frame it
-    rewrites joins them under a broadcast hint, and the compacted table
-    equals a default-conf compaction's (which hints the broadcast)."""
+def _compaction_broadcasts(spark, monkeypatch, kind, join_line):
+    """Compacts a ``kind`` store after one takedown, at
+    ``tombstoneBroadcastRows=0`` and at the default: per run, whether an
+    anti-join plan line ``join_line`` accepts (of the frames `compact`
+    checkpoints) carries a broadcast hint, and the compacted tables."""
     from pipelinedp_spark.plans import scoped_conf
-    rows, build, takedown = _exact()
+    rows, build, takedown = CASES[kind]()
+    rec = store.KINDS[kind]
     plans = []
     checkpoint = type(spark.range(1)).localCheckpoint
 
@@ -170,24 +173,49 @@ def test_compaction_gates_the_tombstone_broadcast(spark, monkeypatch):
     gate = "spark.pipelinedp.store.tombstoneBroadcastRows"
     hinted, tables = {}, {}
     for rows_cap in ("0", None):
-        name = f"sk_gate_{rows_cap or 'default'}"
-        names = [name + sfx for sfx in ("_fps", "_meta", "_tombstones",
-                                        "_ingest_log")]
+        name = f"sk_gate_{kind}_{rows_cap or 'default'}"
+        names = [name + sfx for sfx in (*rec.tables, "_meta", "_tombstones",
+                                        "_removed_ids", "_ingest_log")]
         for t in names:
             store.drop_store_table(spark, t)
         data = rows(spark)
         build(data, name, "overwrite")
-        takedown(data.filter(F.col("doc_id") % 4 == 0), name)
+        takedown(data.filter(F.col(data.columns[0]) % 4 == 0), name)
         plans.clear()
         confs = {gate: rows_cap} if rows_cap is not None else {}
         with scoped_conf(spark, **confs):
-            store.compact(spark, name, "exact")
+            store.compact(spark, name, kind)
         joins = [ln for p in plans for ln in p.splitlines()
-                 if "LeftAnti" in ln]
+                 if "LeftAnti" in ln and join_line(ln)]
         assert joins, plans
         hinted[rows_cap] = any("broadcast" in ln.lower() for ln in joins)
-        tables[rows_cap] = sorted(spark.table(f"{name}_fps").collect())
+        tables[rows_cap] = {sfx: sorted(spark.table(name + sfx).collect())
+                            for sfx in rec.tables}
         for t in names:
             store.drop_store_table(spark, t)
+    return hinted, tables
+
+
+def test_compaction_gates_the_tombstone_broadcast(spark, monkeypatch):
+    """`compact` reads the tombstones through `store.tombstones`: with
+    ``spark.pipelinedp.store.tombstoneBroadcastRows=0`` no frame it
+    rewrites joins them under a broadcast hint, and the compacted table
+    equals a default-conf compaction's (which hints the broadcast)."""
+    hinted, tables = _compaction_broadcasts(spark, monkeypatch, "exact",
+                                            lambda ln: True)
     assert hinted == {"0": False, None: True}
-    assert tables["0"] == tables[None] and tables["0"]
+    assert tables["0"] == tables[None] and tables["0"]["_fps"]
+
+
+def test_phash_compaction_gates_the_removed_ids_broadcast(spark,
+                                                          monkeypatch):
+    """The pHash compaction drops removed image ids from the members
+    table through the same row gate as the tombstones: at
+    ``tombstoneBroadcastRows=0`` that anti-join on ``id`` carries no
+    broadcast hint, at the default it does, and the compacted tables
+    are equal."""
+    hinted, tables = _compaction_broadcasts(
+        spark, monkeypatch, "phash",
+        lambda ln: re.search(r"\(id#\d+L? = id#\d+L?\)", ln))
+    assert hinted == {"0": False, None: True}
+    assert tables["0"] == tables[None] and tables["0"]["_members"]
