@@ -1162,7 +1162,8 @@ def line_dedup(df: DataFrame,
     boilerplate).
 
     Returns (id_col, clean_text, n_lines, n_removed) — one row per
-    input document, clean_text = '' when every line was boilerplate.
+    input document, clean_text = '' when every line was boilerplate (a
+    NULL text has no lines: ('', 0, 0)).
 
     Scale shape: one posexplode; duplicate detection is two map-side-
     combinable aggregations on a 60-bit md5 line hash (the line TEXT is
@@ -1183,55 +1184,10 @@ def line_dedup(df: DataFrame,
     ``max_lines_per_doc`` lines. ``max_lines_per_doc=None`` disables
     the guard.
     """
-    if on_oversize not in ("raise", "truncate"):
-        raise ValueError(
-            f"on_oversize must be 'raise' or 'truncate', got {on_oversize!r}")
-    arr = F.split(F.col(text_col), _re.escape(delimiter))
-    if max_lines_per_doc is not None:
-        if on_oversize == "truncate":
-            arr = F.slice(arr, 1, max_lines_per_doc)
-        else:
-            guard = F.assert_true(
-                F.size(arr) <= max_lines_per_doc,
-                F.concat(
-                    F.lit("line_dedup: document "),
-                    F.col(id_col).cast("string"),
-                    F.lit(" has "), F.size(arr).cast("string"),
-                    F.lit(f" lines > max_lines_per_doc="
-                          f"{max_lines_per_doc}; pass "
-                          f"on_oversize='truncate' or raise the cap.")))
-            arr = F.when(guard.isNull(), arr)
-    cols = [F.col(id_col)] + ([F.col(group_col)] if group_col else [])
-    lines = df.select(
-        *cols,
-        F.posexplode(arr)
-        .alias("__pos__", "__line__"))
-    # The group is FOLDED INTO the hash (with a NULL sentinel) rather
-    # than used as a join key: NULL groups then dedup among themselves
-    # like any other group (a plain equi-join on a NULL key would never
-    # match), and the shuffle/join key stays one 60-bit long.
-    if group_col:
-        key = F.concat_ws("\x01",
-                          F.coalesce(F.col(group_col).cast("string"),
-                                     F.lit("\x00null")),
-                          F.col("__line__"))
-    else:
-        key = F.col("__line__")
-    lh = T.hex_to_long(F.md5(key)).alias("__lh__")
-    nonblank = lines.filter(F.trim(F.col("__line__")) != "")
-    per_doc = (nonblank.select(F.col(id_col), lh)
-               .groupBy("__lh__", id_col).agg(F.first(F.lit(1))))
-    dup = (per_doc.groupBy("__lh__")
-           .agg(F.count(F.lit(1)).alias("__nd__"))
-           .filter(F.col("__nd__") >= min_docs)
-           .select("__lh__", F.lit(True).alias("__boiler__")))
-    tagged = (lines.withColumn("__lh__", lh)
-              .join(dup, on="__lh__", how="left")
-              .withColumn(
-                  "__removed__",
-                  F.coalesce(F.col("__boiler__"), F.lit(False))
-                  & (F.trim(F.col("__line__")) != "")))
-    return _rebuild_kept_lines(tagged, id_col, delimiter)
+    return _boilerplate_dedup(
+        df, text_col, id_col, min_docs, delimiter=delimiter,
+        group_col=group_col, max_units=max_lines_per_doc,
+        on_oversize=on_oversize)[0]
 
 
 def _rebuild_kept_lines(tagged: DataFrame, id_col: str,
@@ -1240,7 +1196,9 @@ def _rebuild_kept_lines(tagged: DataFrame, id_col: str,
     with an in-group array_sort of that document's own (pos, line)
     structs (no window — a corpus-hot line never serializes onto one
     task). Expects (id, __pos__, __line__, __removed__) rows; emits
-    (id, clean_text, n_lines, n_removed)."""
+    (id, clean_text, n_lines, n_removed). A document with no lines
+    arrives as one row with a NULL __pos__ and __line__: it counts no
+    line and rebuilds to '' (array_join skips the NULL)."""
     rebuilt = (tagged.groupBy(id_col).agg(
         F.array_join(
             F.transform(
@@ -1250,10 +1208,103 @@ def _rebuild_kept_lines(tagged: DataFrame, id_col: str,
                                     F.col("__line__").alias("l"))))),
                 lambda s: s["l"]),
             delimiter).alias("clean_text"),
-        F.count(F.lit(1)).cast("long").alias("n_lines"),
+        F.count("__pos__").cast("long").alias("n_lines"),
         F.sum(F.col("__removed__").cast("long")).cast("long")
         .alias("n_removed")))
     return rebuilt.select(id_col, "clean_text", "n_lines", "n_removed")
+
+
+def _boilerplate_dedup(df: DataFrame,
+                       text_col: str,
+                       id_col: str,
+                       min_docs: int,
+                       sentences: bool = False,
+                       delimiter: str = "\n",
+                       min_chars: int = 0,
+                       group_col: Optional[str] = None,
+                       max_units: Optional[int] = None,
+                       on_oversize: str = "raise",
+                       state: Optional[DataFrame] = None,
+                       materialize: bool = False
+                       ) -> "tuple[DataFrame, DataFrame]":
+    """The corpus boilerplate rule behind `line_dedup`, `sentence_dedup`
+    and their streaming twins (`streaming.dp_streaming.line_dedup_batch`,
+    `sentence_dedup_batch`): a unit (a ``delimiter``-split line, or a
+    `SENTENCE_PATTERN` match when ``sentences``) whose key appears in >=
+    ``min_docs`` distinct documents is removed from every document.
+
+    Lines key on their raw text and count unless whitespace-only;
+    sentences key on their trimmed text, count unless shorter than
+    ``min_chars`` (or empty), and rebuild with '' (each match carries
+    its own spacing). ``group_col`` is folded into the key. ``state``
+    holds prior (__lh__, __nd__) distinct-doc counts to merge into this
+    frame's; ``materialize`` localCheckpoints the merged counts.
+    ``max_units`` caps the units of one document (``on_oversize``
+    'raise' or 'truncate').
+
+    Returns (cleaned, counts): cleaned = (id_col, clean_text, n_lines,
+    n_removed), one row per input document (a NULL-text document has no
+    units and rebuilds to ''); counts = (__lh__, __nd__), all keys
+    counted so far."""
+    if on_oversize not in ("raise", "truncate"):
+        raise ValueError(
+            f"on_oversize must be 'raise' or 'truncate', got {on_oversize!r}")
+    line = F.col("__line__")
+    if sentences:
+        units = F.regexp_extract_all(F.col(text_col),
+                                     F.lit(SENTENCE_PATTERN), 0)
+        key = F.trim(line)
+        countable = (key != "") & (F.length(key) >= min_chars)
+        delimiter, unit, op = "", "sentences", "sentence_dedup"
+    else:
+        units = F.split(F.col(text_col), _re.escape(delimiter))
+        key, countable = line, F.trim(line) != ""
+        unit, op = "lines", "line_dedup"
+    if max_units is not None and on_oversize == "truncate":
+        units = F.slice(units, 1, max_units)
+    elif max_units is not None:
+        # Fires only on a KNOWN oversize: size(NULL) is NULL under ANSI.
+        guard = F.assert_true(
+            F.coalesce(F.size(units) <= max_units, F.lit(True)),
+            F.concat(
+                F.lit(f"{op}: document "),
+                F.coalesce(F.col(id_col).cast("string"), F.lit("NULL")),
+                F.lit(" has "), F.size(units).cast("string"),
+                F.lit(f" {unit} > max_{unit}_per_doc={max_units}; pass "
+                      f"on_oversize='truncate' or raise the cap.")))
+        units = F.when(guard.isNull(), units)
+    cols = [F.col(id_col)] + ([F.col(group_col)] if group_col else [])
+    # posexplode_OUTER: a document with no units still yields one row,
+    # so every input document reaches the rebuild.
+    exploded = df.select(
+        *cols, F.posexplode_outer(units).alias("__pos__", "__line__"))
+    # The group is FOLDED INTO the hash (with a NULL sentinel) rather
+    # than used as a join key: NULL groups then dedup among themselves
+    # like any other group (a plain equi-join on a NULL key would never
+    # match), and the shuffle/join key stays one 60-bit long.
+    if group_col:
+        key = F.concat_ws("\x01",
+                          F.coalesce(F.col(group_col).cast("string"),
+                                     F.lit("\x00null")),
+                          key)
+    lh = T.hex_to_long(F.md5(key)).alias("__lh__")
+    counts = (exploded.filter(countable).select(F.col(id_col), lh)
+              .groupBy("__lh__", id_col).agg(F.first(F.lit(1)))
+              .groupBy("__lh__").agg(F.count(F.lit(1)).alias("__nd__")))
+    if state is not None:
+        counts = (counts.unionByName(state.select("__lh__", "__nd__"))
+                  .groupBy("__lh__")
+                  .agg(F.sum("__nd__").cast("long").alias("__nd__")))
+    if materialize:
+        counts = counts.localCheckpoint()
+    boiler = (counts.filter(F.col("__nd__") >= min_docs)
+              .select("__lh__", F.lit(True).alias("__boiler__")))
+    tagged = (exploded.withColumn("__lh__", lh)
+              .join(boiler, "__lh__", "left")
+              .withColumn("__removed__",
+                          F.coalesce(F.col("__boiler__"), F.lit(False))
+                          & countable))
+    return _rebuild_kept_lines(tagged, id_col, delimiter), counts
 
 
 def corpus_diff(old: DataFrame, new: DataFrame,
@@ -1317,61 +1368,10 @@ def sentence_dedup(df: DataFrame,
     posexplode, hash-only counting shuffles, one equi-join, groupBy
     rebuild, and the same ``max_sentences_per_doc`` mega-doc guard.
     """
-    if on_oversize not in ("raise", "truncate"):
-        raise ValueError(
-            f"on_oversize must be 'raise' or 'truncate', got {on_oversize!r}")
-    arr = F.regexp_extract_all(F.col(text_col),
-                               F.lit(SENTENCE_PATTERN), 0)
-    if max_sentences_per_doc is not None:
-        if on_oversize == "truncate":
-            arr = F.slice(arr, 1, max_sentences_per_doc)
-        else:
-            guard = F.assert_true(
-                F.size(arr) <= max_sentences_per_doc,
-                F.concat(
-                    F.lit("sentence_dedup: document "),
-                    F.col(id_col).cast("string"),
-                    F.lit(" has "), F.size(arr).cast("string"),
-                    F.lit(f" sentences > max_sentences_per_doc="
-                          f"{max_sentences_per_doc}; pass "
-                          f"on_oversize='truncate' or raise the cap.")))
-            arr = F.when(guard.isNull(), arr)
-    cols = [F.col(id_col)] + ([F.col(group_col)] if group_col else [])
-    sents = df.select(
-        *cols, F.posexplode(arr).alias("__pos__", "__line__"))
-    norm = F.trim(F.col("__line__"))
-    if group_col:
-        key = F.concat_ws("\x01",
-                          F.coalesce(F.col(group_col).cast("string"),
-                                     F.lit("\x00null")),
-                          norm)
-    else:
-        key = norm
-    lh = T.hex_to_long(F.md5(key)).alias("__lh__")
-    countable = (norm != "") & (F.length(norm) >= min_chars)
-    per_doc = (sents.filter(countable).select(F.col(id_col), lh)
-               .groupBy("__lh__", id_col).agg(F.first(F.lit(1))))
-    dup = (per_doc.groupBy("__lh__")
-           .agg(F.count(F.lit(1)).alias("__nd__"))
-           .filter(F.col("__nd__") >= min_docs)
-           .select("__lh__", F.lit(True).alias("__boiler__")))
-    tagged = (sents.withColumn("__lh__", lh)
-              .join(dup, on="__lh__", how="left")
-              .withColumn(
-                  "__removed__",
-                  F.coalesce(F.col("__boiler__"), F.lit(False))
-                  & countable))
-    rebuilt = _rebuild_kept_lines(tagged, id_col, "")
-    # Empty/NULL-text docs produce zero regexp matches, so they have no
-    # exploded rows at all — left-join the rebuild back onto the full id
-    # set so they survive as empty docs (line_dedup keeps them; the two
-    # stages must agree on corpus membership).
-    return (df.select(id_col).join(rebuilt, id_col, "left").select(
-        id_col,
-        F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-        F.coalesce("n_lines", F.lit(0)).cast("long").alias("n_lines"),
-        F.coalesce("n_removed", F.lit(0)).cast("long")
-        .alias("n_removed")))
+    return _boilerplate_dedup(
+        df, text_col, id_col, min_docs, sentences=True,
+        min_chars=min_chars, group_col=group_col,
+        max_units=max_sentences_per_doc, on_oversize=on_oversize)[0]
 
 
 def build_minhash_store(reference: DataFrame,

@@ -40,3 +40,15 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         _T_CACHE.clear()
     _T_CACHE[key] = (spark, df)
     return df
+
+
+def _two_triggers(frame: DataFrame, id_col: str, step) -> DataFrame:
+    """Batch mirror of a two-trigger streaming query: micro-batch 0 =
+    the even-``id_col`` rows run as ``step(even, None)``, micro-batch 1 =
+    the odd rows run as ``step(odd, state)`` on the state batch 0
+    returned. ``step`` returns (output, new_state); the outputs are
+    unioned, tagged ``batch`` 0/1 as long."""
+    out0, state = step(frame.filter(F.col(id_col) % 2 == 0), None)
+    out1, _ = step(frame.filter(F.col(id_col) % 2 == 1), state)
+    return (out0.withColumn("batch", F.lit(0).cast("long"))
+            .unionByName(out1.withColumn("batch", F.lit(1).cast("long"))))

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 import pipelinedp_spark as pds
-from pipelinedp_spark.queries.common import _t
+from pipelinedp_spark.queries.common import _t, _two_triggers
 from pipelinedp_spark.queries.text_dedup import _plane_lit
 
 
@@ -81,15 +81,10 @@ def _stream_semdedup_mirror(spark: SparkSession,
     emb = _t(spark, sf_dir, "embeddings")
     cents = train_ivf_centroids(
         sample_corpus_matrix(emb, "vec_id", "embedding", 10_000), 8, 7)
-    even = emb.filter(F.col("vec_id") % 2 == 0)
-    odd = emb.filter(F.col("vec_id") % 2 == 1)
-    f1, s1 = semantic_dedup_batch(even, None, cents,
-                                  cosine_threshold=0.4,
-                                  materialize=True)
-    f2, _ = semantic_dedup_batch(odd, s1, cents, cosine_threshold=0.4)
-    return (f1.withColumn("batch", F.lit(0).cast("long"))
-            .unionByName(f2.withColumn("batch",
-                                       F.lit(1).cast("long"))))
+    return _two_triggers(
+        emb, "vec_id", lambda b, state: semantic_dedup_batch(
+            b, state, cents, cosine_threshold=0.4,
+            materialize=state is None))
 
 def _gen_stream_semdedup_sql(num_clusters: int = 8, tau: float = 0.4,
                              seed: int = 7,
@@ -1610,14 +1605,8 @@ def _stream_near_dup_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
     rules in SQL. Returns (doc_id, batch)."""
     from pipelinedp_spark.streaming.dp_streaming import near_dup_dedup_batch
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    even = docs.filter(F.col("doc_id") % 2 == 0)
-    odd = docs.filter(F.col("doc_id") % 2 == 1)
-    kept1, blocks1 = near_dup_dedup_batch(even, None)
-    kept2, _ = near_dup_dedup_batch(odd, blocks1)
-    return (kept1.select("doc_id").withColumn("batch", F.lit(0))
-            .unionByName(kept2.select("doc_id")
-                         .withColumn("batch", F.lit(1)))
-            .select(F.col("doc_id"), F.col("batch").cast("long")))
+    return _two_triggers(docs, "doc_id",
+                         near_dup_dedup_batch).select("doc_id", "batch")
 
 _STREAM_NEAR_DUP_MIRROR_SQL = """
 WITH tok AS (

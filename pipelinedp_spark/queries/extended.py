@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 import pipelinedp_spark as pds
-from pipelinedp_spark.queries.common import _t
+from pipelinedp_spark.queries.common import _t, _two_triggers
 from pipelinedp_spark.queries.analysis import _gen_ivf_pq_topk_sql
 
 
@@ -467,13 +467,9 @@ def _stream_sentence_dedup_mirror(spark: SparkSession,
         "doc_id",
         F.regexp_replace(F.col("text"), " (the|a|data|value|row) ",
                          ". ").alias("text"))
-    even = docs.filter(F.col("doc_id") % 2 == 0)
-    odd = docs.filter(F.col("doc_id") % 2 == 1)
-    cleaned1, state1 = sentence_dedup_batch(even, None, materialize=True)
-    cleaned2, _ = sentence_dedup_batch(odd, state1)
-    return (cleaned1.withColumn("batch", F.lit(0).cast("long"))
-            .unionByName(cleaned2.withColumn("batch",
-                                             F.lit(1).cast("long"))))
+    return _two_triggers(
+        docs, "doc_id", lambda b, state: sentence_dedup_batch(
+            b, state, materialize=state is None))
 
 _STREAM_SENTENCE_DEDUP_MIRROR_SQL = """
 WITH base AS (

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pipelinedp_spark.queries.common import _t
+from pipelinedp_spark.queries.common import _t, _two_triggers
 from pipelinedp_spark.queries.text_dedup import _DEDUP_SIMHASH_SQL
 
 
@@ -889,13 +889,9 @@ def _stream_line_dedup_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.regexp_replace(F.col("text"), " (the|a|data|value|row) ",
                          "\n").alias("text"))
-    even = docs.filter(F.col("doc_id") % 2 == 0)
-    odd = docs.filter(F.col("doc_id") % 2 == 1)
-    cleaned1, state1 = line_dedup_batch(even, None, materialize=True)
-    cleaned2, _ = line_dedup_batch(odd, state1)
-    return (cleaned1.withColumn("batch", F.lit(0).cast("long"))
-            .unionByName(cleaned2.withColumn("batch",
-                                             F.lit(1).cast("long"))))
+    return _two_triggers(
+        docs, "doc_id", lambda b, state: line_dedup_batch(
+            b, state, materialize=state is None))
 
 _STREAM_LINE_DEDUP_MIRROR_SQL = """
 WITH base AS (

@@ -43,11 +43,34 @@ sums and per-window vector. Checkpoints written before these functions
 released through the engine cannot be resumed (their state can match by
 type with columns swapped, and percentile and vector-sum state changed
 shape): restart such queries from an empty checkpoint.
+
+**Relational state.** Near-dup, line, sentence and semantic dedup and
+CDC maintenance (`streaming_apply_changes`) keep state that is a table,
+not per-key scalars: applyInPandasWithState cannot express a multi-key
+membership test such as near-dup's one doc -> ``num_blocks`` block
+groups. Each runs as an availableNow foreachBatch query: per
+micro-batch it reads the parquet state, runs its ``*_batch`` step
+(callable from batch code too), appends the step's output to the output
+path, then writes the new state. Near-dup APPENDS its kept docs' block
+rows to the state; line, sentence and semantic dedup and the CDC
+snapshot OVERWRITE theirs with the merged state, which the step
+localCheckpoints first so the write never deletes files it still reads.
+
+"No state" means the state path does not exist: only then does a batch
+start from empty state. Any other read failure (a corrupt part file, an
+emptied directory) fails the micro-batch and leaves the state as it
+was; read as "no state", it would replace the accumulated state with
+one batch's. A trigger with zero rows still writes a readable state.
+
+Replay caveat: the checkpoint guarantees each input file is PROCESSED
+once, but a batch replayed after a failure between its writes and the
+checkpoint commit can append its output (and near-dup's state rows)
+twice, or run against state that already holds it. An ACID table
+format's MERGE closes that window; it is out of scope here. The CDC
+snapshot is immune: versions are absolute, so a replay is idempotent.
 """
 
 from __future__ import annotations
-
-import re as _re
 
 from typing import List, Optional, Sequence
 
@@ -619,41 +642,20 @@ def streaming_near_dup_dedup(stream: DataFrame,
     """Streaming incremental near-dup dedup via foreachBatch: each
     micro-batch is deduped against the accumulated state-block table
     (parquet at ``state_path``) AND within itself, survivors append to
-    ``output_path`` and their blocks to the state table.
-
-    This is the production micro-batch pattern for stateful operators
-    whose state is relational (block inverted index), not per-key
-    scalars — applyInPandasWithState cannot express the multi-key
-    (one doc -> num_blocks block groups) membership test. Caveat,
-    documented: a batch replayed after a failure between the two
-    appends can duplicate appended rows; an ACID table format's MERGE
-    closes that window — out of scope here, the checkpoint still
-    guarantees each input file is PROCESSED once.
-
-    Returns the started StreamingQuery.
-    """
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            state = spark.read.parquet(state_path)
-        except Exception:
-            state = None
-        # materialize=True: the fingerprint table and duplicate-id set are
-        # localCheckpoint'd inside, so both writes below are cheap
-        # anti-joins off already-computed inputs — the fingerprint UDF and
-        # the vs-state join run exactly once, and the state append cannot
-        # re-read state_path (or observe the output-path write) mid-plan.
-        kept, kept_blocks = near_dup_dedup_batch(
-            batch_df, state, text_col, id_col, bits, num_blocks,
-            max_hamming, materialize=True)
-        kept.write.mode("append").parquet(output_path)
-        kept_blocks.write.mode("append").parquet(state_path)
-
-    return (stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    ``output_path`` and their blocks to the state table (the
+    relational-state contract of the module docstring). Returns the
+    started StreamingQuery."""
+    # materialize=True: the fingerprint table and duplicate-id set are
+    # localCheckpoint'd inside, so both writes are cheap anti-joins off
+    # already-computed inputs — the fingerprint UDF and the vs-state
+    # join run exactly once, and the state append cannot re-read
+    # state_path (or observe the output-path write) mid-plan.
+    return _micro_batches(
+        stream, checkpoint_dir,
+        lambda b, _, state: near_dup_dedup_batch(
+            b, state, text_col, id_col, bits, num_blocks, max_hamming,
+            materialize=True),
+        state_path, output_path, state_mode="append")
 
 
 def streaming_token_topk(stream: DataFrame,
@@ -884,35 +886,10 @@ def line_dedup_batch(batch: DataFrame,
     re-run the merge (and the state write can never observe its own
     consumer mid-plan).
     """
-    from pipelinedp_spark.functions import text as T
-    from pipelinedp_spark.operators.dedup import _rebuild_kept_lines
-
-    lines = batch.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col),
-                             _re.escape(delimiter)))
-        .alias("__pos__", "__line__"))
-    lh = T.hex_to_long(F.md5(F.col("__line__"))).alias("__lh__")
-    batch_counts = (lines.filter(F.trim(F.col("__line__")) != "")
-                    .select(F.col(id_col), lh)
-                    .groupBy("__lh__", id_col).agg(F.first(F.lit(1)))
-                    .groupBy("__lh__")
-                    .agg(F.count(F.lit(1)).alias("__nd__")))
-    merged = batch_counts if state is None else (
-        batch_counts.unionByName(state.select("__lh__", "__nd__"))
-        .groupBy("__lh__").agg(F.sum("__nd__").cast("long")
-                               .alias("__nd__")))
-    if materialize:
-        merged = merged.localCheckpoint()
-    boiler = (merged.filter(F.col("__nd__") >= min_docs)
-              .select("__lh__", F.lit(True).alias("__boiler__")))
-    tagged = (lines.withColumn("__lh__", lh)
-              .join(boiler, "__lh__", "left")
-              .withColumn(
-                  "__removed__",
-                  F.coalesce(F.col("__boiler__"), F.lit(False))
-                  & (F.trim(F.col("__line__")) != "")))
-    return _rebuild_kept_lines(tagged, id_col, delimiter), merged
+    from pipelinedp_spark.operators.dedup import _boilerplate_dedup
+    return _boilerplate_dedup(batch, text_col, id_col, min_docs,
+                              delimiter=delimiter, state=state,
+                              materialize=materialize)
 
 
 def streaming_line_dedup(stream: DataFrame,
@@ -927,28 +904,15 @@ def streaming_line_dedup(stream: DataFrame,
     each micro-batch's documents are scrubbed of lines whose
     cumulative distinct-doc count (state parquet at ``state_path``)
     reaches ``min_docs``; cleaned docs append to ``output_path`` and
-    the merged counts OVERWRITE the state table (same relational-state
-    micro-batch pattern, and the same replay caveat, as
-    `streaming_near_dup_dedup`). Returns the started StreamingQuery."""
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            state = spark.read.parquet(state_path)
-        except Exception:
-            state = None
-        cleaned, new_state = line_dedup_batch(
-            batch_df, state, text_col, id_col, min_docs, delimiter,
-            materialize=True)
-        cleaned.write.mode("append").parquet(output_path)
-        # merged counts REPLACE the state; localCheckpoint above means
-        # this write never re-reads state_path mid-overwrite.
-        new_state.write.mode("overwrite").parquet(state_path)
-
-    return (stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    the merged counts OVERWRITE the state table (the relational-state
+    contract of the module docstring). Returns the started
+    StreamingQuery."""
+    return _micro_batches(
+        stream, checkpoint_dir,
+        lambda b, _, state: line_dedup_batch(
+            b, state, text_col, id_col, min_docs, delimiter,
+            materialize=True),
+        state_path, output_path)
 
 
 def sentence_dedup_batch(batch: DataFrame,
@@ -971,47 +935,10 @@ def sentence_dedup_batch(batch: DataFrame,
     are the splitter (regexp sentence matches, see
     `dedup.SENTENCE_PATTERN`), the trim-normalized hash key, and the
     '' rebuild delimiter (each match carries its own spacing)."""
-    from pipelinedp_spark.functions import text as T
-    from pipelinedp_spark.operators.dedup import (SENTENCE_PATTERN,
-                                                  _rebuild_kept_lines)
-
-    sents = batch.select(
-        F.col(id_col),
-        F.posexplode(F.regexp_extract_all(F.col(text_col),
-                                          F.lit(SENTENCE_PATTERN), 0))
-        .alias("__pos__", "__line__"))
-    norm = F.trim(F.col("__line__"))
-    countable = (norm != "") & (F.length(norm) >= min_chars)
-    lh = T.hex_to_long(F.md5(norm)).alias("__lh__")
-    batch_counts = (sents.filter(countable)
-                    .select(F.col(id_col), lh)
-                    .groupBy("__lh__", id_col).agg(F.first(F.lit(1)))
-                    .groupBy("__lh__")
-                    .agg(F.count(F.lit(1)).alias("__nd__")))
-    merged = batch_counts if state is None else (
-        batch_counts.unionByName(state.select("__lh__", "__nd__"))
-        .groupBy("__lh__").agg(F.sum("__nd__").cast("long")
-                               .alias("__nd__")))
-    if materialize:
-        merged = merged.localCheckpoint()
-    boiler = (merged.filter(F.col("__nd__") >= min_docs)
-              .select("__lh__", F.lit(True).alias("__boiler__")))
-    tagged = (sents.withColumn("__lh__", lh)
-              .join(boiler, "__lh__", "left")
-              .withColumn(
-                  "__removed__",
-                  F.coalesce(F.col("__boiler__"), F.lit(False))
-                  & countable))
-    rebuilt = _rebuild_kept_lines(tagged, id_col, "")
-    # Keep empty/NULL-text docs (zero regexp matches → zero exploded
-    # rows) — same corpus-membership contract as the batch operator.
-    cleaned = (batch.select(id_col).join(rebuilt, id_col, "left").select(
-        id_col,
-        F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-        F.coalesce("n_lines", F.lit(0)).cast("long").alias("n_lines"),
-        F.coalesce("n_removed", F.lit(0)).cast("long")
-        .alias("n_removed")))
-    return cleaned, merged
+    from pipelinedp_spark.operators.dedup import _boilerplate_dedup
+    return _boilerplate_dedup(batch, text_col, id_col, min_docs,
+                              sentences=True, min_chars=min_chars,
+                              state=state, materialize=materialize)
 
 
 def semantic_dedup_batch(batch: DataFrame,
@@ -1123,28 +1050,15 @@ def streaming_semantic_dedup(stream: DataFrame,
                              cosine_threshold: float = 0.7,
                              max_cluster_rows: int = 500_000):
     """Streaming ingest-time semantic dedup via foreachBatch — the
-    SemDeDup twin of `streaming_near_dup_dedup`, with the same state
-    overwrite contract and replay caveat (an at-least-once retry of a
-    batch can double-append to the output; state stays correct because
-    it is rebuilt from scratch each write). Returns the started
-    StreamingQuery."""
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            state = spark.read.parquet(state_path)
-        except Exception:
-            state = None
-        flags, new_state = semantic_dedup_batch(
-            batch_df, state, centroids, vec_col, id_col,
-            cosine_threshold, max_cluster_rows, materialize=True)
-        flags.write.mode("append").parquet(output_path)
-        new_state.write.mode("overwrite").parquet(state_path)
-
-    return (stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    SemDeDup twin of `streaming_near_dup_dedup`; its kept vectors
+    OVERWRITE the state (the relational-state contract of the module
+    docstring). Returns the started StreamingQuery."""
+    return _micro_batches(
+        stream, checkpoint_dir,
+        lambda b, _, state: semantic_dedup_batch(
+            b, state, centroids, vec_col, id_col, cosine_threshold,
+            max_cluster_rows, materialize=True),
+        state_path, output_path)
 
 
 def streaming_sentence_dedup(stream: DataFrame,
@@ -1157,25 +1071,14 @@ def streaming_sentence_dedup(stream: DataFrame,
                              min_chars: int = 0):
     """Streaming ingest-time sentence-boilerplate removal via
     foreachBatch — `streaming_line_dedup` with the sentence splitter;
-    same state overwrite contract and replay caveat. Returns the
-    started StreamingQuery."""
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            state = spark.read.parquet(state_path)
-        except Exception:
-            state = None
-        cleaned, new_state = sentence_dedup_batch(
-            batch_df, state, text_col, id_col, min_docs, min_chars,
-            materialize=True)
-        cleaned.write.mode("append").parquet(output_path)
-        new_state.write.mode("overwrite").parquet(state_path)
-
-    return (stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    same state overwrite contract. Returns the started
+    StreamingQuery."""
+    return _micro_batches(
+        stream, checkpoint_dir,
+        lambda b, _, state: sentence_dedup_batch(
+            b, state, text_col, id_col, min_docs, min_chars,
+            materialize=True),
+        state_path, output_path)
 
 
 def stream_into(kind: str, stream: DataFrame, store_name: str,
@@ -1194,15 +1097,11 @@ def stream_into(kind: str, stream: DataFrame, store_name: str,
     with batch jobs. Returns the started StreamingQuery."""
     sink = None if output_path is None else (
         lambda surv: surv.write.mode("append").parquet(output_path))
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        store.ingest_batch_once(kind, batch_df, store_name, batch_id,
-                                run_id=checkpoint_dir, sink=sink, **kw)
-
-    return (stream.writeStream.foreachBatch(_process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return _micro_batches(
+        stream, checkpoint_dir,
+        lambda b, batch_id, _: store.ingest_batch_once(
+            kind, b, store_name, batch_id, run_id=checkpoint_dir,
+            sink=sink, **kw))
 
 
 def ingest_ann_batch_idempotent(batch_df: DataFrame,
@@ -1335,37 +1234,6 @@ def streaming_window_counts(stream: DataFrame,
             .count())
 
 
-def streaming_interval_join(left: DataFrame,
-                            right: DataFrame,
-                            on: str,
-                            left_ts: str = "l_ts",
-                            right_ts: str = "r_ts",
-                            lower_s: int = 0,
-                            upper_s: int = 3600,
-                            watermark: str = "2 hours",
-                            how: str = "inner") -> DataFrame:
-    """Watermarked stream-stream interval join: pair each left event
-    with right events of the same key whose timestamp falls in
-    ``[left_ts - lower_s, left_ts + upper_s]`` (e.g. clicks joined to
-    the views they followed). Both sides carry a watermark AND the
-    join carries a time-range predicate — the two conditions Spark
-    needs to bound the join state (each side evicts rows older than
-    watermark + range; without them a stream-stream join buffers
-    forever). Timestamp columns must be real timestamps and distinct
-    names across the two sides."""
-    if left_ts == right_ts or on in (left_ts, right_ts):
-        raise ValueError("left_ts/right_ts must be distinct from each "
-                         "other and from the key column")
-    l = left.withWatermark(left_ts, watermark)
-    r = right.withWatermark(right_ts, watermark)
-    cond = F.expr(
-        f"{right_ts} >= {left_ts} - INTERVAL {int(lower_s)} SECONDS "
-        f"AND {right_ts} <= {left_ts} + INTERVAL {int(upper_s)} SECONDS")
-    return (l.join(r.withColumnRenamed(on, "__rk__"),
-                   (F.col(on) == F.col("__rk__")) & cond, how)
-            .drop("__rk__"))
-
-
 def streaming_apply_changes(stream: DataFrame,
                             snapshot_path: str,
                             checkpoint_dir: str,
@@ -1375,39 +1243,64 @@ def streaming_apply_changes(stream: DataFrame,
     """Streaming CDC maintenance via foreachBatch: each micro-batch of
     change rows MERGEs into the parquet current-snapshot table with
     `operators.scd.apply_changes` (latest version wins, tombstones
-    delete). The snapshot is rebuilt and overwritten per batch —
-    checkpointed first so the writer never deletes files mid-scan (the
-    same pin as the dedup-state twins); at-least-once replay of a batch
-    is idempotent because versions are absolute, not incremental.
-    Returns the started StreamingQuery."""
+    delete). The snapshot is the relational state (module docstring):
+    rebuilt and overwritten per batch, checkpointed first so the writer
+    never deletes files mid-scan; at-least-once replay of a batch is
+    idempotent because versions are absolute, not incremental. Returns
+    the started StreamingQuery."""
     from pipelinedp_spark.operators.scd import apply_changes
+
+    def _step(batch_df: DataFrame, _batch_id: int,
+              state: Optional[DataFrame]):
+        if delete_col not in batch_df.columns:
+            batch_df = batch_df.withColumn(delete_col, F.lit(False))
+        if state is None:
+            state = batch_df.filter(~F.col(delete_col)).limit(0)
+        elif delete_col not in state.columns:
+            state = state.withColumn(delete_col, F.lit(False))
+        merged = apply_changes(state, batch_df, key_col, version_col,
+                               delete_col)
+        return None, merged.localCheckpoint()
+
+    return _micro_batches(stream, checkpoint_dir, _step, snapshot_path)
+
+
+def _read_state(spark, state_path: str) -> Optional[DataFrame]:
+    """The relational state at ``state_path``, or None when the path
+    does not exist yet (the first batch). Any other failure (a corrupt
+    part file, an emptied directory) propagates: read as "no state", it
+    would make the next write replace the state with one batch's."""
+    from pyspark.errors import AnalysisException
+    try:
+        return spark.read.parquet(state_path)
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
+
+
+def _micro_batches(stream: DataFrame, checkpoint_dir: str, step,
+                   state_path: Optional[str] = None,
+                   output_path: Optional[str] = None,
+                   state_mode: str = "overwrite"):
+    """Start ``stream`` as an availableNow foreachBatch query
+    checkpointed at ``checkpoint_dir``: each micro-batch calls
+    ``step(batch_df, batch_id, state)``. Without ``state_path`` state is
+    None and the step acts by itself. With it, state is `_read_state`'s
+    and the step returns (output, new_state): output appends to
+    ``output_path`` when given, then new_state is written to
+    ``state_path`` with ``state_mode``. Returns the StreamingQuery."""
     spark = stream.sparkSession
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-        if delete_col not in batch_df.columns:
-            batch_df = batch_df.withColumn(delete_col, F.lit(False))
-        # Only the missing-snapshot case (first batch) falls back to an
-        # empty base; a merge-time error (schema drift, transient read
-        # failure mid-merge) must propagate and fail the micro-batch —
-        # swallowing it here would rebuild the snapshot from the batch
-        # alone and mode('overwrite') would destroy every previously
-        # merged key silently.
-        try:
-            state = spark.read.parquet(snapshot_path)
-        except AnalysisException:
-            state = None
-        if state is not None:
-            if delete_col not in state.columns:
-                state = state.withColumn(delete_col, F.lit(False))
-            merged = apply_changes(state, batch_df, key_col,
-                                   version_col, delete_col)
-        else:
-            merged = apply_changes(
-                batch_df.filter(~F.col(delete_col)).limit(0),
-                batch_df, key_col, version_col, delete_col)
-        merged = merged.localCheckpoint()
-        merged.write.mode("overwrite").parquet(snapshot_path)
+        if state_path is None:
+            step(batch_df, batch_id, None)
+            return
+        out, new_state = step(batch_df, batch_id,
+                              _read_state(spark, state_path))
+        if output_path is not None:
+            out.write.mode("append").parquet(output_path)
+        new_state.write.mode(state_mode).parquet(state_path)
 
     return (stream.writeStream.foreachBatch(_process)
             .option("checkpointLocation", checkpoint_dir)

@@ -701,41 +701,6 @@ def test_parse_with_quarantine_routes_bad_rows(spark):
     assert len(g) + len(b) == df.count()
 
 
-def test_streaming_interval_join_matches_batch(spark, tmp_path):
-    """True stream-stream join (availableNow, both sides watermarked):
-    clicks paired to same-user views within the following hour equal
-    the batch interval join."""
-    from pipelinedp_spark.streaming.dp_streaming import (
-        streaming_interval_join)
-    ev = (spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-          .select("user_id", "event_type",
-                  F.col("ts").cast("timestamp").alias("ts")))
-    views = (ev.filter("event_type = 'view'")
-             .select("user_id", F.col("ts").alias("l_ts")))
-    clicks = (ev.filter("event_type = 'click'")
-              .select(F.col("user_id"), F.col("ts").alias("r_ts")))
-    vsrc, csrc = str(tmp_path / "v"), str(tmp_path / "c")
-    views.repartition(2).write.parquet(vsrc)
-    clicks.repartition(2).write.parquet(csrc)
-    vs = spark.readStream.schema(views.schema).parquet(vsrc)
-    cs = spark.readStream.schema(clicks.schema).parquet(csrc)
-    q = (streaming_interval_join(vs, cs, "user_id",
-                                 lower_s=0, upper_s=3600)
-         .writeStream.format("memory").queryName("ssj")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(180)
-    got = {tuple(r) for r in
-           spark.sql("SELECT user_id, l_ts, r_ts FROM ssj").collect()}
-    want = {tuple(r) for r in
-            views.join(clicks.withColumnRenamed("user_id", "u2"),
-                       (F.col("user_id") == F.col("u2"))
-                       & (F.col("r_ts") >= F.col("l_ts"))
-                       & (F.col("r_ts") <= F.col("l_ts")
-                          + F.expr("INTERVAL 3600 SECONDS")))
-            .select("user_id", "l_ts", "r_ts").collect()}
-    assert got == want and len(want) > 0
-
-
 def test_compression_ratio_separates_boilerplate(spark):
     """Repetitive text compresses far below varied prose; the band
     filter drops the template and keeps the prose."""

@@ -463,19 +463,34 @@ def test_bloom_word_table_broadcasts(spark):
     assert P.has_broadcast_join(kept)
 
 
-def test_line_dedup_no_window_partial_aggs(spark):
-    """Corpus line dedup: the rebuild is a groupBy with an in-group
-    array_sort, not a window (a corpus-hot boilerplate line must never
-    serialize onto one window task), and the two counting aggregations
-    are map-side combinable."""
+@pytest.mark.parametrize("entry", ["line_dedup", "sentence_dedup",
+                                   "line_dedup_batch",
+                                   "sentence_dedup_batch"])
+def test_boilerplate_dedup_no_window_partial_aggs(spark, entry):
+    """Corpus boilerplate dedup, batch operators and streaming twins (with
+    a state frame): counting shuffles the 60-bit hash (never unit text)
+    through map-side combinable aggregations, removal is an equi-join,
+    and the rebuild is a groupBy with an in-group array_sort, not a
+    window (a corpus-hot boilerplate line must never serialize onto one
+    window task)."""
     from pipelinedp_spark.operators import dedup
+    from pipelinedp_spark.streaming import dp_streaming as S
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    out = dedup.line_dedup(docs, min_docs=2, group_col="source")
+    state = spark.sql("SELECT 1L AS __lh__, 2L AS __nd__")
+    out = {
+        "line_dedup": lambda: dedup.line_dedup(docs, min_docs=2,
+                                               group_col="source"),
+        "sentence_dedup": lambda: dedup.sentence_dedup(docs, min_docs=2),
+        "line_dedup_batch": lambda: S.line_dedup_batch(docs, state)[0],
+        "sentence_dedup_batch":
+            lambda: S.sentence_dedup_batch(docs, state)[0],
+    }[entry]()
     plan = P.explain_str(out)
-    assert "Window" not in plan
-    assert P.has_partial_aggregation(out)
-    for bad in ("CartesianProduct", "BroadcastNestedLoopJoin"):
+    for bad in ("Window", "row_number", "NestedLoop", "CartesianProduct"):
         assert bad not in plan, bad
+    assert P.has_partial_aggregation(out)
+    if entry in ("line_dedup", "sentence_dedup"):
+        assert P.count_shuffles(out) <= 5
 
 
 def test_keep_best_no_window(spark):

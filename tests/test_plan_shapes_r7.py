@@ -5,7 +5,6 @@ nested-loop joins) pinned as plan properties."""
 from pyspark.sql import functions as F
 
 from pipelinedp_spark import plans as P
-from pipelinedp_spark.operators.dedup import sentence_dedup
 from pipelinedp_spark.operators.langid import language_id_ngram
 from pipelinedp_spark.operators.quality import gopher_quality_filter
 from pipelinedp_spark.operators.retrieval import (pmi_collocations,
@@ -60,18 +59,6 @@ def test_pmi_global_topk_is_take_ordered(spark):
     assert "TakeOrderedAndProject" in plan
     assert "NestedLoop" not in plan and "CartesianProduct" not in plan
     assert P.has_partial_aggregation(out)
-
-
-def test_sentence_dedup_hash_only_counting_no_windows(spark):
-    """Sentence counting shuffles the 60-bit hash (never sentence
-    text), the rebuild is a groupBy (no window — a corpus-hot sentence
-    never single-tasks), and removal is an equi-join."""
-    out = sentence_dedup(_docs(spark), min_docs=2)
-    plan = P.explain_str(out)
-    assert "NestedLoop" not in plan and "CartesianProduct" not in plan
-    assert "row_number" not in plan
-    assert P.has_partial_aggregation(out)
-    assert P.count_shuffles(out) <= 5
 
 
 def test_funnel_no_windows_no_nested_loop(spark):

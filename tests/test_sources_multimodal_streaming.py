@@ -612,6 +612,53 @@ def test_streaming_sentence_dedup_end_to_end(spark, tmp_path):
     assert got == {0: "alpha.", 1: "beta.", 2: "gamma."}
 
 
+@pytest.mark.parametrize("unit", ["line", "sentence"])
+def test_boilerplate_twin_first_batch_matches_batch_operator(spark, unit):
+    """Every path emits every input doc, and a streaming twin's first
+    batch (no state) equals its batch operator (no group, guard off)."""
+    from pipelinedp_spark.operators import dedup
+    from pipelinedp_spark.streaming import dp_streaming as S
+    docs = _mk_docs(spark, [(0, "Promo.\n\nalpha. Promo."),
+                            (1, "Promo.\nbeta.\n\n"),
+                            (2, "x.\nx.\ny."), (3, ""), (4, None)])
+    if unit == "line":
+        want = dedup.line_dedup(docs, max_lines_per_doc=None)
+        got, _ = S.line_dedup_batch(docs, None)
+    else:
+        want = dedup.sentence_dedup(docs, max_sentences_per_doc=None)
+        got, _ = S.sentence_dedup_batch(docs, None)
+    got = sorted(tuple(r) for r in got.collect())
+    assert got == sorted(tuple(r) for r in want.collect())
+    assert [r[0] for r in got] == [0, 1, 2, 3, 4]
+
+
+def test_streaming_dedup_fails_on_unreadable_state(spark, tmp_path):
+    """Only a missing state path reads as "no state": a corrupt part
+    file fails the query and leaves the state files as they were."""
+    from pyspark.errors import StreamingQueryException
+    from pipelinedp_spark.streaming.dp_streaming import streaming_line_dedup
+    src = str(tmp_path / "in")
+    state = tmp_path / "state"
+
+    def run():
+        stream = (spark.readStream.schema("doc_id long, text string")
+                  .parquet(src + "/*"))
+        streaming_line_dedup(stream, str(tmp_path / "out"), str(state),
+                             str(tmp_path / "ckpt")).awaitTermination(120)
+
+    _mk_docs(spark, [(0, "COOKIES\nalpha"),
+                     (1, "COOKIES\nbeta")]).write.parquet(src + "/f1.parquet")
+    run()
+    # Sorts before the real part files, so the schema read opens it.
+    (state / "part-00000-0.parquet").write_bytes(b"not parquet")
+    before = {p.name: p.read_bytes() for p in state.iterdir()}
+    _mk_docs(spark, [(2, "COOKIES\ngamma")]).write.parquet(
+        src + "/f2.parquet")
+    with pytest.raises(StreamingQueryException):
+        run()
+    assert {p.name: p.read_bytes() for p in state.iterdir()} == before
+
+
 # ---------------------------------------------------------------------------
 # streaming semantic dedup (SemDeDup twin)
 # ---------------------------------------------------------------------------

@@ -1272,6 +1272,23 @@ def test_line_dedup_oversize_doc_truncates(spark):
         dedup.line_dedup(df, on_oversize="drop")
 
 
+@pytest.mark.parametrize("op, cap", [("line_dedup", "max_lines_per_doc"),
+                                     ("sentence_dedup",
+                                      "max_sentences_per_doc")])
+def test_boilerplate_guard_passes_null_text_names_oversize(spark, op, cap):
+    # The default guard fires only on a known oversize: a NULL text has
+    # no units and comes back as an empty document.
+    fn = getattr(dedup, op)
+    df = spark.createDataFrame([(0, "a.\nb."), (1, None)],
+                               "doc_id long, text string")
+    out = {r["doc_id"]: tuple(r)[1:] for r in fn(df).collect()}
+    assert out[1] == ("", 0, 0)
+    big = spark.createDataFrame([(7, "a.\nb.\nc.")],
+                                "doc_id long, text string")
+    with pytest.raises(Exception, match=f"document 7 has 3 .*{cap}=2"):
+        fn(big, **{cap: 2}).collect()
+
+
 def test_line_signals_matches_individual_builders_one_split(spark):
     df = spark.createDataFrame(
         [(1, "a\na\n- b\nc..."), (2, ""), (3, "x\n…\n* y\nx")],
