@@ -6,7 +6,6 @@ expressible in ANSI SQL for oracle checking:
 
   tokens      = split(text, ' ')                       (literal single space)
   shingles    = distinct word k-grams joined by ' '
-  simhash64   = sign-aggregated 60-bit hash of distinct tokens
 
 No reference counterpart (net-new per project north star); designed
 Spark-first for 100 TB corpora: everything is per-row expressions or
@@ -128,33 +127,6 @@ def hex_to_long(hex_col: Column, digits: int = 15) -> Column:
 def token_hash(token: Column) -> Column:
     """Deterministic 60-bit token hash via md5 (engine-portable)."""
     return hex_to_long(F.md5(token))
-
-
-def simhash64(text: Column, bits: int = 60) -> Column:
-    """SimHash over distinct tokens: bit b of the result is 1 iff more token
-    hashes have bit b set than unset. Pure column expressions (no explode):
-    fold over the token array accumulating per-bit vote counts."""
-    toks = F.array_distinct(tokens(text))
-    # Static unroll: shift amounts must be Python ints (shiftright does not
-    # take a Column), so each token hash maps to a fixed-width bit array.
-    hashes = F.transform(
-        toks,
-        lambda t: F.array(*[
-            F.shiftright(token_hash(t), b).bitwiseAND(F.lit(1))
-            for b in range(bits)
-        ]))
-    votes = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("long"), bits),
-        lambda acc, bit_arr: F.zip_with(acc, bit_arr,
-                                        lambda a, v: a + 2 * v - 1))
-    bit_values = F.array(*[
-        F.when(F.element_at(votes, b + 1) > 0,
-               F.shiftleft(F.lit(1).cast("long"), b))
-        .otherwise(F.lit(0).cast("long")) for b in range(bits)
-    ])
-    return F.aggregate(bit_values, F.lit(0).cast("long"),
-                       lambda acc, x: acc.bitwiseOR(x))
 
 
 def rolling_fingerprint(text: Column) -> Column:

@@ -230,36 +230,3 @@ def apply_bpe(df: DataFrame,
             yield pdf
 
     return df.mapInPandas(batches, out_schema)
-
-
-def tokenizer_fertility(df: DataFrame,
-                        merges: Sequence[Tuple[str, str]],
-                        lang_col: str = "lang",
-                        text_col: str = "text",
-                        id_col: str = "doc_id") -> DataFrame:
-    """Tokenizer-health report: BPE tokens per character and per word,
-    grouped by language — a tokenizer trained on English typically
-    shows 2-4x the fertility on underrepresented scripts, and this is
-    the metric that exposes it before training. Pass the corpus's own
-    language column or attach one with `langid.language_id_ngram`.
-
-    Returns (lang, n_docs, tokens, chars, words, tokens_per_char,
-    tokens_per_word). One apply_bpe pass + one combinable agg; all
-    sums integer-exact."""
-    enc = apply_bpe(df, merges, text_col=text_col)
-    from pipelinedp_spark.functions.text import token_count
-    per_doc = enc.select(
-        F.col(lang_col).alias("lang"),
-        F.size(F.col("bpe_tokens")).cast("long").alias("_t"),
-        F.length(F.col(text_col)).cast("long").alias("_c"),
-        token_count(F.col(text_col)).cast("long").alias("_w"))
-    return (per_doc.groupBy("lang")
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.sum("_t").alias("tokens"),
-                 F.sum("_c").alias("chars"),
-                 F.sum("_w").alias("words"))
-            .select("lang", "n_docs", "tokens", "chars", "words",
-                    F.round(F.col("tokens") / F.col("chars"), 6)
-                    .alias("tokens_per_char"),
-                    F.round(F.col("tokens") / F.col("words"), 6)
-                    .alias("tokens_per_word")))

@@ -3,16 +3,22 @@
 All operators are shuffle-bounded DataFrame plans:
 
 - exact_dedup: one hash-groupBy on the fingerprint (map-side combine).
-- minhash_lsh_pairs: shingle -> numpy minhash signature -> band ->
-  in-bucket pairs via a band-key self-join whose two sides share ONE
-  materialized exchange (AQE ReusedExchange, plan-tested); a size cap
+- minhash_lsh_pairs: shingle -> numpy minhash signature -> band
+  strings (`minhash_profile`, the ONE MinHash fingerprint derivation,
+  shared by the pair, cross-corpus and store paths) -> in-bucket pairs
+  via a band-key self-join over one checkpointed profile; a size cap
   drops degenerate buckets whole (a bucket with B docs creates B^2/2
   pairs — the cap bounds the blow-up the way frequency filters do in
   prod dedup).
-- simhash_pairs: bucket by simhash bit-block (Hamming-adjacent candidates).
+- simhash_pairs: candidates from the pigeonhole Hamming-block rule
+  (`_hamming_blocks`, shared with the streaming near-dup and the
+  image/audio/video hash dedup and pHash store), verified by exact
+  Hamming distance (`_hamming_self_pairs`; batch-vs-persisted-blocks
+  probes use `_hamming_probe`).
 - embedding_near_dup_pairs / embedding_near_dup_exact: banded hyperplane
   LSH scale path / broadcast block-matmul baseline.
-- ngram_jaccard_verify: exact verification on candidate pairs only.
+- ngram_jaccard_verify: exact verification on candidate pairs only
+  (the one Jaccard verify every MinHash path ends in).
 
 No reference counterpart (net-new per project north star).
 """
@@ -25,7 +31,7 @@ from typing import Optional
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pipelinedp_spark import store
@@ -203,38 +209,11 @@ def minhash_signatures(df: DataFrame,
                         % _MINHASH_P).min(axis=0).tolist())
         return pd.Series(out)
 
+    # Nondeterministic only to the optimizer: exploding the profile's
+    # band array infers size(bhs) > 0, and pushed below the projection
+    # that filter would run the signature UDF a second time.
     return sh.select(F.col(id_col), F.col("shingles"),
-                     _sig(hs).alias("sig"))
-
-
-def _band_hash_exprs(num_hashes: int, rows_per_band: int):
-    """The per-band md5 expressions over a ``sig`` column — factored so
-    every consumer (band tables, profiles) hashes bands identically."""
-    num_bands = num_hashes // rows_per_band
-    return [
-        F.md5(F.concat_ws(
-            "|", *[F.element_at("sig", j * rows_per_band + r + 1)
-                   .cast("string") for r in range(rows_per_band)]))
-        for j in range(num_bands)
-    ]
-
-
-def minhash_bands(df: DataFrame,
-                  text_col: str = "text",
-                  id_col: str = "doc_id",
-                  k: int = 3,
-                  num_hashes: int = 8,
-                  rows_per_band: int = 4) -> DataFrame:
-    """(id, band_idx, band_hash) LSH band table — md5 over each band's
-    signature slice. Shared by within-corpus pair generation
-    (`minhash_lsh_pairs`) and cross-corpus matching
-    (`cross_corpus_near_dup`); at scale this is the table you persist as
-    the corpus's dedup index."""
-    sig = minhash_signatures(df, text_col, id_col, k, num_hashes)
-    band_hashes = _band_hash_exprs(num_hashes, rows_per_band)
-    return sig.select(
-        F.col(id_col),
-        F.posexplode(F.array(*band_hashes)).alias("band_idx", "band_hash"))
+                     _sig.asNondeterministic()(hs).alias("sig"))
 
 
 def minhash_profile(df: DataFrame,
@@ -245,19 +224,20 @@ def minhash_profile(df: DataFrame,
                     rows_per_band: int = 4) -> DataFrame:
     """(id, shingles, bhs array of 'band_idx:band_hash') — EVERYTHING
     the minhash family derives from a document's text, in one signature
-    pass. A streaming ingest batch flows through pair generation, the
-    store anti-match, and the store append; without a shared profile
-    each step re-tokenizes, re-shingles and re-signs the same text
-    (3 signature passes + up to 6 shingle passes per micro-batch,
-    measured as the bulk of the near-dup trigger floor). Checkpoint the
-    profile once and hand it to `minhash_lsh_pairs_from_profile` /
+    pass, and the only place it is derived: band j's hash is md5 over
+    the '|'-joined signature slice j, and ``bh`` folds the band index
+    into one join key (injective: ':' never occurs in the md5 hex or
+    the index). A streaming ingest batch flows through pair generation,
+    the store anti-match, and the store append; checkpoint the profile
+    once and hand it to `minhash_lsh_pairs_from_profile` /
     `incremental_near_dup(profile=)` / `build_minhash_store(profile=)`
-    — the band strings and shingle arrays are bit-identical to the
-    from-text paths (same `_band_hash_exprs`, same shingler)."""
+    so no step re-tokenizes, re-shingles or re-signs the same text."""
     sig = minhash_signatures(df, text_col, id_col, k, num_hashes)
-    band_hashes = _band_hash_exprs(num_hashes, rows_per_band)
-    bhs = F.array(*[F.concat_ws(":", F.lit(str(j)), bh)
-                    for j, bh in enumerate(band_hashes)])
+    bhs = F.array(*[
+        F.concat_ws(":", F.lit(str(j)), F.md5(F.concat_ws(
+            "|", *[F.element_at("sig", j * rows_per_band + r + 1)
+                   .cast("string") for r in range(rows_per_band)])))
+        for j in range(num_hashes // rows_per_band)])
     return sig.select(F.col(id_col), F.col("shingles"),
                       bhs.alias("bhs"))
 
@@ -268,11 +248,15 @@ def minhash_lsh_pairs_from_profile(profile: DataFrame,
                                    max_bucket_size: int = 1000
                                    ) -> DataFrame:
     """`minhash_lsh_pairs` over a precomputed (ideally checkpointed)
-    `minhash_profile` — identical pair set: the combined
-    'band_idx:band_hash' string is injective (':' never occurs in the
-    md5 hex or the index), so bucketing/capping/joining on it is
-    bucketing on (band_idx, band_hash)."""
+    `minhash_profile`: in-bucket pairs on the ``bh`` band strings,
+    verified with exact shingle Jaccard. Returns (id_a, id_b, jaccard)
+    with id_a < id_b."""
     bands = profile.select(F.col(id_col), F.explode("bhs").alias("bh"))
+    # Cap degenerate buckets before the self-join blows up — via a
+    # map-side-combinable count + tiny broadcast anti-join, NOT a count
+    # window: the window put every row of a corpus-hot bucket on ONE
+    # unsplittable task, while the partial agg absorbs the hot key
+    # map-side and only the handful of over-cap keys travel.
     oversize = (bands.groupBy("bh")
                 .agg(F.count(F.lit(1)).alias("bucket_size"))
                 .filter(F.col("bucket_size") > max_bucket_size)
@@ -299,10 +283,11 @@ def minhash_lsh_pairs(df: DataFrame,
     shingle Jaccard. Returns (id_a, id_b, jaccard) with id_a < id_b.
 
     Plan: shingle (per-row expr) -> minhash signature (one numpy pass per
-    doc, see minhash_signatures) -> explode bands -> in-bucket pair
-    generation (one shuffle on the band hash) -> distinct pairs -> join
-    back shingle arrays -> exact Jaccard filter. Buckets larger than
-    max_bucket_size are dropped (degenerate hash collisions).
+    doc, see minhash_signatures) -> band strings (`minhash_profile`,
+    checkpointed once) -> in-bucket pair generation (one shuffle on the
+    band string) -> distinct pairs -> exact Jaccard over the profile's
+    shingle arrays. Buckets larger than max_bucket_size are dropped
+    (degenerate hash collisions).
 
     Default knobs (8 hashes, 2 bands of 4) are sized for the small bench
     corpus; production recall at threshold ~0.8 wants num_hashes=64-128
@@ -311,43 +296,38 @@ def minhash_lsh_pairs(df: DataFrame,
     the signature pass scales linearly in num_hashes with no extra
     shuffles, so widening is cheap).
     """
-    bands = minhash_bands(df, text_col, id_col, k, num_hashes,
-                          rows_per_band)
-    # Cap degenerate buckets before the self-join blows up — via a
-    # map-side-combinable count + tiny broadcast anti-join, NOT a count
-    # window: the window put every row of a corpus-hot bucket on ONE
-    # unsplittable task, while the partial agg absorbs the hot key
-    # map-side and only the handful of over-cap keys travel. The band
-    # table (signature UDF upstream) is checkpointed so the cap agg and
-    # the self-join read ONE materialization instead of recomputing the
-    # signatures per branch.
-    bands = bands.localCheckpoint()
-    oversize = (bands.groupBy("band_idx", "band_hash")
-                .agg(F.count(F.lit(1)).alias("bucket_size"))
-                .filter(F.col("bucket_size") > max_bucket_size)
-                .select("band_idx", "band_hash"))
-    bands = bands.join(F.broadcast(oversize),
-                       ["band_idx", "band_hash"], "left_anti")
-    left = bands.select(F.col("band_idx"), F.col("band_hash"),
-                        F.col(id_col).alias("id_a"))
-    right = bands.select(F.col("band_idx"), F.col("band_hash"),
-                         F.col(id_col).alias("id_b"))
-    cand = (left.join(right, on=["band_idx", "band_hash"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b").distinct())
-    sh = shingle_docs(df, text_col, id_col, k)
-    return ngram_jaccard_verify(cand, sh, id_col, jaccard_threshold)
+    # The profile (signature UDF upstream) is checkpointed so the cap
+    # agg, the self-join and the verify read ONE materialization
+    # instead of recomputing the signatures per branch.
+    prof = minhash_profile(df, text_col, id_col, k, num_hashes,
+                           rows_per_band).localCheckpoint()
+    return minhash_lsh_pairs_from_profile(prof, id_col, jaccard_threshold,
+                                          max_bucket_size)
 
 
 def ngram_jaccard_verify(pairs: DataFrame, shingled: DataFrame,
                          id_col: str = "doc_id",
                          jaccard_threshold: float = 0.8) -> DataFrame:
     """Exact shingle-set Jaccard on candidate (id_a, id_b) pairs."""
-    a = shingled.select(F.col(id_col).alias("id_a"),
-                        F.col("shingles").alias("sh_a"))
-    b = shingled.select(F.col(id_col).alias("id_b"),
-                        F.col("shingles").alias("sh_b"))
-    joined = pairs.join(a, "id_a").join(b, "id_b")
+    return _jaccard_verify(pairs, shingled, id_col, shingled, id_col,
+                           jaccard_threshold)
+
+
+def _jaccard_verify(pairs: DataFrame, a: DataFrame, a_id: str,
+                    b: DataFrame, b_id: str,
+                    jaccard_threshold: float) -> DataFrame:
+    """The exact verify every MinHash path ends in: id_a's shingles
+    come from ``a`` (keyed by ``a_id``), id_b's from ``b`` (keyed by
+    ``b_id``), so the two sides may be different corpora whose ids
+    overlap. The b side joins first: a pair set partitioned on id_b
+    meets a store's id-bucketed shingles without exchanging them.
+    Returns (id_a, id_b, jaccard) with jaccard rounded to 6dp and
+    >= ``jaccard_threshold``."""
+    sh_a = a.select(F.col(a_id).alias("id_a"),
+                    F.col("shingles").alias("sh_a"))
+    sh_b = b.select(F.col(b_id).alias("id_b"),
+                    F.col("shingles").alias("sh_b"))
+    joined = pairs.join(sh_b, "id_b").join(sh_a, "id_a")
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     union = F.size("sh_a") + F.size("sh_b") - inter
     jac = inter.cast("double") / union
@@ -384,10 +364,10 @@ def jaccard_pairs(df: DataFrame,
     inv = sh.select(F.col(id_col),
                     F.explode(F.array_distinct("shingles")).alias("sh"))
     # Stop-shingle rule as a tiny broadcast anti-join (see the band-cap
-    # comment in minhash_lsh_pairs: a count window serializes hot
-    # shingles on one task; the combinable count does not). The
-    # inverted index is checkpointed so the doc-freq agg and the pair
-    # join read one materialization.
+    # comment in minhash_lsh_pairs_from_profile: a count window
+    # serializes hot shingles on one task; the combinable count does
+    # not). The inverted index is checkpointed so the doc-freq agg and
+    # the pair join read one materialization.
     inv = inv.localCheckpoint()
     stop = (inv.groupBy("sh")
             .agg(F.count(F.lit(1)).alias("doc_freq"))
@@ -433,10 +413,12 @@ def jaccard_pairs(df: DataFrame,
     return ngram_jaccard_verify(cand, sh, id_col, jaccard_threshold)
 
 
+_SIMHASH_BITS = 60   # token_hash is 60-bit: higher bits are always 0
+
+
 def simhash_fingerprints(df: DataFrame, text_col: str = "text",
-                         id_col: str = "doc_id",
-                         bits: int = 60) -> DataFrame:
-    """(id, simhash) fingerprints as bigint.
+                         id_col: str = "doc_id") -> DataFrame:
+    """(id, simhash) 60-bit fingerprints as bigint.
 
     Tokenize + hash JVM-side (array_distinct + transform, one xxhash per
     distinct token), then fold the per-bit +/-1 votes in an Arrow-batched
@@ -454,7 +436,7 @@ def simhash_fingerprints(df: DataFrame, text_col: str = "text",
     @F.pandas_udf("long")
     def _sim(hs: pd.Series) -> pd.Series:
         out = np.zeros(len(hs), dtype=np.int64)
-        shifts = np.arange(bits)
+        shifts = np.arange(_SIMHASH_BITS)
         for i, arr in enumerate(hs):
             a = np.asarray(arr, dtype=np.int64)
             if len(a) == 0:
@@ -467,16 +449,74 @@ def simhash_fingerprints(df: DataFrame, text_col: str = "text",
     return df.select(F.col(id_col), _sim(hashes).alias("simhash"))
 
 
+def _block_width(total_bits: int, num_blocks: int) -> int:
+    """Bits per Hamming block: ceil(total_bits / num_blocks)."""
+    return -(-total_bits // num_blocks)
+
+
+def _hamming_blocks(h: Column, total_bits: int, num_blocks: int,
+                    max_hamming: int) -> Column:
+    """The pigeonhole Hamming-block rule (Manku et al., WWW 2007) every
+    near-dup path over a bit fingerprint keys on: the ``num_blocks``
+    contiguous `_block_width`-bit blocks of the ``total_bits``-bit hash
+    column ``h``, lowest first, as array<long> (posexplode it for
+    (block_idx, block_val) keys). Two hashes within Hamming distance
+    ``max_hamming`` differ in at most ``max_hamming`` blocks, so they
+    share a block value whenever ``num_blocks > max_hamming``: an
+    equi-join on the blocks finds every candidate, and an exact
+    Hamming verify keeps the output exact. A larger radius would
+    silently miss pairs, so it raises."""
+    if max_hamming > num_blocks - 1:
+        raise ValueError(
+            f"max_hamming={max_hamming} needs num_blocks >= "
+            f"{max_hamming + 1} (pigeonhole: only pairs within Hamming "
+            "distance num_blocks-1 are guaranteed to share a block); got "
+            f"num_blocks={num_blocks}")
+    w = _block_width(total_bits, num_blocks)
+    return F.array(*[F.shiftright(h, i * w).bitwiseAND(F.lit((1 << w) - 1))
+                     for i in range(num_blocks)])
+
+
+def _hamming_self_pairs(rows: DataFrame, keys: list, id_col: str,
+                        hash_col: str, max_hamming: int) -> DataFrame:
+    """Verified pairs within one frame of block rows: (id_a, id_b,
+    hamming) for rows sharing every ``keys`` value, id_a < id_b, and
+    hashes within ``max_hamming`` bits. A pair sharing several blocks
+    appears once per shared block."""
+    a = rows.select(*keys, F.col(id_col).alias("id_a"),
+                    F.col(hash_col).alias("__h_a__"))
+    b = rows.select(*keys, F.col(id_col).alias("id_b"),
+                    F.col(hash_col).alias("__h_b__"))
+    hamming = F.bit_count(F.col("__h_a__").bitwiseXOR(F.col("__h_b__")))
+    return (a.join(b, keys)
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b", hamming.alias("hamming"))
+            .filter(F.col("hamming") <= max_hamming))
+
+
+def _hamming_probe(probe: DataFrame, index: DataFrame, keys: list,
+                   probe_hash: str, index_hash: str, max_hamming: int,
+                   out_col: str) -> DataFrame:
+    """Distinct ``out_col`` values of the ``probe`` block rows whose
+    hash is within ``max_hamming`` bits of an ``index`` row sharing
+    their ``keys`` — the probe of a batch against persisted blocks."""
+    return (probe.join(index, keys)
+            .filter(F.bit_count(F.col(probe_hash)
+                                .bitwiseXOR(F.col(index_hash)))
+                    <= max_hamming)
+            .select(out_col).distinct())
+
+
 def simhash_pairs(df: DataFrame,
                   text_col: str = "text",
                   id_col: str = "doc_id",
                   max_hamming: int = 3,
                   num_blocks: int = 4,
-                  bits: int = 60,
                   max_block_size: int = 256) -> DataFrame:
-    """Near-dup candidate pairs by SimHash blocking: split the fingerprint
-    into num_blocks bit-blocks; by pigeonhole any pair within
-    max_hamming <= num_blocks - 1 shares at least one exact block. Verify
+    """Near-dup pairs by SimHash blocking: split the 60-bit fingerprint
+    into num_blocks bit-blocks (`_hamming_blocks`; raises unless
+    max_hamming <= num_blocks - 1, the pigeonhole bound under which any
+    pair within max_hamming shares at least one exact block). Verify
     with exact Hamming distance (bit_count of xor).
 
     Hot blocks (template-heavy corpora collapse thousands of docs into one
@@ -490,11 +530,11 @@ def simhash_pairs(df: DataFrame,
     blocks grow with the corpus).
 
     Scale math for the RANDOM-collision floor: unrelated docs share a
-    block with probability num_blocks / 2^(bits/num_blocks), so expected
+    block with probability num_blocks / 2^(60/num_blocks), so expected
     random candidates ~ C(n, 2) * 4 / 2^15 ~ n^2 / 8192 at the defaults —
-    negligible to ~100k docs, dominant by ~10M. At corpus scale raise
-    ``bits`` (e.g. 64 -> 16-bit blocks quarters the floor) or lower
-    ``num_blocks`` with a tighter ``max_hamming``; the planted-pair recall
+    negligible to ~100k docs, dominant by ~10M. At corpus scale lower
+    ``num_blocks`` with a tighter ``max_hamming`` (3 blocks of 20 bits
+    at ``max_hamming=2`` cut the floor ~40x); the planted-pair recall
     guarantee only needs num_blocks >= max_hamming + 1. Measured 10x step
     (sf0.1 -> sf1): wall time 12x while TRUE pair output grew 13.8x —
     runtime stays linear in candidate volume; the corpus's own near-dup
@@ -502,13 +542,10 @@ def simhash_pairs(df: DataFrame,
 
     Returns (id_a, id_b, hamming).
     """
-    block_bits = bits // num_blocks
+    keys = _hamming_blocks(F.col("simhash"), _SIMHASH_BITS, num_blocks,
+                           max_hamming)
+    block_bits = _block_width(_SIMHASH_BITS, num_blocks)
     fp = simhash_fingerprints(df, text_col, id_col)
-    mask = (1 << block_bits) - 1
-    rem_bits = bits - block_bits
-    num_subs = max_hamming + 1
-    sub_bits = (rem_bits + num_subs - 1) // num_subs
-    sub_mask = (1 << sub_bits) - 1
 
     def complement(i: int):
         """The fingerprint with block i's bits removed (packed)."""
@@ -519,13 +556,8 @@ def simhash_pairs(df: DataFrame,
             F.lit((1 << (i * block_bits)) - 1))
         return upper.bitwiseOR(lower)
 
-    blocks = fp.select(
-        F.col(id_col), F.col("simhash"),
-        F.posexplode(F.array(*[
-            F.shiftright(F.col("simhash"), i * block_bits)
-            .bitwiseAND(F.lit(mask))
-            for i in range(num_blocks)
-        ])).alias("block_idx", "block_val"))
+    blocks = fp.select(F.col(id_col), F.col("simhash"),
+                       F.posexplode(keys).alias("block_idx", "block_val"))
     # The small/big routing size is a map-side-combinable count joined
     # back on the block key from ONE checkpointed materialization — not
     # a count window, which put every row of a corpus-hot block on one
@@ -535,40 +567,28 @@ def simhash_pairs(df: DataFrame,
     # leaked cached blocks across calls — the bench-contamination
     # class; checkpoint blocks release when the DataFrame is GC'd.)
     blocks = blocks.localCheckpoint()
-    sizes = blocks.groupBy("block_idx", "block_val").agg(
-        F.count(F.lit(1)).alias("bsz"))
-    blocks = blocks.join(sizes, ["block_idx", "block_val"])
-
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-
-    def self_join(side: DataFrame, keys):
-        left = side.select(*keys, F.col(id_col).alias("id_a"),
-                           F.col("simhash").alias("sh_a"))
-        right = side.select(*keys, F.col(id_col).alias("id_b"),
-                            F.col("simhash").alias("sh_b"))
-        return (left.join(right, on=list(keys))
-                .filter(F.col("id_a") < F.col("id_b"))
-                .select("id_a", "id_b", hamming.alias("hamming"))
-                .filter(F.col("hamming") <= max_hamming))
-
-    small = self_join(blocks.filter(F.col("bsz") <= max_block_size),
-                      ["block_idx", "block_val"])
+    block_keys = ["block_idx", "block_val"]
+    sizes = blocks.groupBy(*block_keys).agg(F.count(F.lit(1)).alias("bsz"))
+    blocks = blocks.join(sizes, block_keys)
+    small = _hamming_self_pairs(
+        blocks.filter(F.col("bsz") <= max_block_size), block_keys,
+        id_col, "simhash", max_hamming)
     # The complement (fingerprint with the matched block's bits removed)
     # is pure arithmetic on (simhash, block_idx), so it is computed HERE
     # — only for the rare over-cap rows — instead of being materialized
-    # through the checkpoint for every row.
+    # through the checkpoint for every row. Its max_hamming + 1
+    # sub-blocks are the same block rule over the complement's bits.
     rem = F.lit(None).cast("long")
     for i in reversed(range(num_blocks)):
         rem = F.when(F.col("block_idx") == i, complement(i)).otherwise(rem)
+    subs = _hamming_blocks(F.col("rem"), _SIMHASH_BITS - block_bits,
+                           max_hamming + 1, max_hamming)
     big = blocks.filter(F.col("bsz") > max_block_size) \
         .withColumn("rem", rem).select(
-        id_col, "simhash", "block_idx", "block_val",
-        F.posexplode(F.array(*[
-            F.shiftright(F.col("rem"), j * sub_bits)
-            .bitwiseAND(F.lit(sub_mask)) for j in range(num_subs)
-        ])).alias("sub_idx", "sub_val"))
-    big_pairs = self_join(big, ["block_idx", "block_val",
-                                "sub_idx", "sub_val"])
+        id_col, "simhash", *block_keys,
+        F.posexplode(subs).alias("sub_idx", "sub_val"))
+    big_pairs = _hamming_self_pairs(big, block_keys + ["sub_idx", "sub_val"],
+                                    id_col, "simhash", max_hamming)
     return (small.unionByName(big_pairs)
             .dropDuplicates(["id_a", "id_b"]))
 
@@ -733,11 +753,12 @@ def winnow_containment_pairs(df: DataFrame,
            .distinct())
     # Stop-fingerprint rule via combinable count + tiny broadcast
     # anti-join off ONE checkpointed materialization of the fingerprint
-    # table (see the band-cap comment in minhash_lsh_pairs: a count
-    # window serializes a corpus-hot fingerprint on one task). A
-    # localCheckpoint — unlike the .persist() that once leaked blocks
-    # across calls and contaminated bench timings (13s fresh vs 155s
-    # degraded) — is released when the DataFrame is garbage-collected.
+    # table (see the band-cap comment in
+    # minhash_lsh_pairs_from_profile: a count window serializes a
+    # corpus-hot fingerprint on one task). A localCheckpoint — unlike
+    # the .persist() that once leaked blocks across calls and
+    # contaminated bench timings (13s fresh vs 155s degraded) — is
+    # released when the DataFrame is garbage-collected.
     inv = inv.localCheckpoint()
     stop_fp = (inv.groupBy("fp")
                .agg(F.count(F.lit(1)).alias("doc_freq"))
@@ -1060,44 +1081,33 @@ def cross_corpus_near_dup(new_docs: DataFrame,
     bands x reference bands — never corpus x corpus). The near-dup
     complement of `cross_corpus_dedup` (exact fingerprints).
 
-    Scale shape: the reference's band table is the persistable dedup
-    index (`minhash_bands`); each ingest batch computes its own bands
-    (one Arrow pass, no shuffle) and hash-joins the index on
-    (band_idx, band_hash). Degenerate reference buckets are capped at
-    ``max_bucket_size`` (window on the join key; the exchange is reused
-    by the join — same AQE pattern as `minhash_lsh_pairs`).
+    Scale shape: both sides derive one `minhash_profile` (one Arrow
+    pass each, no shuffle); the reference's band strings are the
+    persistable dedup index (`build_minhash_store`), and each ingest
+    batch hash-joins them on ``bh``. Degenerate reference buckets are
+    capped at ``max_bucket_size`` by a map-side-combinable count +
+    join (NOT a count window: a degenerate reference bucket would land
+    whole on one window task; the aggregate's partial combine absorbs
+    the hot key and AQE can skew-split the join).
 
     Returns the surviving new rows (original columns).
     """
-    nb = minhash_bands(new_docs, text_col, id_col, k, num_hashes,
-                       rows_per_band)
-    rb = minhash_bands(reference, text_col, id_col, k, num_hashes,
-                       rows_per_band)
-    # Bucket cap via a map-side-combinable count + join (NOT a count
-    # window: a degenerate reference bucket would land whole on one
-    # window task; the aggregate's partial combine absorbs the hot key
-    # and AQE can skew-split the join).
-    sizes = (rb.groupBy("band_idx", "band_hash")
+    nprof = minhash_profile(new_docs, text_col, id_col, k, num_hashes,
+                            rows_per_band)
+    rprof = minhash_profile(reference, text_col, id_col, k, num_hashes,
+                            rows_per_band)
+    rb = rprof.select(F.col(id_col).alias("id_b"),
+                      F.explode("bhs").alias("bh"))
+    sizes = (rb.groupBy("bh")
              .agg(F.count(F.lit(1)).alias("bucket_size"))
              .filter(F.col("bucket_size") <= max_bucket_size)
-             .select("band_idx", "band_hash"))
-    rb = rb.join(sizes, ["band_idx", "band_hash"])
-    cand = (nb.select("band_idx", "band_hash",
-                      F.col(id_col).alias("id_a"))
-            .join(rb.select("band_idx", "band_hash",
-                            F.col(id_col).alias("id_b")),
-                  ["band_idx", "band_hash"])
+             .select("bh"))
+    cand = (nprof.select(F.col(id_col).alias("id_a"),
+                         F.explode("bhs").alias("bh"))
+            .join(rb.join(sizes, "bh"), "bh")
             .select("id_a", "id_b").distinct())
-    sh_new = shingle_docs(new_docs, text_col, id_col, k).select(
-        F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
-    sh_ref = shingle_docs(reference, text_col, id_col, k).select(
-        F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
-    joined = cand.join(sh_new, "id_a").join(sh_ref, "id_b")
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    dup_ids = (joined
-               .filter(F.round(inter.cast("double") / union, 6)
-                       >= jaccard_threshold)
+    dup_ids = (_jaccard_verify(cand, nprof, id_col, rprof, id_col,
+                               jaccard_threshold)
                .select(F.col("id_a").alias(id_col)).distinct())
     return new_docs.join(dup_ids, id_col, "left_anti")
 
@@ -1423,24 +1433,15 @@ def build_minhash_store(reference: DataFrame,
                                     "rows_per_band": rows_per_band})
     if m is not None:
         num_buckets = int(m["num_buckets"])   # appends stay aligned
-    if profile is not None:
-        # precomputed `minhash_profile` of (a superset of) the
-        # reference rows — same band strings/shingles as the from-text
-        # path; a semi-join restricts it to the rows being written
-        ref_ids = reference.select(F.col(id_col))
-        prof = profile.join(ref_ids, id_col, "left_semi")
-        bands = prof.select(F.col(id_col).alias("id"),
-                            F.explode("bhs").alias("bh"))
-        sh = prof.select(F.col(id_col).alias("id"), "shingles")
-    else:
-        bands = (minhash_bands(reference, text_col, id_col, k,
-                               num_hashes, rows_per_band)
-                 .select(F.col(id_col).alias("id"),
-                         F.concat_ws(":",
-                                     F.col("band_idx").cast("string"),
-                                     F.col("band_hash")).alias("bh")))
-        sh = (shingle_docs(reference, text_col, id_col, k)
-              .select(F.col(id_col).alias("id"), "shingles"))
+    # a precomputed `minhash_profile` may cover a superset of the
+    # reference rows: a semi-join restricts it to the rows written
+    prof = (minhash_profile(reference, text_col, id_col, k, num_hashes,
+                            rows_per_band) if profile is None
+            else profile.join(reference.select(F.col(id_col)), id_col,
+                              "left_semi"))
+    bands = prof.select(F.col(id_col).alias("id"),
+                        F.explode("bhs").alias("bh"))
+    sh = prof.select(F.col(id_col).alias("id"), "shingles")
     sizes = (bands.groupBy("bh")
              .agg(F.count(F.lit(1)).alias("__n__"))
              .filter(F.col("__n__") <= max_bucket_size)
@@ -1494,28 +1495,19 @@ def incremental_near_dup(new_docs: DataFrame,
     k, num_hashes, rpb = (int(m["k"]), int(m["num_hashes"]),
                           int(m["rows_per_band"]))
     nbuck = int(m["num_buckets"])
-    if profile is not None:
-        prof = profile.join(new_docs.select(F.col(id_col)), id_col,
-                            "left_semi")
-        nb0 = prof.select(F.col(id_col).alias("id_a"),
-                          F.explode("bhs").alias("bh"))
-        sh_new = prof.select(F.col(id_col).alias("id_a"),
-                             F.col("shingles").alias("sh_a"))
-    else:
-        nb0 = (minhash_bands(new_docs, text_col, id_col, k, num_hashes,
-                             rpb)
-               .select(F.col(id_col).alias("id_a"),
-                       F.concat_ws(":", F.col("band_idx").cast("string"),
-                                   F.col("band_hash")).alias("bh")))
-        sh_new = shingle_docs(new_docs, text_col, id_col, k).select(
-            F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
+    prof = (minhash_profile(new_docs, text_col, id_col, k, num_hashes,
+                            rpb) if profile is None
+            else profile.join(new_docs.select(F.col(id_col)), id_col,
+                              "left_semi"))
     # Batch-side inputs are PRE-partitioned to the store's bucket count:
     # when both join children satisfy the clustering but with mismatched
     # partition counts (bucketed scan vs a groupBy at
     # spark.sql.shuffle.partitions), Spark re-shuffles the BUCKETED
     # side — exactly the exchange the store exists to avoid. Matching
     # the count up front makes the store side always win (plan-pinned).
-    nb = nb0.repartition(nbuck, "bh")
+    nb = (prof.select(F.col(id_col).alias("id_a"),
+                      F.explode("bhs").alias("bh"))
+          .repartition(nbuck, "bh"))
     sb = spark.table(f"{store_name}_bands")
     # Logical takedowns (`remove_from_minhash_store`): tombstoned
     # reference ids stop generating candidates; the (size-guarded
@@ -1527,14 +1519,9 @@ def incremental_near_dup(new_docs: DataFrame,
     sb = sb.select(F.col("id").alias("id_b"), "bh")
     cand = (nb.join(sb, "bh").select("id_a", "id_b").distinct()
             .repartition(nbuck, "id_b"))
-    sh_ref = spark.table(f"{store_name}_shingles").select(
-        F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
-    joined = cand.join(sh_ref, "id_b").join(sh_new, "id_a")
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    dup_ids = (joined
-               .filter(F.round(inter.cast("double") / union, 6)
-                       >= jaccard_threshold)
+    dup_ids = (_jaccard_verify(cand, prof, id_col,
+                               spark.table(f"{store_name}_shingles"),
+                               "id", jaccard_threshold)
                .select(F.col("id_a").alias(id_col)).distinct())
     return new_docs.join(dup_ids, id_col, "left_anti")
 

@@ -54,6 +54,7 @@ from pyspark.sql.types import (ArrayType, BinaryType, DoubleType, IntegerType,
                                LongType, StringType, StructField, StructType)
 
 from pipelinedp_spark import store
+from pipelinedp_spark.operators import dedup as D
 
 # Optional real codec backends, detected once at import: when Pillow /
 # soundfile exist in the environment, decoder="native" transparently
@@ -1145,47 +1146,32 @@ def _hash_dedup_flags(hashed: DataFrame, id_col: str, hash_col: str,
                       total_bits: int, max_hamming: int,
                       num_blocks: int) -> DataFrame:
     """Shared near-dup flagging over any <= 63-bit fingerprint column:
-    exact mode is one groupBy on the hash; near mode uses pigeonhole
-    bit-blocks (hashes within Hamming h share a block when
-    num_blocks > h) so candidates come from equi-joins, never an
-    all-pairs join. Returns (id_col, hash_col, is_dup).
+    exact mode is one groupBy on the hash; near mode keys on the
+    pigeonhole block rule (`dedup._hamming_blocks`) so candidates come
+    from equi-joins, never an all-pairs join, and a row is a duplicate
+    iff a smaller id verifies within ``max_hamming``. Returns
+    (id_col, hash_col, is_dup).
 
     The hashed table feeds 2-3 consumers below; un-materialized, each
     consumer would re-run the whole upstream decode+fingerprint pass
     (the expensive part), so it is localCheckpoint'd first — the
     materialization is (id, 63-bit hash) only, ~16 B/row at any corpus
     size."""
+    keys = (None if max_hamming == 0 else D._hamming_blocks(
+        F.col(hash_col), total_bits, num_blocks, max_hamming))
     hashed = hashed.localCheckpoint()
-    if max_hamming == 0:
+    if keys is None:
         keeper = hashed.groupBy(hash_col).agg(
             F.min(id_col).alias("__keep__"))
         return (hashed.join(keeper, hash_col)
                 .select(id_col, hash_col,
                         (F.col(id_col) != F.col("__keep__"))
                         .alias("is_dup")))
-    if max_hamming > num_blocks - 1:
-        raise ValueError(
-            f"max_hamming={max_hamming} needs num_blocks >= "
-            f"{max_hamming + 1} (pigeonhole recall bound)")
-    width = -(-total_bits // num_blocks)
-    blocks = F.array(*[
-        F.struct(F.lit(b).alias("b"),
-                 F.shiftright(F.col(hash_col), b * width)
-                 .bitwiseAND(F.lit((1 << width) - 1)).alias("v"))
-        for b in range(num_blocks)])
-    tagged = hashed.select(id_col, hash_col,
-                           F.explode(blocks).alias("blk"))
-    pairs = (tagged.alias("a")
-             .join(tagged.alias("b"),
-                   (F.col("a.blk") == F.col("b.blk"))
-                   & (F.col(f"a.{id_col}") > F.col(f"b.{id_col}")))
-             .select(F.col(f"a.{id_col}").alias(id_col),
-                     F.col(f"a.{hash_col}").alias(hash_col),
-                     F.col(f"b.{hash_col}").alias("other"))
-             .distinct())
-    ham = F.bit_count(F.col(hash_col).bitwiseXOR(F.col("other")))
-    dup_ids = (pairs.filter(ham <= max_hamming)
-               .select(id_col).distinct()
+    tagged = hashed.select(id_col, hash_col, F.posexplode(keys)
+                           .alias("block_idx", "block_val"))
+    dup_ids = (D._hamming_self_pairs(tagged, ["block_idx", "block_val"],
+                                     id_col, hash_col, max_hamming)
+               .select(F.col("id_b").alias(id_col)).distinct()
                .withColumn("__dup__", F.lit(True)))
     return (hashed.join(dup_ids, id_col, "left")
             .select(id_col, hash_col,
@@ -1527,12 +1513,9 @@ def build_phash_store(reference: DataFrame,
     every step (the `minhash_profile` pattern). When given,
     ``reference`` is ignored (any frame on the session); pass a
     checkpointed profile — it is consumed twice here."""
-    from pipelinedp_spark import store
     spark = reference.sparkSession
-    if max_hamming > num_blocks - 1:
-        raise ValueError(
-            f"max_hamming={max_hamming} needs num_blocks >= "
-            f"{max_hamming + 1} (pigeonhole recall bound)")
+    # the block rule validates the radius before any table is touched
+    keys = _phash_blocks("ph", num_blocks, max_hamming)
     m = store.begin_build(spark, store_name, mode,
                           ("_blocks", "_members", "_meta"),
                           validate={"max_hamming": max_hamming,
@@ -1567,9 +1550,8 @@ def build_phash_store(reference: DataFrame,
                       F.col(id_col).alias("id"))
               .filter(F.col("ph").isNotNull())
               .localCheckpoint())
-    blocks = (hp.select("ph").distinct()
-              .select("ph", F.explode(_phash_blocks(
-                  "ph", num_blocks)).alias("bk")))
+    blocks = hp.select("ph").distinct().select(
+        "ph", F.explode(keys).alias("bk"))
     members = hp.dropDuplicates(["id"])
     # provenance stamps (see build_bm25_index): a guarded streaming
     # append marks its rows so a crash between apply and ingest-log
@@ -1634,7 +1616,6 @@ def remove_from_phash_store(images: DataFrame,
     the decode+hash pass over ``images``; when given, ``images`` is
     ignored (any frame on the session). Pass a checkpointed profile —
     it feeds both bookkeeping appends."""
-    from pipelinedp_spark import store as _store
     spark = images.sparkSession
     if not spark.catalog.tableExists(f"{store_name}_members"):
         raise ValueError(
@@ -1657,7 +1638,7 @@ def remove_from_phash_store(images: DataFrame,
     new_rm = hashed
     if spark.catalog.tableExists(rm_table):
         new_rm = new_rm.join(spark.table(rm_table), "id", "left_anti")
-    _store.write_bucketed(new_rm.localCheckpoint(), rm_table, "ph",
+    store.write_bucketed(new_rm.localCheckpoint(), rm_table, "ph",
                           nbuck, "append")
     spark.catalog.refreshTable(rm_table)
     # A requested family is dead iff it IS indexed and NO member
@@ -1677,21 +1658,18 @@ def remove_from_phash_store(images: DataFrame,
     ts_table = f"{store_name}_tombstones"
     if spark.catalog.tableExists(ts_table):
         dead = dead.join(spark.table(ts_table), "ph", "left_anti")
-    _store.write_bucketed(dead.localCheckpoint(), ts_table, "ph",
+    store.write_bucketed(dead.localCheckpoint(), ts_table, "ph",
                           nbuck, "append")
     spark.catalog.refreshTable(ts_table)
 
 
-def _phash_blocks(hash_col: str, num_blocks: int):
-    """Pigeonhole bit-block keys 'b:v' for a 63-bit fingerprint column
-    — hashes within Hamming h share >= 1 block when num_blocks > h."""
-    total_bits = _PHASH_BLOCK * _PHASH_BLOCK - 1
-    width = -(-total_bits // num_blocks)
-    return F.array(*[
-        F.concat_ws(":", F.lit(str(b)),
-                    F.shiftright(F.col(hash_col), b * width)
-                    .bitwiseAND(F.lit((1 << width) - 1)).cast("string"))
-        for b in range(num_blocks)])
+def _phash_blocks(hash_col: str, num_blocks: int, max_hamming: int):
+    """The pHash store's block keys: `dedup._hamming_blocks` over the
+    63-bit hash, each block as the string 'block_idx:block_val'."""
+    return F.transform(
+        D._hamming_blocks(F.col(hash_col), _PHASH_BLOCK * _PHASH_BLOCK - 1,
+                          num_blocks, max_hamming),
+        lambda v, i: F.concat_ws(":", i.cast("string"), v.cast("string")))
 
 
 def incremental_phash_dedup(new_images: DataFrame,
@@ -1728,21 +1706,18 @@ def incremental_phash_dedup(new_images: DataFrame,
     bblocks = (hashed.filter(F.col("phash").isNotNull())
                .select("phash").distinct()
                .select(F.col("phash").alias("__h__"),
-                       F.explode(_phash_blocks("phash", num_blocks))
-                       .alias("bk"))
+                       F.explode(_phash_blocks("phash", num_blocks,
+                                               max_hamming)).alias("bk"))
                .repartition(nbuck, "bk"))
     sblocks = spark.table(f"{store_name}_blocks")
     # Logical takedowns (`remove_from_phash_store`): tombstoned hashes
     # stop flagging batch images (size-guarded broadcast anti-join on
     # the bucketed scan — no exchange).
-    from pipelinedp_spark import store as _store
-    ts = _store.tombstones(spark, store_name)
+    ts = store.tombstones(spark, store_name)
     if ts is not None:
         sblocks = sblocks.join(ts, "ph", "left_anti")
-    dup_hashes = (bblocks.join(sblocks, "bk")
-                  .filter(F.bit_count(F.col("__h__").bitwiseXOR(
-                      F.col("ph"))) <= max_hamming)
-                  .select(F.col("__h__").alias("phash")).distinct())
+    dup_hashes = D._hamming_probe(bblocks, sblocks, ["bk"], "__h__", "ph",
+                                  max_hamming, F.col("__h__").alias("phash"))
     return (hashed.join(dup_hashes.withColumn("__dup__", F.lit(True)),
                         "phash", "left")
             .select(id_col, "phash",

@@ -141,67 +141,6 @@ def length_buckets(docs: DataFrame,
                     .alias("pad_frac")))
 
 
-def pack_bins_greedy(docs: DataFrame,
-                     seq_len: int,
-                     text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
-    """Document-boundary-respecting bin packing: assign whole documents
-    to fixed-capacity bins (no splitting — the SFT/preference-data
-    constraint `pack_sequences` deliberately ignores). First-fit-
-    decreasing runs PER PARTITION over an Arrow batch stream: FFD is
-    inherently sequential, so the distributed form is local-FFD with a
-    partition-disjoint bin namespace — the packing quality loss vs
-    global FFD is bounded (each partition wastes at most one partial
-    bin per open bin list) and documented, while the plan stays one
-    mapInPandas pass with zero shuffles. Documents longer than
-    ``seq_len`` get a singleton bin (truncate at batch time).
-
-    Returns (id_col, n_tokens, bin_id, bin_fill) where bin_id is
-    globally unique (partition id folded into the high bits) and
-    bin_fill is the bin's total tokens after packing."""
-    import pandas as pd
-
-    from pipelinedp_spark.functions.text import token_count
-
-    with_n = docs.select(F.col(id_col),
-                         token_count(F.col(text_col)).cast("long")
-                         .alias("n_tokens"))
-
-    def _pack(batches):
-        from pyspark import TaskContext
-        pid = TaskContext.get().partitionId()
-        rows = []
-        for pdf in batches:
-            rows.extend(zip(pdf[id_col].tolist(),
-                            pdf["n_tokens"].tolist()))
-        rows.sort(key=lambda r: (-r[1], r[0]))
-        bins = []          # (remaining, bin_idx)
-        fills = []
-        assign = []
-        for did, n in rows:
-            eff = min(n, seq_len)
-            placed = None
-            for i in range(len(bins)):
-                if bins[i] >= eff:
-                    placed = i
-                    break
-            if placed is None:
-                bins.append(seq_len)
-                fills.append(0)
-                placed = len(bins) - 1
-            bins[placed] -= eff
-            fills[placed] += eff
-            assign.append((did, n, placed))
-        out = pd.DataFrame(assign, columns=[id_col, "n_tokens", "_b"])
-        out["bin_id"] = (pid << 40) + out["_b"]
-        out["bin_fill"] = out["_b"].map(lambda b: fills[b])
-        yield out[[id_col, "n_tokens", "bin_id", "bin_fill"]]
-
-    return with_n.mapInPandas(
-        _pack, f"{id_col} long, n_tokens long, bin_id long, "
-               f"bin_fill long")
-
-
 def length_match_resample(docs: DataFrame,
                           target: dict,
                           text_col: str = "text",

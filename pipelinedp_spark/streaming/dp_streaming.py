@@ -546,18 +546,16 @@ def near_dup_dedup_batch(batch: DataFrame,
                          state: Optional[DataFrame],
                          text_col: str = "text",
                          id_col: str = "doc_id",
-                         bits: int = 60,
                          num_blocks: int = 4,
                          max_hamming: int = 3,
                          materialize: bool = False) -> "tuple[DataFrame, DataFrame]":
     """One micro-batch of incremental NEAR-dup (simhash) dedup: drop
     batch docs within ``max_hamming`` of (a) any previously-kept doc
     (``state`` = accumulated block table) or (b) a smaller-id doc in the
-    same batch. Pigeonhole blocking as in `operators.dedup.simhash_pairs`:
-    a pair within Hamming distance num_blocks-1 shares at least one
-    exact block, so block-equality joins find every candidate — which is
-    why ``max_hamming <= num_blocks - 1`` is REQUIRED (validated below:
-    a larger radius would silently miss pairs).
+    same batch. Candidates come from the pigeonhole block rule of
+    `operators.dedup.simhash_pairs` (`dedup._hamming_blocks`, which
+    raises unless ``max_hamming <= num_blocks - 1``: a larger radius
+    would silently miss pairs), verified by exact Hamming distance.
 
     Returns (kept_docs_with_simhash, kept_block_rows); append the block
     rows to the state table for the next batch. Both joins hash on
@@ -571,54 +569,26 @@ def near_dup_dedup_batch(batch: DataFrame,
     uses this so the state append cannot observe the same batch's
     output-path write mid-plan.
     """
-    from pipelinedp_spark.operators.dedup import simhash_fingerprints
+    from pipelinedp_spark.operators import dedup as D
 
-    if max_hamming > num_blocks - 1:
-        raise ValueError(
-            f"max_hamming={max_hamming} needs num_blocks >= "
-            f"{max_hamming + 1} (pigeonhole: only pairs within Hamming "
-            "distance num_blocks-1 are guaranteed to share a block); got "
-            f"num_blocks={num_blocks}")
-    block_bits = bits // num_blocks
-    mask = (1 << block_bits) - 1
-    # Arrow-batched fingerprint UDF (operators.dedup), NOT the pure
-    # column-expression simhash64: the expression tree there is
-    # per-bit-sized and bloats the task binary.
+    keys = D._hamming_blocks(F.col("simhash"), D._SIMHASH_BITS,
+                             num_blocks, max_hamming)
     fp = (batch.select(F.col(id_col), F.col(text_col))
-          .join(simhash_fingerprints(batch, text_col, id_col), id_col))
+          .join(D.simhash_fingerprints(batch, text_col, id_col), id_col))
     if materialize:
         fp = fp.localCheckpoint()
-    blocks = fp.select(
-        F.col(id_col), F.col("simhash"),
-        F.posexplode(F.array(*[
-            F.shiftright(F.col("simhash"), i * block_bits)
-            .bitwiseAND(F.lit(mask)) for i in range(num_blocks)
-        ])).alias("block_idx", "block_val"))
-
-    hamming_vs = lambda other: F.bit_count(
-        F.col("simhash").bitwiseXOR(F.col(other)))
-
-    dup_ids = None
+    blocks = fp.select(F.col(id_col), F.col("simhash"),
+                       F.posexplode(keys).alias("block_idx", "block_val"))
+    block_keys = ["block_idx", "block_val"]
+    dup_ids = (D._hamming_self_pairs(blocks, block_keys, id_col, "simhash",
+                                     max_hamming)
+               .select(F.col("id_b").alias(id_col)).distinct())
     if state is not None:
-        st = state.select(F.col("block_idx"), F.col("block_val"),
+        st = state.select(*block_keys,
                           F.col("simhash").alias("state_simhash"))
-        vs_state = (blocks.join(st, ["block_idx", "block_val"])
-                    .filter(hamming_vs("state_simhash") <= max_hamming)
-                    .select(F.col(id_col)).distinct())
-        dup_ids = vs_state
-
-    left = blocks.select("block_idx", "block_val",
-                         F.col(id_col).alias("id_a"),
-                         F.col("simhash").alias("sh_a"))
-    right = blocks.select("block_idx", "block_val",
-                          F.col(id_col).alias(id_col),
-                          F.col("simhash").alias("simhash"))
-    in_batch = (right.join(left, ["block_idx", "block_val"])
-                .filter((F.col("id_a") < F.col(id_col))
-                        & (hamming_vs("sh_a") <= max_hamming))
-                .select(F.col(id_col)).distinct())
-    dup_ids = in_batch if dup_ids is None else dup_ids.unionByName(
-        in_batch).distinct()
+        dup_ids = D._hamming_probe(
+            blocks, st, block_keys, "simhash", "state_simhash",
+            max_hamming, id_col).unionByName(dup_ids).distinct()
     if materialize:
         # Small (duplicate ids only); pins the state-table read so later
         # consumers can't observe concurrent appends to it.
@@ -636,7 +606,6 @@ def streaming_near_dup_dedup(stream: DataFrame,
                              checkpoint_dir: str,
                              text_col: str = "text",
                              id_col: str = "doc_id",
-                             bits: int = 60,
                              num_blocks: int = 4,
                              max_hamming: int = 3):
     """Streaming incremental near-dup dedup via foreachBatch: each
@@ -653,7 +622,7 @@ def streaming_near_dup_dedup(stream: DataFrame,
     return _micro_batches(
         stream, checkpoint_dir,
         lambda b, _, state: near_dup_dedup_batch(
-            b, state, text_col, id_col, bits, num_blocks, max_hamming,
+            b, state, text_col, id_col, num_blocks, max_hamming,
             materialize=True),
         state_path, output_path, state_mode="append")
 

@@ -573,25 +573,6 @@ def test_streaming_anomaly_counts_and_shared_scores(spark, tmp_path):
     assert shared_top == oracle_top
 
 
-def test_pack_bins_greedy_capacity_and_waste(spark):
-    """No bin exceeds capacity, every doc lands exactly once, oversize
-    docs get singleton bins, and FFD wastes less than naive one-doc-
-    per-bin padding."""
-    from pipelinedp_spark.operators.packing import pack_bins_greedy
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    out = pack_bins_greedy(docs, seq_len=256).collect()
-    assert len(out) == docs.count()
-    by_bin = {}
-    for r in out:
-        by_bin.setdefault(r["bin_id"], []).append(r)
-        assert r["bin_fill"] <= 256
-    for rows in by_bin.values():
-        fill = sum(min(r["n_tokens"], 256) for r in rows)
-        assert fill == rows[0]["bin_fill"] <= 256
-    n_bins = len(by_bin)
-    assert n_bins < len(out)            # beats one-doc-per-bin
-    total = sum(min(r["n_tokens"], 256) for r in out)
-    assert total <= n_bins * 256
 def test_salted_join_equivalence(spark):
     """Salted inner and left joins return exactly the plain join's
     rows on a hot-key distribution (one key owns 90% of the big
@@ -723,26 +704,6 @@ def test_compression_ratio_separates_boilerplate(spark):
     kept = [r["doc_id"] for r in
             compression_band_filter(df).collect()]
     assert kept == [1]
-
-
-def test_tokenizer_fertility_report(spark):
-    """Fertility over a tiny trained tokenizer: per-language sums are
-    exact, ratios consistent, and a language the merges never saw
-    shows strictly higher tokens_per_word than the training
-    language."""
-    from pipelinedp_spark.operators.bpe import (tokenizer_fertility,
-                                                train_bpe_merges)
-    en = "the cat sat on the mat and the dog sat too " * 5
-    xx = "zqxv wvqz qzxw vxqz " * 10
-    df = spark.sql(
-        f"SELECT col1 AS doc_id, col2 AS lang, col3 AS text FROM VALUES "
-        f"(1, 'en', '{en.strip()}'), (2, 'xx', '{xx.strip()}')")
-    merges = train_bpe_merges(df.filter("lang = 'en'"), num_merges=30)
-    rep = {r["lang"]: r for r in
-           tokenizer_fertility(df, merges).collect()}
-    for lang, r in rep.items():
-        assert r["tokens_per_word"] == round(r["tokens"] / r["words"], 6)
-    assert rep["xx"]["tokens_per_word"] > rep["en"]["tokens_per_word"]
 
 
 def test_length_match_resample_hits_target(spark):

@@ -1202,3 +1202,89 @@ def test_extract_mp3_metadata_df(spark):
            extract_mp3_metadata(df, "audio").collect()}
     assert got[0]["n_frames"] == 5 and got[0]["sample_rate"] == 44100
     assert got[1]["sample_rate"] is None
+
+
+# The phash store family's `hashed=` profile path (one decode+hash pass
+# per lifecycle query, the `minhash_profile` pattern) must be
+# bit-identical to the from-images path — including null-phash rows
+# (undecodable payloads) and duplicate ids.
+
+def _phash_imgs(spark, n=24):
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    def gen(it):
+        i, j = np.meshgrid(np.arange(32), np.arange(32), indexing="ij")
+        for pdf in it:
+            vals = pdf["doc_id"].astype("int64")
+            payloads = []
+            for d in vals:
+                if int(d) % 11 == 10:       # undecodable → null phash
+                    payloads.append(b"not an image")
+                    continue
+                g = int(d) % 6
+                px = ((13 * ((i * (g + 3) + j) % 23) + g * 29)
+                      % 200).astype(np.uint8)
+                payloads.append(MM.encode_bmp(px))
+            yield pd.DataFrame({"doc_id": vals, "image": payloads})
+
+    base = spark.range(n).select(F.col("id").alias("doc_id"))
+    dup = spark.range(1).select((F.lit(3)).alias("doc_id"))  # dup id 3
+    return (base.unionByName(dup)
+            .mapInPandas(gen, "doc_id long, image binary")
+            .localCheckpoint())
+
+
+def _table_rows(spark, name, cols):
+    return sorted(map(tuple, spark.table(name).select(*cols).collect()))
+
+
+def test_phash_store_hashed_profile_equals_from_images(spark):
+    from pyspark.sql import functions as F
+
+    imgs = _phash_imgs(spark)
+    hp = (MM.image_phash(imgs).select("doc_id", "phash")
+          .localCheckpoint())
+    rm_imgs = imgs.filter(F.col("doc_id") % 6 == 2)
+    rm_hp = hp.filter(F.col("doc_id") % 6 == 2)
+    batch_imgs = imgs.select((F.col("doc_id") + 500).alias("doc_id"),
+                             "image")
+    batch_hp = hp.select((F.col("doc_id") + 500).alias("doc_id"),
+                         "phash")
+    try:
+        MM.build_phash_store(imgs, "r13hp_a", max_hamming=1,
+                             num_blocks=2, num_buckets=2)
+        MM.build_phash_store(hp, "r13hp_b", max_hamming=1,
+                             num_blocks=2, num_buckets=2, hashed=hp)
+        for suffix, cols in (("_blocks", ["ph", "bk"]),
+                             ("_members", ["ph", "id"]),
+                             ("_meta", ["max_hamming", "num_blocks",
+                                        "num_buckets"])):
+            assert (_table_rows(spark, f"r13hp_a{suffix}", cols)
+                    == _table_rows(spark, f"r13hp_b{suffix}", cols)), suffix
+
+        MM.remove_from_phash_store(rm_imgs, "r13hp_a")
+        MM.remove_from_phash_store(rm_hp, "r13hp_b", hashed=rm_hp)
+        for suffix, cols in (("_removed_ids", ["id", "ph"]),
+                             ("_tombstones", ["ph"])):
+            assert (_table_rows(spark, f"r13hp_a{suffix}", cols)
+                    == _table_rows(spark, f"r13hp_b{suffix}", cols)), suffix
+
+        out_a = sorted(map(tuple,
+                           MM.incremental_phash_dedup(batch_imgs, "r13hp_a")
+                           .collect()))
+        out_b = sorted(map(tuple,
+                           MM.incremental_phash_dedup(batch_hp, "r13hp_b",
+                                                      hashed=batch_hp)
+                           .collect()))
+        assert out_a == out_b
+        # null-phash rows pass through (undecodable payloads exist)
+        assert any(r[1] is None and r[2] is False for r in out_a)
+        # and the takedown actually changed some verdicts vs a no-removal
+        # store would — the removed families stop flagging
+        assert any(r[2] for r in out_a) and not all(r[2] for r in out_a)
+    finally:
+        for s in ("r13hp_a", "r13hp_b"):
+            for t in ("_blocks", "_members", "_meta", "_tombstones",
+                      "_removed_ids"):
+                spark.sql(f"DROP TABLE IF EXISTS {s}{t}")

@@ -95,160 +95,3 @@ def test_sessionize_scalable_boundary_cap_guard(spark):
         assert out.count() == 100
     finally:
         spark.conf.unset("spark.pipelinedp.sessions.maxBoundaryRows")
-
-
-# 3. The phash store family's `hashed=` profile path (one decode+hash
-#    pass per lifecycle query, the `minhash_profile` pattern) must be
-#    bit-identical to the from-images path — including null-phash rows
-#    (undecodable payloads) and duplicate ids.
-
-def _phash_imgs(spark, n=24):
-    import numpy as np
-    import pandas as pd
-    from pipelinedp_spark.operators import multimodal as MM
-
-    def gen(it):
-        i, j = np.meshgrid(np.arange(32), np.arange(32), indexing="ij")
-        for pdf in it:
-            vals = pdf["doc_id"].astype("int64")
-            payloads = []
-            for d in vals:
-                if int(d) % 11 == 10:       # undecodable → null phash
-                    payloads.append(b"not an image")
-                    continue
-                g = int(d) % 6
-                px = ((13 * ((i * (g + 3) + j) % 23) + g * 29)
-                      % 200).astype(np.uint8)
-                payloads.append(MM.encode_bmp(px))
-            yield pd.DataFrame({"doc_id": vals, "image": payloads})
-
-    base = spark.range(n).select(F.col("id").alias("doc_id"))
-    dup = spark.range(1).select((F.lit(3)).alias("doc_id"))  # dup id 3
-    return (base.unionByName(dup)
-            .mapInPandas(gen, "doc_id long, image binary")
-            .localCheckpoint())
-
-
-def _table_rows(spark, name, cols):
-    return sorted(map(tuple, spark.table(name).select(*cols).collect()))
-
-
-def test_phash_store_hashed_profile_equals_from_images(spark):
-    from pipelinedp_spark.operators import multimodal as MM
-
-    imgs = _phash_imgs(spark)
-    hp = (MM.image_phash(imgs).select("doc_id", "phash")
-          .localCheckpoint())
-    rm_imgs = imgs.filter(F.col("doc_id") % 6 == 2)
-    rm_hp = hp.filter(F.col("doc_id") % 6 == 2)
-    batch_imgs = imgs.select((F.col("doc_id") + 500).alias("doc_id"),
-                             "image")
-    batch_hp = hp.select((F.col("doc_id") + 500).alias("doc_id"),
-                         "phash")
-    try:
-        MM.build_phash_store(imgs, "r13hp_a", max_hamming=1,
-                             num_blocks=2, num_buckets=2)
-        MM.build_phash_store(hp, "r13hp_b", max_hamming=1,
-                             num_blocks=2, num_buckets=2, hashed=hp)
-        for suffix, cols in (("_blocks", ["ph", "bk"]),
-                             ("_members", ["ph", "id"]),
-                             ("_meta", ["max_hamming", "num_blocks",
-                                        "num_buckets"])):
-            assert (_table_rows(spark, f"r13hp_a{suffix}", cols)
-                    == _table_rows(spark, f"r13hp_b{suffix}", cols)), suffix
-
-        MM.remove_from_phash_store(rm_imgs, "r13hp_a")
-        MM.remove_from_phash_store(rm_hp, "r13hp_b", hashed=rm_hp)
-        for suffix, cols in (("_removed_ids", ["id", "ph"]),
-                             ("_tombstones", ["ph"])):
-            assert (_table_rows(spark, f"r13hp_a{suffix}", cols)
-                    == _table_rows(spark, f"r13hp_b{suffix}", cols)), suffix
-
-        out_a = sorted(map(tuple,
-                           MM.incremental_phash_dedup(batch_imgs, "r13hp_a")
-                           .collect()))
-        out_b = sorted(map(tuple,
-                           MM.incremental_phash_dedup(batch_hp, "r13hp_b",
-                                                      hashed=batch_hp)
-                           .collect()))
-        assert out_a == out_b
-        # null-phash rows pass through (undecodable payloads exist)
-        assert any(r[1] is None and r[2] is False for r in out_a)
-        # and the takedown actually changed some verdicts vs a no-removal
-        # store would — the removed families stop flagging
-        assert any(r[2] for r in out_a) and not all(r[2] for r in out_a)
-    finally:
-        for s in ("r13hp_a", "r13hp_b"):
-            for t in ("_blocks", "_members", "_meta", "_tombstones",
-                      "_removed_ids"):
-                spark.sql(f"DROP TABLE IF EXISTS {s}{t}")
-
-
-# 4. The minhash store family's `profile=` path (one signature pass per
-#    lifecycle query / micro-batch) must be bit-identical to the
-#    from-text path — including when the profile is a SUPERSET of the
-#    rows being written/probed (the capped-bucket query hands one
-#    whole-corpus profile to two build slices plus the batch).
-
-def _mh_docs(spark, n=30):
-    words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta",
-             "eta", "theta", "iota", "kappa", "lam", "mu"]
-    rows = []
-    for d in range(n):
-        # odd (batch) docs with d % 4 == 1 are near-dups of even doc
-        # d-1 (build slice %4==0): same text, one-word tail change.
-        # Every base text carries a unique token so no two source docs
-        # collide into an over-cap bucket.
-        src = d - 1 if (d % 4 == 1) else d
-        base = (" ".join(words[(src * 7 + j * 3) % 12]
-                         for j in range(16)) + f" u{src}")
-        if d % 4 == 1:
-            base = base + " omega"
-        rows.append((d, base))
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_minhash_store_profile_equals_from_text(spark):
-    from pipelinedp_spark.operators import dedup
-
-    docs = _mh_docs(spark)
-    prof = dedup.minhash_profile(docs, k=4).localCheckpoint()
-    build1 = docs.filter(F.col("doc_id") % 4 == 0)
-    build2 = docs.filter(F.col("doc_id") % 4 == 2)
-    batch = docs.filter(F.col("doc_id") % 2 == 1)
-    try:
-        dedup.build_minhash_store(build1, "r13mp_a", k=4,
-                                  max_bucket_size=2, num_buckets=2)
-        dedup.build_minhash_store(build2, "r13mp_a", k=4,
-                                  max_bucket_size=2, mode="append")
-        dedup.build_minhash_store(build1, "r13mp_b", k=4,
-                                  max_bucket_size=2, num_buckets=2,
-                                  profile=prof)
-        dedup.build_minhash_store(build2, "r13mp_b", k=4,
-                                  max_bucket_size=2, mode="append",
-                                  profile=prof)
-        for suffix, cols in (("_bands", ["id", "bh"]),
-                             ("_shingles", ["id", "shingles"]),
-                             ("_meta", ["k", "num_hashes",
-                                        "rows_per_band",
-                                        "max_bucket_size"])):
-            assert (_table_rows(spark, f"r13mp_a{suffix}", cols)
-                    == _table_rows(spark, f"r13mp_b{suffix}", cols)), suffix
-
-        out_a = sorted(map(tuple,
-                           dedup.incremental_near_dup(
-                               batch, "r13mp_a",
-                               jaccard_threshold=0.6).collect()))
-        out_b = sorted(map(tuple,
-                           dedup.incremental_near_dup(
-                               batch, "r13mp_b", jaccard_threshold=0.6,
-                               profile=prof).collect()))
-        assert out_a == out_b
-        # the store must actually flag something AND pass something
-        # through, or the equality above is vacuous
-        assert 0 < len(out_a) < batch.count()
-    finally:
-        for s in ("r13mp_a", "r13mp_b"):
-            for t in ("_bands", "_shingles", "_meta", "_tombstones",
-                      "_ingest_log"):
-                spark.sql(f"DROP TABLE IF EXISTS {s}{t}")

@@ -389,11 +389,26 @@ def test_streaming_near_dup_dedup_end_to_end(spark, tmp_path):
     assert kept == [1, 3]
 
 
-def test_near_dup_dedup_rejects_bad_hamming_radius(spark):
+@pytest.mark.parametrize("op", ["simhash_pairs", "near_dup_dedup_batch",
+                                "phash_dedup", "build_phash_store"])
+def test_near_dup_dedup_rejects_bad_hamming_radius(spark, op):
+    """Every Hamming-block path refuses max_hamming >= num_blocks, before
+    it writes anything: a pair whose differing bits fall one per block
+    shares no block, so it would never become a candidate."""
+    from pipelinedp_spark.operators import dedup
     from pipelinedp_spark.streaming.dp_streaming import near_dup_dedup_batch
-    b = spark.createDataFrame([(1, "some text")], "doc_id long, text string")
+    docs = spark.sql("SELECT 1L AS doc_id, 'some text' AS text")
+    imgs = spark.sql("SELECT 1L AS doc_id, X'78' AS image")
+    call = {"simhash_pairs": lambda **kw: dedup.simhash_pairs(docs, **kw),
+            "near_dup_dedup_batch":
+                lambda **kw: near_dup_dedup_batch(docs, None, **kw),
+            "phash_dedup": lambda **kw: MM.phash_dedup(imgs, **kw),
+            "build_phash_store":
+                lambda **kw: MM.build_phash_store(imgs, "bad_radius", **kw),
+            }[op]
     with pytest.raises(ValueError, match="pigeonhole"):
-        near_dup_dedup_batch(b, None, num_blocks=4, max_hamming=4)
+        call(num_blocks=4, max_hamming=4)
+    assert not spark.catalog.tableExists("bad_radius_meta")
 
 
 def _write_docs_stream(spark, path, rows):

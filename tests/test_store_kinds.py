@@ -219,3 +219,48 @@ def test_phash_compaction_gates_the_removed_ids_broadcast(spark,
         lambda ln: re.search(r"\(id#\d+L? = id#\d+L?\)", ln))
     assert hinted == {"0": False, None: True}
     assert tables["0"] == tables[None] and tables["0"]["_members"]
+
+
+def _jobs(spark, fn):
+    """(Spark jobs ``fn`` runs under its own job group, its result)."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+# Spark jobs of one applied `store.ingest_batch_once` trigger per kind,
+# as measured on `local[4]` with 8 shuffle partitions
+INGEST_JOB_CEILING = {"exact": 6, "minhash": 34, "span": 5,
+                      "phash": 8, "bm25": 15, "ann": 2}
+
+
+@pytest.mark.parametrize("kind", sorted(store.KINDS))
+def test_ingest_trigger_job_ceiling(spark, kind):
+    """One applied ingest trigger (into a store built from the even
+    rows, ingesting the odd rows) runs at most the kind's ceiling of
+    Spark jobs: the guard against a store path growing extra passes."""
+    rows, build, _ = CASES[kind]()
+    rec = store.KINDS[kind]
+    name = f"skj_{kind}"
+    names = [name + sfx for sfx in (*rec.tables, "_meta", "_tombstones",
+                                    "_removed_ids", "_ingest_log",
+                                    "_centroids", "_codebooks")]
+    for t in names:
+        store.drop_store_table(spark, t)
+    data = rows(spark)
+    key = F.col(data.columns[0])
+    try:
+        build(data.filter(key % 2 == 0), name, "overwrite")
+        n, applied = _jobs(spark, lambda: store.ingest_batch_once(
+            kind, data.filter(key % 2 == 1), name, 0))
+        assert applied
+        assert n <= INGEST_JOB_CEILING[kind], (kind, n)
+    finally:
+        for t in names:
+            store.drop_store_table(spark, t)

@@ -1449,3 +1449,76 @@ def test_fix_mojibake_and_count(spark):
     assert out[0]["n"] == 3
     assert out[1]["fixed"] == "perfectly clean ascii text"
     assert out[1]["n"] == 0
+
+
+# The minhash store family's `profile=` path (one signature pass per
+# lifecycle query / micro-batch) must be bit-identical to the from-text
+# path — including when the profile is a SUPERSET of the rows being
+# written/probed (the capped-bucket query hands one whole-corpus
+# profile to two build slices plus the batch).
+
+def _table_rows(spark, name, cols):
+    return sorted(map(tuple, spark.table(name).select(*cols).collect()))
+
+
+
+def _mh_docs(spark, n=30):
+    words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta",
+             "eta", "theta", "iota", "kappa", "lam", "mu"]
+    rows = []
+    for d in range(n):
+        # odd (batch) docs with d % 4 == 1 are near-dups of even doc
+        # d-1 (build slice %4==0): same text, one-word tail change.
+        # Every base text carries a unique token so no two source docs
+        # collide into an over-cap bucket.
+        src = d - 1 if (d % 4 == 1) else d
+        base = (" ".join(words[(src * 7 + j * 3) % 12]
+                         for j in range(16)) + f" u{src}")
+        if d % 4 == 1:
+            base = base + " omega"
+        rows.append((d, base))
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_minhash_store_profile_equals_from_text(spark):
+    docs = _mh_docs(spark)
+    prof = dedup.minhash_profile(docs, k=4).localCheckpoint()
+    build1 = docs.filter(F.col("doc_id") % 4 == 0)
+    build2 = docs.filter(F.col("doc_id") % 4 == 2)
+    batch = docs.filter(F.col("doc_id") % 2 == 1)
+    try:
+        dedup.build_minhash_store(build1, "r13mp_a", k=4,
+                                  max_bucket_size=2, num_buckets=2)
+        dedup.build_minhash_store(build2, "r13mp_a", k=4,
+                                  max_bucket_size=2, mode="append")
+        dedup.build_minhash_store(build1, "r13mp_b", k=4,
+                                  max_bucket_size=2, num_buckets=2,
+                                  profile=prof)
+        dedup.build_minhash_store(build2, "r13mp_b", k=4,
+                                  max_bucket_size=2, mode="append",
+                                  profile=prof)
+        for suffix, cols in (("_bands", ["id", "bh"]),
+                             ("_shingles", ["id", "shingles"]),
+                             ("_meta", ["k", "num_hashes",
+                                        "rows_per_band",
+                                        "max_bucket_size"])):
+            assert (_table_rows(spark, f"r13mp_a{suffix}", cols)
+                    == _table_rows(spark, f"r13mp_b{suffix}", cols)), suffix
+
+        out_a = sorted(map(tuple,
+                           dedup.incremental_near_dup(
+                               batch, "r13mp_a",
+                               jaccard_threshold=0.6).collect()))
+        out_b = sorted(map(tuple,
+                           dedup.incremental_near_dup(
+                               batch, "r13mp_b", jaccard_threshold=0.6,
+                               profile=prof).collect()))
+        assert out_a == out_b
+        # the store must actually flag something AND pass something
+        # through, or the equality above is vacuous
+        assert 0 < len(out_a) < batch.count()
+    finally:
+        for s in ("r13mp_a", "r13mp_b"):
+            for t in ("_bands", "_shingles", "_meta", "_tombstones",
+                      "_ingest_log"):
+                spark.sql(f"DROP TABLE IF EXISTS {s}{t}")
