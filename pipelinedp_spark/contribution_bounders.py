@@ -3,9 +3,10 @@
 The reference bounds sensitivity by materializing per-key lists and random-
 sampling them (reference: pipeline_dp/contribution_bounders.py:63-247). Here
 every cap is a bounded window sample,
-``row_number() OVER (PARTITION BY keys ORDER BY rand()) <= cap``, which
-never materializes per-key state, keeps uniform-without-replacement
-semantics, and lets AQE handle skew. Three entry points serve every DP path:
+``row_number() OVER (PARTITION BY keys ORDER BY sample_key) <= cap``,
+which never materializes per-key state, keeps uniform-without-replacement
+semantics, and lets AQE handle skew. The sample key is a salted hash of a
+per-row id (``_sample_order``). Three entry points serve every DP path:
 
 - ``bound_cross_and_per_partition``: per-(pid, pk) partial aggregates under
   an optional Linf row cap and an optional L0 key cap, merged by the
@@ -33,6 +34,7 @@ deterministic ``order_cols``.
 
 from __future__ import annotations
 
+import secrets
 from typing import List, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame, Window
@@ -45,9 +47,14 @@ OVERSIZE_SPLIT_MIN_CAP = 1000
 
 
 def _sample_order(order_cols: Optional[Sequence[Column]]) -> List[Column]:
-    # Deterministic ordering is a test hook; production uses rand() for
-    # uniform-without-replacement sampling per key.
-    return list(order_cols) if order_cols else [F.rand()]
+    # Deterministic ordering is a test hook. Production orders by a salted
+    # hash of a per-row id: distinct per row, so the sample is uniform
+    # without replacement, and nondeterministic to Catalyst. The salt, fresh
+    # per call, is a string literal that generated code reads from its
+    # references array, so a repeated release reuses its compiled classes
+    # (``rand()`` writes its seed into the Java source; see noise.py).
+    return list(order_cols) if order_cols else [F.xxhash64(
+        F.monotonically_increasing_id(), F.lit(secrets.token_hex(16)))]
 
 
 def _limit_per_key(df: DataFrame, keys: Sequence[str], cap: int,

@@ -8,7 +8,7 @@ pipeline_dp/dp_engine.py:115-195, re-expressed Spark-first):
   window Linf sample -> groupBy(pid, pk) partial aggregates
   window L0 sample over pid
   groupBy(pk) final merge                       [map-side partial agg]
-  [union empty public partitions]
+    [public keys unioned in as rows without a privacy id]
   [DP partition selection filter]
   noise projection + metric formulas            [budget-dependent, lazy]
 
@@ -80,6 +80,8 @@ _HIST = "__hist__"
 _PCT = "__pct__"
 _TOT = "__tot__"
 _VECTOR = "__vector__"
+# True on the rows that bring the public keys into the merge.
+_PUBLIC = "__public__"
 _VECTOR_METRICS = {Metric.VECTOR_SUM, Metric.VECTOR_MEAN}
 
 
@@ -266,15 +268,37 @@ _PARTIAL_METRICS = {Metric.COUNT, Metric.PRIVACY_ID_COUNT, Metric.SUM,
                     Metric.MEAN, Metric.VARIANCE}
 
 
+def _merge_by_key(rows: DataFrame, pk_cols: Sequence[str],
+                  aggs: List[Column], public: Optional[DataFrame],
+                  report: List[str]) -> DataFrame:
+    """``rows.groupBy(pk_cols).agg(*aggs)``, one exchange. ``public`` keys
+    (duplicates allowed) are unioned in as rows with no privacy id and no
+    partial (``_PUBLIC`` true), so they ride the same exchange: the output
+    holds every public key and no other, and an aggregate no partial fed,
+    as on a key without rows, reads 0 (reference:
+    pipeline_dp/dp_engine.py:315-330)."""
+    if public is None:
+        return rows.groupBy(*pk_cols).agg(*aggs)
+    report.append("Added empty public partitions")
+    keys = public.select(*pk_cols, F.lit(True).alias(_PUBLIC))
+    out = (rows.unionByName(keys, allowMissingColumns=True).groupBy(*pk_cols)
+           .agg(*aggs, F.max(_PUBLIC).alias(_PUBLIC)))
+    filled = [c for c in out.columns if c not in (*pk_cols, _PUBLIC)]
+    return out.filter(F.col(_PUBLIC)).drop(_PUBLIC).fillna(0, subset=filled)
+
+
 def _merge_partials(partials: DataFrame, pk_cols: Sequence[str],
-                    report: List[str], merged=_MERGED) -> DataFrame:
-    """Per-key merge: the privacy-id count plus the sum of each partial
+                    report: List[str], merged=_MERGED,
+                    public: Optional[DataFrame] = None) -> DataFrame:
+    """Per-key merge (``_merge_by_key``, with the ``public`` keys): the
+    privacy-id count, of partial rows only, plus the sum of each partial
     column present (``merged`` maps partial -> merged column)."""
     report.append("Aggregated partials per partition key")
-    return partials.groupBy(*pk_cols).agg(
-        F.count(F.lit(1)).alias(_PID_COUNT),
+    ones = F.lit(1) if public is None else F.when(F.col(_PUBLIC).isNull(), 1)
+    return _merge_by_key(partials, pk_cols, [
+        F.count(ones).alias(_PID_COUNT),
         *[F.sum(p).alias(m) for p, m in merged.items()
-          if p in partials.columns])
+          if p in partials.columns]], public, report)
 
 
 def _bounding_note(params: AggregateParams) -> str:
@@ -308,18 +332,23 @@ def _clip_vector(v: Column, params: AggregateParams) -> Column:
 
 
 def _merge_vector_partials(partials: DataFrame, pk_cols: Sequence[str],
-                           report: List[str]) -> DataFrame:
+                           report: List[str],
+                           public: Optional[DataFrame] = None) -> DataFrame:
     """Per-key merge of per-(privacy id, key, position) vector partials:
     ``_VECTOR``, the element sums in position order, with the key's
     ``_PID_COUNT`` and (from ``PARTIAL_COUNT``) ``_COUNT``, which every
-    position of a privacy id's vector repeats."""
+    position of a privacy id's vector repeats. The per-key groupBy takes
+    the ``public`` keys (``_merge_by_key``); one without rows holds an
+    empty ``_VECTOR``."""
     per_pos = _merge_partials(partials, [*pk_cols, PARTIAL_POS], report)
     report.append("Assembled one summed vector per partition key")
-    return per_pos.groupBy(*pk_cols).agg(
-        F.transform(F.array_sort(F.collect_list(F.struct(PARTIAL_POS, _SUM))),
-                    lambda e: e[_SUM]).alias(_VECTOR),
+    # A public row has no position, so it adds no element.
+    return _merge_by_key(per_pos, pk_cols, [
+        F.transform(F.array_sort(F.collect_list(F.when(
+            F.col(PARTIAL_POS).isNotNull(), F.struct(PARTIAL_POS, _SUM)))),
+            lambda e: e[_SUM]).alias(_VECTOR),
         *[F.max(c).alias(c) for c in (_PID_COUNT, _COUNT)
-          if c in per_pos.columns])
+          if c in per_pos.columns]], public, report)
 
 
 # PERCENTILE (reference semantics: pipeline_dp/combiners.py:629-719, a
@@ -639,23 +668,21 @@ class DPEngine:
         # --- stage 3: budget requests. ---
         specs = self.request_budgets(params, pub_df is not None, report)
 
+        # --- stages 4-5: bounding, per-(pid,pk) partials, per-key merge
+        # (public keys unioned in); partition handling and noise in the
+        # release. ---
+        pct_hist = None
         if vector:
             merged = _merge_vector_partials(
                 self._vector_partials(data, params, pk_cols, report),
-                pk_cols, report)
-            return DPResult(
-                lambda: self._release(merged, params, specs, pk_cols, pub_df,
-                                      report),
-                self._accountant)
-
-        # --- stage 4: contribution bounding + per-(pid,pk) partials. ---
-        per_pid_pk = self._bound_contributions(data, params, pk_cols,
-                                               metric_kinds, report)
-
+                pk_cols, report, pub_df)
+        else:
+            partials = self._bound_contributions(data, params, pk_cols,
+                                                 metric_kinds, report)
+            merged = _merge_partials(partials, pk_cols, report, public=pub_df)
         # Percentiles bin their own bounded rows into a per-key histogram
         # that joins the merged partials in the release (an independent
         # Linf/L0 sample; both enforce the declared bounds).
-        pct_hist = None
         if params.percentiles_to_compute:
             rows = bounders.bound_rows(data, _PID, pk_cols,
                                        *_bounding_caps(params),
@@ -663,12 +690,9 @@ class DPEngine:
             pct_hist = _sparse_histogram(rows, F.col(_VALUE), params, pk_cols)
             report.append(f"PERCENTILE: {_percentile_domain(params)[2]}-bin "
                           f"histogram of clipped values")
-
-        # --- stage 5: merge, partition handling, noise. ---
-        merged = _merge_partials(per_pid_pk, pk_cols, report)
         return DPResult(
-            lambda: self._release(merged, params, specs, pk_cols, pub_df,
-                                  report, pct_hist),
+            lambda: self._release(merged, params, specs, pk_cols, report,
+                                  pct_hist),
             self._accountant)
 
     # ------------------------------------------------------------------
@@ -721,25 +745,19 @@ class DPEngine:
         total = ([F.col(_PCT)[_TOT].alias(PERCENTILE_TOTAL)] if percentile
                  else [])
         return DPResult(
-            lambda: self._release(merged, params, specs, pk_cols, None,
-                                  report, extra_cols=total),
+            lambda: self._release(merged, params, specs, pk_cols, report,
+                                  extra_cols=total),
             self._accountant)
 
     def _release(self, merged: DataFrame, params, specs: dict,
-                 pk_cols: Sequence[str], pub_df: Optional[DataFrame],
-                 report: List[str], pct_hist: Optional[DataFrame] = None,
+                 pk_cols: Sequence[str], report: List[str],
+                 pct_hist: Optional[DataFrame] = None,
                  extra_cols: Sequence[Column] = ()) -> DataFrame:
-        """Partition handling, then the noisy metrics (``extra_cols``
-        after them) of merged partials."""
+        """Private partition selection when funded, then the noisy metrics
+        (``extra_cols`` after them) of merged partials. Public keys are
+        already in ``merged``: the merge unioned them in."""
         out = merged
-        if pub_df is not None:
-            # Every public key appears; missing ones get empty accumulators
-            # (reference: pipeline_dp/dp_engine.py:315-330); a missing
-            # vector, which ``fillna`` cannot fill, in _compute_metrics.
-            out = pub_df.join(out, on=list(pk_cols), how="left").fillna(
-                {c: 0 for c in out.columns if c not in (*pk_cols, _VECTOR)})
-            report.append("Added empty public partitions")
-        elif "partition_selection" in specs:
+        if "partition_selection" in specs:
             out = self._select_private_partitions(
                 out, specs["partition_selection"], params, report)
         if pct_hist is not None:
@@ -1031,8 +1049,9 @@ class DPEngine:
 
             # A key without rows releases noise on a zero vector.
             metric_cols[params.metrics[0].output_name] = F.transform(
-                F.coalesce(F.col(_VECTOR), F.array_repeat(
-                    F.lit(0.0), int(params.vector_size))), element)
+                F.when(F.col(_PID_COUNT) > 0, F.col(_VECTOR)).otherwise(
+                    F.array_repeat(F.lit(0.0), int(params.vector_size))),
+                element)
 
         ordered = [F.col(c) for c in pk_cols]
         for m in params.metrics:
@@ -1141,7 +1160,7 @@ class DPEngine:
         merged = _merge_partials(per_pid_pk, pk_cols, report, {
             PARTIAL_COUNT: _COUNT,
             **{f"__pp_sum{i}__": f"__sum{i}__"
-               for i in range(len(sum_specs))}})
+               for i in range(len(sum_specs))}}, pub_df)
         # Noises COUNT / PRIVACY_ID_COUNT when their spec was requested.
         agg_params = AggregateParams(
             metrics=[Metrics.COUNT, Metrics.PRIVACY_ID_COUNT],
@@ -1165,8 +1184,8 @@ class DPEngine:
                 sums.append(self._noise.add_noise(F.col(f"__sum{i}__"), kind,
                                                   scale).alias(name))
                 notes.append(f"SUM[{name}]: {kind} noise, scale={scale:.4g}")
-            out = self._release(merged, agg_params, specs, pk_cols, pub_df,
-                                report, extra_cols=sums)
+            out = self._release(merged, agg_params, specs, pk_cols, report,
+                                extra_cols=sums)
             report.extend(notes)
             return out
 
@@ -1196,8 +1215,7 @@ class DPEngine:
                 df, params, extractors, report)
         pk_cols = extractors.partition_key_columns
         bounded = self._sampled_pairs(df, params, extractors, report)
-        counts = bounded.groupBy(*pk_cols).agg(
-            F.count(F.lit(1)).alias(_PID_COUNT))
+        counts = _merge_partials(bounded, pk_cols, report, {})
         with self._accountant.scope(params.budget_weight):
             spec = self._accountant.request_budget(
                 params.partition_selection_strategy.mechanism_type)
@@ -1207,11 +1225,10 @@ class DPEngine:
             max_contributions_per_partition=1,
             partition_selection_strategy=params.partition_selection_strategy,
             pre_threshold=params.pre_threshold)
-        engine = self
 
         def finalize() -> DataFrame:
-            kept = engine._select_private_partitions(counts, spec, agg_params,
-                                                     report)
+            kept = self._select_private_partitions(counts, spec, agg_params,
+                                                   report)
             return kept.select(*pk_cols)
 
         return DPResult(finalize, self._accountant)
@@ -1338,41 +1355,35 @@ class DPEngine:
     def _as_partitions_df(spark: SparkSession, pk_cols: Sequence[str],
                           partitions: Union[DataFrame, Sequence],
                           like: Optional[DataFrame] = None) -> DataFrame:
-        """``like``: a DataFrame carrying the pk columns with the DATA's
+        """The public keys as a frame of ``pk_cols``, duplicates kept: the
+        semi-join that drops non-public rows and the merge that unions the
+        keys in both ignore them, so no distinct() shuffle runs.
+
+        ``like``: a DataFrame carrying the pk columns with the DATA's
         types; the public-partition frame is cast to them so literal
         inference (SQL ints -> INT) can't narrow the output key columns
         away from the source schema."""
         def align(pub: DataFrame) -> DataFrame:
             if like is None:
                 return pub
-            types = {f.name: f.dataType for f in like.schema.fields}
-            return pub.select(*[
-                F.col(c).cast(types[c]).alias(c) if c in types else F.col(c)
-                for c in pub.columns])
+            types = like.select(*pk_cols).schema
+            return pub.select(*[F.col(c).cast(t.dataType).alias(c)
+                                for c, t in zip(pk_cols, types)])
 
         if isinstance(partitions, DataFrame):
-            return align(partitions.select(*pk_cols).distinct())
+            return align(partitions.select(*pk_cols))
         # Local list -> SQL VALUES LocalRelation: stays driver-side in
         # Catalyst (no parallelize job, no Python-serialization stage).
-        rows = list(
-            dict.fromkeys(p if isinstance(p, tuple) else (p,)
-                          for p in partitions))
+        rows = [p if isinstance(p, tuple) else (p,) for p in partitions]
 
         def lit(v) -> str:
             if v is None:
                 return "NULL"
-            if isinstance(v, bool):
-                return "true" if v else "false"
+            if isinstance(v, int):  # bool too: True and False parse as SQL
+                return repr(v)
             if isinstance(v, float):
-                # repr() of inf/nan is not a SQL literal.
-                if math.isnan(v):
-                    return "CAST('NaN' AS DOUBLE)"
-                if math.isinf(v):
-                    sign = "-" if v < 0 else ""
-                    return f"CAST('{sign}Infinity' AS DOUBLE)"
-                return repr(v)
-            if isinstance(v, int):
-                return repr(v)
+                # repr() of inf/nan is no SQL literal, but casts from one.
+                return f"CAST('{v!r}' AS DOUBLE)"
             if isinstance(v, str):
                 s = v.replace("\\", "\\\\").replace("'", "\\'")
                 return f"'{s}'"

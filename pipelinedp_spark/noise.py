@@ -13,6 +13,15 @@ into the plan and the event log, so anyone who reads either can regenerate
 the noise and subtract it. No seed appears here, and a retried task draws
 fresh noise.
 
+Contribution bounding's sample order is not noise, and it is not a
+``rand`` seed either (``contribution_bounders._sample_order``): it is
+``xxhash64(monotonically_increasing_id(), salt)`` with a fresh 128-bit
+``secrets`` salt per sample. ``rand`` writes its seed into the generated
+Java source, so every release compiled new classes; the salt is a string
+literal, which generated code reads from its references array, so a
+repeated release reuses the cached classes. The salt is as visible in the
+plan and the event log as the ``rand`` seed was.
+
 Laplace takes one uniform per draw, Gaussian two (Box-Muller), truncated
 geometric selection one per key. A uniform costs a reflective call, a
 ``SecureRandom`` step and a string round trip; ``NativePRNG`` serializes

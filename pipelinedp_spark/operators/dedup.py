@@ -1092,10 +1092,12 @@ def cross_corpus_near_dup(new_docs: DataFrame,
 
     Returns the surviving new rows (original columns).
     """
+    # Each profile is checkpointed, so its signature UDF runs once per
+    # input although the candidates, the cap count and the verify read it.
     nprof = minhash_profile(new_docs, text_col, id_col, k, num_hashes,
-                            rows_per_band)
+                            rows_per_band).localCheckpoint()
     rprof = minhash_profile(reference, text_col, id_col, k, num_hashes,
-                            rows_per_band)
+                            rows_per_band).localCheckpoint()
     rb = rprof.select(F.col(id_col).alias("id_b"),
                       F.explode("bhs").alias("bh"))
     sizes = (rb.groupBy("bh")
@@ -1434,9 +1436,11 @@ def build_minhash_store(reference: DataFrame,
     if m is not None:
         num_buckets = int(m["num_buckets"])   # appends stay aligned
     # a precomputed `minhash_profile` may cover a superset of the
-    # reference rows: a semi-join restricts it to the rows written
+    # reference rows: a semi-join restricts it to the rows written. A
+    # derived one is checkpointed: the cap count, the capped join and the
+    # shingles write all read it, and the signature UDF runs once.
     prof = (minhash_profile(reference, text_col, id_col, k, num_hashes,
-                            rows_per_band) if profile is None
+                            rows_per_band).localCheckpoint() if profile is None
             else profile.join(reference.select(F.col(id_col)), id_col,
                               "left_semi"))
     bands = prof.select(F.col(id_col).alias("id"),

@@ -8,6 +8,8 @@ over, so the same ``order_cols`` resolve on raw rows, per-(pid, pk)
 partials and key pairs alike.
 """
 
+import math
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -190,3 +192,27 @@ def test_row_paths_skip_l0_when_cross_partition_bounding_off(spark, path):
     got = {r["pk"]: r[col] for r in res.dataframe().collect()}
     assert sorted(got) == parts
     assert all(check(v) for v in got.values()), got
+
+
+def test_production_sample_is_uniform_and_fresh_per_call(spark):
+    """Without ``order_cols`` the window orders by a salted per-row hash:
+    20k groups of 5 labelled rows at Linf 2 keep each label 2/5 of the
+    time (8000 +- 4 sigma); two calls draw under two salts, so about 2/5
+    of the rows one keeps the other keeps too (one salt would keep them
+    all); and the key is nondeterministic to Catalyst, as ``rand()`` is."""
+    groups, n, linf = 20000, 5, 2
+    rows = spark.range(groups * n).select(
+        (F.col("id") % groups).alias("pid"), F.lit("k").alias("pk"),
+        F.floor(F.col("id") / groups).alias("label"))
+    first = B.bound_rows(rows, "pid", ["pk"], None, linf)
+    kept = {r["label"]: r["count"]
+            for r in first.groupBy("label").count().collect()}
+    p = linf / n
+    sigma = math.sqrt(groups * p * (1 - p))
+    assert sorted(kept) == list(range(n))
+    assert all(abs(c - groups * p) <= 4 * sigma for c in kept.values()), kept
+    second = B.bound_rows(rows, "pid", ["pk"], None, linf)
+    both = first.join(second, ["pid", "label"]).count()
+    assert abs(both / (groups * linf) - p) < 0.02, both
+    keyed = spark.range(1).select(B._sample_order(None)[0])
+    assert not keyed._jdf.queryExecution().analyzed().deterministic()

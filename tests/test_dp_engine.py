@@ -39,6 +39,103 @@ class TestAggregatePublicPartitions:
         assert got["c"]["count"] == 0.0
         assert got["c"]["sum_v"] == 0.0
 
+    def test_key_frame_with_duplicate_null_and_empty_keys(self, spark):
+        """Public keys as a DataFrame holding a duplicate, a null key and
+        a key without rows: each is released once, the empty ones with
+        zero accumulators and the clip midpoint as mean; a data key
+        outside the list, and a data row with a null key, are dropped."""
+        rows = [(1, "a", 1.0), (1, "a", 2.0), (2, "a", 5.0), (1, "b", 4.0),
+                (3, "z", 9.0), (4, None, 3.0)]
+        df = spark.createDataFrame(rows, "pid int, pk string, v double")
+        keys = spark.createDataFrame([("a",), ("a",), (None,), ("c",),
+                                      ("b",)], "pk string")
+        query = (pds.QueryBuilder(df, "pid")
+                 .groupby("pk", max_groups_contributed=2,
+                          max_contributions_per_group=5, public_keys=keys)
+                 .count()
+                 .sum("v", min_value=0.0, max_value=10.0)
+                 .mean("v", min_value=0.0, max_value=10.0)
+                 .privacy_id_count()
+                 .build_query())
+        got = sorted(
+            (r["pk"] or "", r["count"], r["sum_v"], r["mean_v"],
+             r["privacy_id_count"])
+            for r in query.run_query(pds.Budget(1.0, 1e-6),
+                                     noise_mode="zero").collect())
+        assert got == [("", 0.0, 0.0, 5.0, 0.0),
+                       ("a", 3.0, 8.0, pytest.approx(8.0 / 3), 2.0),
+                       ("b", 1.0, 4.0, 4.0, 1.0),
+                       ("c", 0.0, 0.0, 5.0, 0.0)]
+
+    def test_prefiltered_public_keys_release_no_stray_key(self, spark):
+        """``public_partitions_already_filtered`` skips the drop of
+        non-public rows, but a data key outside the public list is still
+        not released."""
+        df = _make_df(spark, [(1, "a", 1.0), (2, "a", 3.0), (3, "z", 9.0)])
+        acct = pds.NaiveBudgetAccountant(1.0, 1e-6)
+        res = pds.DPEngine(acct, noise_mode="zero").aggregate(
+            df, pds.AggregateParams(
+                metrics=[pds.Metrics.COUNT, pds.Metrics.SUM],
+                max_partitions_contributed=2,
+                max_contributions_per_partition=2, min_value=0.0,
+                max_value=10.0, public_partitions_already_filtered=True),
+            pds.DataFrameExtractors("pid", "pk", "v"),
+            public_partitions=["a", "c"])
+        acct.compute_budgets()
+        got = sorted(tuple(r) for r in res.dataframe().collect())
+        assert got == [("a", 2.0, 4.0), ("c", 0.0, 0.0)]
+
+    def test_multi_sum_public_key_frame(self, spark):
+        """One-pass multi-sum over public keys from a DataFrame: a key
+        without rows gets zero sums and counts; a data key outside the
+        list is dropped."""
+        rows = [(1, "a", 1.0, 20.0), (1, "a", 2.0, 1.0), (2, "a", 5.0, 3.0),
+                (3, "z", 9.0, 9.0)]
+        df = spark.createDataFrame(rows, "pid int, pk string, x double, "
+                                         "y double")
+        keys = spark.createDataFrame([("a",), ("c",), ("c",)], "pk string")
+        acct = pds.NaiveBudgetAccountant(1.0, 1e-6)
+        res = pds.DPEngine(acct, noise_mode="zero").aggregate_multi_sum(
+            df, pds.MultiSumParams(max_partitions_contributed=1,
+                                   max_contributions_per_partition=5,
+                                   include_count=True,
+                                   include_privacy_id_count=True),
+            pds.MultiValueDataFrameExtractors("pid", "pk",
+                                              value_columns=["x", "y"]),
+            [pds.MultiSumSpec(min_value=0.0, max_value=4.0),
+             pds.MultiSumSpec(min_sum_per_partition=0.0,
+                              max_sum_per_partition=10.0)],
+            public_partitions=keys)
+        acct.compute_budgets()
+        got = {r["pk"]: r.asDict() for r in res.dataframe().collect()}
+        assert set(got) == {"a", "c"}
+        assert (got["a"]["sum_x"], got["a"]["sum_y"]) == (7.0, 13.0)
+        assert (got["a"]["count"], got["a"]["privacy_id_count"]) == (3.0, 2.0)
+        assert [got["c"][k] for k in ("sum_x", "sum_y", "count",
+                                      "privacy_id_count")] == [0.0] * 4
+
+    @pytest.mark.parametrize("metric", ["VECTOR_SUM", "VECTOR_MEAN"])
+    def test_public_vector_release(self, spark, metric):
+        """Public VECTOR_SUM and VECTOR_MEAN: a key without rows releases
+        a zero vector; a data key outside the list is dropped."""
+        df = spark.createDataFrame(
+            [(1, "a", [1.0, 0.0]), (2, "a", [0.0, 3.0]), (3, "z", [5.0, 5.0])],
+            "pid int, pk string, v array<double>")
+        keys = spark.createDataFrame([("a",), ("c",)], "pk string")
+        acct = pds.NaiveBudgetAccountant(1.0, 1e-6)
+        res = pds.DPEngine(acct, noise_mode="zero").aggregate(
+            df, pds.AggregateParams(
+                metrics=[getattr(pds.Metrics, metric)],
+                max_partitions_contributed=1,
+                max_contributions_per_partition=1, vector_max_norm=10.0,
+                vector_norm_kind=pds.NormKind.L2, vector_size=2),
+            pds.DataFrameExtractors("pid", "pk", "v"),
+            public_partitions=keys)
+        acct.compute_budgets()
+        got = {r[0]: r[1] for r in res.dataframe().collect()}
+        assert got == {"a": [1.0, 3.0] if metric == "VECTOR_SUM"
+                       else [0.5, 1.5], "c": [0.0, 0.0]}
+
     def test_count_caps_linf_deterministically(self, spark):
         # Linf cap = 2: user 1's 5 rows in "a" count as 2.
         rows = [(1, "a", 1.0)] * 5 + [(2, "a", 1.0)]

@@ -155,6 +155,43 @@ def test_minhash_signature_computed_once(spark):
     assert "InMemoryTableScan" not in plan  # nothing persisted
 
 
+def test_derived_minhash_profiles_signed_once(spark, monkeypatch):
+    """`cross_corpus_near_dup` and `build_minhash_store` (without
+    ``profile=``) checkpoint the profiles they derive: the signature UDF
+    runs once per input, in the checkpoint, and no consumer (candidates,
+    bucket-cap count, capped join, verify, shingles write) plans it again."""
+    from pipelinedp_spark.operators import dedup
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    new = docs.filter(F.col("doc_id") % 2 == 1)
+    ref = docs.filter(F.col("doc_id") % 2 == 0)
+    out = dedup.cross_corpus_near_dup(new, ref, jaccard_threshold=0.5)
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("isFinalPlan=true") == 1
+    assert "ArrowEvalPython" not in plan, plan
+    assert "ExistingRDD" in plan
+    written = {}
+    write = dedup.store.write_bucketed
+
+    def capture(df, table, *args):
+        written[table] = P.explain_str(df)
+        return write(df, table, *args)
+
+    monkeypatch.setattr(dedup.store, "write_bucketed", capture)
+    tables = [f"pin15_mh_{t}" for t in ("bands", "shingles", "meta")]
+    for t in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    try:
+        dedup.build_minhash_store(ref, "pin15_mh", num_buckets=4)
+    finally:
+        for t in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+    assert sorted(written) == tables[:2]
+    for table, text in written.items():
+        assert "ArrowEvalPython" not in text, (table, text)
+        assert "ExistingRDD" in text, (table, text)
+
+
 def _thresholded_release(spark):
     """PRIVACY_ID_COUNT under post-aggregation thresholding, secure."""
     acct = pds.NaiveBudgetAccountant(20.0, 1e-4)
@@ -213,9 +250,9 @@ def test_noise_draws_are_nondeterministic(spark):
 
 
 def _secure_scalar_releases(spark):
-    """name -> a secure release: scalar noise, or a vector sum or mean
-    noised element by element (private and public keys; L2 and Linf
-    clips)."""
+    """name -> a builder of a secure release: scalar noise, or a vector sum
+    or mean noised element by element (private and public keys; L2 and
+    Linf clips)."""
     orders = _orders(spark)
     ex = pds.DataFrameExtractors("o_custkey", "o_orderpriority",
                                  "o_totalprice")
@@ -260,19 +297,20 @@ def _secure_scalar_releases(spark):
     N = pds.NormKind
     public = ["1-URGENT", "2-HIGH", "9-NONE"]
     return {
-        "vector_sum_l2": vector(M.VECTOR_SUM, N.L2),
-        "vector_sum_linf_public": vector(M.VECTOR_SUM, N.LINF, public),
-        "vector_mean_linf": vector(M.VECTOR_MEAN, N.LINF),
-        "vector_mean_l2_public": vector(M.VECTOR_MEAN, N.L2, public),
-        "deep": aggregate([M.COUNT, M.SUM]),
-        "wide": aggregate([M.COUNT, M.SUM, M.MEAN], public=public),
-        "laplace_selection": aggregate(
+        "vector_sum_l2": lambda: vector(M.VECTOR_SUM, N.L2),
+        "vector_sum_linf_public":
+            lambda: vector(M.VECTOR_SUM, N.LINF, public),
+        "vector_mean_linf": lambda: vector(M.VECTOR_MEAN, N.LINF),
+        "vector_mean_l2_public": lambda: vector(M.VECTOR_MEAN, N.L2, public),
+        "deep": lambda: aggregate([M.COUNT, M.SUM]),
+        "wide": lambda: aggregate([M.COUNT, M.SUM, M.MEAN], public=public),
+        "laplace_selection": lambda: aggregate(
             [M.COUNT], partition_selection_strategy=S.LAPLACE_THRESHOLDING),
-        "gaussian_selection": aggregate(
+        "gaussian_selection": lambda: aggregate(
             [M.COUNT],
             partition_selection_strategy=S.GAUSSIAN_THRESHOLDING),
-        "post_aggregation": _thresholded_release(spark),
-        "select_partitions": select(S.TRUNCATED_GEOMETRIC),
+        "post_aggregation": lambda: _thresholded_release(spark),
+        "select_partitions": lambda: select(S.TRUNCATED_GEOMETRIC),
     }
 
 
@@ -280,7 +318,8 @@ def test_secure_scalar_releases_start_no_python(spark):
     """Secure noise, partition selection and the vector norm clip are
     Catalyst expressions: no plan of a scalar or vector release holds a
     Python eval node, and every released value is finite."""
-    for name, df in _secure_scalar_releases(spark).items():
+    for name, build in _secure_scalar_releases(spark).items():
+        df = build()
         plan = P.explain_str(df, mode="simple")
         for node in ("ArrowEvalPython", "BatchEvalPython"):
             assert node not in plan, (name, plan)
@@ -291,6 +330,81 @@ def test_secure_scalar_releases_start_no_python(spark):
                 for x in v if isinstance(v, list) else [v]:
                     assert not isinstance(x, float) or math.isfinite(x), \
                         (name, r)
+
+
+def test_repeated_secure_release_compiles_no_code(spark):
+    """A release's per-release randomness (the bounders' sample salt, the
+    noise) travels as data, not as code: releasing a shape again generates
+    the same Java source for every whole-stage codegen stage, so Spark's
+    codegen cache (keyed by that source) serves it and no class compiles.
+    ``rand()``'s seed is written into the source, so a sample ordered by
+    it compiles its stages anew on every release. The source is compared
+    rather than the compile count: the count is JVM-wide, and once earlier
+    work fills the shared session's 100-entry cache, it evicts a release's
+    classes between two releases whatever their source. Stage ids are kept
+    out of the class names, and the stage sources are compared sorted: AQE
+    numbers and lists whole-stage codegen stages in the order it plans
+    query stages, which changes when independent stages finish in another
+    order. A runtime plan choice can still differ between releases, so a
+    shape passes when two releases in a row generate the same code; with
+    ``rand()`` none ever does."""
+    builders = dict(_secure_scalar_releases(spark))
+    builders["percentile_public"] = lambda: _secure_percentile(spark)
+
+    def generated(df):
+        df.collect()
+        seq = df._jdf.queryExecution().debug().codegenToSeq()
+        return sorted(seq.apply(i)._2() for i in range(seq.size()))
+
+    spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
+    try:
+        for name, build in builders.items():
+            codes = [generated(build()), generated(build())]
+            while codes[-1] != codes[-2] and len(codes) < 6:
+                codes.append(generated(build()))
+            assert codes[-1] and codes[-1] == codes[-2], (name, len(codes))
+    finally:
+        spark.conf.unset("spark.sql.codegen.useIdInClassName")
+
+
+def _secure_percentile(spark):
+    acct = pds.NaiveBudgetAccountant(5.0, 1e-4)
+    res = pds.DPEngine(acct, noise_mode="secure").aggregate(
+        _orders(spark), pds.AggregateParams(
+            metrics=[pds.Metrics.COUNT, pds.Metrics.PERCENTILE(50)],
+            max_partitions_contributed=3, max_contributions_per_partition=2,
+            min_value=0.0, max_value=1000.0),
+        pds.DataFrameExtractors("o_custkey", "o_orderpriority",
+                                "o_totalprice"),
+        public_partitions=["1-URGENT", "2-HIGH", "9-NONE"])
+    acct.compute_budgets()
+    return res.dataframe()
+
+
+def test_public_keys_fill_inside_the_merge(spark):
+    """Public keys join the per-key merge's exchange: the wide release
+    holds no join (its small key list is an ``isin`` scan filter), and
+    with a key DataFrame the only join is the semi-join that drops
+    non-public rows, with no distinct() aggregate over the keys."""
+    plan = P.explain_str(_secure_scalar_releases(spark)["wide"](),
+                         mode="simple")
+    assert "Join" not in plan, plan
+    acct = pds.NaiveBudgetAccountant(5.0, 1e-4)
+    keys = spark.sql("SELECT * FROM VALUES ('1-URGENT'), ('9-NONE') "
+                     "AS t(o_orderpriority)")
+    res = pds.DPEngine(acct, noise_mode="secure").aggregate(
+        _orders(spark), pds.AggregateParams(
+            metrics=[pds.Metrics.COUNT], max_partitions_contributed=3,
+            max_contributions_per_partition=2),
+        pds.DataFrameExtractors("o_custkey", "o_orderpriority"),
+        public_partitions=keys)
+    acct.compute_budgets()
+    plan = P.explain_str(res.dataframe(), mode="simple")
+    joins = [ln for ln in plan.splitlines() if "Join" in ln]
+    assert len(joins) == 1 and "LeftSemi" in joins[0], joins
+    assert "Union" in plan, plan
+    assert not re.search(r"Aggregate\(keys=\[o_orderpriority#\d+\], "
+                         r"functions=\[\]", plan), plan
 
 
 def test_jaccard_pairs_no_pair_blowup(spark):

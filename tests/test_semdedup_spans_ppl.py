@@ -9,6 +9,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from pipelinedp_spark.operators import graph
 from pipelinedp_spark.operators.quality import unigram_perplexity
 from pipelinedp_spark.operators.dedup import duplicate_spans
 from pipelinedp_spark.operators.semdedup import semantic_dedup
@@ -269,6 +270,76 @@ def test_semantic_pairs_feed_connected_components(spark):
                                       id_col="vec_id").collect()}
     assert out[0] == out[1] == out[2] == 0
     assert out[3] == 3
+
+
+# ---------------------------------------------------------------------------
+# connected_components: the size-gated driver path and the distributed
+# frontier loop give the identical min-id labeling, on cluster-ish graphs
+# and on long chains (the pointer-jumping bound max_iter relies on)
+# ---------------------------------------------------------------------------
+
+def _cc(spark, edges, **conf):
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    old = {}
+    for k, v in conf.items():
+        try:
+            old[k] = spark.conf.get(k)
+        except Exception:
+            old[k] = None
+        spark.conf.set(k, v)
+    try:
+        out = {(r["node"], r["component"])
+               for r in graph.connected_components(df).collect()}
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    return out
+
+
+GRAPHS = [
+    # two triangles + a bridge + an isolated edge
+    [(1, 2), (2, 3), (3, 1), (10, 11), (11, 12), (12, 10), (3, 10),
+     (100, 101)],
+    # star
+    [(5, 1), (5, 2), (5, 3), (5, 4)],
+    # duplicate + reversed edges
+    [(1, 2), (2, 1), (1, 2), (7, 8)],
+    # self-loop only
+    [(4, 4)],
+]
+
+
+@pytest.mark.parametrize("edges", GRAPHS)
+def test_cc_driver_and_distributed_paths_agree(spark, edges):
+    fast = _cc(spark, edges)
+    dist = _cc(spark, edges,
+               **{"spark.pipelinedp.graph.maxDriverEdges": "0"})
+    assert fast == dist
+    # labels are component minima
+    comp_members: dict = {}
+    for n, c in fast:
+        comp_members.setdefault(c, []).append(n)
+    for c, members in comp_members.items():
+        assert c == min(members)
+
+
+def test_cc_distributed_long_chain_converges(spark):
+    """A 300-node path graph has diameter 299: plain propagation would
+    blow max_iter=25, so this pins that the reworked loop kept pointer
+    jumping's logarithmic collapse."""
+    edges = [(i, i + 1) for i in range(300)]
+    dist = _cc(spark, edges,
+               **{"spark.pipelinedp.graph.maxDriverEdges": "0"})
+    assert dist == {(i, 0) for i in range(301)}
+
+
+def test_cc_empty_edges_both_paths(spark):
+    assert _cc(spark, [],) == set()
+    assert _cc(spark, [],
+               **{"spark.pipelinedp.graph.maxDriverEdges": "0"}) == set()
 
 
 # ---------------------------------------------------------------------------

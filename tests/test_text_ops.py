@@ -454,6 +454,24 @@ def test_sessionize_scalable_rejects_timestamp_col(spark):
         sessionize_scalable(df, "t", "k", gap=15)
 
 
+def test_sessionize_scalable_boundary_cap_guard(spark):
+    """The boundary-stitch collect (<= 2 rows per partition by
+    construction) fails loudly above its documented cap."""
+    from pipelinedp_spark.operators.sessions import sessionize_scalable
+    df = spark.range(100).select(
+        (F.col("id") % 5).alias("uid"), F.col("id").alias("ts"))
+    spark.conf.set("spark.pipelinedp.sessions.maxBoundaryRows", "7")
+    try:
+        with pytest.raises(ValueError, match="maxBoundaryRows"):
+            sessionize_scalable(df, "ts", "uid", gap=10, num_partitions=4)
+        # within the cap still works
+        out = sessionize_scalable(df, "ts", "uid", gap=10,
+                                  num_partitions=3)
+        assert out.count() == 100
+    finally:
+        spark.conf.unset("spark.pipelinedp.sessions.maxBoundaryRows")
+
+
 def test_connected_components_matches_brute_force(spark):
     from pipelinedp_spark.operators.graph import connected_components
     # two cliques bridged by a path, plus an isolated edge
